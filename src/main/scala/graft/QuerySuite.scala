@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.{FType, FeatureDef, FeatureGroup, FeatureStore}
+import graft.core.{FType, FeatureDef, FeatureGroup, FeatureStore, IndexLifecycle}
 import graft.dedup.Dedup
 import graft.functions.{Bpe, Dsir, GraftFunctions, LexicalRetrieval, LmPerplexity, PortableMath, TextAnalysis}
 import graft.ml.FeatureML
@@ -3616,7 +3616,7 @@ object QuerySuite {
       val emb = Tables.embeddings(s, dir)
       val idx = aux(dir, "q188_vecindex")
       Dedup.buildSemanticIndex(emb, "vec_id", "embedding", idx, targetCell = 50)
-      val assigned = s.read.parquet(Dedup.resolveIndexDir(s"$idx/vectors"))
+      val assigned = s.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/vectors"))
         .select(col("doc_id").as("vec_id"), col("cell").cast("long").as("cell"))
       assigned.write.mode("overwrite").parquet(aux(dir, "q188_cells"))
       val kept = DomainMix.capPerDomain(assigned, "vec_id", "cell",

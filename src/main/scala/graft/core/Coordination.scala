@@ -61,7 +61,7 @@ object Coordination {
 
   // ---- shared mechanics (identical across arbitration backends) ----
 
-  private[core] def readPointerFile(pointer: Path): Option[String] =
+  private[graft] def readPointerFile(pointer: Path): Option[String] =
     if (Files.exists(pointer))
       Some(new String(Files.readAllBytes(pointer), StandardCharsets.UTF_8).trim)
     else None
@@ -91,7 +91,7 @@ object Coordination {
         "first; this rewrite derived from a superseded version. " +
         "Re-run against the current version.")
 
-  private[core] def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[Path]())

@@ -2,7 +2,6 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -85,10 +84,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     * a re-run. No CURRENT file means v1 (the pointer is only ever written by
     * [[compactOffline]]'s commit). */
   private def offlineRoot(name: String): Path = groupDir(name).resolve("offline")
-  private def offlineVersion(name: String): Long = {
-    val p = offlineRoot(name).resolve("CURRENT")
-    if (Files.exists(p)) new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong else 1L
-  }
+  private def offlineVersion(name: String): Long =
+    Coordination.readPointerFile(offlineRoot(name).resolve("CURRENT")).map(_.toLong).getOrElse(1L)
   private def offlineDir(name: String): String =
     offlineRoot(name).resolve(s"v${offlineVersion(name)}").toString
   private def onlineDir(name: String): Path = groupDir(name).resolve("online")
@@ -452,12 +449,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     }: _*)
 
   def dropGroup(name: String): Unit = {
-    val dir = groupDir(name)
-    if (Files.exists(dir)) {
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    Coordination.deleteRecursively(groupDir(name))
     servingCache.remove(name): Unit
     bucketCountCache.remove(name): Unit // a recreated group may re-reach v1
     schemaMatchCache.keySet.removeIf(_._1 == name): Unit // same re-reach hazard
@@ -845,11 +837,12 @@ final class FeatureStore(spark: SparkSession, root: String,
     // writes into every bucket dir (tasks × buckets tiny files per snapshot
     // — measured 1.7× on the ingest e2e queries); clustered, the write is
     // one file per bucket, which is also what the pruned point-read wants
-    // r13-opt adjudication: sizing this width from Dedup.writeWidth was
-    // tried and REVERTED — `buckets` is already derived from the store's
-    // key count (bucketCountFor), so the write stage is data-proportional
-    // by construction, and the extra per-commit estimate walk measurably
-    // regressed the deep-plan SQL lifecycles (q241 isolated minima −18%)
+    // r13-opt adjudication: sizing this width from
+    // IndexLifecycle.writeWidth was tried and REVERTED — `buckets` is
+    // already derived from the store's key count (bucketCountFor), so the
+    // write stage is data-proportional by construction, and the extra
+    // per-commit estimate walk measurably regressed the deep-plan SQL
+    // lifecycles (q241 isolated minima −18%)
     timedPhase(g.name, "snapshot_write") {
       latest
         .withColumn(EngineColumns.KeyBucket,
@@ -862,20 +855,15 @@ final class FeatureStore(spark: SparkSession, root: String,
     // job latency instead of two; part of the per-commit tax cut behind
     // the q59 driver-tail regression)
     var counts: Map[Long, Long] = Map.empty
-    graft.dedup.Dedup.inParallel(Seq(
+    IndexLifecycle.inParallel(Seq(
       () => counts = timedPhase(g.name, "bucket_counts")(bucketCounts(dir)),
       () => timedPhase(g.name, "serving_kv")( // rides the same staged commit
         writeServingKv(g, dir, buckets))))
     writeVersionMeta(dir, buckets, counts, g)
-    try timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
+    timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
       onlineDir(g.name), "LATEST",
       expected = baseVersion.map(_.toString), next = next.toString,
       stage = Some(dir -> finalDir)))
-    finally if (Files.exists(dir)) { // loser cleans its own staging
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally walk.close()
-    }
     servingCache.remove(g.name): Unit // next getRecord rebuilds from v<next>
     bucketCountCache.remove(g.name): Unit
     schemaMatchCache.keySet.removeIf(_._1 == g.name): Unit // bound per commit
@@ -912,22 +900,17 @@ final class FeatureStore(spark: SparkSession, root: String,
     // bucket mid-link would double-count it (stats) or double-render it
     // (KV over a file the link then collides with).
     var newCounts: Map[Long, Long] = Map.empty
-    graft.dedup.Dedup.inParallel(Seq(
+    IndexLifecycle.inParallel(Seq(
       () => newCounts = timedPhase(g.name, "bucket_counts")(bucketCounts(dir)),
       // staging holds ONLY the touched buckets here; width to match
       () => timedPhase(g.name, "serving_kv")(
         writeServingKv(g, dir, buckets, Some(math.max(touched.size, 1))))))
     timedPhase(g.name, "link_untouched")(linkUntouched(baseDir, dir, touched))
     writeVersionMeta(dir, buckets, (baseCounts -- touched) ++ newCounts, g)
-    try timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
+    timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
       onlineDir(g.name), "LATEST",
       expected = Some(baseVersion.toString), next = next.toString,
       stage = Some(dir -> finalDir)))
-    finally if (Files.exists(dir)) { // loser cleans its own staging
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally walk.close()
-    }
     servingCache.remove(g.name): Unit
     bucketCountCache.remove(g.name): Unit
     schemaMatchCache.keySet.removeIf(_._1 == g.name): Unit // bound per commit
@@ -1189,10 +1172,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     }
   }
 
-  private def currentVersion(name: String): Option[Long] = {
-    val p = onlineDir(name).resolve("LATEST")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong) else None
-  }
+  private def currentVersion(name: String): Option[Long] =
+    Coordination.readPointerFile(onlineDir(name).resolve("LATEST")).map(_.toLong)
 
   private def currentSnapshotRaw(name: String): Option[DataFrame] =
     currentVersion(name).map(v => spark.read.parquet(onlineDir(name).resolve(s"v$v").toString))
@@ -1450,9 +1431,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     import scala.jdk.CollectionConverters._
     if (!Files.exists(onlineDir(name))) return Seq.empty
     val ls = Files.list(onlineDir(name))
-    try ls.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("v") && n.drop(1).nonEmpty && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong).toSeq.sorted
+    try ls.iterator().asScala.flatMap(p => IndexLifecycle.versionOf("v")(p.getFileName.toString))
+      .toSeq.sorted
     finally ls.close()
   }
 
@@ -1503,9 +1483,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     val vs = onlineVersions(name)
     val cur = currentVersion(name).getOrElse(return)
     vs.filter(v => v != cur && v <= cur - keep).foreach { v =>
-      val walk = Files.walk(onlineDir(name).resolve(s"v$v"))
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally walk.close()
+      Coordination.deleteRecursively(onlineDir(name).resolve(s"v$v"))
       // a collected version's schema verdicts can never be probed again —
       // evict them so the cache bound really is live (version, fp) pairs
       // (the doc on [[schemaMatchCache]] promises this eviction)
@@ -1989,41 +1967,26 @@ final class FeatureStore(spark: SparkSession, root: String,
         } else Nil
       val foldInput = offline(groupName) // declared-schema read: compaction also materializes post-evolution columns (incl. the widen cast via eraColumn)
       foldInput
-        // estimate-derived width (r13-opt, Dedup.writeWidth): the clustered
-        // rewrite keeps one exchange but a small store no longer launches
-        // one writer commit cycle per core
-        .repartition(graft.dedup.Dedup.writeWidth(foldInput),
+        // estimate-derived width (r13-opt, IndexLifecycle.writeWidth): the
+        // clustered rewrite keeps one exchange but a small store no longer
+        // launches one writer commit cycle per core
+        .repartition(IndexLifecycle.writeWidth(foldInput),
           col(EngineColumns.IngestDate))
         .write.mode("overwrite") // a crashed prior attempt's partial dir is overwritten
         .partitionBy(EngineColumns.IngestDate).parquet(nextDir.toString)
       // commit: one compare-and-swap pointer move — a concurrent compaction
       // that already advanced CURRENT makes this one fail loudly instead of
       // silently superseding a version whose rows it never read
-      try OptimisticPointer.casSwap(offlineRoot(groupName), "CURRENT",
+      OptimisticPointer.casSwap(offlineRoot(groupName), "CURRENT",
         expected = curPointerAtPlan.map(_.toString), next = (cur + 1).toString,
         stage = Some(nextDir -> finalNextDir))
-      finally if (Files.exists(nextDir)) { // loser cleans its own staging
-        val walk = Files.walk(nextDir)
-        try walk.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-        finally walk.close()
-      }
       (cur, finalNextDir, lingeringAtPlan, tombstoneFilesAtPlan)
     }
-    // GC superseded versions (best-effort: a crash here just leaves orphans
-    // for the next compaction to collect)
-    import scala.jdk.CollectionConverters._
-    val versions = Files.list(offlineRoot(groupName))
-    val superseded =
-      try versions.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("v") && n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= cur
-      }.toList
-      finally versions.close() // Files.list holds the directory handle open
-    superseded.foreach { v =>
-      val walk = Files.walk(v)
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    // GC superseded versions: keep = 0 deletes every v<k> with k <= cur
+    // (best-effort: a crash here just leaves orphans for the next
+    // compaction to collect)
+    IndexLifecycle.sweepSuperseded(offlineRoot(groupName), cur + 1,
+      IndexLifecycle.versionOf("v"), _ => false, keep = 0)
     // the rewrite above went through offline(), which filters tombstoned
     // history — the deleted rows are now PHYSICALLY absent from v<N+1>
     // (the GDPR erase), so the folded-in tombstones are cleared: only the

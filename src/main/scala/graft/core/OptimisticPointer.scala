@@ -51,12 +51,20 @@ object OptimisticPointer {
     * (the directory moves themselves are sequential renames; the pointer
     * write AFTER them is the single commit point, and the pointer names
     * the version dir, so half-promoted debris from a crash mid-sequence is
-    * invisible and replaced on retry). */
+    * invisible and replaced on retry).
+    *
+    * STAGING CLEANUP is done here, once, for every caller: whatever the
+    * outcome, each staged source directory still present afterwards is
+    * deleted. A winner's sources were moved away by the promotion; a
+    * loser's (or a failed promotion's) are private debris no reader can
+    * resolve. */
   def casSwap(dir: Path, pointerName: String, expected: Option[String],
       next: String, stage: Option[(Path, Path)] = None,
-      stages: Seq[(Path, Path)] = Nil): Unit =
-    Coordination.current.casSwap(dir, pointerName, expected, next,
-      stage.toSeq ++ stages)
+      stages: Seq[(Path, Path)] = Nil): Unit = {
+    val all = stage.toSeq ++ stages
+    try Coordination.current.casSwap(dir, pointerName, expected, next, all)
+    finally all.foreach { case (src, _) => Coordination.deleteRecursively(src) }
+  }
 
   /** A collision-free staging sibling for `finalDir` — the underscore
     * prefix keeps it hidden from Spark's path discovery and outside every

@@ -1,11 +1,12 @@
 package graft.dedup
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.IndexLifecycle.{commitVisibleBatch, compactBatchedDir, compactFamily,
+  inParallel, readVisibleTable, resetVisibleBatches, resolveIndexDir, withIndexWriter,
+  writeIndexBatch}
 import graft.functions.GraftFunctions._
 import graft.functions.{CosineSimilarity, HashedShingles, SortedIntersectSize}
 
@@ -287,532 +288,20 @@ object Dedup {
     eager(out, release)
   }
 
-  /** The signature index is a parquet table PARTITIONED BY the batch that
-    * wrote each row (`batch=<id>/` subdirs). Each writer overwrites ONLY its
-    * own partition (dynamic partition overwrite), so re-running a batch —
-    * crash-retry, replayed orchestration — rewrites the same bytes instead
-    * of double-folding signatures, mirroring `FeatureStore.ingest`'s batchId
+  /** Read the signature index without the layout's partition column. The
+    * index is a parquet table PARTITIONED BY the batch that wrote each row
+    * (`batch=<id>/` subdirs). Each writer overwrites ONLY its own partition
+    * (dynamic partition overwrite), so re-running a batch — crash-retry,
+    * replayed orchestration — rewrites the same bytes instead of
+    * double-folding signatures, mirroring `FeatureStore.ingest`'s batchId
     * guard. Readers prune the partition column away (and, in the
     * incremental path, prune OUT the running batch's own partition, so a
     * replay sees exactly the pre-batch index). */
-  /** Replay-idempotent batch write shared by every persisted index family
-    * (signature, vector, IVFADC codes/vectors/tombstones): rows land in
-    * `batch=<id>` under the resolved layout. `partitionCols` adds further
-    * layout columns after `batch` (the IVFADC codes table partitions by
-    * `cell` for probe-time pruning). */
-  private[graft] def writeIndexBatch(sig: DataFrame, indexPath: String, batchId: String,
-      wholeIndex: Boolean = false, partitionCols: Seq[String] = Nil): Unit = {
-    // validate BEFORE the lock: withIndexWriter creates the index root, and
-    // a rejected first write must not leave a lock-file-only marker dir
-    // that Files.exists-gated readers (readTombstones) mistake for a table
-    require(batchId.matches("[A-Za-z0-9_.-]+"),
-      s"batchId '$batchId' must be path-safe ([A-Za-z0-9_.-]+)")
-    withIndexWriter(indexPath) {
-    // the layout is resolved INSIDE the writer lock: a compaction can no
-    // longer flip the pointer between this resolve and the write, which
-    // would strand the batch's bytes in a version dir the compaction's
-    // cleanup then deletes (single-table indexes lock their own root here;
-    // multi-table sequences hold the family-level lock around the whole
-    // write+commit — reentrant, so this inner lock is free)
-    val stamped = sig.withColumn("batch", lit(batchId))
-    // CLUSTER on the layout's partition columns before partitionBy: without
-    // it every upstream task writes a file into every partition dir —
-    // tasks × buckets small files per index write (measured: the sf10 LM
-    // lifecycle spent 12× the one-shot compute writing and then re-listing
-    // ~32k bigram files). Clustered, the write is one file per partition
-    // value; the values are hash buckets (bb/tb) or capped cells, so the
-    // per-task skew is bounded by construction. The same fix as the online
-    // snapshot's repartition-before-partitionBy (FeatureStore).
-    //
-    // r12-opt adjudication: REBALANCE-before-write (guide §6) was tried
-    // here and in compactFamily — it cut write-stage TASK time ~3x (the
-    // 32-task writer open/commit cycles collapse to advisory-sized
-    // stages) but measured NEUTRAL at 32 cores and a 5-15% REGRESSION at
-    // 8 cores on q180/q202/q227 (isolated minima, both trees): the added
-    // shuffle + AQE barrier per write costs more wall than the writer
-    // inits it saves, and coalescing a CPU-bound parquet encode to one
-    // task serializes it. Reverted to the clustered repartition.
-    //
-    // r13-opt: the clustered repartition now carries an EXPLICIT width
-    // derived from the optimizer's size estimate ([[sizedForWrite]]) —
-    // same single exchange, no AQE replan, but a stats-table write no
-    // longer launches one parquet writer commit cycle per core.
-    sizedForWrite(stamped, partitionCols)
-      .write
-      .partitionBy("batch" +: partitionCols: _*)
-      // whole-index rebuild clears every partition; per-batch append clears
-      // only batch=<id> (replay-idempotent)
-      .option("partitionOverwriteMode", if (wholeIndex) "static" else "dynamic")
-      .mode("overwrite")
-      .parquet(resolveIndexDir(indexPath))
-    }
-  }
-
-  /** Write-stage width for an index-table write, derived from the
-    * optimizer's size estimate AT WRITE TIME — guide §6 coalesce-on-write
-    * without REBALANCE's extra shuffle + AQE barrier (the r12 adjudication
-    * above). One writer task per `graft.write.targetPartitionBytes`
-    * (default 128 MB — the guide's output-file sizing band), clamped to
-    * [1, max(defaultParallelism, shuffle.partitions)]: a 1-row stats table
-    * writes with ONE task instead of one per core, while a corpus-sized
-    * table keeps full width. Estimates only ever err LARGE here (filter
-    * selectivity defaults keep child size; parquet scans report true file
-    * bytes), which errs toward MORE parallelism — the safe side.
-    *
-    * Stats come from the ANALYZED plan, not the optimized one: forcing
-    * `optimizedPlan` here ran the whole optimizer a SECOND time per write
-    * (the write command re-optimizes its child), which measurably regressed
-    * the deep-plan FeatureStore lifecycles (q236/q241 isolated minima
-    * −16/−25%). The size visitor walks any logical plan; the analyzed
-    * estimate only differs by pre-pushdown shape, i.e. errs larger. */
-  private[graft] def writeWidth(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val target = math.max(1L, spark.conf.getOption("graft.write.targetPartitionBytes")
-      .map(_.trim.toLong).getOrElse(128L << 20))
-    val cap = math.max(math.max(1, spark.sparkContext.defaultParallelism),
-      spark.sessionState.conf.numShufflePartitions)
-    val est = df.queryExecution.analyzed.stats.sizeInBytes
-    ((est + target - 1) / target).max(1).min(cap).toInt
-  }
-
-  /** Cluster + size a frame for a `partitionBy` index write.
-    *
-    *  - partition-column writes keep their clustering exchange (the
-    *    tasks × buckets small-file rationale above) but at the
-    *    estimate-derived [[writeWidth]] instead of the session default;
-    *  - flat writes are left on their upstream partitioning — EXCEPT when
-    *    the estimate says the whole table is tiny
-    *    (`graft.write.smallTableBytes`, default 16 MB: stats rows, term-df
-    *    tables, doc-id lists), where a one-task repartition trades a
-    *    provably-tiny exchange for core-count-minus-one writer commit
-    *    cycles. A heavy map-side producer (signature hashing) stays wide:
-    *    its estimate rides the scan's real file bytes past the gate, and
-    *    repartition — unlike coalesce — never serializes upstream compute
-    *    anyway. */
-  private[graft] def sizedForWrite(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
-    if (partitionCols.nonEmpty) df.repartition(writeWidth(df), partitionCols.map(col): _*)
-    else {
-      val small = math.max(0L, df.sparkSession.conf
-        .getOption("graft.write.smallTableBytes").map(_.trim.toLong)
-        .getOrElse(16L << 20))
-      if (df.queryExecution.analyzed.stats.sizeInBytes <= small)
-        df.repartition(1)
-      else df
-    }
-  }
-
-  /** Read the signature index without the layout's partition column. */
   private def readIndex(spark: SparkSession, indexPath: String,
       excludeBatch: Option[String] = None): DataFrame = {
     val raw = spark.read.parquet(resolveIndexDir(indexPath))
     val pruned = excludeBatch.fold(raw)(b => raw.filter(col("batch") =!= lit(b)))
     pruned.select(col("doc_id"), col("hs"), col("band_keys"))
-  }
-
-  /** Physical dir of a (possibly compacted) signature index: a compacted
-    * index lives in `<path>/_v<N>` named by the `<path>/CURRENT` pointer; an
-    * uncompacted one is the flat path itself (backward compatible — every
-    * pre-compaction index keeps working unchanged). The underscore prefix is
-    * load-bearing: Spark's hidden-path filter makes flat-layout readers skip
-    * `_v*` dirs, so a compaction that crashed between writing the version
-    * dir and swapping the pointer leaves readers completely unaffected (a
-    * bare `v1` among the `batch=*` dirs would corrupt partition discovery). */
-  /** Recursively remove a directory if present — the whole-index-rebuild
-    * hygiene for marker dirs: a rebuild writes a NEW index generation, and
-    * tombstones from the previous generation must not survive it (they
-    * would suppress legitimate deletes of re-ingested keys and wrongly
-    * anti-join current docs at serve time). */
-  private[graft] def clearDir(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
-  }
-
-  private[graft] def resolveIndexDir(indexPath: String): String = {
-    // FAMILY-versioned table: `<family>/FAMILY` names the version EVERY
-    // table of a multi-table family serves at — one pointer, one commit
-    // ([[compactFamily]]), so readers can never observe the family's
-    // tables at mixed versions. Marker tables version with the family too
-    // (round 11); a table not yet versioned at the named generation falls
-    // through to its flat layout ([[resolveIndexDirPinned]]).
-    val p = java.nio.file.Paths.get(indexPath)
-    resolveIndexDirPinned(indexPath,
-      Option(p.getParent).flatMap(par => readFamilyPointer(par.toString)))
-  }
-
-  private[graft] def readFamilyPointer(familyPath: String): Option[String] = {
-    val f = java.nio.file.Paths.get(familyPath, "FAMILY")
-    if (!java.nio.file.Files.exists(f)) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8).trim)
-  }
-
-  /** [[resolveIndexDir]] with the family version PINNED by the caller —
-    * the snapshot-read primitive: a multi-table read resolves every table
-    * at the same generation it captured once, instead of re-reading the
-    * pointer per table (a compaction committing between two of a serve's
-    * table reads would otherwise hand it mixed generations; version
-    * retention keeps the pinned generation's files alive one cycle, so
-    * the pinned read COMPLETES instead of failing).
-    *
-    * A PINNED version dir that is MISSING is one of two things and they
-    * must not be conflated (VERDICT r10 advice): (a) the table predates
-    * versioning at that generation — its rows still live in the flat
-    * `batch=*` layout, which retention keeps one cycle, so falling back
-    * to the flat path serves the pinned generation's data; (b) the pinned
-    * version was VACUUMED out from under an in-flight serve (an operator
-    * [[vacuumIndex]] racing a lock-free reader). Case (b) used to fall
-    * through silently to CURRENT — handing a multi-table serve MIXED
-    * generations, the exact anomaly [[FamilySnapshot]] exists to prevent —
-    * and now fails loudly instead. The discriminator: a table with
-    * surviving flat `batch=*` dirs is (a); a table with only `_v*`
-    * generations newer than the pin is (b). */
-  private[graft] def resolveIndexDirPinned(indexPath: String,
-      famVersion: Option[String]): String = {
-    val p = java.nio.file.Paths.get(indexPath)
-    famVersion.map(p.resolve).filter(java.nio.file.Files.exists(_)) match {
-      case Some(d) => d.toString
-      case None =>
-        if (famVersion.isDefined && !hasFlatBatchDirs(p) && maxVersionIn(p) > 0L)
-          throw new IllegalStateException(
-            s"pinned version ${famVersion.get} of $indexPath no longer exists " +
-              "but newer generations do — it was vacuumed while this serve " +
-              "had it pinned. Re-plan the serve against the current version " +
-              "(retention keeps superseded generations one compaction cycle; " +
-              "an explicit vacuumIndex during a serve re-opens that window).")
-        val cur = p.resolve("CURRENT")
-        if (java.nio.file.Files.exists(cur))
-          p.resolve(new String(java.nio.file.Files.readAllBytes(cur),
-            java.nio.charset.StandardCharsets.UTF_8).trim).toString
-        else indexPath
-    }
-  }
-
-  /** Does `dir` hold any pre-versioning flat `batch=<id>` partition dirs? */
-  private def hasFlatBatchDirs(dir: java.nio.file.Path): Boolean = {
-    if (!java.nio.file.Files.exists(dir)) return false
-    val ls = java.nio.file.Files.list(dir)
-    try ls.iterator().asScala.exists(_.getFileName.toString.startsWith("batch="))
-    finally ls.close()
-  }
-
-  /** Does the RESOLVED layout dir hold any data? An EMPTY generation is a
-    * first-class state for marker tables — a purge folds every pending
-    * marker away and commits a version dir with no `batch=*` partitions
-    * (possibly no files at all), which `spark.read.parquet` would reject
-    * with a schema-inference error. Readers of maybe-empty tables gate on
-    * this instead of `Files.exists` ([[readMarkerTable]]). */
-  private[graft] def hasBatchData(resolvedDir: String): Boolean =
-    hasFlatBatchDirs(java.nio.file.Paths.get(resolvedDir))
-
-  /** Read one maybe-empty family table under the shared snapshot, or None
-    * when the table holds no data at the snapshot's generation — the one
-    * read path for MARKER tables (pending-delete tombstones), which are
-    * versioned and retained exactly like data tables (round 11: a serve
-    * pinned at generation N reads generation N's OWN marker view, closing
-    * the documented purge-race erasure window). */
-  private[graft] def readMarkerTable(spark: SparkSession, familyPath: String,
-      table: String, excludeBatch: Option[String] = None,
-      snapshot: Option[FamilySnapshot] = None): Option[DataFrame] = {
-    val snap = snapshot.getOrElse(familySnapshot(familyPath))
-    val dir = resolveIndexDirPinned(s"$familyPath/$table", snap.version)
-    if (!hasBatchData(dir)) None
-    else Some(readVisibleTable(spark, familyPath, table, excludeBatch, Some(snap)))
-  }
-
-  /** One ATOMIC capture of a family's read state: the VISIBLE batch ids
-    * and the FAMILY version, taken once at the start of a multi-table
-    * read ([[readVisibleTable]]'s `snapshot` parameter). Read order is
-    * load-bearing — VISIBLE first, FAMILY second: both writer orders
-    * (append = tables → VISIBLE; compaction = FAMILY CAS → VISIBLE
-    * retire) then yield a consistent view for any interleaving (an
-    * uncommitted append stays invisible; a mid-compaction reader lands on
-    * the NEW generation whose base already folds the retired ids — the
-    * extra manifest ids filter as no-ops). Capturing FAMILY first could
-    * instead pair the OLD generation with the RETIRED manifest and
-    * silently drop the folded batches' rows.
-    *
-    * MARKER TABLES ARE IN THE SNAPSHOT (round 11 — closes the round-10
-    * residual window): tombstone dirs are versioned family tables like any
-    * other — every [[compactFamily]] commit stages them a generation dir
-    * (EMPTY when nothing is pending, [[hasBatchData]] gates the read), a
-    * purge folds their markers away inside the SAME family CAS that erases
-    * the data rows, and retention keeps the superseded generation — WITH
-    * its marker view — one full cycle. A serve pinned at generation N
-    * therefore always evaluates N's own pending-delete markers, even when
-    * a purge commits N+1 mid-plan; the old in-place marker sweep (which
-    * could hand a pinned serve a pre-purge data view without its pending
-    * deletions) is gone. */
-  private[graft] final case class FamilySnapshot(visible: Option[Set[String]],
-      version: Option[String])
-
-  private[graft] def familySnapshot(familyPath: String): FamilySnapshot = {
-    val vis = visibleBatches(familyPath) // FIRST — see scaladoc
-    FamilySnapshot(vis, readFamilyPointer(familyPath))
-  }
-
-  /** Batch-visibility manifest of a multi-table family: `<family>/VISIBLE`
-    * lists the batch ids whose partitions have landed in ALL the family's
-    * tables. An append writes its per-table `batch=<id>` partitions first
-    * and then commits the id with ONE atomic manifest rewrite — readers
-    * going through [[readVisibleTable]] see the batch in every table at
-    * once or in none (the torn-append window of multi-table families:
-    * postings at batch N with term-df still at N−1). The manifest is
-    * created by the family's BUILD; an index from before it existed has no
-    * file and reads unfiltered (legacy — the old documented window), which
-    * also keeps pre-manifest batches visible. `batch=base` (build/compact
-    * output) is always visible. */
-  private[graft] def visibleBatches(familyPath: String): Option[Set[String]] = {
-    val p = java.nio.file.Paths.get(familyPath, "VISIBLE")
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
-  }
-
-  // manifest updates are read-modify-write: serialize them through the
-  // [[graft.core.Coordination]] seam (default: same-process monitor per
-  // path + cross-process file lock) so a delete committing mid-compaction
-  // can never be lost
-  private def withVisibleLock[A](familyPath: String)(body: => A): A =
-    graft.core.Coordination.current.withWriterLock(
-      java.nio.file.Paths.get(familyPath), "VISIBLE.lock")(body)
-
-  /** Serialize the WRITERS of one persisted index root — append/delete
-    * batches and compactions. Without this, an append that resolved the
-    * pre-compaction layout can write its partitions into a version dir the
-    * compaction then flips away from and deletes: the batch id stays in the
-    * manifest while its bytes are gone (a BM25 delete racing a compaction
-    * would permanently over-count n_docs — the fold cannot see partials
-    * that land after it read). The lock is the [[withVisibleLock]]
-    * discipline writ large: a same-process monitor (REENTRANT — a compound
-    * op may nest table-level writes under its family-level lock) plus a
-    * cross-process file lock (`_writer.lock`, underscore-hidden from
-    * Spark's listings). Readers never take it — reads stay lock-free
-    * (quiet-reader as before). Acquisition goes through the
-    * [[graft.core.Coordination]] seam: on a multi-driver cluster the
-    * backend is a catalog lease, swapped in with `Coordination.use`
-    * without touching this call site. */
-  private[graft] def withIndexWriter[A](indexPath: String)(body: => A): A =
-    graft.core.Coordination.current.withWriterLock(
-      java.nio.file.Paths.get(indexPath), "_writer.lock")(body)
-
-  private def writeVisibleFile(familyPath: String, ids: Set[String]): Unit = {
-    val root = java.nio.file.Paths.get(familyPath)
-    val tmp = root.resolve("VISIBLE.tmp")
-    java.nio.file.Files.write(tmp, ids.toSeq.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, root.resolve("VISIBLE"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-
-  /** (Re)write the manifest to exactly `ids` — the family's BUILD uses it
-    * to start the visible set. */
-  private[graft] def resetVisibleBatches(familyPath: String,
-      ids: Set[String] = Set.empty): Unit =
-    withVisibleLock(familyPath)(writeVisibleFile(familyPath, ids))
-
-  /** Commit `batchId` as visible — the LAST step of a multi-table append
-    * (all per-table partitions already written; a crash before this line
-    * leaves the whole batch invisible and a same-id retry overwrites it).
-    * No-op on a legacy index without a manifest. Idempotent. */
-  private[graft] def commitVisibleBatch(familyPath: String, batchId: String): Unit =
-    withVisibleLock(familyPath) {
-      visibleBatches(familyPath).foreach(cur =>
-        writeVisibleFile(familyPath, cur + batchId))
-    }
-
-  /** Read one family table with the batch-visibility filter applied (and,
-    * optionally, the replay discipline's own-batch exclusion). The filter
-    * is a static partition predicate — invisible batches' files are pruned
-    * from the listing, never scanned. */
-  private[graft] def readVisibleTable(spark: SparkSession, familyPath: String,
-      table: String, excludeBatch: Option[String] = None,
-      snapshot: Option[FamilySnapshot] = None): DataFrame = {
-    // `snapshot`: pass ONE [[familySnapshot]] across all of a multi-table
-    // read's calls so every table resolves at the same generation under
-    // the same manifest (without it, each call re-captures — fine for a
-    // single-table read or any read under the writer lock, racy for a
-    // lock-free multi-table serve overlapping a commit)
-    val snap = snapshot.getOrElse(familySnapshot(familyPath))
-    val df = spark.read.parquet(
-      resolveIndexDirPinned(s"$familyPath/$table", snap.version))
-    val vis = snap.visible match {
-      case Some(ids) => df.filter(col("batch").isInCollection("base" +: ids.toSeq))
-      case None => df
-    }
-    excludeBatch.fold(vis)(b => vis.filter(col("batch") =!= lit(b)))
-  }
-
-  /** Compact EVERY table of a multi-table index family under ONE commit:
-    * the per-table folds stage in parallel (wall time of the widest table,
-    * the [[inParallel]] win), then a SINGLE compare-and-swap of the
-    * family's `FAMILY` pointer promotes all staged version dirs inside one
-    * critical section. Readers resolve every table through that one
-    * pointer ([[resolveIndexDir]]), so a reader overlapping the compaction
-    * can never see, e.g., postings at version N with term-df at N−1 — the
-    * cross-table snapshot-isolation gap of committing per-table CURRENT
-    * pointers in parallel (VERDICT r9 missing #3). A crash before the swap
-    * leaves every table serving its old version; a racing compaction loses
-    * the CAS loudly. MARKER tables (pending-delete tombstones) are listed
-    * like any other table — a plain compaction folds them with `identity`
-    * (markers survive into the new generation's base), a purge folds them
-    * with the same anti-join that erases the data rows (both commit under
-    * the ONE CAS, so no reader can see purged data with pending markers or
-    * vice versa). A listed table whose source holds NO data commits an
-    * EMPTY generation dir ([[hasBatchData]] gates the read) — the invariant
-    * every pinned read relies on: from its first compaction onward, a
-    * family's generation N carries generation N's marker view. Legacy
-    * per-table pointers are retired by the first family commit.
-    *
-    * WRITER SERIALIZATION: the whole compaction holds the family's
-    * [[withIndexWriter]] lock, and every append/delete holds it across its
-    * table writes + visibility commit — so no batch can land partials in a
-    * layout this fold has already read past (the lost-update the lock
-    * exists for: an append writing into the old version dir after the fold
-    * captured its input would survive in the manifest but lose its bytes
-    * to the post-flip cleanup). A racing writer simply blocks and then
-    * proceeds against the compacted generation.
-    *
-    * VISIBILITY ACCOUNTING (families with a batch manifest): the fold reads
-    * only visible batches, and afterwards the manifest is updated to
-    * `current − captured` (folded ids retire; under writer serialization
-    * current == captured — the subtraction is kept as crash defense).
-    * Marker batches fold and retire with everything else now that marker
-    * tables are ordinary listed tables.
-    *
-    * @param tables (name, fold transform, extra partition cols after batch)
-    */
-  private[graft] def compactFamily(spark: SparkSession, familyPath: String,
-      tables: Seq[(String, DataFrame => DataFrame, Seq[String])]): Unit =
-      withIndexWriter(familyPath) {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(familyPath)
-    val famPtr = root.resolve("FAMILY")
-    val expected =
-      if (Files.exists(famPtr))
-        Some(new String(Files.readAllBytes(famPtr),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      else None
-    // the next version must clear BOTH counters: the family's own, and any
-    // legacy per-table `_v<K>` dirs from the pre-FAMILY scheme. Deriving it
-    // from the family counter alone had two failure modes: (a) the first
-    // family commit of a legacy index could derive _v1 while a table was
-    // SERVING from its own _v1 — casSwap's promotion then destroyed the
-    // serving layout in place (no retention cycle at all); (b) legacy dirs
-    // numbered >= the family counter were never swept, so a GDPR purge +
-    // vacuum left pre-purge bytes on disk indefinitely. Starting past the
-    // max of every counter makes legacy dirs ordinary old versions: kept
-    // one cycle, then vacuumed like everything else.
-    // per-table pre-commit version counters: they feed BOTH the next-version
-    // derivation and the retention rule below (a table FIRST versioned by
-    // this commit keeps its flat batch=* layout one cycle for pinned
-    // readers, even when the family counter is already past 2 — the
-    // marker-table migration case)
-    val prevMaxByTable: Map[String, Long] = tables.map { case (name, _, _) =>
-      name -> maxVersionIn(Paths.get(familyPath, name))
-    }.toMap
-    val maxLegacy = prevMaxByTable.values.foldLeft(0L)(math.max)
-    val next = s"_v${math.max(
-      expected.map(_.stripPrefix("_v").toLong).getOrElse(0L), maxLegacy) + 1}"
-    // fold only VISIBLE batches (when the family keeps a manifest): a torn
-    // append's half-landed partitions are physically dropped by the fold —
-    // the compaction doubles as the self-heal for crashed appends
-    val visible = visibleBatches(familyPath)
-    def visibleOnly(df: DataFrame): DataFrame = visible match {
-      case Some(ids) => df.filter(col("batch").isInCollection("base" +: ids.toSeq))
-      case None => df
-    }
-    val staged = tables.map { case (name, transform, extraCols) =>
-      val oldDir = resolveIndexDir(s"$familyPath/$name")
-      val finalDir = Paths.get(familyPath, name, next)
-      (name, transform, extraCols, oldDir,
-        graft.core.OptimisticPointer.stagingFor(finalDir), finalDir)
-    }
-    inParallel(staged.map { case (_, transform, extraCols, oldDir, stagingDir, _) =>
-      () => {
-        // a data-less source (marker table with nothing pending, or a table
-        // never written) still commits a generation: an EMPTY staging dir —
-        // spark.read.parquet would reject it, and readers gate on
-        // hasBatchData instead. This is what lets EVERY generation carry
-        // its own marker view (possibly "none pending").
-        if (!hasBatchData(oldDir)) {
-          Files.createDirectories(stagingDir): Unit
-        } else {
-          val folded = transform(visibleOnly(spark.read.parquet(oldDir)).drop("batch"))
-            .withColumn("batch", lit("base"))
-          // cluster on the layout's partition columns — the writeIndexBatch
-          // rationale: unclustered, a compaction re-explodes the file count
-          // it exists to shrink (tasks × buckets small files); width sized
-          // from the fold's estimate (r13-opt, see sizedForWrite)
-          sizedForWrite(folded, extraCols)
-            .write.partitionBy("batch" +: extraCols: _*).mode("overwrite")
-            .parquet(stagingDir.toString)
-        }
-      }
-    })
-    // MIGRATION BACKFILL (round-12 ADVICE): a table FIRST versioned by this
-    // commit (prevMax 0) in a family whose counter is already past 0 gets
-    // an EMPTY dir at the SUPERSEDED generation too — without it, a serve
-    // pinned at `expected` races this flip into the vacuumed-pin detector
-    // (_vN absent, no flat batch dirs, _v{N+1} present ⇒ misclassified as
-    // vacuumed and failed loudly) when the right answer is "no markers at
-    // generation N". Only when NO flat batch dirs exist: with flat dirs
-    // present they ARE the pinned generation's data and the fallback must
-    // keep resolving to them, not to a fresh empty dir.
-    expected.foreach { exp =>
-      staged.foreach { case (name, _, _, _, _, _) =>
-        val tableDir = Paths.get(familyPath, name)
-        if (prevMaxByTable.getOrElse(name, 0L) == 0L && !hasFlatBatchDirs(tableDir))
-          Files.createDirectories(tableDir.resolve(exp)): Unit
-      }
-    }
-    try graft.core.OptimisticPointer.casSwap(root, "FAMILY", expected, next,
-      stages = staged.map(s => s._5 -> s._6))
-    finally staged.foreach(s => clearDir(s._5.toString)) // loser cleans staging
-    // retire the folded ids (marker batches folded with everything else;
-    // kept as a subtraction rather than a blank for crash defense)
-    if (visible.isDefined) withVisibleLock(familyPath) {
-      val captured = visible.get
-      val current = visibleBatches(familyPath).getOrElse(Set.empty)
-      writeVisibleFile(familyPath, current -- captured)
-    }
-    // retention sweep per table (post-flip): keep each table's
-    // immediately superseded layout for in-flight lock-free readers,
-    // VACUUM everything older ([[sweepSupersededVersions]]); retire any
-    // legacy per-table pointer (the family pointer owns resolution from
-    // here on — deleting the pointer FILE strands no reader, they hold
-    // resolved dir paths, which retention preserves one cycle). A table
-    // FIRST versioned by this commit (prevMax 0 — e.g. a marker table of a
-    // family whose counter is already high) keeps its flat batch=* dirs
-    // one cycle regardless of the family counter: they ARE its
-    // immediately superseded layout, and pinned readers of the previous
-    // generation resolve to them.
-    val committed = next.stripPrefix("_v").toLong
-    staged.foreach { case (name, _, _, _, _, _) =>
-      val flat = Paths.get(familyPath, name)
-      if (prevMaxByTable.getOrElse(name, 0L) >= 1L)
-        sweepSupersededVersions(flat, committed)
-      else {
-        // first-versioned table: the migration backfill above may have
-        // created an EMPTY dir at the superseded generation `expected`,
-        // which can sit MORE than retentionCycles below `committed` when
-        // legacy per-table version dirs pushed the counter (the next-
-        // version derivation takes the max of every counter). Widen the
-        // keep so this commit's own sweep cannot delete the dir it just
-        // created for pinned readers (round-12 review finding).
-        val keepFloor = expected.map(e => committed - e.stripPrefix("_v").toLong)
-          .getOrElse(0L).toInt
-        sweepSuperseded(flat, committed, dedupVersionOf, _ => false,
-          keep = math.max(retentionCycles, keepFloor))
-      }
-      Files.deleteIfExists(flat.resolve("CURRENT")): Unit
-    }
   }
 
   /** Compact a batch-partitioned index: fold every `batch=<id>` partition
@@ -843,226 +332,6 @@ object Dedup {
     // mutually exclude (the nested subtable lock acquires in the same
     // family→table order as the incremental's writeIndexBatch — no cycle)
     withIndexWriter(indexPath)(compactBatchedDir(spark, s"$indexPath/vectors"))
-
-  /** Run independent index-maintenance tasks CONCURRENTLY — a multi-table
-    * index (BM25's postings/termdf/stats/doclens, the LM's five counts)
-    * pays one fixed Spark-job latency per table when written or compacted
-    * serially, and the tables are disjoint directories over already-staged
-    * (persisted) inputs, so the only thing serialization buys is wall
-    * time. Spark schedules concurrent actions fine (FIFO within the pool);
-    * exceptions propagate to the caller. */
-  private[graft] def inParallel(tasks: Seq[() => Unit]): Unit = {
-    // DEGRADE TO SEQUENTIAL under the analyzer's catalog monitor: a SQL
-    // statement face (feature_store_merge) executes lifecycle ops INSIDE
-    // analysis, where Spark holds the SessionCatalog lock — a worker
-    // thread building a Dataset then needs that same lock for its own
-    // analysis and the join deadlocks (observed: commitIncremental's
-    // bucketCounts parked under ResolveFunctions). Parallelism here is a
-    // latency optimization, never a semantic; sequential is always correct.
-    val underCatalogLock = org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(s => Thread.holdsLock(s.sessionState.catalog))
-    if (tasks.size <= 1 || underCatalogLock) { tasks.foreach(_()); return }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tasks.size, 8))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf): Unit
-    finally pool.shutdown()
-  }
-
-  /** VERSION RETENTION for lock-free readers: after committing version N,
-    * keep N−1 (the immediately superseded layout) and VACUUM everything
-    * older — `_v<k>` dirs with k < N−1, plus the pre-versioning flat
-    * `batch=*` dirs once N ≥ 2. Writers serialize on [[withIndexWriter]],
-    * but READERS deliberately take no lock; deleting the superseded
-    * version at commit time made a reader that resolved it mid-scan fail
-    * on vanished files. Keep-one bounds that window to a full compaction
-    * CYCLE (the Delta/Iceberg VACUUM-after-retention contract): only a
-    * reader still scanning after TWO compactions of the same index can
-    * observe deleted files. Disk cost: one extra copy of one index,
-    * reclaimed at the next compaction. */
-  private def sweepSupersededVersions(root: java.nio.file.Path,
-      committed: Long): Unit =
-    sweepSuperseded(root, committed, dedupVersionOf, _.startsWith("batch="))
-
-  /** Version number of a `_v<K>` dir name (the dedup-index scheme). */
-  private def dedupVersionOf(n: String): Option[Long] =
-    if (n.startsWith("_v") && n.drop(2).nonEmpty && n.drop(2).forall(_.isDigit))
-      Some(n.drop(2).toLong)
-    else None
-
-  /** RETENTION POLICY: how many superseded generations each versioned
-    * layout keeps for in-flight lock-free readers before the commit-time
-    * sweep reclaims them. 1 (the default) bounds a reader's window to one
-    * full compaction cycle — the Delta/Iceberg VACUUM-after-retention
-    * contract; raise it when long-running readers (multi-hour training
-    * jobs over a pinned snapshot) must survive several maintenance cycles.
-    * Seeds from `GRAFT_RETENTION_CYCLES` (defensively parsed — an
-    * unparseable value falls back to the default, it must not fail every
-    * commit), overridable at runtime with [[setRetentionCycles]].
-    * The EXPLICIT vacuums ([[vacuumIndex]], [[vacuumFamily]],
-    * [[graft.sources.ZoneMap.vacuum]]) always sweep to keep-0 — erasure
-    * timeliness is the operator's call, not the policy's. */
-  @volatile private var retentionCyclesVar: Int =
-    sys.env.get("GRAFT_RETENTION_CYCLES")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(1)
-
-  def retentionCycles: Int = retentionCyclesVar
-
-  def setRetentionCycles(n: Int): Unit = {
-    require(n >= 1, s"retention must keep >= 1 superseded generation, got $n")
-    retentionCyclesVar = n
-  }
-
-  /** The retention rule, layout-agnostic (shared with
-    * [[graft.sources.ZoneMap]], whose versions are `v<N>` and whose
-    * pre-versioning layout is named dirs instead of `batch=*`): delete
-    * every version older than `committed − keep`, and the flat legacy
-    * layout once `committed ≥ 1 + keep` (it is then more than `keep`
-    * generations old). `keep` defaults to the configured
-    * [[retentionCycles]]; explicit vacuums pass 0. ONE implementation — a
-    * future change to the retention rule must not silently diverge
-    * between the index and table-format layouts. */
-  private[graft] def sweepSuperseded(root: java.nio.file.Path, committed: Long,
-      versionOf: String => Option[Long], isFlatLegacy: String => Boolean,
-      keep: Int = retentionCycles): Unit = {
-    import java.nio.file.Files
-    if (!Files.exists(root)) return
-    val ls = Files.list(root)
-    val entries = try ls.iterator().asScala.toList finally ls.close()
-    entries.foreach { p =>
-      val n = p.getFileName.toString
-      val staleVersion = versionOf(n).exists(_ < committed - keep)
-      val staleFlat = committed >= 1 + keep && isFlatLegacy(n)
-      if (staleVersion || staleFlat) clearDir(p.toString)
-    }
-  }
-
-  /** Highest `_v<K>` version dir present under `root` (0 when none) — the
-    * legacy-counter probe [[compactFamily]] clears when deriving the next
-    * family version. */
-  private def maxVersionIn(root: java.nio.file.Path): Long = {
-    import java.nio.file.Files
-    if (!Files.exists(root)) return 0L
-    val ls = Files.list(root)
-    try ls.iterator().asScala
-      .flatMap(p => dedupVersionOf(p.getFileName.toString)).foldLeft(0L)(math.max)
-    finally ls.close()
-  }
-
-  /** Drop every SUPERSEDED layout of one index table NOW, keeping only the
-    * current version — the explicit final step of a GDPR erase under
-    * version retention: a purge's rewrite physically erases the SERVING
-    * layout immediately, but the retained previous version (kept one cycle
-    * for lock-free readers) still holds the erased rows' bytes until the
-    * next maintenance cycle or this call. The
-    * [[graft.core.FeatureStore.gcOnline]] precedent: erasure timeliness is
-    * an explicit operator decision, because sweeping early re-opens the
-    * reader window retention exists to close. Works on a flat, CURRENT-
-    * pointer, or FAMILY-pointer table path; for a multi-table family,
-    * call it per table. */
-  def vacuumIndex(indexPath: String): Unit = {
-    // a FAMILY-governed table must vacuum under the FAMILY lock (the
-    // family→table acquisition order everywhere): locking only the table
-    // would let a concurrent compactFamily advance the pointer between
-    // this resolve and the sweep — the vacuum would silently keep the
-    // version it was asked to remove
-    val parent = Option(java.nio.file.Paths.get(indexPath).getParent)
-      .filter(p => java.nio.file.Files.exists(p.resolve("FAMILY")))
-    def body(): Unit = withIndexWriter(indexPath) {
-      // crashed-compaction staging debris lives INSIDE the table dir
-      // (`_staging__vN_*`) where the `_v<k>`/`batch=*` sweep never matched
-      // it (round-12 ADVICE: purged-generation bytes survived the erasure
-      // SLA's final step). The writer lock excludes a live compaction, so
-      // any staging dir present here is debris by definition.
-      val ixp = java.nio.file.Paths.get(indexPath)
-      if (java.nio.file.Files.isDirectory(ixp)) {
-        val ls = java.nio.file.Files.list(ixp)
-        val stale = try ls.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("_staging_")).toList
-          finally ls.close()
-        stale.foreach(p => clearDir(p.toString))
-      }
-      val cur = resolveIndexDir(indexPath)
-      if (cur != indexPath) {
-        dedupVersionOf(java.nio.file.Paths.get(cur).getFileName.toString)
-          .foreach { committed =>
-            // keep = 0: delete every _v<k> with k < committed and the
-            // pre-versioning flat batch dirs — an explicit vacuum always
-            // sweeps to the current generation, whatever retentionCycles is
-            sweepSuperseded(java.nio.file.Paths.get(indexPath), committed,
-              dedupVersionOf, _.startsWith("batch="), keep = 0)
-          }
-      }
-    }
-    parent match {
-      case Some(fam) => withIndexWriter(fam.toString)(body())
-      case None => body()
-    }
-  }
-
-  /** Vacuum EVERY table of a multi-table family NOW — the one-call final
-    * step of the family-level erasure SLA (purge → vacuumFamily ⇒ the
-    * deleted rows' bytes are gone from disk, including the retained
-    * superseded generations and any crashed compaction's staging debris).
-    * Takes the family lock for the whole sweep, so a concurrent
-    * compaction cannot advance pointers between a table's resolve and its
-    * sweep (the [[vacuumIndex]] rationale, family-wide). */
-  def vacuumFamily(familyPath: String): Unit = withIndexWriter(familyPath) {
-    val root = java.nio.file.Paths.get(familyPath)
-    val ls = java.nio.file.Files.list(root)
-    val dirs = try ls.iterator().asScala
-      .filter(java.nio.file.Files.isDirectory(_)).toList finally ls.close()
-    dirs.foreach { d =>
-      if (d.getFileName.toString.startsWith("_staging_"))
-        clearDir(d.toString) // crashed-loser debris
-      else vacuumIndex(d.toString)
-    }
-  }
-
-  private[graft] def compactBatchedDir(spark: SparkSession, indexPath: String,
-      transform: DataFrame => DataFrame = identity,
-      extraPartitionCols: Seq[String] = Nil): Unit = withIndexWriter(indexPath) {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val root = Paths.get(indexPath)
-    val oldDir = resolveIndexDir(indexPath)
-    val oldVersion =
-      if (oldDir == indexPath) 0L
-      else Paths.get(oldDir).getFileName.toString.stripPrefix("_v").toLong
-    val next = oldVersion + 1
-    // one shuffle-free rewrite: rows are read and rewritten as-is (schema-
-    // generic — whatever the index stores besides the partition column),
-    // through the caller's optional transform (e.g. a tombstone anti-join
-    // that makes the compaction a physical purge).
-    // A retry after a pre-swap crash starts a fresh staging dir; a
-    // crashed attempt's _v<next> debris is replaced at promotion time.
-    // Rewrite into a PRIVATE staging dir (a racing compaction derives the
-    // same _v<next> name; only the CAS winner may touch it)
-    val finalDir = root.resolve(s"_v$next")
-    val stagingDir = graft.core.OptimisticPointer.stagingFor(finalDir)
-    transform(spark.read.parquet(oldDir).drop("batch"))
-      .withColumn("batch", lit("base"))
-      .write.partitionBy("batch" +: extraPartitionCols: _*).mode("overwrite")
-      .parquet(stagingDir.toString)
-    // compare-and-swap commit: a concurrent compaction that already moved
-    // CURRENT makes this one fail loudly instead of silently superseding a
-    // version whose rows this rewrite never read
-    try graft.core.OptimisticPointer.casSwap(root, "CURRENT",
-      expected = if (oldDir == indexPath) None else Some(s"_v$oldVersion"),
-      next = s"_v$next", stage = Some(stagingDir -> finalDir))
-    finally if (Files.exists(stagingDir)) { // loser cleans its own staging
-      val walk = Files.walk(stagingDir)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
-    // retention sweep: keep the immediately superseded layout for
-    // in-flight lock-free readers, VACUUM everything older
-    // ([[sweepSupersededVersions]])
-    sweepSupersededVersions(root, next)
-  }
 
   /** Build (overwrite) a minhash signature index WITHOUT running any dedup —
     * the bootstrap for [[minhashLshIncremental]] when the existing corpus is
@@ -1898,8 +1167,8 @@ object Dedup {
 
   /** Fold the containment index's per-batch partitions into one `base`
     * generation under a new version dir, all three tables committed by ONE
-    * family CAS ([[compactFamily]] — tok/sets/dfs can never serve at mixed
-    * versions). The frozen dfs table compacts too (it is single-batch, but
+    * family CAS ([[graft.core.IndexLifecycle.compactFamily]] — tok/sets/dfs
+    * can never serve at mixed versions). The frozen dfs table compacts too (it is single-batch, but
     * a rebuilt index may have re-written it). */
   def compactContainmentIndex(spark: SparkSession, indexPath: String): Unit =
     compactFamily(spark, indexPath, Seq(

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
+import graft.core.IndexLifecycle
 import GraftFunctions.{portableHash60, wsTokensFused}
 import PortableMath.lnPosLong
 
@@ -184,12 +184,12 @@ object Dsir {
   def buildDsirIndex(target: DataFrame, pool: DataFrame, id: String,
       text: String, indexPath: String, buckets: Int = 8192): Unit = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    Dedup.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
+    IndexLifecycle.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
       writeDsirBatch(Some(target), pool, id, text, indexPath, "base", buckets,
         wholeIndex = true)
       // (re)start the batch-visibility manifest: from here on a pool append's
       // raw+stats partials become readable atomically, at commitVisibleBatch
-      Dedup.resetVisibleBatches(indexPath)
+      IndexLifecycle.resetVisibleBatches(indexPath)
     }
   }
 
@@ -199,7 +199,7 @@ object Dsir {
     * exemplar stays frozen: DSIR's question is "does the NEW data look like
     * the trusted corpus", not "does the trusted corpus drift". */
   def appendDsirIndex(newPool: DataFrame, id: String, text: String,
-      indexPath: String, batchId: String): Unit = Dedup.withIndexWriter(indexPath) {
+      indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
     val buckets = readDsirBuckets(newPool.sparkSession, indexPath)
     writeDsirBatch(None, newPool, id, text, indexPath, batchId, buckets,
       wholeIndex = false)
@@ -207,10 +207,10 @@ object Dsir {
 
   /** Fold per-batch partials into one row per bucket under a new version
     * dir, committed for all three tables by ONE family CAS
-    * ([[graft.dedup.Dedup.compactFamily]] — no mixed versions for an
+    * ([[graft.core.IndexLifecycle.compactFamily]] — no mixed versions for an
     * overlapping reader). */
   def compactDsirIndex(spark: SparkSession, indexPath: String): Unit =
-    Dedup.compactFamily(spark, indexPath, Seq(
+    IndexLifecycle.compactFamily(spark, indexPath, Seq(
       ("target",
         (df: DataFrame) => df.groupBy("fb").agg(sum(col("c")).as("c"))
           .filter(col("c") > 0), Nil),
@@ -229,15 +229,15 @@ object Dsir {
       docs: DataFrame, id: String, text: String): DataFrame = {
     // ONE family snapshot for the whole serve (the bm25TopKIndexed
     // discipline): stats, target, and raw resolve at the same generation
-    val snap = Some(Dedup.familySnapshot(indexPath))
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath))
     val buckets = readDsirBuckets(spark, indexPath, snap)
-    val totals = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+    val totals = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .agg(coalesce(sum(col("t_occ")), lit(0L)).as("t"),
         coalesce(sum(col("r_occ")), lit(0L)).as("r"))
       .first()
-    val cT = Dedup.readVisibleTable(spark, indexPath, "target", snapshot = snap)
+    val cT = IndexLifecycle.readVisibleTable(spark, indexPath, "target", snapshot = snap)
       .groupBy("fb").agg(sum(col("c")).as("c_t")).filter(col("c_t") > 0)
-    val cR = Dedup.readVisibleTable(spark, indexPath, "raw", snapshot = snap)
+    val cR = IndexLifecycle.readVisibleTable(spark, indexPath, "raw", snapshot = snap)
       .groupBy("fb").agg(sum(col("c")).as("c_r")).filter(col("c_r") > 0)
     val pTokd = tokd(docs, id, text).persist()
     pTokd.count(): Unit // feeds the feature explode AND the zero-feat join
@@ -252,8 +252,8 @@ object Dsir {
   }
 
   private def readDsirBuckets(spark: SparkSession, indexPath: String,
-      snap: Option[Dedup.FamilySnapshot] = None): Int = {
-    val rows = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Int = {
+    val rows = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .select("buckets").distinct().collect()
     require(rows.length == 1,
       s"DSIR index at $indexPath has ${rows.length} distinct bucket counts")
@@ -282,18 +282,18 @@ object Dsir {
     val spark = pool.sparkSession
     import spark.implicits._
     val stats = Seq((tOcc, rOcc, buckets)).toDF("t_occ", "r_occ", "buckets")
-    Dedup.withIndexWriter(indexPath) {
-      Dedup.inParallel(
-        tCounts.map(c => () => Dedup.writeIndexBatch(c, s"$indexPath/target",
+    IndexLifecycle.withIndexWriter(indexPath) {
+      IndexLifecycle.inParallel(
+        tCounts.map(c => () => IndexLifecycle.writeIndexBatch(c, s"$indexPath/target",
           batchId, wholeIndex)).toSeq ++ Seq(
-        () => Dedup.writeIndexBatch(rCounts, s"$indexPath/raw", batchId,
+        () => IndexLifecycle.writeIndexBatch(rCounts, s"$indexPath/raw", batchId,
           wholeIndex),
-        () => Dedup.writeIndexBatch(stats, s"$indexPath/stats", batchId,
+        () => IndexLifecycle.writeIndexBatch(stats, s"$indexPath/stats", batchId,
           wholeIndex)))
       // atomic visibility: a pool batch's raw counts and its stats partial
       // appear together — no window where doc counts and occurrence totals
       // disagree
-      if (!wholeIndex) Dedup.commitVisibleBatch(indexPath, batchId)
+      if (!wholeIndex) IndexLifecycle.commitVisibleBatch(indexPath, batchId)
     }
     rCounts.unpersist(false): Unit
     tCounts.foreach(_.unpersist(false): Unit)

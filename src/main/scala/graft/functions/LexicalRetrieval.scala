@@ -1,10 +1,12 @@
 package graft.functions
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
+import graft.core.{Coordination, IndexLifecycle}
 import GraftFunctions.{portableHash60, wsTokens}
 
 /** Persisted BM25 index + fit-free multi-query serving — the LEXICAL face of
@@ -18,11 +20,11 @@ import GraftFunctions.{portableHash60, wsTokens}
   *
   * Index layout under `indexPath` (all tables in the replay-idempotent
   * `batch=<id>` layout shared with the minhash/IVFADC indexes —
-  * [[graft.dedup.Dedup.writeIndexBatch]]). CROSS-TABLE SNAPSHOT ISOLATION
+  * [[graft.core.IndexLifecycle.writeIndexBatch]]). CROSS-TABLE SNAPSHOT ISOLATION
   * at both mutation grains: compaction stages every table and commits them
   * together under ONE `FAMILY` pointer
-  * ([[graft.dedup.Dedup.compactFamily]]), and an append/delete batch
-  * becomes readable only at its [[graft.dedup.Dedup.commitVisibleBatch]] —
+  * ([[graft.core.IndexLifecycle.compactFamily]]), and an append/delete batch
+  * becomes readable only at its [[graft.core.IndexLifecycle.commitVisibleBatch]] —
   * one atomic manifest rewrite after ALL its tables' partitions landed —
   * so a reader can never see postings at batch N with term-df at N−1, in
   * either direction:
@@ -73,14 +75,14 @@ object LexicalRetrieval {
   def buildBm25Index(docs: DataFrame, id: String, text: String,
       indexPath: String, buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    Dedup.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
+    IndexLifecycle.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
       writeBm25Batch(docs, id, text, indexPath, "base", buckets, wholeIndex = true)
       // a rebuild is a NEW index generation: markers from the previous one
       // must not suppress future deletes or hide current docs at serve time
-      Dedup.clearDir(s"$indexPath/tombstones")
+      Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
       // (re)start the batch-visibility manifest: from here on an append's
       // tables become readable atomically, at its commitVisibleBatch
-      Dedup.resetVisibleBatches(indexPath)
+      IndexLifecycle.resetVisibleBatches(indexPath)
     }
   }
 
@@ -92,7 +94,7 @@ object LexicalRetrieval {
     * contract): a doc re-ingested through a second batch would double-count
     * itself in df/n_docs/sum_dl. */
   def appendBm25Index(newDocs: DataFrame, id: String, text: String,
-      indexPath: String, batchId: String): Unit = Dedup.withIndexWriter(indexPath) {
+      indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
     val buckets = readBuckets(newDocs.sparkSession, indexPath)
     writeBm25Batch(newDocs, id, text, indexPath, batchId, buckets,
       wholeIndex = false)
@@ -101,7 +103,7 @@ object LexicalRetrieval {
   /** Compact per-batch partitions: postings/doclens rewrite as-is (postings
     * still partitioned by `tb`), df partials and the stats partials FOLD
     * into one row per key through
-    * [[graft.dedup.Dedup.compactBatchedDir]]'s transform hook — all tables
+    * [[graft.core.IndexLifecycle.compactBatchedDir]]'s transform hook — all tables
     * swap in under the shared atomic CURRENT-pointer versioning. Folding
     * drops df rows that sum to ≤ 0 (a fully-deleted term after a purge). */
   def compactBm25Index(spark: SparkSession, indexPath: String): Unit =
@@ -110,7 +112,7 @@ object LexicalRetrieval {
   private def compactTables(spark: SparkSession, indexPath: String,
       erase: DataFrame => DataFrame): Unit =
     // all five tables fold under ONE family commit (one CAS, no mixed
-    // versions for an overlapping reader — Dedup.compactFamily). The
+    // versions for an overlapping reader — IndexLifecycle.compactFamily). The
     // tombstone markers fold WITH the data: identity under a plain
     // compaction (pending markers survive into the new generation's base,
     // still hiding their docs), the purge's anti-join under a purge
@@ -118,7 +120,7 @@ object LexicalRetrieval {
     // every generation carries its own marker view and a serve pinned at
     // the superseded generation keeps its pending deletes one full
     // retention cycle.
-    Dedup.compactFamily(spark, indexPath, Seq(
+    IndexLifecycle.compactFamily(spark, indexPath, Seq(
       ("postings", erase, Seq("tb")),
       ("doclens", erase, Nil),
       ("termdf",
@@ -148,7 +150,7 @@ object LexicalRetrieval {
     * maintenance-class scan over postings + doclens), so the caller deletes
     * by id alone — no payload needed. */
   def deleteFromBm25Index(keys: DataFrame, id: String, indexPath: String,
-      batchId: String): Unit = Dedup.withIndexWriter(indexPath) {
+      batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
     // the lock spans the READS too: the decrements are computed by jobs
     // over the resolved layout's files, which a concurrent compaction's
     // post-flip cleanup would delete mid-read (writer-vs-writer — plain
@@ -156,7 +158,7 @@ object LexicalRetrieval {
     val spark = keys.sparkSession
     val buckets = readBuckets(spark, indexPath)
     val ids = keys.select(col(id).cast("long").as("doc_id")).distinct()
-    val known = Dedup.readVisibleTable(spark, indexPath, "doclens")
+    val known = IndexLifecycle.readVisibleTable(spark, indexPath, "doclens")
       .join(ids, Seq("doc_id"), "leftsemi")
     val fresh = readTombstones(spark, indexPath)
       .fold(known)(t => known.join(broadcast(t), Seq("doc_id"), "left_anti"))
@@ -165,19 +167,19 @@ object LexicalRetrieval {
     val negStats = fresh
       .agg((-count(lit(1))).as("n_docs"), (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
       .withColumn("tb_buckets", lit(buckets))
-    val negDf = Dedup.readVisibleTable(spark, indexPath, "postings")
+    val negDf = IndexLifecycle.readVisibleTable(spark, indexPath, "postings")
       .join(fresh.select("doc_id"), Seq("doc_id"), "leftsemi")
       .groupBy("term_id").agg((-count(lit(1))).as("df"))
-    Dedup.withIndexWriter(indexPath) {
-      Dedup.inParallel(Seq(
-        () => Dedup.writeIndexBatch(negDf, s"$indexPath/termdf", batchId),
-        () => Dedup.writeIndexBatch(negStats, s"$indexPath/stats", batchId),
-        () => Dedup.writeIndexBatch(fresh.select("doc_id"),
+    IndexLifecycle.withIndexWriter(indexPath) {
+      IndexLifecycle.inParallel(Seq(
+        () => IndexLifecycle.writeIndexBatch(negDf, s"$indexPath/termdf", batchId),
+        () => IndexLifecycle.writeIndexBatch(negStats, s"$indexPath/stats", batchId),
+        () => IndexLifecycle.writeIndexBatch(fresh.select("doc_id"),
           s"$indexPath/tombstones", batchId)))
       // atomic visibility: the markers and BOTH negative partials appear
       // together or not at all — a torn delete can no longer hide docs while
       // scoring against pre-deletion statistics
-      Dedup.commitVisibleBatch(indexPath, batchId)
+      IndexLifecycle.commitVisibleBatch(indexPath, batchId)
     }
     fresh.unpersist(false): Unit
   }
@@ -196,10 +198,10 @@ object LexicalRetrieval {
     * lock-free readers — WITH its own marker view, so a serve pinned
     * there keeps excluding the deleted docs) still holds the erased bytes
     * until the next compaction — for a complete physical erase NOW, follow
-    * with [[graft.dedup.Dedup.vacuumIndex]] on each table (the
+    * with [[graft.core.IndexLifecycle.vacuumIndex]] on each table (the
     * FeatureStore `deleteRecords → compactOffline → gcOnline` pattern). */
   def purgeBm25Index(spark: SparkSession, indexPath: String): Unit =
-      Dedup.withIndexWriter(indexPath) {
+      IndexLifecycle.withIndexWriter(indexPath) {
     readTombstones(spark, indexPath) match {
       case Some(t0) =>
         val t = broadcast(t0)
@@ -210,8 +212,8 @@ object LexicalRetrieval {
   }
 
   private def readTombstones(spark: SparkSession, indexPath: String,
-      snap: Option[Dedup.FamilySnapshot] = None): Option[DataFrame] =
-    Dedup.readMarkerTable(spark, indexPath, "tombstones", snapshot = snap)
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Option[DataFrame] =
+    IndexLifecycle.readMarkerTable(spark, indexPath, "tombstones", snapshot = snap)
       .map(_.select("doc_id").distinct())
 
   /** Serve a BATCH of queries fit-free from the persisted index.
@@ -253,7 +255,7 @@ object LexicalRetrieval {
     // manifest — a compaction committing mid-serve can no longer hand this
     // read postings of one generation and term-df of another (version
     // retention keeps the pinned generation's files alive)
-    val snap = Some(Dedup.familySnapshot(indexPath))
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath))
     val buckets = readBuckets(spark, indexPath, snap)
     val qt = queries
       .select(col(id).as("query_id"), explode(col(terms)).as("term"))
@@ -270,7 +272,7 @@ object LexicalRetrieval {
           lit(0L).as("doc_id"), lit(0L).as("dl"), lit(0.0).as("score"))
         .limit(0)
     }
-    val post0 = Dedup.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
+    val post0 = IndexLifecycle.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
       .filter(col("tb").isin(tbs: _*))
       .join(broadcast(qt), Seq("term_id"))
     // pending erasures leave the scan hidden until purge (id-only narrow
@@ -280,10 +282,10 @@ object LexicalRetrieval {
     val post = readTombstones(spark, indexPath, snap)
       .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
     val qtIds = qt.select("term_id").distinct()
-    val dfAgg = Dedup.readVisibleTable(spark, indexPath, "termdf", snapshot = snap)
+    val dfAgg = IndexLifecycle.readVisibleTable(spark, indexPath, "termdf", snapshot = snap)
       .join(broadcast(qtIds), Seq("term_id"), "leftsemi")
       .groupBy("term_id").agg(sum(col("df")).as("df"))
-    val consts = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+    val consts = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
     // stop-term cut happens on the TINY df frame, and the inner join below
     // then drops the cut terms' posting rows at the broadcast probe — the
@@ -354,11 +356,11 @@ object LexicalRetrieval {
       phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.size >= 2 && phrase.size <= 8,
       "phraseTopK: 2..8 terms (each term is one narrow self-join arm)")
-    val snap = Some(Dedup.familySnapshot(indexPath)) // one generation per serve
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per serve
     val buckets = readBuckets(spark, indexPath, snap)
     val ids = phrase.map(t => driverHash60(t.toLowerCase))
     val tbs = ids.map(h => h % buckets).distinct
-    val post0 = Dedup.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
+    val post0 = IndexLifecycle.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
       .filter(col("tb").isin(tbs: _*))
     val post = readTombstones(spark, indexPath, snap)
       .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
@@ -416,11 +418,11 @@ object LexicalRetrieval {
     require(window >= 1, s"window must be >= 1, got $window")
     require(termA.toLowerCase != termB.toLowerCase,
       "proximityTopK: distinct terms (same-term distance is trivially 0)")
-    val snap = Some(Dedup.familySnapshot(indexPath)) // one generation per serve
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per serve
     val buckets = readBuckets(spark, indexPath, snap)
     val ids = Seq(termA, termB).map(t => driverHash60(t.toLowerCase))
     val tbs = ids.map(_ % buckets).distinct
-    val post0 = Dedup.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
+    val post0 = IndexLifecycle.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
       .filter(col("tb").isin(tbs: _*))
     val post = readTombstones(spark, indexPath, snap)
       .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
@@ -493,10 +495,10 @@ object LexicalRetrieval {
     * are already netted out, and the numbers describe the LOGICAL corpus the
     * serve path scores against, not the physical bytes). */
   def describeBm25Index(spark: SparkSession, indexPath: String): DataFrame = {
-    val snap = Some(Dedup.familySnapshot(indexPath)) // one generation per read
-    val stats = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per read
+    val stats = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    val termdf = Dedup.readVisibleTable(spark, indexPath, "termdf", snapshot = snap)
+    val termdf = IndexLifecycle.readVisibleTable(spark, indexPath, "termdf", snapshot = snap)
       .groupBy("term_id").agg(sum(col("df")).as("df"))
       .filter(col("df") > 0)
       .agg(count(lit(1)).as("n_terms"), sum(col("df")).as("n_postings"))
@@ -521,8 +523,8 @@ object LexicalRetrieval {
     * stats rows; every batch must agree (probe pruning reads only the
     * computed buckets, so a mixed layout would silently drop postings). */
   private def readBuckets(spark: SparkSession, indexPath: String,
-      snap: Option[Dedup.FamilySnapshot] = None): Int = {
-    val rows = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Int = {
+    val rows = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .select("tb_buckets").distinct().collect()
     require(rows.length == 1,
       s"bm25 index at $indexPath has ${rows.length} distinct bucket counts")
@@ -557,21 +559,21 @@ object LexicalRetrieval {
       .persist()
     postings.count(): Unit // staged: feeds the postings write AND termdf
     val termdf = postings.groupBy("term_id").agg(count(lit(1)).as("df"))
-    Dedup.withIndexWriter(indexPath) {
-      Dedup.inParallel(Seq(
-        () => Dedup.writeIndexBatch(postings, s"$indexPath/postings", batchId,
+    IndexLifecycle.withIndexWriter(indexPath) {
+      IndexLifecycle.inParallel(Seq(
+        () => IndexLifecycle.writeIndexBatch(postings, s"$indexPath/postings", batchId,
           wholeIndex, partitionCols = Seq("tb")),
-        () => Dedup.writeIndexBatch(termdf, s"$indexPath/termdf", batchId,
+        () => IndexLifecycle.writeIndexBatch(termdf, s"$indexPath/termdf", batchId,
           wholeIndex),
-        () => Dedup.writeIndexBatch(stats, s"$indexPath/stats", batchId,
+        () => IndexLifecycle.writeIndexBatch(stats, s"$indexPath/stats", batchId,
           wholeIndex),
-        () => Dedup.writeIndexBatch(tokd.select("doc_id", "dl"),
+        () => IndexLifecycle.writeIndexBatch(tokd.select("doc_id", "dl"),
           s"$indexPath/doclens", batchId, wholeIndex)))
       // the COMMIT of a multi-table append: all four tables' partitions are
       // on disk — one atomic manifest rewrite makes the batch visible in all
       // of them at once (a crash before this line leaves it invisible; the
       // same-id retry overwrites the partitions and commits)
-      if (!wholeIndex) Dedup.commitVisibleBatch(indexPath, batchId)
+      if (!wholeIndex) IndexLifecycle.commitVisibleBatch(indexPath, batchId)
     }
     postings.unpersist(false): Unit
     tokd.unpersist(false): Unit

@@ -1,9 +1,11 @@
 package graft.functions
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
+import graft.core.{Coordination, IndexLifecycle}
 import GraftFunctions.{portableHash60, wsTokensFused}
 import PortableMath.lnPosLong
 
@@ -181,16 +183,16 @@ object LmPerplexity {
   def buildLmIndex(docs: DataFrame, id: String, text: String,
       indexPath: String, buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    Dedup.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
+    IndexLifecycle.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
       writeLmBatch(docs, id, text, indexPath, "base", buckets, wholeIndex = true)
       // a rebuild is a NEW generation: stale markers from the previous one
       // would make deleteFromLmIndex's already-deleted check silently skip
       // legitimate unlearns of re-ingested docs (the buildBm25Index twin —
       // this path previously missed the clear)
-      Dedup.clearDir(s"$indexPath/tombstones")
+      Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
       // (re)start the batch-visibility manifest: from here on an append's or
       // unlearn's five tables become readable atomically, at commitVisibleBatch
-      Dedup.resetVisibleBatches(indexPath)
+      IndexLifecycle.resetVisibleBatches(indexPath)
     }
   }
 
@@ -199,7 +201,7 @@ object LmPerplexity {
     * [[LexicalRetrieval.appendBm25Index]] contract: docs must be new; a
     * re-ingested doc would double-count itself). */
   def appendLmIndex(newDocs: DataFrame, id: String, text: String,
-      indexPath: String, batchId: String): Unit = Dedup.withIndexWriter(indexPath) {
+      indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
     val buckets = readBuckets(newDocs.sparkSession, indexPath)
     writeLmBatch(newDocs, id, text, indexPath, batchId, buckets,
       wholeIndex = false)
@@ -207,7 +209,7 @@ object LmPerplexity {
 
   /** Fold per-batch partials into one row per key under a new version dir,
     * committed for ALL FIVE tables by one family CAS
-    * ([[graft.dedup.Dedup.compactFamily]] — an overlapping reader can never
+    * ([[graft.core.IndexLifecycle.compactFamily]] — an overlapping reader can never
     * see bigrams at version N with contexts at N−1). Pending deletions'
     * NEGATIVE partials net out physically here; a count folded to ≤ 0 (a
     * fully-unlearned n-gram) drops its row — V and the bigram-type count
@@ -215,7 +217,7 @@ object LmPerplexity {
   def compactLmIndex(spark: SparkSession, indexPath: String,
       eraseDocs: DataFrame => DataFrame = identity): Unit = {
     val buckets = readBuckets(spark, indexPath)
-    Dedup.compactFamily(spark, indexPath, Seq(
+    IndexLifecycle.compactFamily(spark, indexPath, Seq(
       ("bigrams",
         (df: DataFrame) => df.groupBy("bg_id", "ctx_id")
           .agg(sum(col("c")).as("c")).filter(col("c") > 0)
@@ -258,14 +260,14 @@ object LmPerplexity {
     * ids are EXCLUDED via the membership/tombstone tables, so a
     * double-delete (any batch id) cannot double-decrement. */
   def deleteFromLmIndex(docs: DataFrame, id: String, text: String,
-      indexPath: String, batchId: String): Unit = Dedup.withIndexWriter(indexPath) {
+      indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
     // full-span lock (reads included): the decrements are computed by jobs
     // over the resolved layout's files, which a concurrent compaction's
     // cleanup would delete mid-read — the LexicalRetrieval.deleteFromBm25Index
     // rationale
     val spark = docs.sparkSession
     val buckets = readBuckets(spark, indexPath)
-    val member = Dedup.readVisibleTable(spark, indexPath, "docs")
+    val member = IndexLifecycle.readVisibleTable(spark, indexPath, "docs")
       .select(col("doc_id").as("__known_id"))
     val known = docs.join(member,
       docs(id).cast("long") === col("__known_id"), "left_semi")
@@ -294,20 +296,20 @@ object LmPerplexity {
       .persist()
     negBg.count(): Unit
     val negContexts = negBg.groupBy("ctx_id").agg(sum(col("c")).as("c"))
-    Dedup.withIndexWriter(indexPath) {
-      Dedup.inParallel(Seq(
-        () => Dedup.writeIndexBatch(
+    IndexLifecycle.withIndexWriter(indexPath) {
+      IndexLifecycle.inParallel(Seq(
+        () => IndexLifecycle.writeIndexBatch(
           negBg.withColumn("bb", pmod(col("bg_id"), lit(buckets.toLong))),
           s"$indexPath/bigrams", batchId, partitionCols = Seq("bb")),
-        () => Dedup.writeIndexBatch(negContexts, s"$indexPath/contexts", batchId),
-        () => Dedup.writeIndexBatch(negUnigrams, s"$indexPath/unigrams", batchId),
-        () => Dedup.writeIndexBatch(negStats, s"$indexPath/stats", batchId),
-        () => Dedup.writeIndexBatch(tk.select(col("doc_id")),
+        () => IndexLifecycle.writeIndexBatch(negContexts, s"$indexPath/contexts", batchId),
+        () => IndexLifecycle.writeIndexBatch(negUnigrams, s"$indexPath/unigrams", batchId),
+        () => IndexLifecycle.writeIndexBatch(negStats, s"$indexPath/stats", batchId),
+        () => IndexLifecycle.writeIndexBatch(tk.select(col("doc_id")),
           s"$indexPath/tombstones", batchId)))
       // atomic visibility: markers and ALL four negative count partials
       // appear together — a torn unlearn can no longer hide docs while the
       // model still scores with their counts
-      Dedup.commitVisibleBatch(indexPath, batchId)
+      IndexLifecycle.commitVisibleBatch(indexPath, batchId)
     }
     negBg.unpersist(false): Unit
     tk.unpersist(false): Unit
@@ -322,10 +324,10 @@ object LmPerplexity {
     * folding at serve time) and a retry completes. A re-delete of a
     * purged id is a no-op through the membership check. Version retention:
     * the superseded version holds the unlearned bytes (and its own marker
-    * view) one more cycle — [[graft.dedup.Dedup.vacuumIndex]] per table
+    * view) one more cycle — [[graft.core.IndexLifecycle.vacuumIndex]] per table
     * for an immediate full erase (the purgeBm25Index caveat). */
   def purgeLmIndex(spark: SparkSession, indexPath: String): Unit =
-      Dedup.withIndexWriter(indexPath) {
+      IndexLifecycle.withIndexWriter(indexPath) {
     readTombstones(spark, indexPath) match {
       case Some(t0) =>
         val t = broadcast(t0)
@@ -337,7 +339,7 @@ object LmPerplexity {
 
   private def readTombstones(spark: SparkSession, indexPath: String,
       excludeBatch: Option[String] = None): Option[DataFrame] =
-    Dedup.readMarkerTable(spark, indexPath, "tombstones", excludeBatch)
+    IndexLifecycle.readMarkerTable(spark, indexPath, "tombstones", excludeBatch)
       .map(_.select("doc_id").distinct())
 
   /** Score `docs` FIT-FREE against the persisted LM. The request batch's
@@ -365,7 +367,7 @@ object LmPerplexity {
     // ONE family snapshot for the whole serve: all four count tables
     // resolve at the same generation under the same manifest (the
     // bm25TopKIndexed discipline)
-    val snap = Some(Dedup.familySnapshot(indexPath))
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath))
     val buckets = readBuckets(spark, indexPath, snap)
     val scTokd = tokd(docs, id, text).persist()
     scTokd.count(): Unit
@@ -376,12 +378,12 @@ object LmPerplexity {
     val bgC =
       if (bbs.isEmpty)
         spark.emptyDataFrame.select(lit(0L).as("bg_id"), lit(0L).as("c_bg")).limit(0)
-      else Dedup.readVisibleTable(spark, indexPath, "bigrams", snapshot = snap)
+      else IndexLifecycle.readVisibleTable(spark, indexPath, "bigrams", snapshot = snap)
         .filter(col("bb").isin(bbs: _*))
         .groupBy("bg_id").agg(sum(col("c")).as("c_bg"))
-    val ctxC = Dedup.readVisibleTable(spark, indexPath, "contexts", snapshot = snap)
+    val ctxC = IndexLifecycle.readVisibleTable(spark, indexPath, "contexts", snapshot = snap)
       .groupBy("ctx_id").agg(sum(col("c")).as("c_ctx"))
-    val v = Dedup.readVisibleTable(spark, indexPath, "unigrams", snapshot = snap)
+    val v = IndexLifecycle.readVisibleTable(spark, indexPath, "unigrams", snapshot = snap)
       .groupBy("tok_id").agg(sum(col("c")).as("c")).filter(col("c") > 0)
       .agg(count(lit(1)).as("v"))
       .first().getLong(0)
@@ -395,13 +397,13 @@ object LmPerplexity {
   /** One-row index introspection: the logical model the serve path scores
     * against (partials netted). */
   def describeLmIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    val snap = Some(Dedup.familySnapshot(indexPath)) // one generation per read
-    val stats = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+    val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per read
+    val stats = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_bigrams")).as("n_bigrams"))
-    val voc = Dedup.readVisibleTable(spark, indexPath, "unigrams", snapshot = snap)
+    val voc = IndexLifecycle.readVisibleTable(spark, indexPath, "unigrams", snapshot = snap)
       .groupBy("tok_id").agg(sum(col("c")).as("c")).filter(col("c") > 0)
       .agg(count(lit(1)).as("vocab"))
-    val bgt = Dedup.readVisibleTable(spark, indexPath, "bigrams", snapshot = snap)
+    val bgt = IndexLifecycle.readVisibleTable(spark, indexPath, "bigrams", snapshot = snap)
       .groupBy("bg_id").agg(sum(col("c")).as("c")).filter(col("c") > 0)
       .agg(count(lit(1)).as("bigram_types"))
     stats.crossJoin(voc).crossJoin(bgt)
@@ -410,8 +412,8 @@ object LmPerplexity {
   }
 
   private def readBuckets(spark: SparkSession, indexPath: String,
-      snap: Option[Dedup.FamilySnapshot] = None): Int = {
-    val rows = Dedup.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Int = {
+    val rows = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
       .select("bb_buckets").distinct().collect()
     require(rows.length == 1,
       s"LM index at $indexPath has ${rows.length} distinct bucket counts")
@@ -436,21 +438,21 @@ object LmPerplexity {
       .persist() // feeds the bigram write AND the context second-level agg
     bg.count(): Unit
     val contexts = bg.groupBy("ctx_id").agg(sum(col("c")).as("c"))
-    Dedup.withIndexWriter(indexPath) {
-      Dedup.inParallel(Seq(
-        () => Dedup.writeIndexBatch(
+    IndexLifecycle.withIndexWriter(indexPath) {
+      IndexLifecycle.inParallel(Seq(
+        () => IndexLifecycle.writeIndexBatch(
           bg.withColumn("bb", pmod(col("bg_id"), lit(buckets.toLong))),
           s"$indexPath/bigrams", batchId, wholeIndex, partitionCols = Seq("bb")),
-        () => Dedup.writeIndexBatch(contexts, s"$indexPath/contexts", batchId,
+        () => IndexLifecycle.writeIndexBatch(contexts, s"$indexPath/contexts", batchId,
           wholeIndex),
-        () => Dedup.writeIndexBatch(unigrams, s"$indexPath/unigrams", batchId,
+        () => IndexLifecycle.writeIndexBatch(unigrams, s"$indexPath/unigrams", batchId,
           wholeIndex),
-        () => Dedup.writeIndexBatch(stats, s"$indexPath/stats", batchId,
+        () => IndexLifecycle.writeIndexBatch(stats, s"$indexPath/stats", batchId,
           wholeIndex),
-        () => Dedup.writeIndexBatch(tk.select(col("doc_id")), s"$indexPath/docs",
+        () => IndexLifecycle.writeIndexBatch(tk.select(col("doc_id")), s"$indexPath/docs",
           batchId, wholeIndex)))
-      if (wholeIndex) Dedup.clearDir(s"$indexPath/tombstones")
-      else Dedup.commitVisibleBatch(indexPath, batchId) // all five tables landed
+      if (wholeIndex) Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
+      else IndexLifecycle.commitVisibleBatch(indexPath, batchId) // all five tables landed
     }
     bg.unpersist(false): Unit
     tk.unpersist(false): Unit

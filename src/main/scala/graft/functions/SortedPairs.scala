@@ -84,6 +84,12 @@ case class CrossPairsExplode(outer: Expression, inner: Expression)
     new Iterator[InternalRow] {
       private var i = 0 // outer index (major)
       private var j = 0 // inner index
+      // ROW-REUSE CONTRACT (both generators in this file): every next()
+      // mutates and returns this ONE row. That is safe only because
+      // GenerateExec projects each emitted row into its own output row
+      // before it calls next() again. Anything that buffers this
+      // iterator's raw output would see every buffered pair turn into the
+      // last one — keep it unbuffered, or allocate a row per emission.
       private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
       override def hasNext: Boolean = i < nO
       override def next(): InternalRow = {
@@ -130,6 +136,7 @@ case class SortedPairsExplode(child: Expression)
     new Iterator[InternalRow] {
       private var i = 0
       private var j = 1
+      // one reused row — see the ROW-REUSE CONTRACT in CrossPairsExplode
       private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
       override def hasNext: Boolean = i < n - 1
       override def next(): InternalRow = {

@@ -510,7 +510,7 @@ object TextAnalysis {
     * (this is what CCNet actually maintains between crawl snapshots). */
   def buildParagraphIndex(docs: DataFrame, id: String, text: String,
       indexPath: String): Unit =
-    graft.dedup.Dedup.writeIndexBatch(
+    graft.core.IndexLifecycle.writeIndexBatch(
       paragraphIds(docs, id, text).select(col("pid")).distinct(),
       indexPath, "base", wholeIndex = true)
 
@@ -524,9 +524,9 @@ object TextAnalysis {
     * @return (doc_id, n_paras, n_removed, clean_text) for the batch */
   def dedupParagraphsIncremental(newDf: DataFrame, id: String, text: String,
       indexPath: String, batchId: String): DataFrame =
-      graft.dedup.Dedup.withIndexWriter(indexPath) {
+      graft.core.IndexLifecycle.withIndexWriter(indexPath) {
     // full-span writer lock — the Dedup.minhashLshIncremental rationale
-    import graft.dedup.Dedup
+    import graft.core.IndexLifecycle
     val spark = newDf.sparkSession
     val parad = newDf.select(col(id).cast("long").as("doc_id"),
       split(col(text), "\n\n").as("__paras")).persist()
@@ -540,7 +540,7 @@ object TextAnalysis {
       .persist()
     occ.count(): Unit
 
-    val indexed = spark.read.parquet(Dedup.resolveIndexDir(indexPath))
+    val indexed = spark.read.parquet(IndexLifecycle.resolveIndexDir(indexPath))
       .filter(col("batch") =!= lit(batchId)).select(col("pid"))
     val hitOld = occ.join(indexed, Seq("pid"), "left_semi")
       .select(col("doc_id"), col("pos"))
@@ -563,7 +563,7 @@ object TextAnalysis {
           "\n\n").as("clean_text"))
 
     val p = out.localCheckpoint(eager = true)
-    Dedup.writeIndexBatch(occ.select(col("pid")).distinct(), indexPath, batchId)
+    IndexLifecycle.writeIndexBatch(occ.select(col("pid")).distinct(), indexPath, batchId)
     occ.unpersist(false): Unit
     parad.unpersist(false): Unit
     p
@@ -572,7 +572,7 @@ object TextAnalysis {
   /** Fold the paragraph index's batches into one deduplicated generation. */
   def compactParagraphIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Unit =
-    graft.dedup.Dedup.compactBatchedDir(spark, indexPath, transform = _.distinct())
+    graft.core.IndexLifecycle.compactBatchedDir(spark, indexPath, transform = _.distinct())
 
   private def paragraphIds(docs: DataFrame, id: String, text: String): DataFrame =
     docs.select(col(id).cast("long").as("doc_id"),

@@ -229,7 +229,7 @@ case class FeatureStoreEvolveCommand(
 }
 
 /** `index_vacuum(familyPath)` — statement face of
-  * [[graft.dedup.Dedup.vacuumFamily]]: drops every superseded index
+  * [[graft.core.IndexLifecycle.vacuumFamily]]: drops every superseded index
   * generation below the family's retention floor (the byte-level erasure
   * SLA's final step). Returns (family, vacuumed). */
 case class IndexVacuumCommand(familyPath: String) extends LeafRunnableCommand {
@@ -238,7 +238,7 @@ case class IndexVacuumCommand(familyPath: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(strAttr("family"), boolAttr("vacuumed"))
 
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.dedup.Dedup.vacuumFamily(familyPath)
+    graft.core.IndexLifecycle.vacuumFamily(familyPath)
     Seq(Row(familyPath, true))
   }
 }

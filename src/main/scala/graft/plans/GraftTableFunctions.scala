@@ -227,7 +227,7 @@ object GraftTableFunctions {
     })
 
   /** `index_vacuum(familyPath)` — statement face of
-    * [[graft.dedup.Dedup.vacuumFamily]] ([[IndexVacuumCommand]]): drops
+    * [[graft.core.IndexLifecycle.vacuumFamily]] ([[IndexVacuumCommand]]): drops
     * superseded index generations below the family retention floor — the
     * byte-level erasure SLA's final step, now reachable from SQL so the
     * documented GDPR pipeline (delete → compact → vacuum) runs entirely as

@@ -188,7 +188,8 @@ object Similarity {
       candidateSink: Option[String] = None): DataFrame = {
     val centroids = spark.read.parquet(s"$indexPath/centroids")
       .select(col("cell").cast("int").as("cell"), col("centroid"))
-    val assigned = spark.read.parquet(graft.dedup.Dedup.resolveIndexDir(s"$indexPath/vectors"))
+    val assigned =
+      spark.read.parquet(graft.core.IndexLifecycle.resolveIndexDir(s"$indexPath/vectors"))
       .select(col("doc_id").as("nbr_id"), col("cell").cast("int").as("cell"), col("v").as("cv"))
     val q = queries.select(col(id).as("query_id"), col(vec).as("qv"))
     val probes = q.join(broadcast(centroids), lit(true))
@@ -446,7 +447,7 @@ object Similarity {
     val geo = loadGeometry(spark, indexPath, nProbeTop)
 
     val assigned0 = spark.read
-      .parquet(graft.dedup.Dedup.resolveIndexDir(s"$indexPath/vectors"))
+      .parquet(graft.core.IndexLifecycle.resolveIndexDir(s"$indexPath/vectors"))
       .select(col("doc_id"), col("cell").cast("int").as("cell"), col("v"))
     // labels ride the assignment rows: ONE narrow join here instead of two
     // per-side joins against the expanded candidate set later
@@ -513,26 +514,26 @@ object Similarity {
       maxCell: Int = 10000,
       candidateSink: Option[String] = None,
       nProbeTop: Int = 2): DataFrame =
-      graft.dedup.Dedup.withIndexWriter(indexPath) {
-      graft.dedup.Dedup.withIndexWriter(graphPath) {
+      graft.core.IndexLifecycle.withIndexWriter(indexPath) {
+      graft.core.IndexLifecycle.withIndexWriter(graphPath) {
     // full-span locks, ANN index → graph order (the knnGraphAppend rule):
     // the self-join reads the resolved vectors files a concurrent index
     // compaction's cleanup would delete mid-job
-    import graft.dedup.Dedup
+    import graft.core.IndexLifecycle
     val edges = selfJoinTopK(spark, indexPath, k, nProbe, maxCell,
       candidateSink, labels = None, nProbeTop = nProbeTop)
     val p = edges.localCheckpoint(eager = true)
     val probes = loadGeometry(spark, indexPath, nProbeTop).probeCells(
-      spark.read.parquet(Dedup.resolveIndexDir(s"$indexPath/vectors")),
+      spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$indexPath/vectors")),
       "doc_id", "v", nProbe)
-    Dedup.inParallel(Seq(
-      () => Dedup.writeIndexBatch(p.withColumn("gen", lit(0L)),
+    IndexLifecycle.inParallel(Seq(
+      () => IndexLifecycle.writeIndexBatch(p.withColumn("gen", lit(0L)),
         s"$graphPath/edges", "base", wholeIndex = true),
-      () => Dedup.writeIndexBatch(probes, s"$graphPath/probes", "base",
+      () => IndexLifecycle.writeIndexBatch(probes, s"$graphPath/probes", "base",
         wholeIndex = true)))
     // (re)start the batch-visibility manifest: an append's probes and
     // edges become readable atomically, at commitVisibleBatch
-    Dedup.resetVisibleBatches(graphPath)
+    IndexLifecycle.resetVisibleBatches(graphPath)
     p
   } }
 
@@ -568,12 +569,13 @@ object Similarity {
       maxCell: Int = 10000,
       candidateSink: Option[String] = None,
       nProbeTop: Int = 2): DataFrame =
-      graft.dedup.Dedup.withIndexWriter(indexPath) {
-      graft.dedup.Dedup.withIndexWriter(graphPath) {
+      graft.core.IndexLifecycle.withIndexWriter(indexPath) {
+      graft.core.IndexLifecycle.withIndexWriter(graphPath) {
     // full-span writer locks on BOTH families (reads included): candidate
     // generation reads the resolved vectors/probes/edges files, which a
     // concurrent compaction's cleanup would delete mid-job; acquisition
     // order is ANN index → graph everywhere (no cycle)
+    import graft.core.IndexLifecycle
     import graft.dedup.Dedup
     require(gen >= 1, s"append generations start at 1, got $gen")
     val spark = newDf.sparkSession
@@ -587,7 +589,7 @@ object Similarity {
     val newProbes = geo.probeCells(newKeyed, "doc_id", "v", nProbe)
 
     val oldVecs = spark.read
-      .parquet(Dedup.resolveIndexDir(s"$indexPath/vectors"))
+      .parquet(IndexLifecycle.resolveIndexDir(s"$indexPath/vectors"))
       .filter(col("batch") =!= lit(batchId))
       .select(col("doc_id"), col("cell"), col("v"))
     val allAssigned = oldVecs.unionByName(newAssigned)
@@ -604,7 +606,7 @@ object Similarity {
     // affected old anchors: stored probes hitting cells the batch landed in;
     // their only NEW competition is the new docs in those cells
     val newCells = newAssigned.select(col("cell")).distinct()
-    val oldProbes = Dedup
+    val oldProbes = IndexLifecycle
       .readVisibleTable(spark, graphPath, "probes", Some(batchId))
       .select(col("doc_id"), col("cell"))
     val candAffected = oldProbes
@@ -639,16 +641,16 @@ object Similarity {
       .select(col("query_id"), col("nbr_rank"), col("nbr_id"), col("cosine"))
 
     val p = updated.localCheckpoint(eager = true)
-    Dedup.inParallel(Seq(
-      () => Dedup.writeIndexBatch(newAssigned, s"$indexPath/vectors", batchId),
-      () => Dedup.writeIndexBatch(newProbes, s"$graphPath/probes", batchId),
-      () => Dedup.writeIndexBatch(p.withColumn("gen", lit(gen)),
+    IndexLifecycle.inParallel(Seq(
+      () => IndexLifecycle.writeIndexBatch(newAssigned, s"$indexPath/vectors", batchId),
+      () => IndexLifecycle.writeIndexBatch(newProbes, s"$graphPath/probes", batchId),
+      () => IndexLifecycle.writeIndexBatch(p.withColumn("gen", lit(gen)),
         s"$graphPath/edges", batchId)))
     // atomic visibility of the GRAPH tables (probes + edges appear
     // together); the vector fold-in belongs to the ANN index family and
     // keeps its own replay discipline (both family writer locks are held
     // by the whole function)
-    Dedup.commitVisibleBatch(graphPath, batchId)
+    IndexLifecycle.commitVisibleBatch(graphPath, batchId)
     newAssigned.unpersist(false): Unit
     p
   } }
@@ -662,8 +664,8 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       graphPath: String,
       excludeBatch: Option[String] = None): DataFrame = {
-    import graft.dedup.Dedup
-    val e = Dedup.readVisibleTable(spark, graphPath, "edges", excludeBatch)
+    import graft.core.IndexLifecycle
+    val e = IndexLifecycle.readVisibleTable(spark, graphPath, "edges", excludeBatch)
     val latest = e.groupBy(col("query_id")).agg(max(col("gen")).as("gen"))
     e.join(latest, Seq("query_id", "gen"))
       .select(col("query_id"), col("nbr_rank"), col("nbr_id"), col("cosine"))
@@ -671,12 +673,12 @@ object Similarity {
 
   /** Fold the graph's per-batch partitions into one generation, resolving
     * supersession physically (only max-gen rows survive); edges and probes
-    * commit under ONE family CAS ([[graft.dedup.Dedup.compactFamily]]). */
+    * commit under ONE family CAS ([[graft.core.IndexLifecycle.compactFamily]]). */
   def compactKnnGraph(
       spark: org.apache.spark.sql.SparkSession,
       graphPath: String): Unit = {
-    import graft.dedup.Dedup
-    Dedup.compactFamily(spark, graphPath, Seq(
+    import graft.core.IndexLifecycle
+    IndexLifecycle.compactFamily(spark, graphPath, Seq(
       ("edges",
         (df: DataFrame) => {
           val latest = df.groupBy(col("query_id")).agg(max(col("gen")).as("gen"))
@@ -1237,7 +1239,7 @@ object Similarity {
     // writer turn: the codebook overwrites would otherwise race a locked
     // append's loadIvfadcModel (files deleted mid-read, or a batch encoded
     // against geometry the rebuild is retiring)
-    graft.dedup.Dedup.withIndexWriter(indexPath) { // rebuild: one writer turn
+    graft.core.IndexLifecycle.withIndexWriter(indexPath) { // rebuild: one writer turn
       model.coarse.zipWithIndex.map { case (cen, i) => (i, cen) }
         .toDF("cell", "centroid")
         .write.mode("overwrite").parquet(s"$indexPath/coarse")
@@ -1259,20 +1261,21 @@ object Similarity {
       // rebuild = new generation: stale tombstones would hide current vectors
       // at serve time and suppress legitimate future deletes (found via the
       // BM25 twin — q192's describe read a prior bench run's markers)
-      graft.dedup.Dedup.clearDir(s"$indexPath/tombstones")
+      graft.core.Coordination.deleteRecursively(
+        java.nio.file.Paths.get(s"$indexPath/tombstones"))
       // (re)start the batch-visibility manifest: an append's codes and
       // reorder vectors become readable atomically, at commitVisibleBatch
-      graft.dedup.Dedup.resetVisibleBatches(indexPath)
+      graft.core.IndexLifecycle.resetVisibleBatches(indexPath)
     }
   }
 
-  // one copy of the replay-idempotence machinery: Dedup.writeIndexBatch is
+  // one copy of the replay-idempotence machinery: IndexLifecycle.writeIndexBatch is
   // the shared engine (batchId validation, dynamic-overwrite selection,
   // CURRENT-pointer resolution) — keeping a clone here would mean two copies
   // of the contract to keep in sync
   private def writeBatched(df: DataFrame, path: String, batchId: String,
       wholeIndex: Boolean = false, partitionCols: Seq[String] = Nil): Unit =
-    graft.dedup.Dedup.writeIndexBatch(df, path, batchId, wholeIndex, partitionCols)
+    graft.core.IndexLifecycle.writeIndexBatch(df, path, batchId, wholeIndex, partitionCols)
 
   /** Fold a NEW corpus batch into a persisted IVFADC index FIT-FREE — the
     * incremental serving story (the [[graft.dedup.Dedup.minhashLshIncremental]]
@@ -1291,7 +1294,7 @@ object Similarity {
       indexPath: String,
       batchId: String,
       coarseLiteralMaxBytes: Long = graft.dedup.Dedup.CodebookLiteralMaxBytes): Unit =
-      graft.dedup.Dedup.withIndexWriter(indexPath) {
+      graft.core.IndexLifecycle.withIndexWriter(indexPath) {
     // full-span lock, model load INCLUDED: a rebuild committing new
     // codebooks between an unlocked load and the write would fold codes
     // encoded against retired geometry into the rebuilt index — corrupt
@@ -1310,12 +1313,12 @@ object Similarity {
     // atomic visibility: codes and reorder vectors appear together — a torn
     // append can no longer surface candidates whose exact vectors are
     // missing (the rerank join would silently drop them, degrading top-k)
-    graft.dedup.Dedup.commitVisibleBatch(indexPath, batchId)
+    graft.core.IndexLifecycle.commitVisibleBatch(indexPath, batchId)
   }
 
   /** Compact the per-batch codes/vectors partitions into one `batch=base`
     * under a new version dir — both tables commit under ONE family CAS
-    * ([[graft.dedup.Dedup.compactFamily]]: an overlapping reader can never
+    * ([[graft.core.IndexLifecycle.compactFamily]]: an overlapping reader can never
     * see codes at version N with reorder vectors at N−1). A year of daily
     * appends is 365 partition dirs of small files — the
     * [[graft.dedup.Dedup.compactMinhashIndex]] maintenance pattern. */
@@ -1333,7 +1336,7 @@ object Similarity {
   private def compactIvfadcTables(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       erase: DataFrame => DataFrame): Unit =
-    graft.dedup.Dedup.compactFamily(spark, indexPath, Seq(
+    graft.core.IndexLifecycle.compactFamily(spark, indexPath, Seq(
       ("codes", erase, Seq("cell")),
       ("vectors", erase, Nil),
       ("tombstones", erase, Nil)))
@@ -1349,16 +1352,16 @@ object Similarity {
     * tombstoned id stays hidden until a purge clears the marker — the
     * documented semantic (erasure outranks resurrection). */
   def deleteFromIvfadcIndex(keys: DataFrame, id: String, indexPath: String,
-      batchId: String): Unit = graft.dedup.Dedup.withIndexWriter(indexPath) {
+      batchId: String): Unit = graft.core.IndexLifecycle.withIndexWriter(indexPath) {
     writeBatched(keys.select(col(id).as("nbr_id")).distinct(),
       s"$indexPath/tombstones", batchId)
-    graft.dedup.Dedup.commitVisibleBatch(indexPath, batchId)
+    graft.core.IndexLifecycle.commitVisibleBatch(indexPath, batchId)
   }
 
   private def readTombstones(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      snap: Option[graft.dedup.Dedup.FamilySnapshot] = None): Option[DataFrame] =
-    graft.dedup.Dedup.readMarkerTable(spark, indexPath, "tombstones",
+      snap: Option[graft.core.IndexLifecycle.FamilySnapshot] = None): Option[DataFrame] =
+    graft.core.IndexLifecycle.readMarkerTable(spark, indexPath, "tombstones",
       snapshot = snap).map(_.select("nbr_id").distinct())
 
   /** Physical purge: ONE family commit that anti-joins the pending
@@ -1370,11 +1373,11 @@ object Similarity {
     * anti-join at serve time) and a retry completes the purge.
     * Version retention: the superseded generation holds the erased vectors
     * AND its marker view one more cycle, so a serve that pinned it keeps
-    * excluding the deleted ids — [[graft.dedup.Dedup.vacuumIndex]] per
+    * excluding the deleted ids — [[graft.core.IndexLifecycle.vacuumIndex]] per
     * table for an immediate full erase (the purgeBm25Index caveat). */
   def purgeIvfadcIndex(
       spark: org.apache.spark.sql.SparkSession, indexPath: String): Unit =
-      graft.dedup.Dedup.withIndexWriter(indexPath) {
+      graft.core.IndexLifecycle.withIndexWriter(indexPath) {
     readTombstones(spark, indexPath) match {
       case Some(t0) =>
         val t = broadcast(t0)
@@ -1443,10 +1446,10 @@ object Similarity {
     // tombstones resolve at the same generation under the same manifest
     // (the bm25TopKIndexed discipline; the codebooks are rebuild-only
     // overwrite-in-place tables outside the versioned set)
-    val snap = Some(graft.dedup.Dedup.familySnapshot(indexPath))
+    val snap = Some(graft.core.IndexLifecycle.familySnapshot(indexPath))
     val model = preloadedModel.getOrElse(loadIvfadcModel(spark, indexPath))
     val ops = new CoarseOps(model, spark, coarseLiteralMaxBytes)
-    val enc1 = graft.dedup.Dedup.readVisibleTable(spark, indexPath, "codes",
+    val enc1 = graft.core.IndexLifecycle.readVisibleTable(spark, indexPath, "codes",
         snapshot = snap)
       .select(col("nbr_id"), col("cell").cast("int").as("cell"), col("pqc"))
     // pending tombstones hide deleted vectors from stage 1 (id-only
@@ -1461,7 +1464,7 @@ object Similarity {
     val cand0 = ivfadcCandidates(enc, q0, model, ops, nProbe, shortlist,
       excludeSelf, adcBroadcastMaxBytes)
     val candidates = sinkCandidates(cand0, candidateSink)
-    val stored = graft.dedup.Dedup.readVisibleTable(spark, indexPath, "vectors",
+    val stored = graft.core.IndexLifecycle.readVisibleTable(spark, indexPath, "vectors",
         snapshot = snap)
       .select(col("nbr_id"), col("cv"))
     rankCandidates(candidates, stored, q0, k)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.OptimisticPointer
+import graft.core.{Coordination, IndexLifecycle, OptimisticPointer}
 import graft.operators.Bloom
 
 /** Zone-map data skipping — the read-side half of the parquet+manifest
@@ -53,7 +53,7 @@ import graft.operators.Bloom
   * with the zonemap COMMIT RECORD, so a crashed append's orphans are
   * invisible on every read path. Writers (write/append/appendBatch/
   * compact) are SERIALIZED by the index writer lock
-  * ([[graft.dedup.Dedup.withIndexWriter]]) — an append can no longer
+  * ([[graft.core.IndexLifecycle.withIndexWriter]]) — an append can no longer
   * write into a version a concurrent rewrite is flipping away from;
   * readers stay lock-free (quiet-reader during maintenance, the
   * documented no-Delta substitution contract); superseded versions are
@@ -76,13 +76,8 @@ object ZoneMap {
   private case class Meta(key: String, statsCols: Seq[String],
       bloomCol: Option[String], bloomK: Int, bloomM: Long)
 
-  private def currentVersion(path: String): Option[Long] = {
-    val p = Paths.get(path, "CURRENT")
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
+  private def currentVersion(path: String): Option[Long] =
+    Coordination.readPointerFile(Paths.get(path, "CURRENT")).map(_.toLong)
 
   /** The table's ACTIVE root: `v<CURRENT>` under the versioned layout, the
     * path itself for pre-versioning tables. Readers resolve it ONCE per
@@ -105,14 +100,6 @@ object ZoneMap {
       Option(r.getAs[String]("bloom_col")), r.getAs[Int]("bloom_k"),
       r.getAs[Long]("bloom_m"))
   }
-
-  private def deleteDir(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
 
   private def statsAgg(key: String, statsCols: Seq[String]) = {
     val stats = (key +: statsCols).distinct.flatMap(c =>
@@ -142,7 +129,7 @@ object ZoneMap {
       statsCols: Seq[String] = Nil,
       bloomCol: Option[String] = None,
       bloomK: Int = 5, bloomM: Long = 1L << 20): Unit =
-      graft.dedup.Dedup.withIndexWriter(path) {
+      IndexLifecycle.withIndexWriter(path) {
     // writer serialization (the index-family rule): an append resolving v<N>
     // while a rewrite flips to v<N+1> and GCs v<N> would write rows into a
     // deleted dir — enforce the documented single-writer contract instead
@@ -182,42 +169,35 @@ object ZoneMap {
     // commit: promote the staged version and flip CURRENT in one critical
     // section; a racing rewrite that already advanced the pointer makes
     // this one fail loudly instead of silently superseding its rows
-    try OptimisticPointer.casSwap(Paths.get(path), "CURRENT",
+    OptimisticPointer.casSwap(Paths.get(path), "CURRENT",
       expected = expected.map(_.toString), next = next.toString,
       stage = Some(staging -> finalDir))
-    finally deleteDir(staging) // loser cleans its own staging
-    // retention GC (the ONE shared rule, graft.dedup.Dedup.sweepSuperseded):
+    // retention GC (the ONE shared rule, IndexLifecycle.sweepSuperseded):
     // keep the immediately superseded version for in-flight lock-free
     // readers, VACUUM everything older — v<next−1> survives one rewrite
     // cycle; the pre-versioning flat layout counts as the generation before
     // v1 and is swept once next ≥ 2. Best-effort: a crash here leaves
     // orphans the next rewrite's GC (or [[vacuum]]) collects.
-    graft.dedup.Dedup.sweepSuperseded(Paths.get(path), next,
-      zmVersionOf, FlatLegacyNames)
+    IndexLifecycle.sweepSuperseded(Paths.get(path), next,
+      IndexLifecycle.versionOf("v"), FlatLegacyNames)
   }
 
   private val FlatLegacyNames: String => Boolean =
     Set("data", "zonemap", "bloom", "meta")
 
-  /** Version number of a `v<N>` dir name (this table format's scheme). */
-  private def zmVersionOf(n: String): Option[Long] =
-    if (n.length > 1 && n.head == 'v' && n.tail.forall(_.isDigit))
-      Some(n.tail.toLong)
-    else None
-
   /** Drop every SUPERSEDED version of a zone-mapped table NOW, keeping
     * only the current one — the table-format face of
-    * [[graft.dedup.Dedup.vacuumIndex]], and the explicit final step of a
+    * [[graft.core.IndexLifecycle.vacuumIndex]], and the explicit final step of a
     * GDPR erase: a rewrite with the purged frame erases the SERVING
     * version immediately, but retention keeps the previous version (and
     * its erased bytes) one more cycle unless this is called. */
   def vacuum(path: String): Unit =
-    graft.dedup.Dedup.withIndexWriter(path) {
+    IndexLifecycle.withIndexWriter(path) {
       currentVersion(path).foreach(cur =>
         // keep = 0: an explicit vacuum sweeps to the current generation,
         // whatever the configured retentionCycles policy keeps at commits
-        graft.dedup.Dedup.sweepSuperseded(Paths.get(path), cur,
-          zmVersionOf, FlatLegacyNames, keep = 0))
+        IndexLifecycle.sweepSuperseded(Paths.get(path), cur,
+          IndexLifecycle.versionOf("v"), FlatLegacyNames, keep = 0))
     }
 
   /** Append a new batch: the batch is range-sharded AMONG ITSELF into
@@ -235,7 +215,7 @@ object ZoneMap {
     * shards for the same window — the documented drift that [[compact]]
     * repairs by re-sharding the whole table back to disjoint ranges. */
   def append(df: DataFrame, path: String, shards: Int): Unit =
-      graft.dedup.Dedup.withIndexWriter(path) {
+      IndexLifecycle.withIndexWriter(path) {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     val spark = df.sparkSession
     val root = tableRoot(path)
@@ -290,7 +270,7 @@ object ZoneMap {
     * arithmetic under ids the old generations already own. */
   def appendBatch(df: DataFrame, path: String, shardsPerBatch: Int,
       batchId: Long): Unit =
-      graft.dedup.Dedup.withIndexWriter(path) {
+      IndexLifecycle.withIndexWriter(path) {
     require(shardsPerBatch >= 1, s"shardsPerBatch must be >= 1, got $shardsPerBatch")
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val offsetL = StreamBase.toLong + batchId * shardsPerBatch
@@ -309,7 +289,7 @@ object ZoneMap {
     // boundaries shifted and left some shard of the prior attempt empty,
     // its stale rows would otherwise survive
     (offset until offset + shardsPerBatch).foreach(i =>
-      deleteDir(Paths.get(s"$root/data/__shard=$i")))
+      Coordination.deleteRecursively(Paths.get(s"$root/data/__shard=$i")))
     sharded.write.partitionBy("__shard")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(s"$root/data")
@@ -339,7 +319,7 @@ object ZoneMap {
     * files are never touched in place (no lineage cut needed; the old
     * version is GC'd only after the new one is fully committed). */
   def compact(spark: SparkSession, path: String, shards: Int): Unit =
-      graft.dedup.Dedup.withIndexWriter(path) {
+      IndexLifecycle.withIndexWriter(path) {
     // the full read happens under the lock; the inner write() re-enters it
     val root = tableRoot(path)
     val meta = readMeta(spark, root)

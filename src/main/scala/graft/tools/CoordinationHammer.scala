@@ -1,9 +1,9 @@
 package graft.tools
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
-import graft.core.Coordination
+import graft.core.{Coordination, OptimisticPointer}
 
 /** Cross-PROCESS soak worker for the coordination seam
   * (`graft.core.LocalFsCoordination`): CoordinationSpec proves the
@@ -27,14 +27,6 @@ import graft.core.Coordination
   * Deliberately Spark-free so the child JVM is cheap to spawn. */
 object CoordinationHammer {
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
-
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: CoordinationHammer <root> <workerId> <iterations>")
     val root = Paths.get(args(0))
@@ -57,32 +49,25 @@ object CoordinationHammer {
       // so the write is deliberately non-atomic (plain read + rewrite)
       co.withWriterLock(root, "counter.lock") {
         val f = root.resolve("counter")
-        val cur =
-          if (Files.exists(f))
-            new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim.toLong
-          else 0L
+        val cur = Coordination.readPointerFile(f).map(_.toLong).getOrElse(0L)
         Files.write(f, (cur + 1).toString.getBytes(StandardCharsets.UTF_8)): Unit
       }
       // 2. CAS pointer advance: stage, swap, retry-on-loss from a fresh read
       var committed = false
       while (!committed) {
-        val ptr = root.resolve("PTR")
-        val cur =
-          if (Files.exists(ptr))
-            Some(new String(Files.readAllBytes(ptr), StandardCharsets.UTF_8).trim)
-          else None
+        val cur = Coordination.readPointerFile(root.resolve("PTR"))
         val next = cur.map(_.toLong + 1L).getOrElse(1L)
         val stage = Files.createTempDirectory(root, s"_hammerstage_${id}_")
         Files.write(stage.resolve("tag"),
           s"$id:$i".getBytes(StandardCharsets.UTF_8)): Unit
         try {
-          co.casSwap(root, "PTR", cur, next.toString,
-            Seq(stage -> root.resolve(s"v$next")))
+          // the loser's staging is cleaned by casSwap itself
+          OptimisticPointer.casSwap(root, "PTR", cur, next.toString,
+            stage = Some(stage -> root.resolve(s"v$next")))
           committed = true
           wins.append(next).append('\n'): Unit
         } catch {
-          case _: java.util.ConcurrentModificationException =>
-            deleteRecursively(stage) // loud loss: clean own staging, retry
+          case _: java.util.ConcurrentModificationException => // loud loss: retry
         }
       }
       i += 1

@@ -3,6 +3,8 @@ package graft.core
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.functions.LexicalRetrieval
 
@@ -33,7 +35,6 @@ class CoordinationSpec extends SparkSpec {
     start.countDown()
     pool.shutdown()
     assert(pool.awaitTermination(300, TimeUnit.SECONDS), "storm must finish")
-    import scala.jdk.CollectionConverters._
     failures.asScala.toSeq
   }
 
@@ -52,9 +53,8 @@ class CoordinationSpec extends SparkSpec {
               stage = Some(staging -> finalDir))
             true
           } catch {
-            case _: java.util.ConcurrentModificationException =>
-              Coordination.deleteRecursively(staging) // loser cleans staging
-              false
+            // no caller-side cleanup: casSwap removes the loser's staging
+            case _: java.util.ConcurrentModificationException => false
           }
         }
         (1 to 3).foreach { round =>
@@ -75,6 +75,10 @@ class CoordinationSpec extends SparkSpec {
             Files.readAllBytes(dir.resolve(s"_v$round").resolve("owner"))).trim.toInt
           assert(owner == owners.peek(),
             "the promoted dir must be the pointer winner's staging — no clobber")
+          val ls = Files.list(dir)
+          val leftover = try ls.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("_staging_")).toList finally ls.close()
+          assert(leftover.isEmpty, s"round $round: losers' staging survived: $leftover")
         }
       }
     }

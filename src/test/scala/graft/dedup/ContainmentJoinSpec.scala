@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 
 /** Containment (quote-inclusion) join: the asymmetric relation Jaccard
   * dedup cannot see. k=1 (unigram shingles) in most cases so the set
@@ -85,7 +86,7 @@ class ContainmentJoinSpec extends SparkSpec {
     assert(out2.contains((10L, 20L)), s"batch-2 fragment of batch-1 doc: $out2")
 
     // index folded every batch: 2 seed + 2 + 1 docs in sets/
-    val n = spark.read.parquet(Dedup.resolveIndexDir(s"$idx/sets")).count()
+    val n = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/sets")).count()
     assert(n == 5L, s"sets index must hold all 5 docs, got $n")
 
     // no index×index pairs ever: seed 1 is a fragment-like doc but never

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 
 class DedupSpec extends SparkSpec {
 
@@ -265,7 +266,7 @@ class DedupSpec extends SparkSpec {
     Dedup.buildMinhashIndex(docsDf, "doc_id", "text", idx)
     Dedup.compactMinhashIndex(spark, idx) // reader will resolve _v1
     // a reader resolves the CURRENT layout and plans over its files...
-    val resolved = Dedup.resolveIndexDir(idx)
+    val resolved = IndexLifecycle.resolveIndexDir(idx)
     val reader = spark.read.parquet(resolved)
     val expect = reader.count()
     // ...then a compaction commits _v2 mid-scan. Pre-retention the commit
@@ -276,7 +277,7 @@ class DedupSpec extends SparkSpec {
       "the resolved layout must survive one compaction cycle")
     assert(reader.count() == expect,
       "a reader that resolved the superseded version completes its scan")
-    assert(spark.read.parquet(Dedup.resolveIndexDir(idx)).count() == expect,
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(idx)).count() == expect,
       "new readers resolve the compacted version")
   }
 
@@ -292,11 +293,11 @@ class DedupSpec extends SparkSpec {
         .filterNot(_ == "_writer.lock").toSet
       finally ls.close()
     }
-    Dedup.writeIndexBatch((1L to 10L).toDF("doc_id"), s"$idx/a", "b1")
-    Dedup.writeIndexBatch((11L to 15L).toDF("doc_id"), s"$idx/a", "b2")
-    Dedup.writeIndexBatch((1L to 7L).toDF("doc_id"), s"$idx/b", "b1")
+    IndexLifecycle.writeIndexBatch((1L to 10L).toDF("doc_id"), s"$idx/a", "b1")
+    IndexLifecycle.writeIndexBatch((11L to 15L).toDF("doc_id"), s"$idx/a", "b2")
+    IndexLifecycle.writeIndexBatch((1L to 7L).toDF("doc_id"), s"$idx/b", "b1")
     val id = (df: org.apache.spark.sql.DataFrame) => df
-    Dedup.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
+    IndexLifecycle.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
     // ONE family pointer; every table at the SAME version; per-table
     // pointers retired; the flat batch dirs survive ONE cycle (version
     // retention for lock-free readers) and vacuum at the next compaction
@@ -306,28 +307,28 @@ class DedupSpec extends SparkSpec {
     assert(names(s"$idx/a").exists(_.startsWith("batch=")),
       s"retention must keep the superseded flat layout one cycle: ${names(s"$idx/a")}")
     // reads resolve both tables through the one pointer
-    assert(Dedup.resolveIndexDir(s"$idx/a") == s"$idx/a/_v1")
-    assert(Dedup.resolveIndexDir(s"$idx/b") == s"$idx/b/_v1")
-    assert(spark.read.parquet(Dedup.resolveIndexDir(s"$idx/a")).count() == 15)
-    assert(spark.read.parquet(Dedup.resolveIndexDir(s"$idx/b")).count() == 7)
+    assert(IndexLifecycle.resolveIndexDir(s"$idx/a") == s"$idx/a/_v1")
+    assert(IndexLifecycle.resolveIndexDir(s"$idx/b") == s"$idx/b/_v1")
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/a")).count() == 15)
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/b")).count() == 7)
     // a marker table NOT in the family fold stays flat and still resolves
-    Dedup.writeIndexBatch((99L to 99L).toDF("doc_id"), s"$idx/tombstones", "t1")
-    assert(Dedup.resolveIndexDir(s"$idx/tombstones") == s"$idx/tombstones")
-    assert(spark.read.parquet(Dedup.resolveIndexDir(s"$idx/tombstones")).count() == 1)
+    IndexLifecycle.writeIndexBatch((99L to 99L).toDF("doc_id"), s"$idx/tombstones", "t1")
+    assert(IndexLifecycle.resolveIndexDir(s"$idx/tombstones") == s"$idx/tombstones")
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/tombstones")).count() == 1)
     // appends after the family commit land INSIDE the current version
-    Dedup.writeIndexBatch((16L to 18L).toDF("doc_id"), s"$idx/a", "b3")
+    IndexLifecycle.writeIndexBatch((16L to 18L).toDF("doc_id"), s"$idx/a", "b3")
     assert(spark.read.parquet(s"$idx/a/_v1").count() == 18)
     // second family compaction advances BOTH tables; retention keeps _v1
     // one cycle and vacuums the flat dirs; the third sweeps _v1
-    Dedup.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
+    IndexLifecycle.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
     assert(names(s"$idx/a") == Set("_v1", "_v2") && names(s"$idx/b") == Set("_v1", "_v2"),
       s"keep one superseded version, vacuum the flat dirs: " +
         s"${names(s"$idx/a")} / ${names(s"$idx/b")}")
-    assert(spark.read.parquet(Dedup.resolveIndexDir(s"$idx/a")).count() == 18)
-    Dedup.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/a")).count() == 18)
+    IndexLifecycle.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
     assert(names(s"$idx/a") == Set("_v2", "_v3") && names(s"$idx/b") == Set("_v2", "_v3"),
       s"the next compaction must vacuum _v1: ${names(s"$idx/a")} / ${names(s"$idx/b")}")
-    assert(spark.read.parquet(Dedup.resolveIndexDir(s"$idx/a")).count() == 18)
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/a")).count() == 18)
   }
 
   test("incremental semantic dedup replays idempotently against the frozen index") {

@@ -5,11 +5,12 @@ import scala.util.Random
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 import graft.functions.LexicalRetrieval
 import graft.similarity.Similarity
 
 /** The round-11 erasure-window closure: marker (tombstone) tables are
-  * versioned family tables pinned by [[Dedup.FamilySnapshot]], so a serve
+  * versioned family tables pinned by [[IndexLifecycle.FamilySnapshot]], so a serve
   * that planned BEFORE a purge keeps evaluating the pinned generation's
   * OWN pending-delete markers — a deleted id can no longer surface in an
   * in-flight serve overlapping a purge (the round-10 documented residual).
@@ -54,7 +55,7 @@ class MarkerSnapshotSpec extends SparkSpec {
     val fresh = rows(Similarity.ivfadcTopKIndexed(spark, idx, queries,
       "vec_id", "embedding", k = 4, nProbe = 4, shortlist = 120, excludeSelf = true))
     assert(fresh == before, "post-purge serving is unchanged (physical erase only)")
-    assert(Dedup.readMarkerTable(spark, idx, "tombstones").isEmpty,
+    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones").isEmpty,
       "purge retires every marker from the serving generation")
   }
 
@@ -93,18 +94,18 @@ class MarkerSnapshotSpec extends SparkSpec {
 
     // a plain compaction with NO deletes commits an EMPTY marker generation
     Similarity.compactIvfadcIndex(spark, idx)
-    val fam = Dedup.readFamilyPointer(idx)
+    val fam = IndexLifecycle.readFamilyPointer(idx)
     assert(fam.isDefined, "family pointer committed")
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(idx, "tombstones", fam.get)),
       "the marker table must version with the family even when empty")
-    assert(Dedup.readMarkerTable(spark, idx, "tombstones").isEmpty,
+    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones").isEmpty,
       "an empty marker generation reads as no pending markers")
 
     // a delete after the compaction lands INSIDE the current generation and
     // a plain compaction carries it forward (markers outlive compactions)
     Similarity.deleteFromIvfadcIndex(all.filter($"vec_id" === 9L), "vec_id", idx, "d1")
-    assert(Dedup.resolveIndexDir(s"$idx/tombstones")
+    assert(IndexLifecycle.resolveIndexDir(s"$idx/tombstones")
       .endsWith(java.nio.file.Paths.get("tombstones", fam.get).toString),
       "post-compaction markers land in the current generation dir")
     Similarity.compactIvfadcIndex(spark, idx)
@@ -124,18 +125,18 @@ class MarkerSnapshotSpec extends SparkSpec {
     // fallback (VERDICT r10 advice)
     java.nio.file.Files.createDirectories(table.resolve("_v2"))
     val ex = intercept[IllegalStateException] {
-      Dedup.resolveIndexDirPinned(table.toString, Some("_v1"))
+      IndexLifecycle.resolveIndexDirPinned(table.toString, Some("_v1"))
     }
     assert(ex.getMessage.contains("vacuumed"))
     // (a) the table still holds its pre-versioning flat layout → the pin
     // predates the table's first versioned generation; the flat dirs ARE
     // its data at that generation (retention keeps them one cycle)
     java.nio.file.Files.createDirectories(table.resolve("batch=b1"))
-    assert(Dedup.resolveIndexDirPinned(table.toString, Some("_v1")) == table.toString)
+    assert(IndexLifecycle.resolveIndexDirPinned(table.toString, Some("_v1")) == table.toString)
     // no versions at all → plain flat fallback
     val bare = root.resolve("bare")
     java.nio.file.Files.createDirectories(bare)
-    assert(Dedup.resolveIndexDirPinned(bare.toString, Some("_v3")) == bare.toString)
+    assert(IndexLifecycle.resolveIndexDirPinned(bare.toString, Some("_v3")) == bare.toString)
   }
 
   test("marker-table migration: a pinned serve racing the first compaction that versions an empty marker table reads 'no markers', not a vacuum failure") {
@@ -145,7 +146,7 @@ class MarkerSnapshotSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("marker_migrate_").toString
     LexicalRetrieval.buildBm25Index(docs, "doc_id", "text", idx, buckets = 4)
     LexicalRetrieval.compactBm25Index(spark, idx)
-    val fam = Dedup.readFamilyPointer(idx).get // _vN
+    val fam = IndexLifecycle.readFamilyPointer(idx).get // _vN
 
     // simulate a family compacted BEFORE marker tables were versioned: the
     // tombstones table has no generation dir and no flat batch dirs (no
@@ -158,15 +159,15 @@ class MarkerSnapshotSpec extends SparkSpec {
 
     // a serve pins the family at _vN, then the next compaction (the one
     // that first versions the marker table) commits _v{N+1}
-    val snap = Dedup.familySnapshot(idx)
+    val snap = IndexLifecycle.familySnapshot(idx)
     assert(snap.version.contains(fam))
     LexicalRetrieval.compactBm25Index(spark, idx)
-    assert(Dedup.readFamilyPointer(idx).exists(_ != fam), "sanity: new generation")
+    assert(IndexLifecycle.readFamilyPointer(idx).exists(_ != fam), "sanity: new generation")
 
     // pre-fix: IllegalStateException("vacuumed"); post-fix: the migration
     // backfill leaves an EMPTY _vN so the pinned read resolves to
     // "no markers at generation N"
-    assert(Dedup.readMarkerTable(spark, idx, "tombstones",
+    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones",
         snapshot = Some(snap)).isEmpty,
       "a legitimately-absent marker generation must read as empty, not vacuumed")
     // and the backfilled dir exists at the superseded generation
@@ -184,7 +185,7 @@ class MarkerSnapshotSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("marker_migrate_gap_").toString
     LexicalRetrieval.buildBm25Index(docs, "doc_id", "text", idx, buckets = 4)
     LexicalRetrieval.compactBm25Index(spark, idx)
-    val fam = Dedup.readFamilyPointer(idx).get // _vN (small)
+    val fam = IndexLifecycle.readFamilyPointer(idx).get // _vN (small)
 
     // strand the marker table pre-versioning AND plant a legacy per-table
     // version dir far above the family counter — the next-version
@@ -199,10 +200,10 @@ class MarkerSnapshotSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(idx, "doclens", "_v7"))
 
-    val snap = Dedup.familySnapshot(idx)
+    val snap = IndexLifecycle.familySnapshot(idx)
     assert(snap.version.contains(fam))
     LexicalRetrieval.compactBm25Index(spark, idx)
-    val newFam = Dedup.readFamilyPointer(idx).get
+    val newFam = IndexLifecycle.readFamilyPointer(idx).get
     assert(newFam.stripPrefix("_v").toLong > 7L,
       s"sanity: the legacy dir must have pushed the counter past it, got $newFam")
 
@@ -210,7 +211,7 @@ class MarkerSnapshotSpec extends SparkSpec {
     // read "no markers", not trip the vacuumed-pin detector
     assert(java.nio.file.Files.isDirectory(tomb.resolve(fam)),
       "the backfill must survive this commit's own sweep despite the counter gap")
-    assert(Dedup.readMarkerTable(spark, idx, "tombstones",
+    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones",
         snapshot = Some(snap)).isEmpty)
     val hits = LexicalRetrieval.bm25TopKIndexed(spark, idx,
       Seq((1L, Seq("spark"))).toDF("query_id", "terms"), k = 3)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 import graft.functions.LexicalRetrieval
 
 /** The erasure SLA (round 11): after `purge → vacuumFamily`, a deleted
@@ -39,14 +40,14 @@ class VacuumFamilySpec extends SparkSpec {
 
     // retention keeps the pre-purge generation: its doclens STILL HOLD the
     // deleted doc's row — the bytes exist on disk (the SLA's "not yet")
-    val fam = Dedup.readFamilyPointer(idx).get
+    val fam = IndexLifecycle.readFamilyPointer(idx).get
     val retained = layouts(s"$idx/doclens") - fam
     assert(retained.nonEmpty, "retention must keep the superseded generation until vacuum")
     // the superseded layout of a first-ever compaction is the flat
     // `batch=` dirs themselves; of a later one, a `_v<k>` generation dir
     val oldRows = retained.toSeq.flatMap { gen =>
       val d = Paths.get(idx, "doclens", gen)
-      if (gen.startsWith("batch=") || Dedup.hasBatchData(d.toString))
+      if (gen.startsWith("batch=") || IndexLifecycle.hasBatchData(d.toString))
         spark.read.parquet(d.toString).filter(col("doc_id") === 7L).collect().toSeq
       else Nil
     }
@@ -57,7 +58,7 @@ class VacuumFamilySpec extends SparkSpec {
     val before = LexicalRetrieval.bm25TopKIndexed(spark, idx, queries)
       .collect().map(_.toSeq).toSet
 
-    Dedup.vacuumFamily(idx)
+    IndexLifecycle.vacuumFamily(idx)
     // the SLA's "now": every table serves exactly ONE generation — the
     // current one — and no file anywhere under the family holds a doc-7 row
     Seq("postings", "doclens", "termdf", "stats", "tombstones").foreach { t =>
@@ -96,7 +97,7 @@ class VacuumFamilySpec extends SparkSpec {
     Files.createDirectories(tableDebris)
     Files.write(tableDebris.resolve("leak.parquet"), "doomedbytes".getBytes)
     Files.createDirectories(rootDebris)
-    Dedup.vacuumFamily(idx)
+    IndexLifecycle.vacuumFamily(idx)
     assert(!Files.exists(tableDebris),
       "vacuumFamily must clear staging debris inside table dirs")
     assert(!Files.exists(rootDebris),
@@ -111,18 +112,18 @@ class VacuumFamilySpec extends SparkSpec {
     import spark.implicits._
     val docs = (1L to 10L).map(i => (i, s"alpha beta w$i")).toDF("doc_id", "text")
     val idx = Files.createTempDirectory("vacfam_policy_").toString
-    Dedup.setRetentionCycles(2)
+    IndexLifecycle.setRetentionCycles(2)
     try {
       LexicalRetrieval.buildBm25Index(docs, "doc_id", "text", idx, buckets = 4)
       (1 to 3).foreach(_ => LexicalRetrieval.compactBm25Index(spark, idx))
-      val fam = Dedup.readFamilyPointer(idx).get.stripPrefix("_v").toLong
+      val fam = IndexLifecycle.readFamilyPointer(idx).get.stripPrefix("_v").toLong
       val vs = layouts(s"$idx/doclens").filter(_.startsWith("_v"))
         .map(_.stripPrefix("_v").toLong)
       assert(vs == Set(fam, fam - 1, fam - 2),
         s"policy keep=2 must retain two superseded generations, got $vs")
-      Dedup.vacuumFamily(idx)
+      IndexLifecycle.vacuumFamily(idx)
       assert(layouts(s"$idx/doclens").filter(_.startsWith("_v"))
         == Set(s"_v$fam"), "vacuum ignores the policy and sweeps to keep-0")
-    } finally Dedup.setRetentionCycles(1)
+    } finally IndexLifecycle.setRetentionCycles(1)
   }
 }

@@ -50,7 +50,7 @@ class L2NormalizeSpec extends SparkSpec {
       1L -> Seq[java.lang.Double](1.0, 2.0, 3.0),
       2L -> Seq[java.lang.Double](0.0, 0.0, 0.0),              // zero vector: ×0.0 branch
       3L -> Seq[java.lang.Double](-0.0, 0.0, -5.0),            // sign propagation
-      4L -> Seq[java.lang.Double](Double.NaN, 1.0),            // NaN norm: ×0.0 branch
+      4L -> Seq[java.lang.Double](Double.NaN, 1.0),            // NaN norm: NaN > 0 in Spark SQL ordering, so the division branch (all-NaN output)
       5L -> Seq[java.lang.Double](Double.PositiveInfinity, 1.0),
       6L -> Seq[java.lang.Double](Double.MinPositiveValue, 0.0), // subnormal: norm may be 0
       7L -> Seq[java.lang.Double](1e-200, 1e-200),             // underflowing squares

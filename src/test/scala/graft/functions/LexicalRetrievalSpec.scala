@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 import graft.dedup.Dedup
 
 /** Persisted BM25 index + fit-free serving: correctness against a driver-side
@@ -112,9 +113,9 @@ class LexicalRetrievalSpec extends SparkSpec {
     LexicalRetrieval.compactBm25Index(spark, inc)
     assert(serve(inc) == expected, "post-compaction serve must match")
     // compaction folded the partials: one stats row, one df row per term
-    val stats = spark.read.parquet(Dedup.resolveIndexDir(s"$inc/stats"))
+    val stats = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$inc/stats"))
     assert(stats.count() == 1, "stats partials folded to one row")
-    val termdf = spark.read.parquet(Dedup.resolveIndexDir(s"$inc/termdf"))
+    val termdf = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$inc/termdf"))
     assert(termdf.groupBy("term_id").count().filter(col("count") > 1).isEmpty,
       "df partials folded to one row per term")
   }
@@ -164,7 +165,7 @@ class LexicalRetrievalSpec extends SparkSpec {
     val tornPostings = Seq((sparkTermId, 999L, 1L, 1L, Seq(0)))
       .toDF("term_id", "doc_id", "dl", "tf", "positions")
       .withColumn("tb", pmod(col("term_id"), lit(64L)))
-    Dedup.writeIndexBatch(tornPostings, s"$idx/postings", "torn",
+    IndexLifecycle.writeIndexBatch(tornPostings, s"$idx/postings", "torn",
       partitionCols = Seq("tb"))
     assert(served() == before, "a half-landed batch must be invisible")
     assert(nDocs() == corpus.size.toLong)
@@ -375,14 +376,14 @@ class LexicalRetrievalSpec extends SparkSpec {
     LexicalRetrieval.purgeBm25Index(spark, idx)
     assert(serve(idx) == expected, "post-purge serving must equal the rebuild")
     // purge physically erased: no posting or doclen row of doc 3/5 survives
-    val posts = spark.read.parquet(Dedup.resolveIndexDir(s"$idx/postings"))
+    val posts = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/postings"))
     assert(posts.filter(col("doc_id").isin(3L, 5L)).isEmpty)
-    val lens = spark.read.parquet(Dedup.resolveIndexDir(s"$idx/doclens"))
+    val lens = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/doclens"))
     assert(lens.filter(col("doc_id").isin(3L, 5L)).isEmpty)
     // markers retired from the serving generation (the dir itself persists:
     // it is a versioned family table now — the superseded generation keeps
     // its marker view one retention cycle for pinned readers)
-    assert(Dedup.readMarkerTable(spark, idx, "tombstones").isEmpty,
+    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones").isEmpty,
       "purge must retire every pending marker from the serving generation")
     // version retention keeps the pre-purge layout one cycle (lock-free
     // readers); an explicit vacuum completes the physical erase NOW —
@@ -398,7 +399,7 @@ class LexicalRetrievalSpec extends SparkSpec {
     }
     assert(tables.exists(t => layouts(t).size > 1),
       "retention must keep the superseded layout until vacuum")
-    tables.foreach(t => Dedup.vacuumIndex(s"$idx/$t"))
+    tables.foreach(t => IndexLifecycle.vacuumIndex(s"$idx/$t"))
     tables.foreach { t =>
       val l = layouts(t)
       assert(l.size == 1 && l.head.startsWith("_v"),
@@ -434,7 +435,7 @@ class LexicalRetrievalSpec extends SparkSpec {
     // mid-compaction writes its partials into the OLD version dir; the
     // family flip + cleanup then orphans and deletes those bytes while the
     // batch id stays visible — the index permanently over-counts
-    // n_docs/sum_dl. With Dedup.withIndexWriter serializing writers, every
+    // n_docs/sum_dl. With IndexLifecycle.withIndexWriter serializing writers, every
     // committed batch's effect must survive any interleaving.
     import spark.implicits._
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
@@ -543,9 +544,9 @@ class LexicalRetrievalSpec extends SparkSpec {
       idx, "drop2")
     val after = ratioOf
     assert(after > 0.0, "bench2's grams must gate immediately after append")
-    val preCompact = spark.read.parquet(Dedup.resolveIndexDir(idx)).count()
+    val preCompact = spark.read.parquet(IndexLifecycle.resolveIndexDir(idx)).count()
     Dedup.compactGramIndex(spark, idx)
-    val postCompact = spark.read.parquet(Dedup.resolveIndexDir(idx)).count()
+    val postCompact = spark.read.parquet(IndexLifecycle.resolveIndexDir(idx)).count()
     assert(postCompact < preCompact, "cross-batch duplicate grams folded")
     assert(ratioOf == after, "compaction must not change any verdict")
   }

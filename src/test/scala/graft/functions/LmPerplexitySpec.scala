@@ -149,7 +149,7 @@ class LmPerplexitySpec extends SparkSpec {
     // purge: physical fold, markers cleared, scores unchanged; a re-delete
     // of a purged id stays a no-op through the membership table
     LmPerplexity.purgeLmIndex(spark, idx)
-    assert(graft.dedup.Dedup.readMarkerTable(spark, idx, "tombstones").isEmpty,
+    assert(graft.core.IndexLifecycle.readMarkerTable(spark, idx, "tombstones").isEmpty,
       "purge must retire every pending marker from the serving generation")
     LmPerplexity.deleteFromLmIndex(docs.filter(col("doc_id") % 4 === 0),
       "doc_id", "text", idx, "e4")
@@ -169,7 +169,7 @@ class LmPerplexitySpec extends SparkSpec {
     // simulate the crash: the tombstones partial of batch "e1" landed but
     // none of the four negative count partials did (the five writes run
     // concurrently — any prefix can land)
-    graft.dedup.Dedup.writeIndexBatch(
+    graft.core.IndexLifecycle.writeIndexBatch(
       docs.filter(col("doc_id") % 4 === 0).select(col("doc_id")),
       s"$idx/tombstones", "e1")
     // replay of the SAME batchId must recompute and land all five partials

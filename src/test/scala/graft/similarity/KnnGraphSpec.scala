@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 import graft.dedup.Dedup
 import graft.functions.NearestCentroids
 
@@ -160,7 +161,7 @@ class KnnGraphSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(compacted == inc)
     // post-compaction the edges dir holds exactly one row per (anchor, rank)
-    val dup = spark.read.parquet(Dedup.resolveIndexDir(s"$root/g/edges"))
+    val dup = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$root/g/edges"))
       .groupBy("query_id", "nbr_rank").count().filter(col("count") > 1).count()
     assert(dup == 0L, "compaction must leave no superseded rows")
   }
@@ -183,7 +184,7 @@ class KnnGraphSpec extends SparkSpec {
     assert(!updated.exists(q => q >= 1L && q <= 6L),
       s"cluster-A anchors must not be re-ranked: $updated")
     // and the persisted rows agree: cluster-A edges still gen 0
-    val gens = spark.read.parquet(Dedup.resolveIndexDir(s"$root/g/edges"))
+    val gens = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$root/g/edges"))
       .filter(col("query_id") <= 6L).select("gen").distinct()
       .as[Long].collect().toSeq
     assert(gens == Seq(0L), s"untouched anchors keep their gen-0 rows: $gens")

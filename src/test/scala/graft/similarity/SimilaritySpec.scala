@@ -241,7 +241,7 @@ class SimilaritySpec extends SparkSpec {
     // compaction and purge preserve the cell layout
     Similarity.compactIvfadcIndex(spark, idx)
     val v1 = java.nio.file.Files.list(
-        java.nio.file.Paths.get(graft.dedup.Dedup.resolveIndexDir(s"$idx/codes"), "batch=base"))
+        java.nio.file.Paths.get(graft.core.IndexLifecycle.resolveIndexDir(s"$idx/codes"), "batch=base"))
       .iterator()
     val names2 = scala.collection.mutable.ArrayBuffer[String]()
     while (v1.hasNext) names2 += v1.next().getFileName.toString
@@ -297,12 +297,12 @@ class SimilaritySpec extends SparkSpec {
 
     // physical purge: codes/vectors lose the ids, serving unchanged
     Similarity.purgeIvfadcIndex(spark, idx)
-    val codes = spark.read.parquet(graft.dedup.Dedup.resolveIndexDir(s"$idx/codes"))
+    val codes = spark.read.parquet(graft.core.IndexLifecycle.resolveIndexDir(s"$idx/codes"))
     assert(codes.filter($"nbr_id" % 5 === 2).count() == 0, "purge must erase codes")
-    assert(spark.read.parquet(graft.dedup.Dedup.resolveIndexDir(s"$idx/vectors"))
+    assert(spark.read.parquet(graft.core.IndexLifecycle.resolveIndexDir(s"$idx/vectors"))
       .filter($"nbr_id" % 5 === 2).count() == 0, "purge must erase vectors")
     assert(codes.count() == kept.count(), "purge must keep every survivor")
-    assert(graft.dedup.Dedup.readMarkerTable(spark, idx, "tombstones").isEmpty,
+    assert(graft.core.IndexLifecycle.readMarkerTable(spark, idx, "tombstones").isEmpty,
       "purge must retire every pending marker from the serving generation")
     assert(served() == brute, "purged index must serve identically")
 

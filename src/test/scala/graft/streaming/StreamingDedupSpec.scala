@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.core.IndexLifecycle
 import graft.dedup.Dedup
 
 /** Cross-micro-batch near-dup ingest: a duplicate of a SEED doc and a
@@ -329,7 +330,7 @@ class StreamingDedupSpec extends SparkSpec {
     assert(verd(100L) && verd(104L), "benchmark text quarantined in both batches")
     assert(!verd(101L) && !verd(102L) && !verd(103L))
     // the signature index folded ONLY admitted docs: seed + 101 + 102 + 103
-    assert(spark.read.parquet(Dedup.resolveIndexDir(s"$root/sigs")).count() == 4,
+    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$root/sigs")).count() == 4,
       "quarantined docs must never fold into the signature index")
   }
 

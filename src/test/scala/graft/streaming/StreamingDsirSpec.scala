@@ -112,7 +112,7 @@ class StreamingDsirSpec extends SparkSpec {
     assert(Dsir.importanceIndexed(spark, idx, docs(10L -> "alpha"),
       "doc_id", "text").count() == 1L)
     // once COMMITTED, the config drift is a loud error, not a mis-prune
-    graft.dedup.Dedup.commitVisibleBatch(idx, "bogus")
+    graft.core.IndexLifecycle.commitVisibleBatch(idx, "bogus")
     val e = intercept[IllegalArgumentException] {
       Dsir.importanceIndexed(spark, idx, docs(10L -> "alpha"), "doc_id", "text")
     }
