@@ -830,40 +830,19 @@ final class FeatureStore(spark: SparkSession, root: String,
     // inside the commit's critical section)
     val finalDir = versionDirOf(g.name, next)
     val dir = OptimisticPointer.stagingFor(finalDir)
-    // key-bucket partitioning so an uncached point lookup prunes to ONE
-    // bucket directory (getRecord fall-through when the snapshot exceeds
-    // maxServingCacheRows) instead of scanning every key
-    // repartition ON the bucket before partitionBy: without it every task
-    // writes into every bucket dir (tasks × buckets tiny files per snapshot
-    // — measured 1.7× on the ingest e2e queries); clustered, the write is
-    // one file per bucket, which is also what the pruned point-read wants
-    // r13-opt adjudication: sizing this width from
-    // IndexLifecycle.writeWidth was tried and REVERTED — `buckets` is
-    // already derived from the store's key count (bucketCountFor), so the
-    // write stage is data-proportional by construction, and the extra
-    // per-commit estimate walk measurably regressed the deep-plan SQL
-    // lifecycles (q241 isolated minima −18%)
-    timedPhase(g.name, "snapshot_write") {
-      latest
-        .withColumn(EngineColumns.KeyBucket,
-          pmod(crc32(col(g.keyCol).cast("string")), lit(buckets)))
-        .repartition(buckets.toInt, col(EngineColumns.KeyBucket))
-        .write.mode("overwrite").partitionBy(EngineColumns.KeyBucket).parquet(dir.toString)
-    }
-    // bucket-count stats and the serving-KV render both re-read the staged
-    // parquet and are independent — run them CONCURRENTLY (one fixed Spark
-    // job latency instead of two; part of the per-commit tax cut behind
-    // the q59 driver-tail regression)
-    var counts: Map[Long, Long] = Map.empty
-    IndexLifecycle.inParallel(Seq(
-      () => counts = timedPhase(g.name, "bucket_counts")(bucketCounts(dir)),
-      () => timedPhase(g.name, "serving_kv")( // rides the same staged commit
-        writeServingKv(g, dir, buckets))))
+    val counts = timedPhase(g.name, "snapshot_write")(
+      writeVersion(g, latest, dir, buckets, buckets.toInt))
     writeVersionMeta(dir, buckets, counts, g)
+    promote(g, dir, finalDir, baseVersion, next)
+  }
+
+  /** CAS the LATEST pointer from `expected` to `next`, promoting the staged
+    * `dir` to `finalDir`, and drop the group's per-version caches. */
+  private def promote(g: FeatureGroup, dir: Path, finalDir: Path,
+      expected: Option[Long], next: Long): Unit = {
     timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
-      onlineDir(g.name), "LATEST",
-      expected = baseVersion.map(_.toString), next = next.toString,
-      stage = Some(dir -> finalDir)))
+      onlineDir(g.name), "LATEST", expected = expected.map(_.toString),
+      next = next.toString, stage = Some(dir -> finalDir)))
     servingCache.remove(g.name): Unit // next getRecord rebuilds from v<next>
     bucketCountCache.remove(g.name): Unit
     schemaMatchCache.keySet.removeIf(_._1 == g.name): Unit // bound per commit
@@ -886,34 +865,54 @@ final class FeatureStore(spark: SparkSession, root: String,
     val baseDir = versionDirOf(g.name, baseVersion)
     val finalDir = versionDirOf(g.name, next)
     val dir = OptimisticPointer.stagingFor(finalDir)
-    timedPhase(g.name, "snapshot_write") {
-      newRows
-        .withColumn(EngineColumns.KeyBucket,
-          pmod(crc32(col(g.keyCol).cast("string")), lit(buckets)))
-        .repartition(math.max(touched.size, 1), col(EngineColumns.KeyBucket))
-        .write.mode("overwrite").partitionBy(EngineColumns.KeyBucket).parquet(dir.toString)
-    }
-    // bucket stats and the KV render both re-read the staged parquet
-    // (touched buckets only at this point) and are independent — run them
-    // concurrently (the commitOnlineSnapshot rationale). The carry-forward
-    // links still happen strictly AFTER both: either job listing a carried
-    // bucket mid-link would double-count it (stats) or double-render it
-    // (KV over a file the link then collides with).
-    var newCounts: Map[Long, Long] = Map.empty
-    IndexLifecycle.inParallel(Seq(
-      () => newCounts = timedPhase(g.name, "bucket_counts")(bucketCounts(dir)),
-      // staging holds ONLY the touched buckets here; width to match
-      () => timedPhase(g.name, "serving_kv")(
-        writeServingKv(g, dir, buckets, Some(math.max(touched.size, 1))))))
+    // staging holds ONLY the touched buckets until the links below, so the
+    // counts read back are exactly the rewritten buckets' new counts
+    val newCounts = timedPhase(g.name, "snapshot_write")(
+      writeVersion(g, newRows, dir, buckets, math.max(touched.size, 1)))
     timedPhase(g.name, "link_untouched")(linkUntouched(baseDir, dir, touched))
     writeVersionMeta(dir, buckets, (baseCounts -- touched) ++ newCounts, g)
-    timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
-      onlineDir(g.name), "LATEST",
-      expected = Some(baseVersion.toString), next = next.toString,
-      stage = Some(dir -> finalDir)))
-    servingCache.remove(g.name): Unit
-    bucketCountCache.remove(g.name): Unit
-    schemaMatchCache.keySet.removeIf(_._1 == g.name): Unit // bound per commit
+    promote(g, dir, finalDir, Some(baseVersion), next)
+  }
+
+  /** Write one online version's rows into the staged `dir` in ONE Spark
+    * pass: the key-bucket-partitioned parquet snapshot AND its serving-KV
+    * layout (one `_serving/bucket=<b>.kv` per non-empty bucket, see
+    * [[FeatureStore.KvBucketWriter]]), rendered as the rows stream into the
+    * parquet write. Returns the per-bucket key counts, read back from the
+    * KV headers — no second pass over the staged parquet.
+    *
+    * Clustering on the bucket gives one parquet file and one KV file per
+    * bucket (unclustered, every task writes into every bucket dir —
+    * measured 1.7× on the ingest e2e queries); Spark's spill-capable sort
+    * orders each bucket by key for the KV writer. `numTasks` is a width
+    * knob, not a correctness constraint: an incremental commit passes its
+    * touched-bucket count (a 64-key batch must not pay a 16k-empty-task pass
+    * at 16k buckets), a full rewrite the key-count-derived `buckets`.
+    * (r13-opt: sizing it from IndexLifecycle.writeWidth was tried and
+    * REVERTED — the per-commit estimate walk cost q241 18%.) The layout
+    * rides the same staged commit as the parquet, and the underscore dir is
+    * invisible to parquet readers. */
+  private def writeVersion(g: FeatureGroup, rows: DataFrame, dir: Path,
+      buckets: Long, numTasks: Int): Map[Long, Long] = {
+    val servingDir = dir.resolve("_serving")
+    val servingPath = servingDir.toString
+    val names = g.featureNames
+    val clustered = rows
+      .withColumn(EngineColumns.KeyBucket,
+        pmod(crc32(col(g.keyCol).cast("string")), lit(buckets)))
+      .withColumn(FeatureStore.KvKeyCol, col(g.keyCol).cast("string"))
+      .repartition(numTasks, col(EngineColumns.KeyBucket))
+      .sortWithinPartitions(col(EngineColumns.KeyBucket), col(FeatureStore.KvKeyCol))
+    clustered
+      .mapPartitions(it => new FeatureStore.KvBucketWriter(servingPath, names).passThrough(it))(
+        org.apache.spark.sql.Encoders.row(clustered.schema))
+      .drop(FeatureStore.KvKeyCol)
+      // overwrite clears a crashed attempt's debris; the tasks create
+      // `_serving` themselves, after the clear
+      .write.mode("overwrite").partitionBy(EngineColumns.KeyBucket).parquet(dir.toString)
+    // an empty snapshot has no bucket file: layout present, all buckets empty
+    Files.createDirectories(servingDir)
+    FeatureStore.kvBucketCounts(servingDir)
   }
 
   /** Hard-link every UNTOUCHED bucket's parquet partition dir and
@@ -960,9 +959,11 @@ final class FeatureStore(spark: SparkSession, root: String,
       }
     }
     val baseServing = baseDir.resolve("_serving")
-    if (Files.exists(baseServing)) {
-      val stagedServing = staged.resolve("_serving")
-      Files.createDirectories(stagedServing)
+    val stagedServing = staged.resolve("_serving")
+    // a base without the KV layout (legacy) gets none either: a layout of
+    // the touched buckets alone would answer every untouched key as absent
+    if (!Files.exists(baseServing)) Coordination.deleteRecursively(stagedServing)
+    else {
       val sl = Files.list(baseServing)
       try sl.iterator().asScala.foreach { f =>
         val n = f.getFileName.toString
@@ -979,15 +980,6 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def versionDirOf(name: String, v: Long): Path =
     onlineDir(name).resolve(s"v$v")
 
-  /** True when the committed snapshot's columns match the declared schema
-    * (+ ingest seq) — the incremental-commit gate: after [[addFeature]]
-    * the carried-forward files would lack the new column while the
-    * rewritten buckets had it, so evolution forces one full rewrite.
-    * Answered from the version `_meta`'s recorded column set (one driver
-    * file read — an incremental commit must not pay the O(buckets)
-    * partition listing + footer read of a full-version parquet resolve
-    * just to check the schema); snapshots from before the cols line fall
-    * back to that parquet read once, and their next commit records it. */
   /** Verdict cache for the per-LOOKUP schema gate on the serving-KV path
     * (getRecord/batchGetRecords): a version's recorded state is immutable,
     * but the DECLARED side changes on metadata-only evolution, so the key
@@ -1008,7 +1000,10 @@ final class FeatureStore(spark: SparkSession, root: String,
     * on the next commit. Versions committed before the fingerprint line
     * compare by name set — which cannot see a same-name re-add or a type
     * widen — so they are additionally distrusted whenever any feature
-    * carries evolution state the names cannot encode. */
+    * carries evolution state the names cannot encode. Answered from the
+    * version `_meta` (one driver file read, never the O(buckets) listing +
+    * footer read of a full-version parquet resolve); snapshots from before
+    * the cols line fall back to that parquet read once. */
   private def snapshotSchemaMatches(g: FeatureGroup, v: Long): Boolean = {
     val fp = FeatureStore.declaredFingerprint(g)
     val key = (g.name, v, fp)
@@ -1016,12 +1011,12 @@ final class FeatureStore(spark: SparkSession, root: String,
     if (cached != null) cached.booleanValue()
     else {
       val vd = versionDirOf(g.name, v)
-      val verdict = readVersionFp(vd) match {
+      val verdict = metaLine(vd, "fp") match {
         case Some(storedFp) => storedFp == fp
         case None =>
           g.features.forall(f => f.since == 0L && f.renames.isEmpty) && {
             val declared = (g.featureNames :+ EngineColumns.IngestSeq).toSet
-            readVersionCols(vd) match {
+            metaLine(vd, "cols").map(_.split(",").iterator.filter(_.nonEmpty).toSet) match {
               case Some(cols) => cols == declared
               case None =>
                 val cols = spark.read.parquet(vd.toString)
@@ -1035,73 +1030,33 @@ final class FeatureStore(spark: SparkSession, root: String,
     }
   }
 
-  /** Any parquet DATA file under `dir`, honoring Spark's hidden-path
-    * convention: `_`/`.`-prefixed entries are skipped unless the name
-    * carries `=` (partition dirs like `_key_bucket=3` are data). Skipping
-    * is load-bearing, not cosmetic: the stats and serving-KV jobs run
-    * CONCURRENTLY per commit, and a plain Files.walk descending into
-    * `_serving` while the KV job create/renames `bucket=*.kv.attempt-*`
-    * files there threw UncheckedIOException(NoSuchFileException) —
-    * transiently failing the commit (round-12 ADVICE). Never descending
-    * into hidden subtrees removes the race; visitFileFailed tolerates a
-    * same-dir rename as belt-and-braces. */
-  private def hasParquet(dir: Path): Boolean = {
-    var found = false
-    Files.walkFileTree(dir, new java.nio.file.SimpleFileVisitor[Path] {
-      private def hidden(p: Path): Boolean = {
-        val n = p.getFileName.toString
-        (n.startsWith("_") || n.startsWith(".")) && !n.contains("=")
-      }
-      override def preVisitDirectory(d: Path,
-          attrs: java.nio.file.attribute.BasicFileAttributes): java.nio.file.FileVisitResult =
-        if (d != dir && hidden(d)) java.nio.file.FileVisitResult.SKIP_SUBTREE
-        else java.nio.file.FileVisitResult.CONTINUE
-      override def visitFile(f: Path,
-          attrs: java.nio.file.attribute.BasicFileAttributes): java.nio.file.FileVisitResult =
-        if (f.toString.endsWith(".parquet") && !hidden(f)) {
-          found = true; java.nio.file.FileVisitResult.TERMINATE
-        } else java.nio.file.FileVisitResult.CONTINUE
-      override def visitFileFailed(f: Path,
-          e: java.io.IOException): java.nio.file.FileVisitResult =
-        java.nio.file.FileVisitResult.CONTINUE // vanished mid-walk ≠ error here
-    }): Unit
-    found
-  }
-
-  /** Per-bucket key counts of a staged snapshot — reads only the partition
-    * column, so parquet serves it from footer row counts, no data pages. */
-  private def bucketCounts(dir: Path): Map[Long, Long] =
-    if (!hasParquet(dir)) Map.empty
-    else spark.read.parquet(dir.toString)
-      .groupBy(col(EngineColumns.KeyBucket)).agg(count(lit(1)).as("n"))
-      .collect().flatMap { r =>
-        if (r.isNullAt(0)) None // null-key partition: not key-addressable
-        else Some(r.get(0).asInstanceOf[Number].longValue -> r.getLong(1))
-      }.toMap
-
   /** Per-version bucket meta `v<N>/_meta`: the bucket count the snapshot
     * was written with (the read side MUST hash with the same modulus) and
     * the per-bucket key counts incremental commits maintain the total
     * from. None for snapshots written before the meta existed — those
     * read as [[FeatureStore.OnlineKeyBuckets]]-bucketed and fall back to
     * full-rewrite maintenance. */
-  private def readVersionMeta(vd: Path): Option[(Long, Map[Long, Long])] = {
-    val p = vd.resolve("_meta")
-    if (!Files.exists(p)) None
-    else scala.util.Try {
-      val lines = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .linesIterator.toSeq
-      val buckets = lines.find(_.startsWith("buckets=")).get.drop(8).trim.toLong
+  private def readVersionMeta(vd: Path): Option[(Long, Map[Long, Long])] =
+    metaLine(vd, "buckets").flatMap(line => scala.util.Try {
+      val buckets = line.toLong
       require(buckets >= 1, s"nonsense bucket count $buckets") // Try → None: untrusted layout
-      val cs = lines.find(_.startsWith("counts=")).map(_.drop(7).trim).getOrElse("")
-      val counts =
-        if (cs.isEmpty) Map.empty[Long, Long]
-        else cs.split(",").iterator.map { kv =>
+      val counts = metaLine(vd, "counts").getOrElse("").split(",").iterator
+        .filter(_.nonEmpty).map { kv =>
           val Array(b, c) = kv.split(":")
           b.toLong -> c.toLong
         }.toMap
       (buckets, counts)
-    }.toOption
+    }.toOption)
+
+  /** The `<key>=` line of a version's `_meta`. None when the meta or the
+    * line is absent (metas from before it) or unreadable — an untrusted
+    * layout degrades to the slower path, it never crashes the refresh. */
+  private def metaLine(vd: Path, key: String): Option[String] = {
+    val p = vd.resolve("_meta")
+    if (!Files.exists(p)) None
+    else scala.util.Try(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      .linesIterator.find(_.startsWith(key + "=")).map(_.drop(key.length + 1).trim))
+      .toOption.flatten
   }
 
   private def writeVersionMeta(vd: Path, buckets: Long,
@@ -1120,31 +1075,6 @@ final class FeatureStore(spark: SparkSession, root: String,
       s"cols=${cols.sorted.mkString(",")}\n" +
       s"fp=${FeatureStore.declaredFingerprint(g)}\n"
     Files.write(vd.resolve("_meta"), body.getBytes(StandardCharsets.UTF_8)): Unit
-  }
-
-  /** The `fp=` line of a version meta — None for metas from before the
-    * fingerprint (round 12) or any unreadable meta. */
-  private def readVersionFp(vd: Path): Option[String] = {
-    val p = vd.resolve("_meta")
-    if (!Files.exists(p)) None
-    else scala.util.Try {
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .linesIterator.find(_.startsWith("fp=")).map(_.drop(3).trim)
-    }.toOption.flatten
-  }
-
-  /** The snapshot's recorded column set — None for metas from before the
-    * cols line, or any unreadable meta (the [[readVersionMeta]] untrusted-
-    * layout policy: degrade to the parquet-resolve fallback, never crash
-    * the refresh). */
-  private def readVersionCols(vd: Path): Option[Set[String]] = {
-    val p = vd.resolve("_meta")
-    if (!Files.exists(p)) None
-    else scala.util.Try {
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .linesIterator.find(_.startsWith("cols="))
-        .map(_.drop(5).split(",").iterator.map(_.trim).filter(_.nonEmpty).toSet)
-    }.toOption.flatten
   }
 
   /** Bucket count of a committed version, cached per (group, version) —
@@ -1175,11 +1105,8 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def currentVersion(name: String): Option[Long] =
     Coordination.readPointerFile(onlineDir(name).resolve("LATEST")).map(_.toLong)
 
-  private def currentSnapshotRaw(name: String): Option[DataFrame] =
-    currentVersion(name).map(v => spark.read.parquet(onlineDir(name).resolve(s"v$v").toString))
-
-  private def currentSnapshot(name: String): Option[DataFrame] =
-    currentSnapshotRaw(name).map(_.drop(EngineColumns.KeyBucket))
+  private def currentSnapshot(name: String): Option[DataFrame] = currentVersion(name).map(v =>
+    spark.read.parquet(versionDirOf(name, v).toString).drop(EngineColumns.KeyBucket))
 
   /** The snapshot RESTRICTED to the given key buckets, read by DIRECT
     * partition-directory paths — O(touched) file listing instead of the
@@ -1187,20 +1114,23 @@ final class FeatureStore(spark: SparkSession, root: String,
     * pays before pruning (at 16k buckets and a minute-level cadence the
     * listing dominates an incremental commit). A touched bucket with no
     * directory (batch keys hashing into a previously empty bucket) simply
-    * contributes nothing. */
+    * contributes nothing. Read with the DECLARED schema (+ ingest seq), no
+    * footer inference job: every caller sits behind
+    * [[snapshotSchemaMatches]], so the version's layout is already proven
+    * to be exactly that schema. */
   private def snapshotBuckets(g: FeatureGroup, version: Long,
       touched: Set[Long]): DataFrame = {
     val vd = versionDirOf(g.name, version)
     val dirs = touched.toSeq.sorted
       .map(b => vd.resolve(s"${EngineColumns.KeyBucket}=$b"))
       .filter(Files.exists(_))
-    if (dirs.isEmpty) {
-      val st = StructType(
-        g.features.map(f => StructField(f.name, f.ftype.spark)) :+
-          StructField(EngineColumns.IngestSeq, LongType))
+    val st = StructType(
+      g.features.map(f => StructField(f.name, f.ftype.spark)) :+
+        StructField(EngineColumns.IngestSeq, LongType))
+    if (dirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-    } else
-      spark.read.option("basePath", vd.toString)
+    else
+      spark.read.option("basePath", vd.toString).schema(st)
         .parquet(dirs.map(_.toString): _*)
         .drop(EngineColumns.KeyBucket)
   }
@@ -1503,25 +1433,46 @@ final class FeatureStore(spark: SparkSession, root: String,
   private val servingCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[Map[String, Row]])]()
 
+  /** One rebuild lock per group: readers that find the cache stale queue
+    * behind the one rebuilding it instead of each reading the snapshot. */
+  private val servingLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
   /** None when no snapshot exists OR the snapshot exceeds
-    * `maxServingCacheRows` (the over-cap verdict is cached per version too,
-    * so it is decided by ONE bounded job, not re-probed per lookup). */
+    * `maxServingCacheRows`. Each version loads ONCE per group: concurrent
+    * readers of a stale cache single-flight behind the rebuild lock and
+    * re-check the cache after it. The over-cap verdict is cached per
+    * version too; when the version's `_meta` key total already exceeds the
+    * cap it costs no Spark job, otherwise (or without a `_meta`) the load
+    * itself is the bounded probe. */
   private def servingSnapshot(name: String): Option[Map[String, Row]] =
     currentVersion(name).flatMap { v =>
-      val cached = servingCache.get(name)
-      if (cached != null && cached._1 == v) cached._2
-      else {
-        val g = describeGroup(name)
-        // limit(cap+1): never collects more than cap+1 rows even when the
-        // snapshot holds billions — the cap probe is itself bounded
-        val rows = currentSnapshot(name).get.limit(maxServingCacheRows + 1).collect()
-        val entry =
-          if (rows.length > maxServingCacheRows) None
-          else Some(rows.map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap)
-        servingCache.put(name, (v, entry))
-        entry
-      }
+      def cachedAt: Option[Option[Map[String, Row]]] =
+        Option(servingCache.get(name)).filter(_._1 == v).map(_._2)
+      cachedAt.getOrElse(servingLocks.computeIfAbsent(name, _ => new Object).synchronized {
+        cachedAt.getOrElse {
+          val entry = loadServing(name, v)
+          servingCache.put(name, (v, entry))
+          entry
+        }
+      })
     }
+
+  private def loadServing(name: String, v: Long): Option[Map[String, Row]] = {
+    // VERSION v's dir, not a re-resolved LATEST: the entry is cached as v's
+    val vd = versionDirOf(name, v)
+    if (readVersionMeta(vd).exists(_._2.values.sum > maxServingCacheRows)) None
+    else {
+      val g = describeGroup(name)
+      // limit(cap+1): never collects more than cap+1 rows even when the
+      // snapshot holds billions — the cap probe is itself bounded. Read with
+      // the files' own schema: on an evolved layout renderWireRow resolves
+      // eras by the names the rows were written under
+      val rows = spark.read.parquet(vd.toString).drop(EngineColumns.KeyBucket)
+        .limit(maxServingCacheRows + 1).collect()
+      if (rows.length > maxServingCacheRows) None
+      else Some(rows.map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap)
+    }
+  }
 
   /** Point lookup, stringly-typed API shim matching the reference's wire
     * format (`ValueAsString`, update_feature_store.py:65-73): returns
@@ -1632,49 +1583,6 @@ final class FeatureStore(spark: SparkSession, root: String,
       }
       f.name -> FeatureStore.renderWireValue(coerced)
     }.toMap
-  }
-
-  /** Write the serving-tier KV layout under the (staged) snapshot dir: one
-    * `_serving/bucket=<b>.kv` per NON-EMPTY key bucket, entries SORTED by
-    * key in UTF-8 binary order, values already rendered to the wire format,
-    * plus a SPARSE INDEX footer (every [[FeatureStore.KvIndexStride]]-th
-    * entry's key, byte offset, and block length) — so an over-cap point
-    * lookup is one driver-side open + binary search + bounded block scan,
-    * never a Spark job and never a full-bucket scan regardless of bucket
-    * size. The layout rides the same staged commit as the parquet (promoted
-    * together, or not at all), and the underscore dir is invisible to
-    * parquet readers. TASK-COMMIT SAFE: each bucket file is written under
-    * an attempt-unique temp name and atomically RENAMED on bucket close —
-    * a speculative or zombie task attempt can never interleave bytes into
-    * a live file (racing attempts rename complete, identical files; the
-    * rename is the commit). The writer itself is a pure STREAMING pass —
-    * one row in memory at a time (re-clustered so one task owns each
-    * bucket, sorted (bucket, key) by Spark's spill-capable sort); the only
-    * per-bucket state is the sparse index, entries/stride tuples. */
-  private def writeServingKv(g: FeatureGroup, versionDir: Path,
-      buckets: Long, numTasks: Option[Int] = None): Unit = {
-    val servingDir = versionDir.resolve("_serving")
-    Files.createDirectories(servingDir)
-    if (!hasParquet(versionDir)) return // empty snapshot: layout present, all buckets empty
-    val names = g.featureNames
-    val keyCol = g.keyCol
-    val servingPath = servingDir.toString
-    spark.read.parquet(versionDir.toString)
-      .withColumn("__skey", col(keyCol).cast("string"))
-      // the writer opens a new file per bucket TRANSITION, so task width is
-      // a knob, not a correctness constraint: the incremental commit passes
-      // its touched-bucket count (a 64-key batch must not pay a
-      // 16k-empty-task pass at 16k buckets); `buckets` itself is key-count-
-      // derived, so the full render is data-proportional already (r13-opt
-      // adjudication — see commitOnlineSnapshot)
-      .repartition(numTasks.getOrElse(buckets.toInt), col(EngineColumns.KeyBucket))
-      .sortWithinPartitions(col(EngineColumns.KeyBucket), col("__skey"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId().toString)
-          .getOrElse(java.util.UUID.randomUUID().toString.take(8))
-        new FeatureStore.KvBucketWriter(servingPath, attempt, names).writeAll(it)
-      }
   }
 
   /** One open of a bucket file answering a SET of keys (the batch face:
@@ -2258,15 +2166,24 @@ object FeatureStore {
     bb
   }
 
-  /** Streaming writer of one partition's bucket KV files (one instance per
-    * task, constructed inside the foreachPartition closure — captures no
-    * driver state). Tracks its own byte position (the sparse index needs
-    * entry offsets without per-entry flushes), back-patches the entry
-    * count on close, and PUBLISHES each finished file by atomic rename
-    * from an attempt-unique temp name — the task-commit isolation Spark's
-    * FileOutputCommitter would otherwise provide. */
-  private[core] final class KvBucketWriter(servingPath: String, attempt: String,
-      names: Seq[String]) {
+  /** Column the snapshot pass carries each key's string form in — the KV
+    * entry key and the within-bucket sort key; dropped before the parquet
+    * write (see `writeVersion`). */
+  private[core] val KvKeyCol = "__skey"
+
+  /** Streaming writer of one partition's bucket KV files, fed as a
+    * PASS-THROUGH: rows clustered by bucket and sorted by key stream on
+    * unchanged while the writer renders them (sorted wire-format entries +
+    * a sparse index footer). One instance per task, built inside the
+    * closure. Tracks its own byte position (the sparse index needs entry
+    * offsets without per-entry flushes), back-patches the entry count on
+    * close, and PUBLISHES each finished file by atomic rename from an
+    * attempt-unique temp name — a speculative or zombie attempt can never
+    * interleave bytes into a live file. The consumer drives the iterator,
+    * so a failure downstream never passes through this code: a task-failure
+    * listener closes the open channel and deletes its temp file. */
+  private[core] final class KvBucketWriter(servingPath: String, names: Seq[String]) {
+    private var attempt: String = _
     private var ch: java.nio.channels.SeekableByteChannel = _
     private var out: java.io.DataOutputStream = _
     private var pos = 0L
@@ -2278,6 +2195,11 @@ object FeatureStore {
     private val idxKeys = scala.collection.mutable.ArrayBuffer.empty[String]
     private val idxOffs = scala.collection.mutable.ArrayBuffer.empty[Long]
     private val idxCnts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    // row field positions, resolved once from the first row's schema
+    // (-1 = a feature the rows do not carry, rendered as null)
+    private var featIdx: Array[Int] = _
+    private var bucketIdx = -1
+    private var keyIdx = -1
 
     private def wInt(v: Int): Unit = { out.writeInt(v); pos += 4 }
     private def wLong(v: Long): Unit = { out.writeLong(v); pos += 8 }
@@ -2321,42 +2243,88 @@ object FeatureStore {
       ch.position(countPos)
       ch.write(bb): Unit
       ch.close()
-      out = null; ch = null
       // the atomic rename IS the commit: a racing attempt renames its own
       // complete, identical file — never interleaved bytes
       java.nio.file.Files.move(tmp, fin,
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      out = null; ch = null
     }
 
-    def writeAll(it: Iterator[Row]): Unit =
-      try {
-        it.foreach { r =>
-          // null keys bucket to null (crc32(null) is null) — they land in a
-          // designated -1 file; no key-addressed lookup can reach them anyway
-          val b = Option(r.get(r.fieldIndex(EngineColumns.KeyBucket)))
-            .map(_.asInstanceOf[Number].longValue).getOrElse(-1L)
-          if (b != curBucket || out == null) { close(); open(b) }
-          val skey = String.valueOf(r.get(r.fieldIndex("__skey")))
-          if (count % KvIndexStride == 0) {
-            idxKeys += skey; idxOffs += pos; idxCnts += 0
-          }
-          idxCnts(idxCnts.length - 1) += 1
-          wStr(skey)
-          names.foreach { n =>
-            val raw = if (r.schema != null && r.schema.fieldNames.contains(n))
-              r.get(r.fieldIndex(n)) else null
-            val v = renderWireValue(raw)
-            if (v == null) wBool(false)
-            else { wBool(true); wStr(v) }
-          }
-          count += 1
-        }
-        close()
-      } catch {
-        case e: Throwable => // a failed attempt leaves only its temp file
-          if (ch != null) { try ch.close() catch { case _: Throwable => () } }
-          throw e
+    /** Failed attempt: drop the open bucket's temp file; every bucket this
+      * attempt already published is complete. */
+    private def abort(): Unit = if (ch != null) {
+      try ch.close() catch { case _: Throwable => () }
+      out = null; ch = null
+      java.nio.file.Files.deleteIfExists(tmp): Unit
+    }
+
+    private def append(r: Row): Unit = {
+      if (featIdx == null) {
+        val fieldNames = r.schema.fieldNames
+        featIdx = names.map(n => fieldNames.indexOf(n)).toArray
+        bucketIdx = r.schema.fieldIndex(EngineColumns.KeyBucket)
+        keyIdx = r.schema.fieldIndex(KvKeyCol)
       }
+      // null keys bucket to null (crc32(null) is null) — they land in a
+      // designated -1 file; no key-addressed lookup can reach them anyway
+      val b = if (r.isNullAt(bucketIdx)) -1L
+        else r.get(bucketIdx).asInstanceOf[Number].longValue
+      if (b != curBucket || out == null) { close(); open(b) }
+      val skey = String.valueOf(r.get(keyIdx))
+      if (count % KvIndexStride == 0) {
+        idxKeys += skey; idxOffs += pos; idxCnts += 0
+      }
+      idxCnts(idxCnts.length - 1) += 1
+      wStr(skey)
+      var i = 0
+      while (i < featIdx.length) {
+        val v = if (featIdx(i) < 0) null else renderWireValue(r.get(featIdx(i)))
+        if (v == null) wBool(false)
+        else { wBool(true); wStr(v) }
+        i += 1
+      }
+      count += 1
+    }
+
+    /** `it` unchanged, rendering each row into its bucket's KV file on the
+      * way through; the last bucket publishes when `it` is exhausted. */
+    def passThrough(it: Iterator[Row]): Iterator[Row] = {
+      val tc = org.apache.spark.TaskContext.get()
+      attempt = Option(tc).map(_.taskAttemptId().toString)
+        .getOrElse(java.util.UUID.randomUUID().toString.take(8))
+      if (tc != null) tc.addTaskFailureListener((_, _) => abort()): Unit
+      // the staging dir's overwrite runs before the job; create the layout
+      // dir from the task, after it
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(servingPath)): Unit
+      new Iterator[Row] {
+        def hasNext: Boolean = it.hasNext || { close(); false }
+        def next(): Row = { val r = it.next(); append(r); r }
+      }
+    }
+  }
+
+  /** Per-bucket key counts of a serving-KV layout, read from the entry
+    * count each bucket file's header records (back-patched by
+    * [[KvBucketWriter]] on close). The null-key file `bucket=-1.kv` is
+    * skipped: a null key is not key-addressable. */
+  private[core] def kvBucketCounts(servingDir: java.nio.file.Path): Map[Long, Long] = {
+    import scala.jdk.CollectionConverters._
+    val ls = java.nio.file.Files.list(servingDir)
+    val buckets = try ls.iterator().asScala.toList.flatMap { f =>
+      val n = f.getFileName.toString
+      if (!n.startsWith("bucket=") || !n.endsWith(".kv")) None
+      else n.slice(7, n.length - 3).toLongOption.filter(_ >= 0).map(_ -> f)
+    } finally ls.close()
+    buckets.map { case (b, f) =>
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+        java.nio.file.Files.newInputStream(f)))
+      try {
+        require(in.readInt() == KvMagic, s"bad serving KV magic in $f")
+        val nFields = in.readInt()
+        (0 until nFields).foreach(_ => in.skipNBytes(in.readInt().toLong))
+        b -> in.readInt().toLong
+      } finally in.close()
+    }.toMap
   }
 
   /** The stringly wire rendering (shared by the cache path, the KV writer,

@@ -521,8 +521,8 @@ object IndexLifecycle {
     // statement face (feature_store_merge) executes lifecycle ops INSIDE
     // analysis, where Spark holds the SessionCatalog lock — a worker
     // thread building a Dataset then needs that same lock for its own
-    // analysis and the join deadlocks (observed: commitIncremental's
-    // bucketCounts parked under ResolveFunctions). Parallelism here is a
+    // analysis and the join deadlocks (observed: a feature-store commit's
+    // parallel stats job parked under ResolveFunctions). Parallelism here is a
     // latency optimization, never a semantic; sequential is always correct.
     val underCatalogLock = org.apache.spark.sql.SparkSession.getActiveSession
       .exists(s => Thread.holdsLock(s.sessionState.catalog))

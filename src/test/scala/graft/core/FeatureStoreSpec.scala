@@ -26,6 +26,20 @@ class FeatureStoreSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("note"))
   }
 
+  /** Spark jobs started while `f` runs (listener bus drained before the read). */
+  private def jobsDuring(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   test("create → ingest → online keeps max event_time per key; manifest round-trips") {
     val fs = newStore()
     fs.createGroup(group)
@@ -259,10 +273,21 @@ class FeatureStoreSpec extends SparkSpec {
         "over-cap lookups must read the serving KV file without a Spark job")
     } finally spark.sparkContext.removeSparkListener(listener)
 
+    // a NEW version costs the over-cap instance no job either: the verdict
+    // comes from v2's `_meta` key total (11 > 3), not a limit(cap+1) probe
+    fs.ingest("tx", batch((11L, "2024-01-02 10:00:00", 11.0, "n11")))
+    val newVersionJobs = jobsDuring {
+      assert(fs.getRecord("tx", 11L).get("amount") == "11.0")
+      assert(fs.getRecord("tx", 4L).get("amount") == "4.0")
+      assert(fs.batchGetRecords("tx", Seq(1L, 11L, 888L))("888").isEmpty)
+    }
+    assert(newVersionJobs == 0,
+      s"an over-cap store must decide a new version's verdict without a job: $newVersionJobs")
+
     // LEGACY snapshot (written before the KV layout): remove _serving and
     // the lookup falls back to the bucket-pruned Spark read — correct, just
     // a job again
-    val servingDir = java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving")
+    val servingDir = java.nio.file.Paths.get(root, "tx", "online", "v2", "_serving")
     assert(Files.exists(servingDir), "commit must persist the serving KV layout")
     val walk = Files.walk(servingDir)
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -279,11 +304,19 @@ class FeatureStoreSpec extends SparkSpec {
       org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
       assert(jobs2.get() > 0, "legacy snapshots fall back to the pruned read path")
     } finally spark.sparkContext.removeSparkListener(listener2)
+    // an incremental commit on that legacy base must not publish a PARTIAL
+    // KV layout (touched buckets only): untouched keys would then read as
+    // authoritatively absent
+    fs.ingest("tx", batch((12L, "2024-01-03 10:00:00", 12.0, "n12")))
+    assert(fs.lastCommitPhases("tx").map(_._1).contains("link_untouched"))
+    assert(fs.getRecord("tx", 12L).get("amount") == "12.0")
+    (1L to 10L).foreach(k => assert(fs.getRecord("tx", k).map(_("amount")).contains(s"$k.0"),
+      s"untouched key $k after a commit on a legacy base"))
 
     // the snapshot is key-bucket partitioned and a bucket filter PRUNES:
     // the scan over one bucket reads strictly fewer files than the snapshot
     import scala.jdk.CollectionConverters._
-    val vdir = java.nio.file.Paths.get(root, "tx", "online", "v1")
+    val vdir = java.nio.file.Paths.get(root, "tx", "online", "v2")
     val bucketDirs = Files.list(vdir).iterator().asScala
       .filter(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "=")).toSeq
     assert(bucketDirs.size > 1, s"snapshot must be key-bucket partitioned, saw $bucketDirs")
@@ -1146,6 +1179,42 @@ class FeatureStoreSpec extends SparkSpec {
     fs.ingest("tx", batch((6L, "2024-03-02 10:00:00", 666.0, "upd")))
     assert(metaOf(root, 5).contains("buckets=4096"))
     assert(fs.getRecord("tx", 6L).get("amount") == "666.0")
+    // v6: an incremental delete
+    fs.deleteRecords("tx", Seq(7L, 2500L))
+    assert(fs.getRecord("tx", 7L).isEmpty)
+
+    // every version's recorded counts equal the keys its parquet holds per
+    // bucket AND the entry counts its KV files' headers record — full
+    // rewrites, incremental ingests and the delete alike
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    def kvHeaderCount(f: java.nio.file.Path): Long = {
+      val in = new java.io.DataInputStream(Files.newInputStream(f))
+      try {
+        in.readInt() // magic
+        (1 to in.readInt()).foreach(_ => in.skipNBytes(in.readInt().toLong))
+        in.readInt().toLong
+      } finally in.close()
+    }
+    (1L to 6L).foreach { v =>
+      val vd = java.nio.file.Paths.get(root, "tx", "online", s"v$v")
+      val meta = metaOf(root, v).linesIterator.find(_.startsWith("counts=")).get
+        .drop(7).split(",").filter(_.nonEmpty)
+        .map { kv => val Array(b, c) = kv.split(":"); b.toLong -> c.toLong }.toMap
+      val parquet = spark.read.parquet(vd.toString)
+        .filter(col(EngineColumns.KeyBucket).isNotNull)
+        .groupBy(EngineColumns.KeyBucket).count().collect()
+        .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
+      val ls = Files.list(vd.resolve("_serving"))
+      val kv = try ls.iterator().asScala.toList.map { f =>
+        val n = f.getFileName.toString
+        n.stripPrefix("bucket=").stripSuffix(".kv").toLong -> kvHeaderCount(f)
+      }.filter(_._1 >= 0).toMap finally ls.close()
+      assert(meta == parquet, s"v$v: _meta counts disagree with the parquet")
+      assert(meta == kv, s"v$v: _meta counts disagree with the KV headers")
+      assert(meta.values.sum == Seq(300L, 301L, 2402L, 2402L, 2402L, 2400L)(v.toInt - 1),
+        s"v$v key total")
+    }
   }
 
   test("incremental refresh into a previously EMPTY bucket: direct-path read misses nothing") {
@@ -1254,6 +1323,84 @@ class FeatureStoreSpec extends SparkSpec {
     assert(fs2.getRecord("tx", 999L).isEmpty)
     assert(fs2.batchGetRecords("tx", Seq(5L, 999L)).get("5").flatten
       .exists(_("amount") == "5.0"))
+  }
+
+  test("a steady-state incremental commit writes snapshot, serving KV and counts in one pass: at most 8 jobs") {
+    val root = Files.createTempDirectory("fs_jobs_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 2000L).map(i =>
+      (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    def micro(from: Long, day: Int) = batch((from until from + 64L).map(i =>
+      (i, f"2024-02-$day%02d 10:00:00", i * 2.0, s"m$i")): _*)
+    fs.ingest("tx", micro(1L, 1)) // warm: the first incremental commit
+    // 64 keys spread over most of the 64 buckets: each extra pass over the
+    // staged snapshot (counts, KV render) would cost a listing job, a
+    // footer job and two compute jobs
+    val jobs = jobsDuring(fs.ingest("tx", micro(500L, 2)))
+    assert(fs.lastCommitPhases("tx").map(_._1).contains("link_untouched"),
+      "the measured commit must be incremental")
+    assert(jobs <= 8, s"steady-state incremental commit launched $jobs jobs")
+    assert(fs.getRecord("tx", 530L).get("amount") == "1060.0")
+    val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    assert(capped.getRecord("tx", 530L).get("amount") == "1060.0")
+    assert(capped.getRecord("tx", 1999L).get("amount") == "1999.0")
+  }
+
+  test("readers of a stale cache single-flight: four concurrent getRecords launch one rebuild's jobs") {
+    val root = Files.createTempDirectory("fs_flight_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 50L).map(i =>
+      (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    assert(fs.getRecord("tx", 1L).isDefined) // cache warm on v1
+    fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"))) // v2: cache stale
+    // the jobs of ONE rebuild of v2: a fresh instance, one lookup
+    val one = jobsDuring(assert(new FeatureStore(spark, root).getRecord("tx", 2L).isDefined))
+    assert(one > 0)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val answers = new java.util.concurrent.ConcurrentLinkedQueue[Option[Map[String, String]]]()
+    val four = jobsDuring {
+      val threads = (1 to 4).map(_ => new Thread(() => {
+        start.await()
+        answers.add(fs.getRecord("tx", 1L)): Unit
+      }))
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+    }
+    assert(answers.size == 4 &&
+      answers.stream().allMatch(a => a.exists(_("amount") == "99.0")))
+    assert(four == one, s"4 readers launched $four jobs; one rebuild takes $one")
+  }
+
+  test("serving-KV pass-through aborted mid-bucket leaves no temp file and no file for that bucket") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    // the task creates the layout dir itself (the staging overwrite runs first)
+    val servingDir = Files.createTempDirectory("fs_kvabort_").resolve("_serving")
+    val servingPath = servingDir.toString
+    val schema = StructType(Seq(StructField(EngineColumns.KeyBucket, LongType),
+      StructField(FeatureStore.KvKeyCol, StringType), StructField("v", StringType)))
+    val rows: Seq[Row] = Seq(0L -> "a", 0L -> "b", 1L -> "c", 1L -> "d", 1L -> "e")
+      .map { case (b, k) => new GenericRowWithSchema(Array[Any](b, k, k.toUpperCase), schema) }
+    // the failure is DOWNSTREAM of the writer, mid-way through bucket 1
+    intercept[org.apache.spark.SparkException] {
+      spark.sparkContext.parallelize(rows, 1)
+        .mapPartitions(it => new FeatureStore.KvBucketWriter(servingPath, Seq("v")).passThrough(it))
+        .map { r =>
+          if (r.getString(1) == "d") throw new IllegalStateException("downstream write failed")
+          r
+        }
+        .count()
+    }
+    val ls = Files.list(servingDir)
+    val left = try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    assert(left == Set("bucket=0.kv"),
+      s"only the finished bucket may publish; no temp may survive: $left")
+    assert(FeatureStore.kvBucketCounts(servingDir) == Map(0L -> 2L))
   }
 
   test("optimistic pointer: exactly one of N racing CAS commits wins, losers throw") {
