@@ -167,51 +167,14 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle WIDTH scales with INPUT VOLUME, not core count — and that
-      // cuts both ways. A flat 512 protects giant shuffles but is NOT free
-      // at small sf: "AQE coalesces it away" failed empirically — the
-      // containment/streaming families DOUBLED at sf0.1 (q212 8.5 → 21 s,
-      // q213 9.7 → 18.5 s, suite +20%) because persist/localCheckpoint
-      // materializations and per-micro-batch stages launch at the initial
-      // width before any coalescing can amortize it. So the default is
-      // DERIVED from the corpus: one initial partition per ~16 MB of
-      // on-disk parquet (compressed bytes explode in flight), floored at
-      // the core count and capped at 4096 — sf0.1 lands at the floor (the
-      // round-9 behavior, measured fastest), sf10 grows past it, and the
-      // width keeps scaling exactly when shuffles can actually exceed
-      // memory. Env-overridable for explicit experiments.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          GraftWidth.volumeScaled(sfDir, cpus.toInt).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      // corpus timestamps are naive-µs parquet — see Tables class doc
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // per-query isolation: one query's leftover materialized state must not
-    // change the next query's measurement (round-2 recorded artifact: leaked
-    // checkpoint blocks degraded a later query ~9× vs its fresh-JVM time).
-    // The library releases its own staging blocks now; this is the bench-side
-    // backstop, run OUTSIDE the timed window.
-    def resetSession(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    val spark = GraftSession.local(GraftSession.cpus, Some(sfDir))
 
     // untimed warmup: pay JVM JIT + codegen + parquet footer reads once,
     // so per-query numbers measure the query, not startup
     try SparkEntry.queries("q07_agg_pricing")(spark, sfDir)
       .write.mode("overwrite").format("noop").save()
     catch { case _: Throwable => () }
-    resetSession()
+    GraftSession.reset(spark)
 
     val probeBefore = cpythonProbe()
     System.err.println(f"[bench] cpython probe (before): $probeBefore%.2f s (~2.0-2.1 = clean host)")
@@ -289,7 +252,11 @@ object Bench {
         // rewritten per query so a killed run still leaves a parseable artifact
         Files.writeString(Paths.get(outFile),
           render(currentResults, math.max(passesDone, 1)))
-        resetSession()
+        // per-query isolation, OUTSIDE the timed window (round-2 recorded
+        // artifact: leaked checkpoint blocks degraded a later query ~9× vs
+        // its fresh-JVM time); the library releases its own staging blocks,
+        // this is the bench-side backstop
+        GraftSession.reset(spark)
       }
       passesDone = pass
     }
@@ -297,7 +264,7 @@ object Bench {
     // serving-path latency, measured OUTSIDE the suite's timed window
     val serving = servingBench(spark, sfDir)
     System.err.println(s"[bench] $serving")
-    resetSession()
+    GraftSession.reset(spark)
     val probeAfter = cpythonProbe()
     System.err.println(f"[bench] cpython probe (after): $probeAfter%.2f s")
     val finalJson = render(results, passesDone, probeAfter, Some(serving))

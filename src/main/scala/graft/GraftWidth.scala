@@ -1,6 +1,7 @@
 package graft
 
-/** Volume-scaled AQE shuffle width shared by the Bench and Verify mains.
+/** Volume-scaled AQE shuffle width that [[GraftSession]] sets for every
+  * harness main.
   *
   * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` is the
   * pre-coalesce width of every exchange. It must scale with DATA, not

@@ -219,6 +219,19 @@ object QuerySuite {
     srcDir.toString
   }
 
+  /** q26's input, the reference pipeline's own CSV fixture, read by both
+    * the query and its oracle SQL. It lives outside the repo and is absent
+    * on some hosts. */
+  val referenceCsv = "/root/reference/test_task_data.csv"
+
+  /** `path`, or a `fixture missing` failure naming it — clearer than
+    * Spark's PATH_NOT_FOUND surfacing mid-suite. */
+  private[graft] def requireFixture(path: String): String = {
+    if (!Files.exists(java.nio.file.Paths.get(path)))
+      throw new java.io.FileNotFoundException(s"fixture missing: $path")
+    path
+  }
+
   /** Root for oracle side-tables. Queries whose candidate GENERATION is not
     * ANSI-expressible (xxhash64 buckets, KMeans cells) dump their candidate
     * pairs here; the oracle reads them back (`{AUX}` in the SQL — Verify
@@ -1721,7 +1734,7 @@ object QuerySuite {
     "q26_reference_e2e" -> ((s, dir) => {
       val raw = s.read.option("header", "true")
         .schema("customer_id LONG, purchase_timestamp STRING, purchase_value DOUBLE, loyalty_score DOUBLE")
-        .csv("/root/reference/test_task_data.csv")
+        .csv(requireFixture(referenceCsv))
         .select(
           col("customer_id"),
           to_timestamp(col("purchase_timestamp"), "yyyy-M-d H:m:s").as("event_time"),
@@ -7136,12 +7149,12 @@ object QuerySuite {
         |FROM b GROUP BY 1 ORDER BY split""".stripMargin,
 
     "q26_reference_e2e" ->
-      """WITH raw AS (
+      s"""WITH raw AS (
         |  SELECT CAST(customer_id AS BIGINT) AS customer_id,
         |         strptime(purchase_timestamp, '%Y-%m-%d %H:%M:%S') AS event_time,
         |         CAST(purchase_value AS DOUBLE) AS latest_purchase_value,
         |         CAST(loyalty_score AS DOUBLE) AS latest_loyalty_score
-        |  FROM read_csv('/root/reference/test_task_data.csv', header=true, all_varchar=true)
+        |  FROM read_csv('$referenceCsv', header=true, all_varchar=true)
         |)
         |SELECT customer_id, event_time, latest_purchase_value, latest_loyalty_score FROM raw
         |WHERE event_time BETWEEN TIMESTAMP '2022-01-01 00:00:00' AND TIMESTAMP '2022-08-31 23:59:59'

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The volume-scaled AQE width used by the Bench/Verify mains: floor at
+/** The volume-scaled AQE width of the [[GraftSession]] mains: floor at
   * the core count, one partition per 16 MB of corpus, cap at 4096 — and
   * never a crash on a missing/unreadable corpus dir (the mains must come
   * up even if the sf dir is wrong; the queries fail loudly later). */

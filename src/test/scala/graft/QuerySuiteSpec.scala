@@ -48,6 +48,12 @@ class QuerySuiteSpec extends SparkSpec {
     assert(recall >= 0.5, s"IVF recall $recall vs brute force below 0.5 (nProbe=4/16 cells)")
   }
 
+  test("q26's fixture check names the missing path instead of PATH_NOT_FOUND") {
+    val absent = java.nio.file.Files.createTempDirectory("qs_fixture_").resolve("absent.csv")
+    val e = intercept[java.io.FileNotFoundException](QuerySuite.requireFixture(absent.toString))
+    assert(e.getMessage == s"fixture missing: $absent")
+  }
+
   test("entry flagship query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

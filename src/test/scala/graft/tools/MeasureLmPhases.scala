@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase-level timing of the q202_lm_unlearn lifecycle (guide §1): build →
@@ -14,17 +13,7 @@ import org.apache.spark.sql.functions._
 object MeasureLmPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.GraftWidth.volumeScaled(sfDir, cpus).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, Some(sfDir))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val taskNs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -78,8 +67,7 @@ object MeasureLmPhases {
       phase("orderBy+noop")(
         purged.orderBy("doc_id").write.mode("overwrite").format("noop").save())
       require(purged.collect().map(_.toSeq).toSet == pending)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.GraftSession.reset(spark)
     }
     spark.stop()
   }

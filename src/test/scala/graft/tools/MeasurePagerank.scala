@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q144 diagnosis (guide §1): time pagerankIntConverged on the q144 edge
@@ -13,17 +12,7 @@ import org.apache.spark.sql.functions._
 object MeasurePagerank {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.GraftWidth.volumeScaled(sfDir, cpus).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, Some(sfDir))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -48,8 +37,7 @@ object MeasurePagerank {
       println(f"[pr] rep $rep: ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
         f"iters=${r.iters} converged=${r.converged} cycled=${r.cycled} " +
         f"jobs=${jobs.get() - j0}")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.GraftSession.reset(spark)
     }
     spark.stop()
   }

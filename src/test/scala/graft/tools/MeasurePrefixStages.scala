@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.{charNgrams, xxhash64Seeded}
 
@@ -14,15 +14,7 @@ import graft.functions.GraftFunctions.{charNgrams, xxhash64Seeded}
 object MeasurePrefixStages {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions",
-        math.min(32, Runtime.getRuntime.availableProcessors))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, Some(sfDir))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
     def time(label: String)(df: => DataFrame): Unit = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement harness behind BASELINE.md's q127 candidate-cut table: runs
   * [[graft.dedup.Dedup.prefixFilterJaccard]] with and without a prefix
   * df-floor on a real corpus dir, recording candidate count, verified-pair
@@ -14,15 +12,7 @@ object MeasureQ127 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val floors = args.drop(1).map(_.toLong)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions",
-        math.min(32, Runtime.getRuntime.availableProcessors))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, Some(sfDir))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
     def run(floor: Option[Long]): (Long, Long, org.apache.spark.sql.DataFrame) = {

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{FType, FeatureDef, FeatureGroup, FeatureStore}
@@ -25,14 +25,7 @@ object MeasureRefresh {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val batchKeys = args.lift(2).map(_.toLong).getOrElse(64L)
     val target = args.lift(3).map(_.toLong).getOrElse(1024L)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions",
-        math.min(32, Runtime.getRuntime.availableProcessors))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, None)
 
     val group = FeatureGroup("RefreshBench", "user_id", "event_time", Seq(
       FeatureDef("user_id", FType.Integral),
