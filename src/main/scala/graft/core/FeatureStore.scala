@@ -61,6 +61,10 @@ import graft.operators.LatestPerKey
   *   4× target × buckets, the next refresh rebuckets with a full rewrite —
   *   a billion-key store lands at ~64 Ki keys per bucket instead of the
   *   fixed-64 layout's ~16 M (VERDICT r9 "serving-KV bucket scaling").
+  *   It also sets the commit's write width: one writer task per `target`
+  *   rows the commit can write ([[FeatureStore.writeTasks]]), so a store
+  *   whose buckets sit far below the target (the 64-bucket floor) commits
+  *   small batches with one task instead of one per bucket.
   * @param clock serving-time source for [[getRecordFresh]]'s staleness gate —
   *   injectable so the gate is deterministic under test; production uses the
   *   default wall clock. */
@@ -732,16 +736,18 @@ final class FeatureStore(spark: SparkSession, root: String,
         val bb = conformToDeclared(g, b).withColumn(EngineColumns.KeyBucket,
           pmod(crc32(col(g.keyCol).cast("string")), lit(buckets))).persist()
         try {
-          // the batch's touched buckets: ≤ buckets distinct values by
+          // the batch's rows per touched bucket: ≤ buckets groups by
           // construction, so the collect is driver-bounded at any data scale
-          val touchedRows = bb.select(col(EngineColumns.KeyBucket)).distinct().collect()
+          val touchedRows = bb.groupBy(col(EngineColumns.KeyBucket)).count().collect()
           if (touchedRows.exists(_.isNullAt(0))) {
             // null keys bucket to null (crc32(null) is null) — rare; let the
             // full path's default-partition write handle them rather than
             // special-casing the carry-forward links
             fullRefresh(g, batch, baseVersion, Some(buckets))
           } else {
-            val touched = touchedRows.map(_.get(0).asInstanceOf[Number].longValue).toSet
+            val batchRows = touchedRows.map(r =>
+              r.get(0).asInstanceOf[Number].longValue -> r.getLong(1)).toMap
+            val touched = batchRows.keySet
             if (touched.isEmpty) { servingCache.remove(g.name): Unit; return } // empty batch
             // belt over the fingerprint gate: carried-forward rows from a
             // correctly-matching version are already materialized-clean,
@@ -752,7 +758,10 @@ final class FeatureStore(spark: SparkSession, root: String,
             val latestTouched = LatestPerKey.viaMaxBy(
               snapTouched.unionByName(bb.drop(EngineColumns.KeyBucket)),
               Seq(g.keyCol), g.eventTimeCol, Seq(EngineColumns.IngestSeq))
-            commitIncremental(g, v, buckets, counts, touched, latestTouched)
+            // latest-per-key of (base bucket ∪ batch rows) per touched bucket
+            val rowBound = batchRows.iterator
+              .map { case (t, n) => counts.getOrElse(t, 0L) + n }.sum
+            commitIncremental(g, v, buckets, counts, touched, latestTouched, rowBound)
           }
         } finally bb.unpersist(false): Unit
       case None =>
@@ -799,7 +808,11 @@ final class FeatureStore(spark: SparkSession, root: String,
       Seq(EngineColumns.IngestSeq))
     bucketsOpt.orElse(bootstrap.map(k =>
       FeatureStore.bucketCountFor(k, targetKeysPerBucket))) match {
-      case Some(b) => commitOnlineSnapshot(g, latest0, baseVersion, b)
+      // the bootstrap's width comes from the same observed (approximate)
+      // key count as its bucket count; a rewrite over a base version holds
+      // no row bound without a job (its `_meta` omits null keys) and keeps
+      // full width
+      case Some(b) => commitOnlineSnapshot(g, latest0, baseVersion, b, bootstrap)
       case None =>
         // non-ingest bootstrap (explicit rebuild, legacy snapshot): size
         // the bucket count from the actual key count (one spill-safe
@@ -809,7 +822,7 @@ final class FeatureStore(spark: SparkSession, root: String,
         try {
           val keys = timedPhase(g.name, "bootstrap_sizing_count")(p.count())
           commitOnlineSnapshot(g, p, baseVersion,
-            FeatureStore.bucketCountFor(keys, targetKeysPerBucket))
+            FeatureStore.bucketCountFor(keys, targetKeysPerBucket), Some(keys))
         } finally p.unpersist(false): Unit
     }
   }
@@ -820,9 +833,11 @@ final class FeatureStore(spark: SparkSession, root: String,
     * snapshot DERIVED from (None = no snapshot existed): the commit is a
     * compare-and-swap against it, so two concurrent writers can never
     * silently clobber each other — the loser throws, the store stays on
-    * the winner's version (FeatureStoreSpec's two-writer race). */
+    * the winner's version (FeatureStoreSpec's two-writer race). `rowBound`
+    * sizes the write ([[FeatureStore.writeTasks]]); None writes one task
+    * per bucket. */
   private def commitOnlineSnapshot(g: FeatureGroup, latest: DataFrame,
-      baseVersion: Option[Long], buckets: Long): Unit = {
+      baseVersion: Option[Long], buckets: Long, rowBound: Option[Long]): Unit = {
     val next = baseVersion.getOrElse(0L) + 1
     Files.createDirectories(onlineDir(g.name))
     // rewrite into a PRIVATE staging dir: a racing writer derives the same
@@ -831,7 +846,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     val finalDir = versionDirOf(g.name, next)
     val dir = OptimisticPointer.stagingFor(finalDir)
     val counts = timedPhase(g.name, "snapshot_write")(
-      writeVersion(g, latest, dir, buckets, buckets.toInt))
+      writeVersion(g, latest, dir, buckets, rowBound.fold(buckets.toInt)(n =>
+        FeatureStore.writeTasks(n, targetKeysPerBucket, buckets))))
     writeVersionMeta(dir, buckets, counts, g)
     promote(g, dir, finalDir, baseVersion, next)
   }
@@ -857,10 +873,10 @@ final class FeatureStore(spark: SparkSession, root: String,
     * readable ([[onlineAt]] time travel) and [[gcOnline]] only unlinks
     * names, the shared inodes survive as long as any version references
     * them. Shared by the incremental [[refreshOnline]] and the incremental
-    * delete path. */
+    * delete path; `rowBound` is an upper bound on `newRows`' count. */
   private def commitIncremental(g: FeatureGroup, baseVersion: Long,
       buckets: Long, baseCounts: Map[Long, Long], touched: Set[Long],
-      newRows: DataFrame): Unit = {
+      newRows: DataFrame, rowBound: Long): Unit = {
     val next = baseVersion + 1
     val baseDir = versionDirOf(g.name, baseVersion)
     val finalDir = versionDirOf(g.name, next)
@@ -868,7 +884,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     // staging holds ONLY the touched buckets until the links below, so the
     // counts read back are exactly the rewritten buckets' new counts
     val newCounts = timedPhase(g.name, "snapshot_write")(
-      writeVersion(g, newRows, dir, buckets, math.max(touched.size, 1)))
+      writeVersion(g, newRows, dir, buckets,
+        FeatureStore.writeTasks(rowBound, targetKeysPerBucket, touched.size)))
     timedPhase(g.name, "link_untouched")(linkUntouched(baseDir, dir, touched))
     writeVersionMeta(dir, buckets, (baseCounts -- touched) ++ newCounts, g)
     promote(g, dir, finalDir, Some(baseVersion), next)
@@ -883,15 +900,18 @@ final class FeatureStore(spark: SparkSession, root: String,
     *
     * Clustering on the bucket gives one parquet file and one KV file per
     * bucket (unclustered, every task writes into every bucket dir —
-    * measured 1.7× on the ingest e2e queries); Spark's spill-capable sort
-    * orders each bucket by key for the KV writer. `numTasks` is a width
-    * knob, not a correctness constraint: an incremental commit passes its
-    * touched-bucket count (a 64-key batch must not pay a 16k-empty-task pass
-    * at 16k buckets), a full rewrite the key-count-derived `buckets`.
-    * (r13-opt: sizing it from IndexLifecycle.writeWidth was tried and
-    * REVERTED — the per-commit estimate walk cost q241 18%.) The layout
-    * rides the same staged commit as the parquet, and the underscore dir is
-    * invisible to parquet readers. */
+    * measured 1.7× on the ingest e2e queries); a task may own several
+    * buckets, and Spark's spill-capable sort orders its rows by (bucket,
+    * key) for the KV writer. `numTasks` is a width knob, not a correctness
+    * constraint: callers size it with [[FeatureStore.writeTasks]] from an
+    * upper bound on the rows written that they already hold — one task per
+    * `targetKeysPerBucket` rows, at most one per bucket written — so a
+    * 64-row commit into a small store writes with one task, not one per
+    * touched bucket. The bound is arithmetic on counts already in memory,
+    * not a plan estimate: (r13-opt) sizing from IndexLifecycle.writeWidth
+    * was tried and REVERTED — the per-commit estimate walk cost q241 18%.
+    * The layout rides the same staged commit as the parquet, and the
+    * underscore dir is invisible to parquet readers. */
   private def writeVersion(g: FeatureGroup, rows: DataFrame, dir: Path,
       buckets: Long, numTasks: Int): Map[Long, Long] = {
     val servingDir = dir.resolve("_serving")
@@ -1105,35 +1125,33 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def currentVersion(name: String): Option[Long] =
     Coordination.readPointerFile(onlineDir(name).resolve("LATEST")).map(_.toLong)
 
-  private def currentSnapshot(name: String): Option[DataFrame] = currentVersion(name).map(v =>
-    spark.read.parquet(versionDirOf(name, v).toString).drop(EngineColumns.KeyBucket))
+  private def currentSnapshot(name: String): Option[DataFrame] =
+    currentVersion(name).map(snapshotAt(name, _))
+
+  private def snapshotAt(name: String, v: Long): DataFrame =
+    spark.read.parquet(versionDirOf(name, v).toString).drop(EngineColumns.KeyBucket)
 
   /** The snapshot RESTRICTED to the given key buckets, read by DIRECT
-    * partition-directory paths — O(touched) file listing instead of the
-    * O(buckets) full-version listing that `read.parquet(vDir).filter(...)`
-    * pays before pruning (at 16k buckets and a minute-level cadence the
-    * listing dominates an incremental commit). A touched bucket with no
-    * directory (batch keys hashing into a previously empty bucket) simply
-    * contributes nothing. Read with the DECLARED schema (+ ingest seq), no
-    * footer inference job: every caller sits behind
-    * [[snapshotSchemaMatches]], so the version's layout is already proven
-    * to be exactly that schema. */
+    * partition-directory paths — O(touched) driver-side file listing
+    * instead of the O(buckets) full-version listing that
+    * `read.parquet(vDir).filter(...)` pays before pruning. Read through
+    * [[ListedParquet]], so no listing job runs at any touched count and no
+    * footer-inference job runs either. A touched bucket with no directory
+    * (batch keys hashing into a previously empty bucket) simply contributes
+    * nothing. Every caller sits behind [[snapshotSchemaMatches]], so the
+    * version's layout is already proven to be the declared schema. */
   private def snapshotBuckets(g: FeatureGroup, version: Long,
       touched: Set[Long]): DataFrame = {
     val vd = versionDirOf(g.name, version)
-    val dirs = touched.toSeq.sorted
-      .map(b => vd.resolve(s"${EngineColumns.KeyBucket}=$b"))
-      .filter(Files.exists(_))
-    val st = StructType(
-      g.features.map(f => StructField(f.name, f.ftype.spark)) :+
-        StructField(EngineColumns.IngestSeq, LongType))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-    else
-      spark.read.option("basePath", vd.toString).schema(st)
-        .parquet(dirs.map(_.toString): _*)
-        .drop(EngineColumns.KeyBucket)
+    ListedParquet.read(spark, vd.toString,
+      touched.toSeq.sorted.map(b => vd.resolve(s"${EngineColumns.KeyBucket}=$b").toString),
+      snapshotSchema(g)).drop(EngineColumns.KeyBucket)
   }
+
+  /** The data columns a version committed under `g`'s fingerprint holds. */
+  private def snapshotSchema(g: FeatureGroup): StructType = StructType(
+    g.features.map(f => StructField(f.name, f.ftype.spark)) :+
+      StructField(EngineColumns.IngestSeq, LongType))
 
   // ---- reads ----
 
@@ -1272,14 +1290,13 @@ final class FeatureStore(spark: SparkSession, root: String,
       (if (smallKeySet) marks.coalesce(1) else marks)
         .write.mode("append").parquet(tombstoneDir(groupName).toString)
     }
-    val baseVersion = currentVersion(groupName)
-    currentSnapshot(groupName) match {
-      case Some(snap) =>
+    currentVersion(groupName) match {
+      case Some(bv) =>
         // read the just-written markers back rather than re-running keyDf0's
         // plan: the sweep's frame derives from this very snapshot, and the
         // parquet roundtrip both cuts that self-reference and guarantees the
         // anti-join filters EXACTLY the keys the tombstones record
-        val keyDf = spark.read.parquet(tombstoneDir(groupName).toString)
+        val keyDf = tombstones(groupName).get
           .filter(col("deleted_seq") === seq).select(col("key"))
         val hinted = if (smallKeySet) broadcast(keyDf) else keyDf
         // the incremental path carries RAW base-version rows forward, so it
@@ -1288,9 +1305,8 @@ final class FeatureStore(spark: SparkSession, root: String,
         // widen and the next commit would otherwise stamp the current
         // fingerprint onto a version whose files and KV rendering still
         // hold the pre-evolution view (round-12 review follow-up)
-        val baseMeta =
-          baseVersion.flatMap(v => readVersionMeta(versionDirOf(groupName, v)))
-        baseMeta.filter(_ => snapshotSchemaMatches(g, baseVersion.get)) match {
+        val baseMeta = readVersionMeta(versionDirOf(groupName, bv))
+        baseMeta.filter(_ => snapshotSchemaMatches(g, bv)) match {
           case Some((buckets, counts)) =>
             // INCREMENTAL delete: keys live only in their own buckets, so
             // anti-joining the snapshot RESTRICTED to the deleted keys'
@@ -1302,16 +1318,17 @@ final class FeatureStore(spark: SparkSession, root: String,
               .map(_.get(0).asInstanceOf[Number].longValue).toSet
             if (touched.isEmpty) servingCache.remove(groupName): Unit
             else {
-              val snapTouched = snapshotBuckets(g, baseVersion.get, touched)
-              commitIncremental(g, baseVersion.get, buckets, counts, touched,
+              val snapTouched = snapshotBuckets(g, bv, touched)
+              commitIncremental(g, bv, buckets, counts, touched,
                 snapTouched.join(hinted,
-                  snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"))
+                  snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"),
+                touched.iterator.map(counts.getOrElse(_, 0L)).sum)
             }
           case None =>
             // legacy meta OR evolution since the base version: full rewrite,
             // CONFORMED + MASKED so the new version's files, fingerprint
             // stamp, and KV rendering all present the declared view
-            val conformed = maskSince(g, conformToDeclared(g, snap))
+            val conformed = maskSince(g, conformToDeclared(g, snapshotAt(groupName, bv)))
             // bucket count still derives from the base version's recorded
             // key counts (the refreshOnline None-branch rule): the
             // fingerprint gate above distrusts the version's LAYOUT, not
@@ -1326,7 +1343,7 @@ final class FeatureStore(spark: SparkSession, root: String,
             commitOnlineSnapshot(g,
               conformed.join(hinted,
                 conformed(g.keyCol).cast("string") === hinted("key"), "left_anti"),
-              baseVersion, buckets)
+              Some(bv), buckets, None)
         }
       case None =>
         // no snapshot yet: online() derives from the (now filtered) offline
@@ -1368,9 +1385,8 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   /** The online snapshot EXACTLY as served at `version` (see [[onlineVersions]]). */
   def onlineAt(name: String, version: Long): DataFrame = {
-    val dir = onlineDir(name).resolve(s"v$version")
-    require(Files.exists(dir), s"no online snapshot v$version for $name")
-    spark.read.parquet(dir.toString).drop(EngineColumns.KeyBucket)
+    require(Files.exists(versionDirOf(name, version)), s"no online snapshot v$version for $name")
+    snapshotAt(name, version)
   }
 
   /** CHANGE DATA FEED between two served snapshot versions (see
@@ -1460,15 +1476,30 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def loadServing(name: String, v: Long): Option[Map[String, Row]] = {
     // VERSION v's dir, not a re-resolved LATEST: the entry is cached as v's
     val vd = versionDirOf(name, v)
-    if (readVersionMeta(vd).exists(_._2.values.sum > maxServingCacheRows)) None
+    val meta = readVersionMeta(vd)
+    if (meta.exists(_._2.values.sum > maxServingCacheRows)) None
     else {
       val g = describeGroup(name)
-      // limit(cap+1): never collects more than cap+1 rows even when the
-      // snapshot holds billions — the cap probe is itself bounded. Read with
-      // the files' own schema: on an evolved layout renderWireRow resolves
-      // eras by the names the rows were written under
-      val rows = spark.read.parquet(vd.toString).drop(EngineColumns.KeyBucket)
-        .limit(maxServingCacheRows + 1).collect()
+      // never collects more than cap+1 rows: a `_meta` total within the cap
+      // bounds the keyed rows (latest-per-key leaves at most one null-key
+      // row), so one job collects them all; without a `_meta`, limit(cap+1)
+      // is the bounded probe (a job per scale-up round of its take). A
+      // layout committed under the declared fingerprint reads every bucket
+      // dir, the null-key default partition too, with no listing or footer
+      // job; an evolved layout reads its files' own schema, so renderWireRow
+      // resolves eras by the names the rows were written under
+      val snap =
+        if (snapshotSchemaMatches(g, v)) {
+          import scala.jdk.CollectionConverters._
+          val ls = Files.list(vd)
+          val dirs = try ls.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith(EngineColumns.KeyBucket + "="))
+            .map(vd.resolve(_).toString).toList.sorted
+          finally ls.close()
+          ListedParquet.read(spark, vd.toString, dirs, snapshotSchema(g))
+        } else spark.read.parquet(vd.toString)
+      val keyed = snap.drop(EngineColumns.KeyBucket)
+      val rows = (if (meta.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect()
       if (rows.length > maxServingCacheRows) None
       else Some(rows.map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap)
     }
@@ -2137,6 +2168,17 @@ object FeatureStore {
   private[core] val KvIndexMagic = 0x474B4958
   /** Entries per sparse-index block — the lookup's worst-case block scan. */
   private[core] val KvIndexStride = 64
+
+  /** Writer tasks for an online version of at most `rowBound` rows spread
+    * over `buckets` written buckets: one task per `targetKeysPerBucket`
+    * rows, at least one, and at most one per bucket (each bucket's rows
+    * stay in one task, so each bucket still gets one parquet file and one
+    * KV file). */
+  private[core] def writeTasks(rowBound: Long, targetKeysPerBucket: Long, buckets: Long): Int = {
+    val target = math.max(targetKeysPerBucket, 1L)
+    val perTarget = rowBound / target + (if (rowBound % target == 0) 0 else 1)
+    math.max(1L, math.min(perTarget, buckets)).toInt
+  }
 
   /** Smallest power-of-two bucket count (≥ the floor, ≤ the cap) keeping
     * keys-per-bucket at or under the target. */

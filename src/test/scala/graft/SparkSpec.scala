@@ -25,4 +25,22 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+
+  /** Spark jobs and tasks started while `f` runs (listener bus drained
+    * before the read). */
+  def sparkWorkDuring(f: => Unit): (Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onTaskStart(ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        tasks.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get(), tasks.get())
+  }
 }

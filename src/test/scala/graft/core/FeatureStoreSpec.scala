@@ -26,18 +26,52 @@ class FeatureStoreSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("note"))
   }
 
-  /** Spark jobs started while `f` runs (listener bus drained before the read). */
-  private def jobsDuring(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+  private def jobsDuring(f: => Unit): Int = sparkWorkDuring(f)._1
+
+  /** The online layout invariant of version `v`, whatever the write width:
+    * each `_key_bucket=<b>` dir holds exactly one parquet file, `_serving`
+    * holds one `.kv` per non-empty bucket, and the `_meta` counts equal the
+    * per-bucket parquet counts and the KV header counts. Returns the
+    * `_meta` counts. */
+  private def assertOnlineLayout(root: String, v: Long): Map[Long, Long] = {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    def listed(d: java.nio.file.Path): List[java.nio.file.Path] = {
+      val ls = Files.list(d)
+      try ls.iterator().asScala.toList finally ls.close()
     }
-    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { f; org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
+    def kvHeaderCount(f: java.nio.file.Path): Long = {
+      val in = new java.io.DataInputStream(Files.newInputStream(f))
+      try {
+        in.readInt() // magic
+        (1 to in.readInt()).foreach(_ => in.skipNBytes(in.readInt().toLong))
+        in.readInt().toLong
+      } finally in.close()
+    }
+    val vd = java.nio.file.Paths.get(root, "tx", "online", s"v$v")
+    listed(vd).filter(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "="))
+      .foreach { d =>
+        val files = listed(d).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+        assert(files.size == 1, s"v$v: ${d.getFileName} holds ${files.size} parquet files")
+      }
+    val meta = new String(Files.readAllBytes(vd.resolve("_meta"))).linesIterator
+      .find(_.startsWith("counts=")).get
+      .drop(7).split(",").filter(_.nonEmpty)
+      .map { kv => val Array(b, c) = kv.split(":"); b.toLong -> c.toLong }.toMap
+    val parquet = spark.read.parquet(vd.toString)
+      .filter(col(EngineColumns.KeyBucket).isNotNull)
+      .groupBy(EngineColumns.KeyBucket).count().collect()
+      .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
+    val kvFiles = listed(vd.resolve("_serving")).map(_.getFileName.toString)
+    assert(kvFiles.forall(_.endsWith(".kv")), s"v$v: stray serving files $kvFiles")
+    val kv = kvFiles.map { n =>
+      n.stripPrefix("bucket=").stripSuffix(".kv").toLong ->
+        kvHeaderCount(vd.resolve("_serving").resolve(n))
+    }.filter(_._1 >= 0).toMap
+    assert(meta == parquet, s"v$v: _meta counts disagree with the parquet")
+    assert(meta == kv, s"v$v: _meta counts disagree with the KV headers")
+    assert(meta.values.forall(_ > 0), s"v$v: _meta lists an empty bucket")
+    meta
   }
 
   test("create → ingest → online keeps max event_time per key; manifest round-trips") {
@@ -1186,34 +1220,50 @@ class FeatureStoreSpec extends SparkSpec {
     // every version's recorded counts equal the keys its parquet holds per
     // bucket AND the entry counts its KV files' headers record — full
     // rewrites, incremental ingests and the delete alike
-    import org.apache.spark.sql.functions.col
-    import scala.jdk.CollectionConverters._
-    def kvHeaderCount(f: java.nio.file.Path): Long = {
-      val in = new java.io.DataInputStream(Files.newInputStream(f))
-      try {
-        in.readInt() // magic
-        (1 to in.readInt()).foreach(_ => in.skipNBytes(in.readInt().toLong))
-        in.readInt().toLong
-      } finally in.close()
-    }
     (1L to 6L).foreach { v =>
-      val vd = java.nio.file.Paths.get(root, "tx", "online", s"v$v")
-      val meta = metaOf(root, v).linesIterator.find(_.startsWith("counts=")).get
-        .drop(7).split(",").filter(_.nonEmpty)
-        .map { kv => val Array(b, c) = kv.split(":"); b.toLong -> c.toLong }.toMap
-      val parquet = spark.read.parquet(vd.toString)
-        .filter(col(EngineColumns.KeyBucket).isNotNull)
-        .groupBy(EngineColumns.KeyBucket).count().collect()
-        .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
-      val ls = Files.list(vd.resolve("_serving"))
-      val kv = try ls.iterator().asScala.toList.map { f =>
-        val n = f.getFileName.toString
-        n.stripPrefix("bucket=").stripSuffix(".kv").toLong -> kvHeaderCount(f)
-      }.filter(_._1 >= 0).toMap finally ls.close()
-      assert(meta == parquet, s"v$v: _meta counts disagree with the parquet")
-      assert(meta == kv, s"v$v: _meta counts disagree with the KV headers")
-      assert(meta.values.sum == Seq(300L, 301L, 2402L, 2402L, 2402L, 2400L)(v.toInt - 1),
-        s"v$v key total")
+      assert(assertOnlineLayout(root, v).values.sum ==
+        Seq(300L, 301L, 2402L, 2402L, 2402L, 2400L)(v.toInt - 1), s"v$v key total")
+    }
+  }
+
+  test("write width: one task per target rows, at least one, at most one per bucket written") {
+    val t = FeatureStore.DefaultTargetKeysPerBucket
+    assert(FeatureStore.writeTasks(1064L, t, 40L) == 1)
+    assert(FeatureStore.writeTasks(40L * t, t, 40L) == 40)
+    assert(FeatureStore.writeTasks(t + 1, t, 40L) == 2)
+    assert(FeatureStore.writeTasks(0L, t, 40L) == 1)
+    assert(FeatureStore.writeTasks(40L * t + 1, t, 40L) == 40)
+    assert(FeatureStore.writeTasks(Long.MaxValue, t, 40L) == 40)
+  }
+
+  test("several buckets per writer task: one parquet file per bucket dir, one KV per non-empty bucket, counts agree") {
+    Seq(FeatureStore.DefaultTargetKeysPerBucket, 4L).foreach { target =>
+      val root = Files.createTempDirectory("fs_width_").toString
+      val fs = new FeatureStore(spark, root, targetKeysPerBucket = target)
+      fs.createGroup(group)
+      // v1 bootstrap: 300 keys in 64 buckets write with one task at the
+      // default target; at target 4, 128 buckets over ~75 tasks
+      fs.ingest("tx", batch((1L to 300L).map(i =>
+        (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+      // v2 incremental: 91 rows, 51 of them updates
+      fs.ingest("tx", batch((250L to 340L).map(i =>
+        (i, "2024-02-01 10:00:00", i * 2.0, s"u$i")): _*))
+      assert(fs.lastCommitPhases("tx").map(_._1).contains("link_untouched"),
+        s"target $target: v2 must be incremental")
+      // v3 incremental delete
+      val deleted = 1L to 300L by 7
+      fs.deleteRecords("tx", deleted)
+      val totals = (1L to 3L).map(v => assertOnlineLayout(root, v).values.sum)
+      assert(totals == Seq(300L, 340L, 340L - deleted.size), s"target $target: $totals")
+      val capped = new FeatureStore(spark, root, maxServingCacheRows = 3,
+        targetKeysPerBucket = target)
+      Seq(fs, capped).foreach { s =>
+        assert(s.getRecord("tx", 8L).isEmpty, s"target $target: deleted key served")
+        assert(s.getRecord("tx", 9L).get("amount") == "9.0")
+        assert(s.getRecord("tx", 262L).get("note") == "u262")
+        assert(s.getRecord("tx", 340L).get("amount") == "680.0")
+      }
+      assert(fs.online("tx").count() == 340L - deleted.size)
     }
   }
 
@@ -1325,7 +1375,7 @@ class FeatureStoreSpec extends SparkSpec {
       .exists(_("amount") == "5.0"))
   }
 
-  test("a steady-state incremental commit writes snapshot, serving KV and counts in one pass: at most 8 jobs") {
+  test("a steady-state incremental commit writes snapshot, serving KV and counts in one pass: at most 7 jobs, fewer tasks than touched buckets") {
     val root = Files.createTempDirectory("fs_jobs_").toString
     val fs = new FeatureStore(spark, root)
     fs.createGroup(group)
@@ -1336,15 +1386,48 @@ class FeatureStoreSpec extends SparkSpec {
     fs.ingest("tx", micro(1L, 1)) // warm: the first incremental commit
     // 64 keys spread over most of the 64 buckets: each extra pass over the
     // staged snapshot (counts, KV render) would cost a listing job, a
-    // footer job and two compute jobs
-    val jobs = jobsDuring(fs.ingest("tx", micro(500L, 2)))
+    // footer job and two compute jobs. The touched buckets hold ~2,000
+    // rows, far below one target's worth, so they write with one task and
+    // are read back with no listing job
+    val touched = (500L until 564L)
+      .map(k => FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets)).distinct.size
+    val (jobs, tasks) = sparkWorkDuring(fs.ingest("tx", micro(500L, 2)))
     assert(fs.lastCommitPhases("tx").map(_._1).contains("link_untouched"),
       "the measured commit must be incremental")
-    assert(jobs <= 8, s"steady-state incremental commit launched $jobs jobs")
+    assert(jobs <= 7, s"steady-state incremental commit launched $jobs jobs")
+    assert(tasks < touched, s"steady-state commit ran $tasks tasks for $touched touched buckets")
     assert(fs.getRecord("tx", 530L).get("amount") == "1060.0")
     val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
     assert(capped.getRecord("tx", 530L).get("amount") == "1060.0")
     assert(capped.getRecord("tx", 1999L).get("amount") == "1999.0")
+    // an incremental delete reads neither the whole base version nor the
+    // tombstone footers: no listing or footer job
+    val delJobs = jobsDuring(fs.deleteRecords("tx", Seq(530L, 1999L)))
+    assert(delJobs <= 6, s"incremental delete launched $delJobs jobs")
+    assert(fs.getRecord("tx", 530L).isEmpty && capped.getRecord("tx", 1999L).isEmpty)
+  }
+
+  test("a fresh instance rebuilds the serving cache in one job; an evolved layout rebuilds from its files' own schema") {
+    val root = Files.createTempDirectory("fs_rebuild_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 2000L).map(i =>
+      (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"))) // v2
+    // 64 bucket dirs: no listing job, no footer job, only the collect
+    var answer: Option[Map[String, String]] = None
+    val jobs = jobsDuring { answer = new FeatureStore(spark, root).getRecord("tx", 1L) }
+    assert(jobs == 1, s"cache rebuild launched $jobs jobs")
+    assert(answer.exists(_("amount") == "99.0"))
+    // evolved but not recommitted: the rebuild must read the files' own
+    // schema, or the renamed column would read as null
+    fs.addFeature("tx", FeatureDef("score", FType.Fractional))
+    fs.renameFeature("tx", "note", "memo")
+    val evolved = new FeatureStore(spark, root)
+    assert(evolved.getRecord("tx", 7L).get("memo") == "n7")
+    assert(evolved.getRecord("tx", 7L).get("score") == null)
+    assert(evolved.getRecord("tx", 1L).get("amount") == "99.0")
+    assert(evolved.getRecord("tx", 1L).get("memo") == "upd")
   }
 
   test("readers of a stale cache single-flight: four concurrent getRecords launch one rebuild's jobs") {
