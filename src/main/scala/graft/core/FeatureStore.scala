@@ -754,7 +754,7 @@ final class FeatureStore(spark: SparkSession, root: String,
             // but masking is identity there and closes any residual
             // re-add window at the cost of one projection
             val snapTouched = maskSince(g,
-              conformToDeclared(g, snapshotBuckets(g, v, touched)))
+              conformToDeclared(g, readVersion(g, v, Some(touched))))
             val latestTouched = LatestPerKey.viaMaxBy(
               snapTouched.unionByName(bb.drop(EngineColumns.KeyBucket)),
               Seq(g.keyCol), g.eventTimeCol, Seq(EngineColumns.IngestSeq))
@@ -791,16 +791,17 @@ final class FeatureStore(spark: SparkSession, root: String,
     // (two whole-store passes cut from the per-commit fixed tax the q59
     // driver tail exposed; the power-of-two bucket envelope absorbs the
     // ±few-% approximation error)
-    val bootstrap = firstIngestKeys.filter(_ =>
-      baseVersion.isEmpty && currentSnapshot(g.name).isEmpty && batch.isDefined)
-    val base = (currentSnapshot(g.name), batch) match {
-      case (Some(snap), Some(b)) =>
+    val bootstrap = firstIngestKeys.filter(_ => baseVersion.isEmpty && batch.isDefined)
+    // the version this rewrite derives from and CASes against, read once —
+    // never a re-resolved LATEST a racing commit may have moved
+    val base = (baseVersion, batch) match {
+      case (Some(bv), Some(b)) =>
         // maskSince on the snapshot side: a full refresh crossing a
         // drop/re-add boundary must NOT carry the orphaned pre-drop values
         // into the rewritten snapshot (conformToDeclared era-resolves
         // names but cannot see `since`; identity for never-evolved
         // groups — round-12 review finding)
-        maskSince(g, conformToDeclared(g, snap))
+        maskSince(g, conformToDeclared(g, readVersion(g, bv)))
           .unionByName(maskSince(g, conformToDeclared(g, b)))
       case (_, _) => conformToDeclared(g, offline(g.name)) // offline() masks
     }
@@ -1125,27 +1126,41 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def currentVersion(name: String): Option[Long] =
     Coordination.readPointerFile(onlineDir(name).resolve("LATEST")).map(_.toLong)
 
-  private def currentSnapshot(name: String): Option[DataFrame] =
-    currentVersion(name).map(snapshotAt(name, _))
-
-  private def snapshotAt(name: String, v: Long): DataFrame =
-    spark.read.parquet(versionDirOf(name, v).toString).drop(EngineColumns.KeyBucket)
-
-  /** The snapshot RESTRICTED to the given key buckets, read by DIRECT
-    * partition-directory paths — O(touched) driver-side file listing
-    * instead of the O(buckets) full-version listing that
-    * `read.parquet(vDir).filter(...)` pays before pruning. Read through
-    * [[ListedParquet]], so no listing job runs at any touched count and no
-    * footer-inference job runs either. A touched bucket with no directory
-    * (batch keys hashing into a previously empty bucket) simply contributes
-    * nothing. Every caller sits behind [[snapshotSchemaMatches]], so the
-    * version's layout is already proven to be the declared schema. */
-  private def snapshotBuckets(g: FeatureGroup, version: Long,
-      touched: Set[Long]): DataFrame = {
-    val vd = versionDirOf(g.name, version)
-    ListedParquet.read(spark, vd.toString,
-      touched.toSeq.sorted.map(b => vd.resolve(s"${EngineColumns.KeyBucket}=$b").toString),
-      snapshotSchema(g)).drop(EngineColumns.KeyBucket)
+  /** The ONE reader of online version `v`'s parquet: the given key buckets'
+    * `_key_bucket=<b>` dirs, or with `buckets` None every bucket dir of the
+    * version (the null-key default partition too), listed on the driver —
+    * O(requested) listing, never the O(buckets) full-version listing a
+    * `read.parquet(vDir).filter(...)` pays before pruning. A version
+    * committed under the declared fingerprint ([[snapshotSchemaMatches]])
+    * reads through [[ListedParquet]] with the declared schema: no listing
+    * job at any bucket count and no footer-inference job. So does a version
+    * with none of the requested dirs (every key deleted, or batch keys
+    * hashing into empty buckets): an empty frame of the declared columns,
+    * where inference would have no file to read. An evolved version reads
+    * its files' own schema, so `renderWireRow`, `conformToDeclared` and
+    * `maskSince` resolve eras by the names the rows were written under.
+    * The bucket column is dropped. */
+  private def readVersion(g: FeatureGroup, v: Long,
+      buckets: Option[Iterable[Long]] = None): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val vd = versionDirOf(g.name, v)
+    val prefix = EngineColumns.KeyBucket + "="
+    val dirs = buckets match {
+      case Some(bs) => bs.toSeq.sorted.map(b => vd.resolve(s"$prefix$b")).filter(Files.isDirectory(_))
+      case None =>
+        val ls = Files.list(vd)
+        try ls.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix))
+          .toList.sortBy(_.toString)
+        finally ls.close()
+    }
+    val snap =
+      if (dirs.isEmpty || snapshotSchemaMatches(g, v))
+        ListedParquet.read(spark, vd.toString, dirs.map(_.toString), snapshotSchema(g))
+      else {
+        val all = spark.read.parquet(vd.toString)
+        buckets.fold(all)(bs => all.filter(col(EngineColumns.KeyBucket).isInCollection(bs.toSeq)))
+      }
+    snap.drop(EngineColumns.KeyBucket)
   }
 
   /** The data columns a version committed under `g`'s fingerprint holds. */
@@ -1318,7 +1333,7 @@ final class FeatureStore(spark: SparkSession, root: String,
               .map(_.get(0).asInstanceOf[Number].longValue).toSet
             if (touched.isEmpty) servingCache.remove(groupName): Unit
             else {
-              val snapTouched = snapshotBuckets(g, bv, touched)
+              val snapTouched = readVersion(g, bv, Some(touched))
               commitIncremental(g, bv, buckets, counts, touched,
                 snapTouched.join(hinted,
                   snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"),
@@ -1328,7 +1343,7 @@ final class FeatureStore(spark: SparkSession, root: String,
             // legacy meta OR evolution since the base version: full rewrite,
             // CONFORMED + MASKED so the new version's files, fingerprint
             // stamp, and KV rendering all present the declared view
-            val conformed = maskSince(g, conformToDeclared(g, snapshotAt(groupName, bv)))
+            val conformed = maskSince(g, conformToDeclared(g, readVersion(g, bv)))
             // bucket count still derives from the base version's recorded
             // key counts (the refreshOnline None-branch rule): the
             // fingerprint gate above distrusts the version's LAYOUT, not
@@ -1357,11 +1372,11 @@ final class FeatureStore(spark: SparkSession, root: String,
     * real_time_inference.py:16-19). */
   def online(name: String): DataFrame = {
     val g = describeGroup(name)
-    currentSnapshot(name) match {
+    currentVersion(name) match {
       // conform + mask: a snapshot committed before a dropFeature /
       // addFeature still carries the OLD schema until the next commit
       // re-renders it — reads must show the DECLARED view immediately
-      case Some(snap) => maskSince(g, conformToDeclared(g, snap))
+      case Some(v) => maskSince(g, conformToDeclared(g, readVersion(g, v)))
       case None => // offline() is already declared-schema + masked
         LatestPerKey.viaMaxBy(offline(name), Seq(g.keyCol), g.eventTimeCol,
             Seq(EngineColumns.IngestSeq))
@@ -1386,7 +1401,7 @@ final class FeatureStore(spark: SparkSession, root: String,
   /** The online snapshot EXACTLY as served at `version` (see [[onlineVersions]]). */
   def onlineAt(name: String, version: Long): DataFrame = {
     require(Files.exists(versionDirOf(name, version)), s"no online snapshot v$version for $name")
-    snapshotAt(name, version)
+    readVersion(describeGroup(name), version)
   }
 
   /** CHANGE DATA FEED between two served snapshot versions (see
@@ -1483,22 +1498,8 @@ final class FeatureStore(spark: SparkSession, root: String,
       // never collects more than cap+1 rows: a `_meta` total within the cap
       // bounds the keyed rows (latest-per-key leaves at most one null-key
       // row), so one job collects them all; without a `_meta`, limit(cap+1)
-      // is the bounded probe (a job per scale-up round of its take). A
-      // layout committed under the declared fingerprint reads every bucket
-      // dir, the null-key default partition too, with no listing or footer
-      // job; an evolved layout reads its files' own schema, so renderWireRow
-      // resolves eras by the names the rows were written under
-      val snap =
-        if (snapshotSchemaMatches(g, v)) {
-          import scala.jdk.CollectionConverters._
-          val ls = Files.list(vd)
-          val dirs = try ls.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith(EngineColumns.KeyBucket + "="))
-            .map(vd.resolve(_).toString).toList.sorted
-          finally ls.close()
-          ListedParquet.read(spark, vd.toString, dirs, snapshotSchema(g))
-        } else spark.read.parquet(vd.toString)
-      val keyed = snap.drop(EngineColumns.KeyBucket)
+      // is the bounded probe (a job per scale-up round of its take)
+      val keyed = readVersion(g, v)
       val rows = (if (meta.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect()
       if (rows.length > maxServingCacheRows) None
       else Some(rows.map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap)
@@ -1527,42 +1528,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     val skey = String.valueOf(key)
     servingSnapshot(groupName) match {
       case Some(m) => m.get(skey).map(renderWireRow(g, _))
-      case None =>
-        currentVersion(groupName) match {
-          case Some(v) =>
-            versionBuckets(groupName, v) match {
-              case Some(buckets) =>
-                val bucket = FeatureStore.keyBucketOf(skey, buckets)
-                // the KV layout's wire rows were rendered with the schema
-                // AT COMMIT TIME — after a dropFeature/addFeature they are
-                // stale until the next commit re-renders; serve evolved
-                // groups through the row path (renderWireRow masks/projects
-                // the declared view) until then
-                val kvTrusted = snapshotSchemaMatches(g, v)
-                (if (kvTrusted) servingKvScan(g, v, bucket, Set(skey)).map(_(skey))
-                 else None) match {
-                  case Some(res) => res // authoritative: KV layout rides the commit
-                  case None => // no/stale/unreadable KV layout: bucket-pruned job path
-                    // read VERSION v's dir, not a re-resolved LATEST: the
-                    // bucket was hashed with v's modulus, and a rebucketing
-                    // commit landing between the version read and this scan
-                    // would make the pruned filter read the wrong bucket of
-                    // the new layout — a present key answered as absent
-                    spark.read.parquet(versionDirOf(groupName, v).toString)
-                      .filter(col(EngineColumns.KeyBucket) === lit(bucket))
-                      .filter(col(g.keyCol).cast("string") === lit(skey))
-                      .drop(EngineColumns.KeyBucket)
-                      .collect().headOption.map(renderWireRow(g, _))
-                }
-              case None => // corrupt bucket meta: no pruning can be trusted
-                currentSnapshot(groupName).get
-                  .filter(col(g.keyCol).cast("string") === lit(skey))
-                  .collect().headOption.map(renderWireRow(g, _))
-            }
-          case None => // no snapshot yet: derive latest-per-key from history
-            online(groupName).filter(col(g.keyCol).cast("string") === lit(skey))
-              .collect().headOption.map(renderWireRow(g, _))
-        }
+      case None => lookupUncached(g, Seq(skey))(skey)
     }
   }
 
@@ -1730,38 +1696,44 @@ final class FeatureStore(spark: SparkSession, root: String,
     servingSnapshot(groupName) match {
       case Some(m) =>
         skeys.map(k => k -> m.get(k).map(renderWireRow(g, _))).toMap
-      case None =>
-        def jobPath(df: DataFrame): Map[String, Option[Map[String, String]]] = {
-          val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys))
-            .collect()
-            .map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap
-          skeys.map(k => k -> hit.get(k).map(renderWireRow(g, _))).toMap
+      case None => lookupUncached(g, skeys)
+    }
+  }
+
+  /** The lookup chain below the driver cache, shared by [[getRecord]] and
+    * [[batchGetRecords]]: the serving-KV files of the keys' buckets (one
+    * open per bucket, no Spark job); else ONE bucket-pruned job over the
+    * keys' buckets — a legacy or unreadable KV layout, or an evolved
+    * version whose pre-rendered wire rows are stale until the next commit
+    * re-renders (renderWireRow masks and projects the declared view); else
+    * an unpruned job when the bucket meta is corrupt (a guessed modulus
+    * would answer present keys as authoritatively absent); else, with no
+    * version at all, latest-per-key derived from history. Every read is of
+    * VERSION v's dir, not a re-resolved LATEST: the buckets were hashed
+    * with v's modulus, and a rebucketing commit landing in between would
+    * make the pruned read miss a present key. */
+  private def lookupUncached(g: FeatureGroup,
+      skeys: Seq[String]): Map[String, Option[Map[String, String]]] = {
+    def jobPath(df: DataFrame): Map[String, Option[Map[String, String]]] = {
+      val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys))
+        .collect()
+        .map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap
+      skeys.map(k => k -> hit.get(k).map(renderWireRow(g, _))).toMap
+    }
+    currentVersion(g.name) match {
+      case Some(v) =>
+        versionBuckets(g.name, v) match {
+          case Some(buckets) =>
+            val byBucket = skeys.groupBy(FeatureStore.keyBucketOf(_, buckets))
+            val scanned =
+              if (snapshotSchemaMatches(g, v))
+                byBucket.map { case (b, ks) => servingKvScan(g, v, b, ks.toSet) }
+              else Iterable(Option.empty[Map[String, Option[Map[String, String]]]])
+            if (scanned.forall(_.isDefined)) scanned.flatMap(_.get).toMap
+            else jobPath(readVersion(g, v, Some(byBucket.keys)))
+          case None => jobPath(readVersion(g, v))
         }
-        currentVersion(groupName) match {
-          case Some(v) =>
-            versionBuckets(groupName, v) match {
-              case Some(buckets) =>
-                val byBucket = skeys.groupBy(FeatureStore.keyBucketOf(_, buckets))
-                // post-evolution the KV wire rows are stale renders — row
-                // path until the next commit (see getRecord)
-                val scanned =
-                  if (snapshotSchemaMatches(g, v))
-                    byBucket.map { case (b, ks) => servingKvScan(g, v, b, ks.toSet) }
-                  else Iterable(Option.empty[Map[String, Option[Map[String, String]]]])
-                if (scanned.forall(_.isDefined))
-                  scanned.flatMap(_.get).toMap
-                else // no/stale/unreadable KV layout: one pruned job — against
-                  // VERSION v's dir (its modulus hashed the buckets; see
-                  // getRecord's fallback for the rebucketing race)
-                  jobPath(spark.read.parquet(versionDirOf(groupName, v).toString)
-                    .filter(col(EngineColumns.KeyBucket)
-                      .isInCollection(byBucket.keys.toSeq))
-                    .drop(EngineColumns.KeyBucket))
-              case None => // corrupt bucket meta: no pruning can be trusted
-                jobPath(currentSnapshot(groupName).get)
-            }
-          case None => jobPath(online(groupName))
-        }
+      case None => jobPath(online(g.name))
     }
   }
 

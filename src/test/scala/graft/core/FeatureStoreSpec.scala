@@ -255,21 +255,14 @@ class FeatureStoreSpec extends SparkSpec {
       (2L, "2024-01-01 11:00:00", 20.0, "b")))
     fs.getRecord("tx", 1L) // warm-up: builds the snapshot cache (one read job)
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       assert(fs.getRecord("tx", 2L).get("amount") == "20.0")
       assert(fs.getRecord("tx", 2).get("amount") == "20.0",
         "Int key must hit the stored Long key (string-normalized)")
       assert(fs.getRecord("tx", "2").get("amount") == "20.0")
       assert(fs.getRecord("tx", 999L).isEmpty)
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      assert(jobs.get() == 0, "cached point lookups must not launch Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, "cached point lookups must not launch Spark jobs")
 
     // a new ingest flips the snapshot version → cache invalidated, new value visible
     fs.ingest("tx", batch((2L, "2024-02-01 11:00:00", 99.0, "newer")))
@@ -293,19 +286,12 @@ class FeatureStoreSpec extends SparkSpec {
     // over-cap lookups launch NO jobs and build no driver map: they read
     // the key's serving KV file directly (one small file per bucket,
     // committed with the snapshot)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       assert(fs.getRecord("tx", 5L).get("amount") == "5.0")
       assert(fs.getRecord("tx", 888L).isEmpty, "absence is authoritative from the KV file")
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      assert(jobs.get() == 0,
-        "over-cap lookups must read the serving KV file without a Spark job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      "over-cap lookups must read the serving KV file without a Spark job")
 
     // a NEW version costs the over-cap instance no job either: the verdict
     // comes from v2's `_meta` key total (11 > 3), not a limit(cap+1) probe
@@ -327,17 +313,8 @@ class FeatureStoreSpec extends SparkSpec {
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
       .forEach(p => Files.delete(p))
     finally walk.close()
-    val jobs2 = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener2 = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs2.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener2)
-    try {
-      assert(fs.getRecord("tx", 5L).get("amount") == "5.0")
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      assert(jobs2.get() > 0, "legacy snapshots fall back to the pruned read path")
-    } finally spark.sparkContext.removeSparkListener(listener2)
+    val jobs2 = jobsDuring(assert(fs.getRecord("tx", 5L).get("amount") == "5.0"))
+    assert(jobs2 > 0, "legacy snapshots fall back to the pruned read path")
     // an incremental commit on that legacy base must not publish a PARTIAL
     // KV layout (touched buckets only): untouched keys would then read as
     // authoritatively absent
@@ -1056,6 +1033,68 @@ class FeatureStoreSpec extends SparkSpec {
     assert(diff(3L) == ("added", "new-key"))
   }
 
+  test("every key deleted: online, onlineAt, onlineDiff and expireStale read the empty version; a later ingest serves again") {
+    // the empty version has no bucket dir, so no file to infer a schema
+    // from: it must read as zero rows of the declared columns
+    Seq(3L, 200L).foreach { n =>
+      val fs = newStore()
+      fs.createGroup(group)
+      fs.ingest("tx", batch((1L to n).map(i =>
+        (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+      fs.deleteRecords("tx", 1L to n)
+      assert(fs.onlineVersions("tx") == Seq(1L, 2L))
+      val declaredTypes = group.features.map(f => f.name -> f.ftype.spark) :+
+        (EngineColumns.IngestSeq -> org.apache.spark.sql.types.LongType)
+      Seq("online" -> fs.online("tx"), "onlineAt" -> fs.onlineAt("tx", 2L)).foreach {
+        case (face, df) =>
+          assert(df.schema.map(f => f.name -> f.dataType) == declaredTypes, s"$n keys: $face schema")
+          assert(df.count() == 0L, s"$n keys: $face rows")
+      }
+      val diff = fs.onlineDiff("tx", 1L, 2L).collect()
+        .map(r => r.getAs[Long]("customer_id") -> r.getAs[String]("change_type")).toMap
+      assert(diff == (1L to n).map(_ -> "removed").toMap, s"$n keys: every key removed")
+      assert(fs.expireStale("tx", java.time.Duration.ofDays(1)) == 0L)
+      fs.ingest("tx", batch((7L, "2024-02-01 10:00:00", 70.0, "back")))
+      assert(fs.getRecord("tx", 7L).get("amount") == "70.0")
+      assert(fs.online("tx").count() == 1L)
+    }
+  }
+
+  test("online and onlineAt build a matching version's frame with no job; across an evolution onlineAt keeps the version's columns, online the declared view") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("fs_reader_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 200L).map(i =>
+      (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    // more than 32 bucket dirs: a spark.read of the version would list them
+    // with a job and infer the schema from the footers with another
+    val ls = Files.list(java.nio.file.Paths.get(root, "tx", "online", "v1"))
+    val bucketDirs = try ls.iterator().asScala
+      .count(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "=")) finally ls.close()
+    assert(bucketDirs > 32, s"$bucketDirs bucket dirs")
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsDuring { frames = Seq(fs.online("tx"), fs.onlineAt("tx", 1L)) }
+    assert(jobs == 0, s"building the online and onlineAt frames launched $jobs jobs")
+    assert(frames.map(_.count()) == Seq(200L, 200L))
+
+    // evolved but not recommitted: v1 reads exactly as it was served, the
+    // latest view in the declared schema (renamed column era-resolved, the
+    // added one null)
+    val served = fs.onlineAt("tx", 1L).collect().toSet
+    fs.addFeature("tx", FeatureDef("score", FType.Fractional))
+    fs.renameFeature("tx", "note", "memo")
+    val at1 = fs.onlineAt("tx", 1L)
+    assert(at1.columns.toSeq == group.featureNames :+ EngineColumns.IngestSeq)
+    assert(at1.collect().toSet == served, "onlineAt must return v1 exactly as served")
+    val latest = fs.online("tx")
+    assert(latest.columns.toSeq ==
+      fs.describeGroup("tx").featureNames :+ EngineColumns.IngestSeq)
+    val view = latest.collect().map(r => r.getAs[Long]("customer_id") ->
+      (r.getAs[String]("memo"), Option(r.getAs[java.lang.Double]("score")))).toMap
+    assert(view == (1L to 200L).map(i => i -> (s"n$i", None)).toMap)
+  }
+
   test("ingest observes rows / null keys / null event times on the append job") {
     import org.apache.spark.sql.functions.{col, lit, when}
     val fs = newStore()
@@ -1090,18 +1129,9 @@ class FeatureStoreSpec extends SparkSpec {
     val keys: Seq[Any] = Seq(1L, 5L, "7", 10L, 999L, 5L) // dup + miss + string form
     val single = keys.map(k => String.valueOf(k) -> fs.getRecord("tx", k)).toMap
     // KV path, zero Spark jobs for the whole batch
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val viaKv = try {
-      val r = fs.batchGetRecords("tx", keys)
-      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0, "batch KV lookups must not launch Spark jobs")
+    var viaKv = Map.empty[String, Option[Map[String, String]]]
+    val jobs = jobsDuring { viaKv = fs.batchGetRecords("tx", keys) }
+    assert(jobs == 0, "batch KV lookups must not launch Spark jobs")
     assert(viaKv == single, s"batch must equal per-key answers: $viaKv")
     assert(viaKv("999").isEmpty && viaKv("5").exists(_("amount") == "5.0"))
     // cached path (fresh store, cap high enough): same answers
@@ -1114,6 +1144,20 @@ class FeatureStoreSpec extends SparkSpec {
       .forEach(p => Files.delete(p))
     finally walk.close()
     assert(fs.batchGetRecords("tx", keys) == single, "legacy path must agree")
+    // evolved path (the fingerprint distrusts v1's wire rows until the next
+    // commit re-renders): one pruned job over v1's own schema, declared view
+    fs.addFeature("tx", FeatureDef("score", FType.Fractional))
+    val declared = single.map { case (k, r) => k -> r.map(_ + ("score" -> null)) }
+    def perKey(s: FeatureStore) = keys.map(k => String.valueOf(k) -> s.getRecord("tx", k)).toMap
+    assert(perKey(fs) == declared && fs.batchGetRecords("tx", keys) == declared,
+      "evolved path must agree")
+    // corrupt `_meta` (a fresh instance, so no cached bucket count): one
+    // unpruned job, same answers
+    Files.write(java.nio.file.Paths.get(root, "tx", "online", "v1", "_meta"),
+      "buckets=not-a-number".getBytes)
+    val corrupt = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    assert(perKey(corrupt) == declared && corrupt.batchGetRecords("tx", keys) == declared,
+      "corrupt-meta path must agree")
   }
 
   test("incremental refresh: only touched buckets rewritten; untouched carry forward by hard link") {
@@ -1270,7 +1314,7 @@ class FeatureStoreSpec extends SparkSpec {
   test("incremental refresh into a previously EMPTY bucket: direct-path read misses nothing") {
     // 10 keys over 64 buckets leave most buckets without a partition dir;
     // a batch whose key hashes into one of those must commit incrementally
-    // (snapshotBuckets reads only EXISTING touched dirs) and serve right
+    // (readVersion reads only EXISTING touched dirs) and serve right
     val root = Files.createTempDirectory("fs_emptyb_").toString
     val fs = new FeatureStore(spark, root)
     fs.createGroup(group)
@@ -1354,8 +1398,10 @@ class FeatureStoreSpec extends SparkSpec {
     val b5 = FeatureStore.keyBucketOf("5", FeatureStore.OnlineKeyBuckets)
     val f = java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving", s"bucket=$b5.kv")
     Files.write(f, Array[Byte](1, 2, 3, 4, 5)) // torn/garbage file
-    assert(fs.getRecord("tx", 5L).get("amount") == "5.0",
-      "lookup must degrade to the pruned job path on a bad KV file")
+    // one job: the pruned read of v1's declared schema, no footer job
+    val degradedJobs = jobsDuring(assert(fs.getRecord("tx", 5L).get("amount") == "5.0",
+      "lookup must degrade to the pruned job path on a bad KV file"))
+    assert(degradedJobs == 1, s"degraded lookup launched $degradedJobs jobs")
     val other = (1L to 10L).find(k =>
       FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets) != b5).get
     assert(fs.getRecord("tx", other).get("amount") == s"$other.0",
