@@ -454,9 +454,7 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   def dropGroup(name: String): Unit = {
     Coordination.deleteRecursively(groupDir(name))
-    servingCache.remove(name): Unit
-    bucketCountCache.remove(name): Unit // a recreated group may re-reach v1
-    schemaMatchCache.keySet.removeIf(_._1 == name): Unit // same re-reach hazard
+    states.remove(name): Unit // a recreated group re-reaches v1
   }
 
   // ---- ingest (reference: update_feature_store.py — per-row put_record; ours is set-oriented) ----
@@ -715,20 +713,20 @@ final class FeatureStore(spark: SparkSession, root: String,
     * commit — see `targetKeysPerBucket`). */
   def refreshOnline(g: FeatureGroup, batch: Option[DataFrame],
       firstIngestKeys: Option[Long] = None): Unit = {
-    val baseVersion = currentVersion(g.name) // the version this refresh derives from
-    val incremental = (baseVersion, batch) match {
-      case (Some(v), Some(b)) =>
-        readVersionMeta(versionDirOf(g.name, v)).flatMap { case (buckets, counts) =>
+    val base = latestState(g.name) // the version this refresh derives from
+    val incremental = (base, batch) match {
+      case (Some(s), Some(b)) =>
+        s.meta.layout.flatMap { case (buckets, counts) =>
           val total = counts.values.sum
           val grow = buckets < FeatureStore.MaxOnlineKeyBuckets &&
             total > 4L * targetKeysPerBucket * buckets
-          if (grow || !snapshotSchemaMatches(g, v)) None
-          else Some((v, buckets, counts, b))
+          if (grow || !snapshotSchemaMatches(g, s)) None
+          else Some((s, buckets, counts, b))
         }
       case _ => None
     }
     incremental match {
-      case Some((v, buckets, counts, b)) =>
+      case Some((s, buckets, counts, b)) =>
         // pin the batch: the touched-bucket probe and the rewrite would
         // otherwise run the caller's plan twice (cost, and a correctness
         // hazard if the plan is nondeterministic — the rewrite must cover
@@ -743,25 +741,25 @@ final class FeatureStore(spark: SparkSession, root: String,
             // null keys bucket to null (crc32(null) is null) — rare; let the
             // full path's default-partition write handle them rather than
             // special-casing the carry-forward links
-            fullRefresh(g, batch, baseVersion, Some(buckets))
+            fullRefresh(g, batch, base, Some(buckets))
           } else {
             val batchRows = touchedRows.map(r =>
               r.get(0).asInstanceOf[Number].longValue -> r.getLong(1)).toMap
             val touched = batchRows.keySet
-            if (touched.isEmpty) { servingCache.remove(g.name): Unit; return } // empty batch
+            if (touched.isEmpty) return // empty batch
             // belt over the fingerprint gate: carried-forward rows from a
             // correctly-matching version are already materialized-clean,
             // but masking is identity there and closes any residual
             // re-add window at the cost of one projection
             val snapTouched = maskSince(g,
-              conformToDeclared(g, readVersion(g, v, Some(touched))))
+              conformToDeclared(g, readVersion(g, s, Some(touched))))
             val latestTouched = LatestPerKey.viaMaxBy(
               snapTouched.unionByName(bb.drop(EngineColumns.KeyBucket)),
               Seq(g.keyCol), g.eventTimeCol, Seq(EngineColumns.IngestSeq))
             // latest-per-key of (base bucket ∪ batch rows) per touched bucket
             val rowBound = batchRows.iterator
               .map { case (t, n) => counts.getOrElse(t, 0L) + n }.sum
-            commitIncremental(g, v, buckets, counts, touched, latestTouched, rowBound)
+            commitIncremental(g, s.v, buckets, counts, touched, latestTouched, rowBound)
           }
         } finally bb.unpersist(false): Unit
       case None =>
@@ -772,17 +770,14 @@ final class FeatureStore(spark: SparkSession, root: String,
         // the 64-bucket floor and its second commit pays a guaranteed
         // full rebucketing rewrite (measured: a 64-key batch into a fresh
         // 1M-key store cost the whole store again)
-        val buckets = baseVersion
-          .flatMap(v => readVersionMeta(versionDirOf(g.name, v)))
-          .map { case (_, counts) =>
-            FeatureStore.bucketCountFor(counts.values.sum, targetKeysPerBucket) }
-        fullRefresh(g, batch, baseVersion, buckets, firstIngestKeys)
+        fullRefresh(g, batch, base, rewriteBuckets(base), firstIngestKeys)
     }
   }
 
   private def fullRefresh(g: FeatureGroup, batch: Option[DataFrame],
-      baseVersion: Option[Long], bucketsOpt: Option[Long],
+      baseState: Option[OnlineVersion], bucketsOpt: Option[Long],
       firstIngestKeys: Option[Long] = None): Unit = {
+    val baseVersion = baseState.map(_.v)
     // the FIRST ingest of a group (seq 0, no committed snapshot): the batch
     // IS the whole offline history, so derive the snapshot from the batch
     // frame directly — no parquet re-read of the history that was just
@@ -794,14 +789,14 @@ final class FeatureStore(spark: SparkSession, root: String,
     val bootstrap = firstIngestKeys.filter(_ => baseVersion.isEmpty && batch.isDefined)
     // the version this rewrite derives from and CASes against, read once —
     // never a re-resolved LATEST a racing commit may have moved
-    val base = (baseVersion, batch) match {
-      case (Some(bv), Some(b)) =>
+    val base = (baseState, batch) match {
+      case (Some(bs), Some(b)) =>
         // maskSince on the snapshot side: a full refresh crossing a
         // drop/re-add boundary must NOT carry the orphaned pre-drop values
         // into the rewritten snapshot (conformToDeclared era-resolves
         // names but cannot see `since`; identity for never-evolved
         // groups — round-12 review finding)
-        maskSince(g, conformToDeclared(g, readVersion(g, bv)))
+        maskSince(g, conformToDeclared(g, readVersion(g, bs)))
           .unionByName(maskSince(g, conformToDeclared(g, b)))
       case (_, _) => conformToDeclared(g, offline(g.name)) // offline() masks
     }
@@ -854,15 +849,12 @@ final class FeatureStore(spark: SparkSession, root: String,
   }
 
   /** CAS the LATEST pointer from `expected` to `next`, promoting the staged
-    * `dir` to `finalDir`, and drop the group's per-version caches. */
+    * `dir` to `finalDir`. */
   private def promote(g: FeatureGroup, dir: Path, finalDir: Path,
       expected: Option[Long], next: Long): Unit = {
     timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
       onlineDir(g.name), "LATEST", expected = expected.map(_.toString),
       next = next.toString, stage = Some(dir -> finalDir)))
-    servingCache.remove(g.name): Unit // next getRecord rebuilds from v<next>
-    bucketCountCache.remove(g.name): Unit
-    schemaMatchCache.keySet.removeIf(_._1 == g.name): Unit // bound per commit
   }
 
   /** Commit v<base+1> by rewriting ONLY the `touched` buckets (`newRows`
@@ -1001,85 +993,6 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def versionDirOf(name: String, v: Long): Path =
     onlineDir(name).resolve(s"v$v")
 
-  /** Verdict cache for the per-LOOKUP schema gate on the serving-KV path
-    * (getRecord/batchGetRecords): a version's recorded state is immutable,
-    * but the DECLARED side changes on metadata-only evolution, so the key
-    * carries the declared fingerprint — a drop/re-add/rename/widen flips
-    * the verdict at the next lookup with no invalidation hook. Entries are
-    * evicted whenever a commit invalidates the group's serving caches and
-    * on [[gcOnline]], so the map is bounded by live (version, epoch)
-    * pairs, not the store's lifetime commit count. */
-  private val schemaMatchCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), java.lang.Boolean]()
-
-  /** Does version `v`'s layout encode exactly the CURRENT declared view?
-    * True ⇒ its parquet columns, pre-rendered KV wire rows, and carried-
-    * forward buckets are all authoritative (they were committed under this
-    * very fingerprint, and commits materialize masking/era resolution).
-    * False ⇒ some evolution happened since: serve through the row paths
-    * (which mask and era-resolve at read time) and take the FULL refresh
-    * on the next commit. Versions committed before the fingerprint line
-    * compare by name set — which cannot see a same-name re-add or a type
-    * widen — so they are additionally distrusted whenever any feature
-    * carries evolution state the names cannot encode. Answered from the
-    * version `_meta` (one driver file read, never the O(buckets) listing +
-    * footer read of a full-version parquet resolve); snapshots from before
-    * the cols line fall back to that parquet read once. */
-  private def snapshotSchemaMatches(g: FeatureGroup, v: Long): Boolean = {
-    val fp = FeatureStore.declaredFingerprint(g)
-    val key = (g.name, v, fp)
-    val cached = schemaMatchCache.get(key)
-    if (cached != null) cached.booleanValue()
-    else {
-      val vd = versionDirOf(g.name, v)
-      val verdict = metaLine(vd, "fp") match {
-        case Some(storedFp) => storedFp == fp
-        case None =>
-          g.features.forall(f => f.since == 0L && f.renames.isEmpty) && {
-            val declared = (g.featureNames :+ EngineColumns.IngestSeq).toSet
-            metaLine(vd, "cols").map(_.split(",").iterator.filter(_.nonEmpty).toSet) match {
-              case Some(cols) => cols == declared
-              case None =>
-                val cols = spark.read.parquet(vd.toString)
-                  .columns.toSet - EngineColumns.KeyBucket
-                cols == declared
-            }
-          }
-      }
-      schemaMatchCache.put(key, java.lang.Boolean.valueOf(verdict))
-      verdict
-    }
-  }
-
-  /** Per-version bucket meta `v<N>/_meta`: the bucket count the snapshot
-    * was written with (the read side MUST hash with the same modulus) and
-    * the per-bucket key counts incremental commits maintain the total
-    * from. None for snapshots written before the meta existed — those
-    * read as [[FeatureStore.OnlineKeyBuckets]]-bucketed and fall back to
-    * full-rewrite maintenance. */
-  private def readVersionMeta(vd: Path): Option[(Long, Map[Long, Long])] =
-    metaLine(vd, "buckets").flatMap(line => scala.util.Try {
-      val buckets = line.toLong
-      require(buckets >= 1, s"nonsense bucket count $buckets") // Try → None: untrusted layout
-      val counts = metaLine(vd, "counts").getOrElse("").split(",").iterator
-        .filter(_.nonEmpty).map { kv =>
-          val Array(b, c) = kv.split(":")
-          b.toLong -> c.toLong
-        }.toMap
-      (buckets, counts)
-    }.toOption)
-
-  /** The `<key>=` line of a version's `_meta`. None when the meta or the
-    * line is absent (metas from before it) or unreadable — an untrusted
-    * layout degrades to the slower path, it never crashes the refresh. */
-  private def metaLine(vd: Path, key: String): Option[String] = {
-    val p = vd.resolve("_meta")
-    if (!Files.exists(p)) None
-    else scala.util.Try(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .linesIterator.find(_.startsWith(key + "=")).map(_.drop(key.length + 1).trim))
-      .toOption.flatten
-  }
-
   private def writeVersionMeta(vd: Path, buckets: Long,
       counts: Map[Long, Long], g: FeatureGroup): Unit = {
     // cols = the snapshot's data columns at commit time (declared features
@@ -1098,35 +1011,77 @@ final class FeatureStore(spark: SparkSession, root: String,
     Files.write(vd.resolve("_meta"), body.getBytes(StandardCharsets.UTF_8)): Unit
   }
 
-  /** Bucket count of a committed version, cached per (group, version) —
-    * one driver-side file read on version change, zero Spark jobs (the
-    * lookup paths depend on that). Legacy snapshots WITHOUT a meta file
-    * were written with the fixed default (Some); a meta file that EXISTS
-    * but fails to parse means the bucket layout cannot be trusted at all
-    * (None) — lookups must not hash with a guessed modulus (a wrong bucket
-    * would answer a present key as authoritatively absent) and fall back
-    * to an unpruned snapshot scan until the next full refresh rewrites the
-    * meta. */
-  private val bucketCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[Long])]()
-
-  private def versionBuckets(name: String, v: Long): Option[Long] = {
-    val c = bucketCountCache.get(name)
-    if (c != null && c._1 == v) c._2
-    else {
-      val vd = versionDirOf(name, v)
-      val b =
-        if (!Files.exists(vd.resolve("_meta"))) Some(FeatureStore.OnlineKeyBuckets)
-        else readVersionMeta(vd).map(_._1)
-      bucketCountCache.put(name, (v, b))
-      b
-    }
+  /** What this instance knows about one committed online version: its
+    * `_meta`, parsed once, and — each loaded on first use — its footer
+    * columns and its serving map. A version is immutable once LATEST names
+    * it, so nothing here is ever invalidated; a newer version gets a new
+    * state ([[latestState]]). */
+  private final class OnlineVersion(val name: String, val v: Long) {
+    val dir: Path = versionDirOf(name, v)
+    val meta: FeatureStore.VersionMeta = FeatureStore.parseMeta(dir)
+    /** The data columns in the version's parquet footers — the schema
+      * gate's fallback for a version committed before the `cols` line. */
+    lazy val footerCols: Set[String] =
+      spark.read.parquet(dir.toString).columns.toSet - EngineColumns.KeyBucket
+    /** [[loadServing]]'s answer, single-flight: concurrent first readers
+      * wait for the one load, and a load that throws is retried by the
+      * next reader (a lazy val's initializer is locked and retried). */
+    lazy val serving: Option[Map[String, Row]] = loadServing(this)
   }
+
+  /** One state per group: the latest version this instance resolved. */
+  private val states = new java.util.concurrent.ConcurrentHashMap[String, OnlineVersion]()
+
+  /** The state of `name`'s latest committed version; None when no version
+    * is committed. LATEST is read once, and a cached state of that version
+    * is used as is. Otherwise the state is replaced inside `compute`, which
+    * re-reads LATEST and installs the version LATEST names THEN: a reader
+    * that resolved v after another installed v+1 uses v+1, and never
+    * reloads the superseded v over it. A group dropped and recreated by
+    * another instance reloads too, because its version differs. */
+  private def latestState(name: String): Option[OnlineVersion] =
+    currentVersion(name).flatMap { v =>
+      val s = states.get(name)
+      if (s != null && s.v == v) Some(s)
+      else Option(states.compute(name, (_, old) => currentVersion(name) match {
+        case Some(now) if old != null && old.v == now => old
+        case Some(now) => new OnlineVersion(name, now)
+        case None => null
+      }))
+    }
+
+  /** Does version `s`'s layout encode exactly the CURRENT declared view?
+    * True ⇒ its parquet columns, pre-rendered KV wire rows, and carried-
+    * forward buckets are all authoritative (they were committed under this
+    * very fingerprint, and commits materialize masking/era resolution).
+    * False ⇒ some evolution happened since: serve through the row paths
+    * (which mask and era-resolve at read time) and take the FULL refresh
+    * on the next commit. Versions committed before the fingerprint line
+    * compare by name set — which cannot see a same-name re-add or a type
+    * widen — so they are additionally distrusted whenever any feature
+    * carries evolution state the names cannot encode. Answered from the
+    * parsed `_meta`; a version from before the cols line compares its
+    * footer columns, probed once per state. */
+  private def snapshotSchemaMatches(g: FeatureGroup, s: OnlineVersion): Boolean =
+    s.meta.fp match {
+      case Some(fp) => fp == FeatureStore.declaredFingerprint(g)
+      case None =>
+        g.features.forall(f => f.since == 0L && f.renames.isEmpty) &&
+          s.meta.cols.getOrElse(s.footerCols) ==
+            (g.featureNames :+ EngineColumns.IngestSeq).toSet
+    }
+
+  /** A full rewrite's bucket count, from the base version's recorded key
+    * count — a schema mismatch distrusts the version's LAYOUT, not its
+    * sizing metadata. None without a parseable `_meta`. */
+  private def rewriteBuckets(base: Option[OnlineVersion]): Option[Long] =
+    base.flatMap(_.meta.layout).map { case (_, counts) =>
+      FeatureStore.bucketCountFor(counts.values.sum, targetKeysPerBucket) }
 
   private def currentVersion(name: String): Option[Long] =
     Coordination.readPointerFile(onlineDir(name).resolve("LATEST")).map(_.toLong)
 
-  /** The ONE reader of online version `v`'s parquet: the given key buckets'
+  /** The ONE reader of online version `s`'s parquet: the given key buckets'
     * `_key_bucket=<b>` dirs, or with `buckets` None every bucket dir of the
     * version (the null-key default partition too), listed on the driver —
     * O(requested) listing, never the O(buckets) full-version listing a
@@ -1140,10 +1095,10 @@ final class FeatureStore(spark: SparkSession, root: String,
     * its files' own schema, so `renderWireRow`, `conformToDeclared` and
     * `maskSince` resolve eras by the names the rows were written under.
     * The bucket column is dropped. */
-  private def readVersion(g: FeatureGroup, v: Long,
+  private def readVersion(g: FeatureGroup, s: OnlineVersion,
       buckets: Option[Iterable[Long]] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val vd = versionDirOf(g.name, v)
+    val vd = s.dir
     val prefix = EngineColumns.KeyBucket + "="
     val dirs = buckets match {
       case Some(bs) => bs.toSeq.sorted.map(b => vd.resolve(s"$prefix$b")).filter(Files.isDirectory(_))
@@ -1154,7 +1109,7 @@ final class FeatureStore(spark: SparkSession, root: String,
         finally ls.close()
     }
     val snap =
-      if (dirs.isEmpty || snapshotSchemaMatches(g, v))
+      if (dirs.isEmpty || snapshotSchemaMatches(g, s))
         ListedParquet.read(spark, vd.toString, dirs.map(_.toString), snapshotSchema(g))
       else {
         val all = spark.read.parquet(vd.toString)
@@ -1305,8 +1260,8 @@ final class FeatureStore(spark: SparkSession, root: String,
       (if (smallKeySet) marks.coalesce(1) else marks)
         .write.mode("append").parquet(tombstoneDir(groupName).toString)
     }
-    currentVersion(groupName) match {
-      case Some(bv) =>
+    latestState(groupName) match {
+      case Some(bs) =>
         // read the just-written markers back rather than re-running keyDf0's
         // plan: the sweep's frame derives from this very snapshot, and the
         // parquet roundtrip both cuts that self-reference and guarantees the
@@ -1320,8 +1275,7 @@ final class FeatureStore(spark: SparkSession, root: String,
         // widen and the next commit would otherwise stamp the current
         // fingerprint onto a version whose files and KV rendering still
         // hold the pre-evolution view (round-12 review follow-up)
-        val baseMeta = readVersionMeta(versionDirOf(groupName, bv))
-        baseMeta.filter(_ => snapshotSchemaMatches(g, bv)) match {
+        bs.meta.layout.filter(_ => snapshotSchemaMatches(g, bs)) match {
           case Some((buckets, counts)) =>
             // INCREMENTAL delete: keys live only in their own buckets, so
             // anti-joining the snapshot RESTRICTED to the deleted keys'
@@ -1331,10 +1285,9 @@ final class FeatureStore(spark: SparkSession, root: String,
               .select(pmod(crc32(col("key")), lit(buckets)).as("b"))
               .distinct().collect()
               .map(_.get(0).asInstanceOf[Number].longValue).toSet
-            if (touched.isEmpty) servingCache.remove(groupName): Unit
-            else {
-              val snapTouched = readVersion(g, bv, Some(touched))
-              commitIncremental(g, bv, buckets, counts, touched,
+            if (touched.nonEmpty) {
+              val snapTouched = readVersion(g, bs, Some(touched))
+              commitIncremental(g, bs.v, buckets, counts, touched,
                 snapTouched.join(hinted,
                   snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"),
                 touched.iterator.map(counts.getOrElse(_, 0L)).sum)
@@ -1343,27 +1296,19 @@ final class FeatureStore(spark: SparkSession, root: String,
             // legacy meta OR evolution since the base version: full rewrite,
             // CONFORMED + MASKED so the new version's files, fingerprint
             // stamp, and KV rendering all present the declared view
-            val conformed = maskSince(g, conformToDeclared(g, readVersion(g, bv)))
+            val conformed = maskSince(g, conformToDeclared(g, readVersion(g, bs)))
             // bucket count still derives from the base version's recorded
-            // key counts (the refreshOnline None-branch rule): the
-            // fingerprint gate above distrusts the version's LAYOUT, not
-            // its sizing metadata. Falling to the 64-bucket floor here
-            // would rewrite a large store into 64 buckets and force a
-            // second O(store) rebucket at the next ingest (round-12
-            // review finding)
-            val buckets = baseMeta
-              .map { case (_, counts) => FeatureStore.bucketCountFor(
-                counts.values.sum, targetKeysPerBucket) }
-              .getOrElse(FeatureStore.OnlineKeyBuckets)
+            // key counts (the refreshOnline None-branch rule). Falling to
+            // the 64-bucket floor here would rewrite a large store into 64
+            // buckets and force a second O(store) rebucket at the next
+            // ingest (round-12 review finding)
             commitOnlineSnapshot(g,
               conformed.join(hinted,
                 conformed(g.keyCol).cast("string") === hinted("key"), "left_anti"),
-              Some(bv), buckets, None)
+              Some(bs.v), rewriteBuckets(Some(bs)).getOrElse(FeatureStore.OnlineKeyBuckets),
+              None)
         }
-      case None =>
-        // no snapshot yet: online() derives from the (now filtered) offline
-        // history — nothing materialized to rewrite, but drop any cache
-        servingCache.remove(groupName): Unit
+      case None => () // no snapshot yet: online() derives from the (now filtered) offline history
     }
     seq
   }
@@ -1372,11 +1317,11 @@ final class FeatureStore(spark: SparkSession, root: String,
     * real_time_inference.py:16-19). */
   def online(name: String): DataFrame = {
     val g = describeGroup(name)
-    currentVersion(name) match {
+    latestState(name) match {
       // conform + mask: a snapshot committed before a dropFeature /
       // addFeature still carries the OLD schema until the next commit
       // re-renders it — reads must show the DECLARED view immediately
-      case Some(v) => maskSince(g, conformToDeclared(g, readVersion(g, v)))
+      case Some(s) => maskSince(g, conformToDeclared(g, readVersion(g, s)))
       case None => // offline() is already declared-schema + masked
         LatestPerKey.viaMaxBy(offline(name), Seq(g.keyCol), g.eventTimeCol,
             Seq(EngineColumns.IngestSeq))
@@ -1401,7 +1346,10 @@ final class FeatureStore(spark: SparkSession, root: String,
   /** The online snapshot EXACTLY as served at `version` (see [[onlineVersions]]). */
   def onlineAt(name: String, version: Long): DataFrame = {
     require(Files.exists(versionDirOf(name, version)), s"no online snapshot v$version for $name")
-    readVersion(describeGroup(name), version)
+    // the cached state when `version` is the latest this instance
+    // resolved; any other version is parsed on demand and not cached
+    readVersion(describeGroup(name), Option(states.get(name)).filter(_.v == version)
+      .getOrElse(new OnlineVersion(name, version)))
   }
 
   /** CHANGE DATA FEED between two served snapshot versions (see
@@ -1443,64 +1391,34 @@ final class FeatureStore(spark: SparkSession, root: String,
   def gcOnline(name: String, keep: Int = 2): Unit = {
     val vs = onlineVersions(name)
     val cur = currentVersion(name).getOrElse(return)
-    vs.filter(v => v != cur && v <= cur - keep).foreach { v =>
-      Coordination.deleteRecursively(onlineDir(name).resolve(s"v$v"))
-      // a collected version's schema verdicts can never be probed again —
-      // evict them so the cache bound really is live (version, fp) pairs
-      // (the doc on [[schemaMatchCache]] promises this eviction)
-      schemaMatchCache.keySet.removeIf(k => k._1 == name && k._2 == v): Unit
-    }
+    vs.filter(v => v != cur && v <= cur - keep)
+      .foreach(v => Coordination.deleteRecursively(onlineDir(name).resolve(s"v$v")))
   }
 
-  /** Serving-path cache (SURVEY.md §3.3): the reference's `get_record` is a
-    * millisecond KV hit (real_time_inference.py:16-19); launching a Spark job
-    * per point lookup is the wrong cost model for that path. The online
-    * snapshot is one row per entity key — the working set the reference holds
-    * in DynamoDB — so the single-node analogue is a driver map, built ONCE
-    * per snapshot version and invalidated when [[refreshOnline]] flips the
-    * LATEST pointer. At cluster scale this becomes an external KV store fed
-    * by the same snapshot; the version-keyed invalidation carries over.
-    * Keys are string-normalized so a caller's Int key hits a stored Long. */
-  private val servingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[Map[String, Row]])]()
-
-  /** One rebuild lock per group: readers that find the cache stale queue
-    * behind the one rebuilding it instead of each reading the snapshot. */
-  private val servingLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** None when no snapshot exists OR the snapshot exceeds
-    * `maxServingCacheRows`. Each version loads ONCE per group: concurrent
-    * readers of a stale cache single-flight behind the rebuild lock and
-    * re-check the cache after it. The over-cap verdict is cached per
-    * version too; when the version's `_meta` key total already exceeds the
-    * cap it costs no Spark job, otherwise (or without a `_meta`) the load
-    * itself is the bounded probe. */
-  private def servingSnapshot(name: String): Option[Map[String, Row]] =
-    currentVersion(name).flatMap { v =>
-      def cachedAt: Option[Option[Map[String, Row]]] =
-        Option(servingCache.get(name)).filter(_._1 == v).map(_._2)
-      cachedAt.getOrElse(servingLocks.computeIfAbsent(name, _ => new Object).synchronized {
-        cachedAt.getOrElse {
-          val entry = loadServing(name, v)
-          servingCache.put(name, (v, entry))
-          entry
-        }
-      })
-    }
-
-  private def loadServing(name: String, v: Long): Option[Map[String, Row]] = {
-    // VERSION v's dir, not a re-resolved LATEST: the entry is cached as v's
-    val vd = versionDirOf(name, v)
-    val meta = readVersionMeta(vd)
-    if (meta.exists(_._2.values.sum > maxServingCacheRows)) None
+  /** The serving map of version `s` (SURVEY.md §3.3): the reference's
+    * `get_record` is a millisecond KV hit (real_time_inference.py:16-19);
+    * launching a Spark job per point lookup is the wrong cost model for
+    * that path. The online snapshot is one row per entity key — the working
+    * set the reference holds in DynamoDB — so the single-node analogue is a
+    * driver map, built ONCE per version ([[OnlineVersion.serving]]) and
+    * replaced when a lookup resolves a newer LATEST. At cluster scale this
+    * becomes an external KV store fed by the same snapshot; the version-
+    * keyed replacement carries over. Keys are string-normalized so a
+    * caller's Int key hits a stored Long. None when the version exceeds
+    * `maxServingCacheRows`: when its `_meta` key total already does, that
+    * costs no Spark job, otherwise (or without a `_meta`) the load itself
+    * is the bounded probe. */
+  private def loadServing(s: OnlineVersion): Option[Map[String, Row]] = {
+    val layout = s.meta.layout
+    if (layout.exists(_._2.values.sum > maxServingCacheRows)) None
     else {
-      val g = describeGroup(name)
+      val g = describeGroup(s.name)
       // never collects more than cap+1 rows: a `_meta` total within the cap
       // bounds the keyed rows (latest-per-key leaves at most one null-key
       // row), so one job collects them all; without a `_meta`, limit(cap+1)
       // is the bounded probe (a job per scale-up round of its take)
-      val keyed = readVersion(g, v)
-      val rows = (if (meta.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect()
+      val keyed = readVersion(g, s)
+      val rows = (if (layout.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect()
       if (rows.length > maxServingCacheRows) None
       else Some(rows.map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap)
     }
@@ -1526,9 +1444,10 @@ final class FeatureStore(spark: SparkSession, root: String,
   def getRecord(groupName: String, key: Any): Option[Map[String, String]] = {
     val g = describeGroup(groupName)
     val skey = String.valueOf(key)
-    servingSnapshot(groupName) match {
+    val s = latestState(groupName)
+    s.flatMap(_.serving) match {
       case Some(m) => m.get(skey).map(renderWireRow(g, _))
-      case None => lookupUncached(g, Seq(skey))(skey)
+      case None => lookupUncached(g, s, Seq(skey))(skey)
     }
   }
 
@@ -1591,9 +1510,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     * one binary search over the sparse index plus one ≤stride-entry block
     * scan. Fields added to the group after the snapshot was written serve
     * as null. */
-  private def servingKvScan(g: FeatureGroup, version: Long, bucket: Long,
+  private def servingKvScan(g: FeatureGroup, s: OnlineVersion, bucket: Long,
       targets: Set[String]): Option[Map[String, Option[Map[String, String]]]] = {
-    val servingDir = versionDirOf(g.name, version).resolve("_serving")
+    val servingDir = s.dir.resolve("_serving")
     if (!Files.exists(servingDir)) return None
     val miss: Map[String, Option[Map[String, String]]] =
       targets.map(_ -> (None: Option[Map[String, String]])).toMap
@@ -1693,10 +1612,11 @@ final class FeatureStore(spark: SparkSession, root: String,
     val g = describeGroup(groupName)
     val skeys = keys.map(String.valueOf(_)).distinct
     if (skeys.isEmpty) return Map.empty
-    servingSnapshot(groupName) match {
+    val s = latestState(groupName)
+    s.flatMap(_.serving) match {
       case Some(m) =>
         skeys.map(k => k -> m.get(k).map(renderWireRow(g, _))).toMap
-      case None => lookupUncached(g, skeys)
+      case None => lookupUncached(g, s, skeys)
     }
   }
 
@@ -1708,11 +1628,11 @@ final class FeatureStore(spark: SparkSession, root: String,
     * re-renders (renderWireRow masks and projects the declared view); else
     * an unpruned job when the bucket meta is corrupt (a guessed modulus
     * would answer present keys as authoritatively absent); else, with no
-    * version at all, latest-per-key derived from history. Every read is of
-    * VERSION v's dir, not a re-resolved LATEST: the buckets were hashed
-    * with v's modulus, and a rebucketing commit landing in between would
-    * make the pruned read miss a present key. */
-  private def lookupUncached(g: FeatureGroup,
+    * version at all (`state` None), latest-per-key derived from history.
+    * Every read is of the state's version, not a re-resolved LATEST: the
+    * buckets were hashed with its modulus, and a rebucketing commit landing
+    * in between would make the pruned read miss a present key. */
+  private def lookupUncached(g: FeatureGroup, state: Option[OnlineVersion],
       skeys: Seq[String]): Map[String, Option[Map[String, String]]] = {
     def jobPath(df: DataFrame): Map[String, Option[Map[String, String]]] = {
       val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys))
@@ -1720,18 +1640,18 @@ final class FeatureStore(spark: SparkSession, root: String,
         .map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap
       skeys.map(k => k -> hit.get(k).map(renderWireRow(g, _))).toMap
     }
-    currentVersion(g.name) match {
-      case Some(v) =>
-        versionBuckets(g.name, v) match {
+    state match {
+      case Some(s) =>
+        s.meta.lookupBuckets match {
           case Some(buckets) =>
             val byBucket = skeys.groupBy(FeatureStore.keyBucketOf(_, buckets))
             val scanned =
-              if (snapshotSchemaMatches(g, v))
-                byBucket.map { case (b, ks) => servingKvScan(g, v, b, ks.toSet) }
+              if (snapshotSchemaMatches(g, s))
+                byBucket.map { case (b, ks) => servingKvScan(g, s, b, ks.toSet) }
               else Iterable(Option.empty[Map[String, Option[Map[String, String]]]])
             if (scanned.forall(_.isDefined)) scanned.flatMap(_.get).toMap
-            else jobPath(readVersion(g, v, Some(byBucket.keys)))
-          case None => jobPath(readVersion(g, v))
+            else jobPath(readVersion(g, s, Some(byBucket.keys)))
+          case None => jobPath(readVersion(g, s))
         }
       case None => jobPath(online(g.name))
     }
@@ -1751,9 +1671,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     val g = describeGroup(groupName)
     getRecord(groupName, key).filter { rec =>
       Option(rec(g.eventTimeCol)).exists { iso =>
-        val et = java.time.Instant.from(java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
-          .parse(iso))
+        val et = java.time.Instant.from(FeatureStore.WireTimestamp.parse(iso))
         !et.plus(maxStaleness).isBefore(clock())
       }
     }
@@ -1802,7 +1720,7 @@ final class FeatureStore(spark: SparkSession, root: String,
         val c = col(f.name)
         (f.ftype match {
           case FType.FTimestamp => // try_*: ANSI to_timestamp throws on pattern mismatch
-            coalesce(try_to_timestamp(c, lit("yyyy-MM-dd'T'HH:mm:ss'Z'")), try_to_timestamp(c))
+            coalesce(try_to_timestamp(c, lit(FeatureStore.WireTimestampPattern)), try_to_timestamp(c))
           case other => c.cast(other.spark)
         }).as(f.name)
       }: _*)
@@ -2169,6 +2087,49 @@ object FeatureStore {
     java.lang.Math.floorMod(c.getValue, buckets)
   }
 
+  /** A committed version's `_meta`, parsed once ([[parseMeta]]).
+    * @param layout the bucket count the snapshot was written with (the read
+    *   side MUST hash with the same modulus) and the per-bucket key counts
+    *   incremental commits maintain the total from. None for a version
+    *   without a `_meta` (written before it) or with one that does not
+    *   parse: commits take the full rewrite.
+    * @param lookupBuckets the modulus lookups hash keys with — the fixed
+    *   [[OnlineKeyBuckets]] a legacy version was written with; None when a
+    *   `_meta` EXISTS but does not parse, so the layout cannot be trusted
+    *   at all: a guessed modulus would answer a present key as
+    *   authoritatively absent, so lookups scan unpruned until the next
+    *   full refresh rewrites the meta.
+    * @param cols the `cols` line: the data columns at commit time.
+    * @param fp the `fp` line: the declared fingerprint at commit time. */
+  private[core] final case class VersionMeta(layout: Option[(Long, Map[Long, Long])],
+      lookupBuckets: Option[Long], cols: Option[Set[String]], fp: Option[String])
+
+  /** The ONE parser of a version's `_meta`. An unreadable file parses like
+    * one without lines — an untrusted layout degrades to the slower path,
+    * it never crashes a refresh or a lookup. */
+  private[core] def parseMeta(vd: Path): VersionMeta = {
+    val p = vd.resolve("_meta")
+    if (!Files.exists(p)) VersionMeta(None, Some(OnlineKeyBuckets), None, None)
+    else {
+      val lines = scala.util.Try(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+        .linesIterator.toList).getOrElse(Nil)
+      def line(key: String): Option[String] =
+        lines.find(_.startsWith(key + "=")).map(_.drop(key.length + 1).trim)
+      val layout = line("buckets").flatMap(n => scala.util.Try {
+        val buckets = n.toLong
+        require(buckets >= 1, s"nonsense bucket count $buckets") // Try → None: untrusted layout
+        val counts = line("counts").getOrElse("").split(",").iterator
+          .filter(_.nonEmpty).map { kv =>
+            val Array(b, c) = kv.split(":")
+            b.toLong -> c.toLong
+          }.toMap
+        (buckets, counts)
+      }.toOption)
+      VersionMeta(layout, layout.map(_._1),
+        line("cols").map(_.split(",").iterator.filter(_.nonEmpty).toSet), line("fp"))
+    }
+  }
+
   /** Read exactly `n` bytes at `pos` (flipped, ready to get). */
   private[core] def readFullyAt(ch: java.nio.channels.SeekableByteChannel,
       pos: Long, n: Int): java.nio.ByteBuffer = {
@@ -2341,9 +2302,6 @@ object FeatureStore {
     }.toMap
   }
 
-  /** The stringly wire rendering (shared by the cache path, the KV writer,
-    * and the legacy job path — one definition, so they can never drift):
-    * null → null, timestamps → ISO-8601 Zulu, everything else → toString. */
   /** FULL declared-schema fingerprint — changes on EVERY evolution,
     * including the ones column names cannot see (a re-add that only bumps
     * `since`, a widen that only changes the type). Names/types are
@@ -2361,11 +2319,19 @@ object FeatureStore {
     case _ => false
   }
 
+  /** The wire timestamp format: ISO-8601 Zulu at second precision, in UTC
+    * (update_feature_store.py:36). `putRecord` parses the same pattern. */
+  private[core] val WireTimestampPattern = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+  private[core] val WireTimestamp: java.time.format.DateTimeFormatter =
+    java.time.format.DateTimeFormatter.ofPattern(WireTimestampPattern)
+      .withZone(java.time.ZoneOffset.UTC)
+
+  /** The stringly wire rendering (shared by the cache path, the KV writer,
+    * and the legacy job path — one definition, so they can never drift):
+    * null → null, timestamps → ISO-8601 Zulu, everything else → toString. */
   private[core] def renderWireValue(raw: Any): String = raw match {
     case null                  => null
-    case t: java.sql.Timestamp => java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
-      .format(t.toInstant)
+    case t: java.sql.Timestamp => WireTimestamp.format(t.toInstant)
     case other                 => other.toString
   }
 

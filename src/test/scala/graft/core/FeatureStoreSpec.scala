@@ -483,8 +483,15 @@ class FeatureStoreSpec extends SparkSpec {
     val fs = newStore()
     fs.createGroup(group)
     assert(fs.groupExists("tx"))
+    fs.ingest("tx", batch((1L, "2024-01-01 10:00:00", 10.0, "old")))
+    assert(fs.getRecord("tx", 1L).get("note") == "old") // cache warm on v1
     fs.dropGroup("tx")
     assert(!fs.groupExists("tx"))
+    // the same instance recreates the group, whose first commit is v1 again:
+    // the lookup must serve the new incarnation, not the cached old v1
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L, "2023-01-01 10:00:00", 20.0, "new")))
+    assert(fs.getRecord("tx", 1L).map(r => (r("amount"), r("note"))).contains(("20.0", "new")))
   }
 
   test("addFeature: old history reads NULL, new batches carry the column, serving defaults") {
@@ -1249,10 +1256,13 @@ class FeatureStoreSpec extends SparkSpec {
     assert(metaOf(root, 4).contains("buckets=4096"),
       s"expected rebucket to 4096, got: ${metaOf(root, 4).linesIterator.next()}")
     assert(fs.getRecord("tx", 5L).get("amount") == "555.0")
-    // lookups re-read the NEW modulus (bucket-count cache invalidated)
+    // lookups hash with the NEW modulus: on the over-cap instance that last
+    // resolved v2 at 512 buckets, and on a fresh one
     val capped2 = new FeatureStore(spark, root, maxServingCacheRows = 3)
-    assert(capped2.getRecord("tx", 2500L).get("amount") == "2500.0")
-    assert(capped2.getRecord("tx", 301L).get("amount") == "301.0")
+    Seq(capped, capped2).foreach { s =>
+      assert(s.getRecord("tx", 2500L).get("amount") == "2500.0")
+      assert(s.getRecord("tx", 301L).get("amount") == "301.0")
+    }
     // v5: the next small ingest is incremental again, at the grown count
     fs.ingest("tx", batch((6L, "2024-03-02 10:00:00", 666.0, "upd")))
     assert(metaOf(root, 5).contains("buckets=4096"))
@@ -1480,7 +1490,9 @@ class FeatureStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("fs_flight_").toString
     val fs = new FeatureStore(spark, root)
     fs.createGroup(group)
-    fs.ingest("tx", batch((1L to 50L).map(i =>
+    // 5,000 keys: a rebuild lasts long enough for the commits-under-load
+    // round below to overlap it
+    fs.ingest("tx", batch((1L to 5000L).map(i =>
       (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
     assert(fs.getRecord("tx", 1L).isDefined) // cache warm on v1
     fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"))) // v2: cache stale
@@ -1501,6 +1513,81 @@ class FeatureStoreSpec extends SparkSpec {
     assert(answers.size == 4 &&
       answers.stream().allMatch(a => a.exists(_("amount") == "99.0")))
     assert(four == one, s"4 readers launched $four jobs; one rebuild takes $one")
+
+    // commits under load: four readers loop getRecord while the writer
+    // commits versions. A reader that resolved v while another reader
+    // installed v+1 must serve v+1, never reload v over it (which would
+    // cost a second rebuild of v+1 at the next lookup). Reader jobs are
+    // told apart from the writer's by a local property the reader threads
+    // set.
+    val commits = 6
+    val readerJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("fs.spec.role") == "reader")
+          readerJobs.incrementAndGet(): Unit
+    }
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val backwards = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val readers = (1 to 4).map(r => new Thread(() => {
+        spark.sparkContext.setLocalProperty("fs.spec.role", "reader")
+        var seen = 99.0
+        while (writing.get()) {
+          val a = fs.getRecord("tx", 1L).fold(-1.0)(_("amount").toDouble)
+          if (a < seen) backwards.add(s"reader $r: $a after $seen") else seen = a
+        }
+      }))
+      readers.foreach(_.start())
+      try (1 to commits).foreach(i =>
+        fs.ingest("tx", batch((1L, f"2024-03-$i%02d 10:00:00", 100.0 + i, s"c$i"))))
+      finally { writing.set(false); readers.foreach(_.join()) }
+      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(backwards.isEmpty, s"answers went back in time: $backwards")
+    assert(readerJobs.get <= commits * one,
+      s"readers launched ${readerJobs.get} jobs over $commits commits; one rebuild takes $one")
+    assert(fs.getRecord("tx", 1L).get("amount") == s"${100.0 + commits}")
+  }
+
+  test("a _meta without its fp line compares names, one without its cols line probes the footers once per instance") {
+    val root = Files.createTempDirectory("fs_legacy_meta_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 10L).map(i =>
+      (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")): _*))
+    val keys = (1L to 10L) :+ 999L
+    val want = keys.map(k => k -> fs.getRecord("tx", k)).toMap
+    val meta = java.nio.file.Paths.get(root, "tx", "online", "v1", "_meta")
+    val lines = new String(Files.readAllBytes(meta)).linesIterator.toList
+    def keepLines(drop: String*): Unit = Files.write(meta,
+      lines.filterNot(l => drop.exists(d => l.startsWith(d + "="))).map(_ + "\n").mkString.getBytes)
+    def answers(s: FeatureStore) = keys.map(k => k -> s.getRecord("tx", k)).toMap
+
+    // names match: the over-cap instances trust the KV files
+    keepLines("fp")
+    val noFp = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    var got = Map.empty[Long, Option[Map[String, String]]]
+    assert(jobsDuring { got = answers(noFp) } == 0, "an fp-less _meta compares its cols line")
+    assert(got == want)
+    keepLines("fp", "cols")
+    val noCols = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    assert(jobsDuring(assert(noCols.getRecord("tx", 1L) == want(1L))) > 0,
+      "a cols-less _meta probes the footers")
+    assert(jobsDuring { got = answers(noCols) } == 0,
+      "the footer probe runs once per instance, not once per lookup")
+    assert(got == want)
+
+    // an evolution distrusts both: the job path serves the declared view
+    fs.addFeature("tx", FeatureDef("score", FType.Fractional))
+    val declared = want.map { case (k, r) => k -> r.map(_ + ("score" -> null)) }
+    Seq(noFp, noCols).foreach { s =>
+      assert(jobsDuring { got = answers(s) } > 0, "an evolved version's KV rows are not trusted")
+      assert(got == declared)
+      assert(s.batchGetRecords("tx", keys).map { case (k, r) => k.toLong -> r } == declared)
+    }
   }
 
   test("serving-KV pass-through aborted mid-bucket leaves no temp file and no file for that bucket") {
