@@ -713,7 +713,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     * commit — see `targetKeysPerBucket`). */
   def refreshOnline(g: FeatureGroup, batch: Option[DataFrame],
       firstIngestKeys: Option[Long] = None): Unit = {
-    val base = latestState(g.name) // the version this refresh derives from
+    val base = latestState(g) // the version this refresh derives from
     val incremental = (base, batch) match {
       case (Some(s), Some(b)) =>
         s.meta.layout.flatMap { case (buckets, counts) =>
@@ -751,8 +751,7 @@ final class FeatureStore(spark: SparkSession, root: String,
             // correctly-matching version are already materialized-clean,
             // but masking is identity there and closes any residual
             // re-add window at the cost of one projection
-            val snapTouched = maskSince(g,
-              conformToDeclared(g, readVersion(g, s, Some(touched))))
+            val snapTouched = declaredVersion(g, s, Some(touched))
             val latestTouched = LatestPerKey.viaMaxBy(
               snapTouched.unionByName(bb.drop(EngineColumns.KeyBucket)),
               Seq(g.keyCol), g.eventTimeCol, Seq(EngineColumns.IngestSeq))
@@ -796,8 +795,7 @@ final class FeatureStore(spark: SparkSession, root: String,
         // into the rewritten snapshot (conformToDeclared era-resolves
         // names but cannot see `since`; identity for never-evolved
         // groups — round-12 review finding)
-        maskSince(g, conformToDeclared(g, readVersion(g, bs)))
-          .unionByName(maskSince(g, conformToDeclared(g, b)))
+        declaredVersion(g, bs).unionByName(maskSince(g, conformToDeclared(g, b)))
       case (_, _) => conformToDeclared(g, offline(g.name)) // offline() masks
     }
     val latest0 = LatestPerKey.viaMaxBy(base, Seq(g.keyCol), g.eventTimeCol,
@@ -1011,13 +1009,14 @@ final class FeatureStore(spark: SparkSession, root: String,
     Files.write(vd.resolve("_meta"), body.getBytes(StandardCharsets.UTF_8)): Unit
   }
 
-  /** What this instance knows about one committed online version: its
-    * `_meta`, parsed once, and — each loaded on first use — its footer
-    * columns and its serving map. A version is immutable once LATEST names
-    * it, so nothing here is ever invalidated; a newer version gets a new
-    * state ([[latestState]]). */
-  private final class OnlineVersion(val name: String, val v: Long) {
-    val dir: Path = versionDirOf(name, v)
+  /** What this instance knows about one committed online version, read
+    * under declared group `g`: its `_meta`, parsed once, and — each loaded
+    * on first use — its footer columns and its serving map of `g`'s
+    * declared-view rows. A version is immutable once LATEST names it, so
+    * nothing here is ever invalidated; a newer version or another declared
+    * group gets a new state ([[latestState]]). */
+  private final class OnlineVersion(val g: FeatureGroup, val v: Long) {
+    val dir: Path = versionDirOf(g.name, v)
     val meta: FeatureStore.VersionMeta = FeatureStore.parseMeta(dir)
     /** The data columns in the version's parquet footers — the schema
       * gate's fallback for a version committed before the `cols` line. */
@@ -1032,20 +1031,22 @@ final class FeatureStore(spark: SparkSession, root: String,
   /** One state per group: the latest version this instance resolved. */
   private val states = new java.util.concurrent.ConcurrentHashMap[String, OnlineVersion]()
 
-  /** The state of `name`'s latest committed version; None when no version
+  /** The state of `g`'s latest committed version; None when no version
     * is committed. LATEST is read once, and a cached state of that version
-    * is used as is. Otherwise the state is replaced inside `compute`, which
-    * re-reads LATEST and installs the version LATEST names THEN: a reader
-    * that resolved v after another installed v+1 uses v+1, and never
-    * reloads the superseded v over it. A group dropped and recreated by
-    * another instance reloads too, because its version differs. */
-  private def latestState(name: String): Option[OnlineVersion] =
-    currentVersion(name).flatMap { v =>
-      val s = states.get(name)
-      if (s != null && s.v == v) Some(s)
-      else Option(states.compute(name, (_, old) => currentVersion(name) match {
-        case Some(now) if old != null && old.v == now => old
-        case Some(now) => new OnlineVersion(name, now)
+    * and declared group is used as is. Otherwise the state is replaced
+    * inside `compute`, which re-reads LATEST and installs the version
+    * LATEST names THEN: a reader that resolved v after another installed
+    * v+1 uses v+1, and never reloads the superseded v over it. A group
+    * dropped and recreated by another instance reloads too, because its
+    * version differs; so does a schema evolution, because the cached rows
+    * are the previous declared view. */
+  private def latestState(g: FeatureGroup): Option[OnlineVersion] =
+    currentVersion(g.name).flatMap { v =>
+      val s = states.get(g.name)
+      if (s != null && s.v == v && s.g == g) Some(s)
+      else Option(states.compute(g.name, (_, old) => currentVersion(g.name) match {
+        case Some(now) if old != null && old.v == now && old.g == g => old
+        case Some(now) => new OnlineVersion(g, now)
         case None => null
       }))
     }
@@ -1054,9 +1055,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     * True ⇒ its parquet columns, pre-rendered KV wire rows, and carried-
     * forward buckets are all authoritative (they were committed under this
     * very fingerprint, and commits materialize masking/era resolution).
-    * False ⇒ some evolution happened since: serve through the row paths
-    * (which mask and era-resolve at read time) and take the FULL refresh
-    * on the next commit. Versions committed before the fingerprint line
+    * False ⇒ some evolution happened since: serve the declared view
+    * ([[declaredVersion]] masks and era-resolves at read time) and take
+    * the FULL refresh on the next commit. Versions committed before the fingerprint line
     * compare by name set — which cannot see a same-name re-add or a type
     * widen — so they are additionally distrusted whenever any feature
     * carries evolution state the names cannot encode. Answered from the
@@ -1092,9 +1093,10 @@ final class FeatureStore(spark: SparkSession, root: String,
     * with none of the requested dirs (every key deleted, or batch keys
     * hashing into empty buckets): an empty frame of the declared columns,
     * where inference would have no file to read. An evolved version reads
-    * its files' own schema, so `renderWireRow`, `conformToDeclared` and
-    * `maskSince` resolve eras by the names the rows were written under.
-    * The bucket column is dropped. */
+    * its files' own schema, so [[declaredVersion]] resolves eras by the
+    * names the rows were written under. The bucket column is dropped.
+    * This is the version exactly as committed ([[onlineAt]]); every served
+    * answer reads it through [[declaredVersion]]. */
   private def readVersion(g: FeatureGroup, s: OnlineVersion,
       buckets: Option[Iterable[Long]] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -1117,6 +1119,16 @@ final class FeatureStore(spark: SparkSession, root: String,
       }
     snap.drop(EngineColumns.KeyBucket)
   }
+
+  /** Version `s` as declared group `g` serves it: the features in `g`
+    * order, cast, era-resolved ([[eraColumn]]) and masked ([[maskSince]]),
+    * then the ingest seq. A snapshot committed before a dropFeature /
+    * addFeature / rename / widen still carries the OLD layout until the
+    * next commit re-renders it; its reads show the declared view at once.
+    * Identity up to casts for a version committed under `g`'s fingerprint. */
+  private def declaredVersion(g: FeatureGroup, s: OnlineVersion,
+      buckets: Option[Iterable[Long]] = None): DataFrame =
+    maskSince(g, conformToDeclared(g, readVersion(g, s, buckets)))
 
   /** The data columns a version committed under `g`'s fingerprint holds. */
   private def snapshotSchema(g: FeatureGroup): StructType = StructType(
@@ -1260,7 +1272,7 @@ final class FeatureStore(spark: SparkSession, root: String,
       (if (smallKeySet) marks.coalesce(1) else marks)
         .write.mode("append").parquet(tombstoneDir(groupName).toString)
     }
-    latestState(groupName) match {
+    latestState(g) match {
       case Some(bs) =>
         // read the just-written markers back rather than re-running keyDf0's
         // plan: the sweep's frame derives from this very snapshot, and the
@@ -1296,7 +1308,7 @@ final class FeatureStore(spark: SparkSession, root: String,
             // legacy meta OR evolution since the base version: full rewrite,
             // CONFORMED + MASKED so the new version's files, fingerprint
             // stamp, and KV rendering all present the declared view
-            val conformed = maskSince(g, conformToDeclared(g, readVersion(g, bs)))
+            val conformed = declaredVersion(g, bs)
             // bucket count still derives from the base version's recorded
             // key counts (the refreshOnline None-branch rule). Falling to
             // the 64-bucket floor here would rewrite a large store into 64
@@ -1317,11 +1329,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     * real_time_inference.py:16-19). */
   def online(name: String): DataFrame = {
     val g = describeGroup(name)
-    latestState(name) match {
-      // conform + mask: a snapshot committed before a dropFeature /
-      // addFeature still carries the OLD schema until the next commit
-      // re-renders it — reads must show the DECLARED view immediately
-      case Some(s) => maskSince(g, conformToDeclared(g, readVersion(g, s)))
+    latestState(g) match {
+      case Some(s) => declaredVersion(g, s)
       case None => // offline() is already declared-schema + masked
         LatestPerKey.viaMaxBy(offline(name), Seq(g.keyCol), g.eventTimeCol,
             Seq(EngineColumns.IngestSeq))
@@ -1348,8 +1357,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     require(Files.exists(versionDirOf(name, version)), s"no online snapshot v$version for $name")
     // the cached state when `version` is the latest this instance
     // resolved; any other version is parsed on demand and not cached
-    readVersion(describeGroup(name), Option(states.get(name)).filter(_.v == version)
-      .getOrElse(new OnlineVersion(name, version)))
+    val g = describeGroup(name)
+    readVersion(g, Option(states.get(name)).filter(_.v == version)
+      .getOrElse(new OnlineVersion(g, version)))
   }
 
   /** CHANGE DATA FEED between two served snapshot versions (see
@@ -1400,27 +1410,30 @@ final class FeatureStore(spark: SparkSession, root: String,
     * launching a Spark job per point lookup is the wrong cost model for
     * that path. The online snapshot is one row per entity key — the working
     * set the reference holds in DynamoDB — so the single-node analogue is a
-    * driver map, built ONCE per version ([[OnlineVersion.serving]]) and
-    * replaced when a lookup resolves a newer LATEST. At cluster scale this
-    * becomes an external KV store fed by the same snapshot; the version-
-    * keyed replacement carries over. Keys are string-normalized so a
-    * caller's Int key hits a stored Long. None when the version exceeds
-    * `maxServingCacheRows`: when its `_meta` key total already does, that
-    * costs no Spark job, otherwise (or without a `_meta`) the load itself
-    * is the bounded probe. */
+    * driver map of the declared-view rows ([[declaredVersion]]), built ONCE
+    * per version and declared group ([[OnlineVersion.serving]]) and
+    * replaced when a lookup resolves a newer LATEST or another declared
+    * group. At cluster scale this becomes an external KV store fed by the
+    * same snapshot; the version-keyed replacement carries over. Keys are
+    * string-normalized so a caller's Int key hits a stored Long; a null key
+    * is not addressable, so its row is left out. None when the version
+    * exceeds `maxServingCacheRows`: when its `_meta` key total already
+    * does, that costs no Spark job, otherwise (or without a `_meta`) the
+    * load itself is the bounded probe. */
   private def loadServing(s: OnlineVersion): Option[Map[String, Row]] = {
     val layout = s.meta.layout
     if (layout.exists(_._2.values.sum > maxServingCacheRows)) None
     else {
-      val g = describeGroup(s.name)
-      // never collects more than cap+1 rows: a `_meta` total within the cap
-      // bounds the keyed rows (latest-per-key leaves at most one null-key
-      // row), so one job collects them all; without a `_meta`, limit(cap+1)
-      // is the bounded probe (a job per scale-up round of its take)
-      val keyed = readVersion(g, s)
+      val g = s.g
+      // never collects more than cap+1 rows: a `_meta` total within the
+      // cap counts every keyed row (it omits the null key), so one job
+      // collects them all; without a `_meta`, limit(cap+1) is the bounded
+      // probe (a job per scale-up round of its take)
+      val keyed = declaredVersion(g, s).filter(col(g.keyCol).isNotNull)
       val rows = (if (layout.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect()
+      val k = g.features.indexWhere(_.name == g.keyCol)
       if (rows.length > maxServingCacheRows) None
-      else Some(rows.map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap)
+      else Some(rows.map(r => String.valueOf(r.get(k)) -> r).toMap)
     }
   }
 
@@ -1440,65 +1453,19 @@ final class FeatureStore(spark: SparkSession, root: String,
     * only for snapshots without a readable KV layout (legacy, or a
     * corrupted file — the reader DEGRADES to the job path rather than
     * failing the lookup) and for stores with no snapshot at all
-    * (latest-per-key derived from offline history). */
-  def getRecord(groupName: String, key: Any): Option[Map[String, String]] = {
-    val g = describeGroup(groupName)
+    * (latest-per-key derived from offline history). Every path looks a key
+    * up by its string form, so a null key is not addressable: `null` asks
+    * for the string key "null". */
+  def getRecord(groupName: String, key: Any): Option[Map[String, String]] =
+    recordOf(describeGroup(groupName), key)
+
+  private def recordOf(g: FeatureGroup, key: Any): Option[Map[String, String]] = {
     val skey = String.valueOf(key)
-    val s = latestState(groupName)
+    val s = latestState(g)
     s.flatMap(_.serving) match {
-      case Some(m) => m.get(skey).map(renderWireRow(g, _))
+      case Some(m) => m.get(skey).map(FeatureStore.renderWireRow(g, _))
       case None => lookupUncached(g, s, Seq(skey))(skey)
     }
-  }
-
-  /** Render a snapshot row to the stringly wire format (feature-name →
-    * string; ISO-8601 Zulu timestamps). A snapshot written before
-    * addFeature has no field for the new column yet — serve null (the
-    * caller's default applies, P4). */
-  private[core] def renderWireRow(g: FeatureGroup, r: Row): Map[String, String] = {
-    // HOT PATH (cache-hit getRecord budget is tens of µs): field lookups
-    // go through StructType.fieldIndex — the schema's cached name→index
-    // map — never a per-call fieldNames.toSet allocation or array scan.
-    // The exception path only fires for fields absent from the row, i.e.
-    // the rare evolution window between a metadata commit and the next
-    // snapshot rebuild.
-    val schema = r.schema
-    def idxOf(n: String): Option[Int] =
-      if (schema == null) None
-      else try Some(schema.fieldIndex(n))
-      catch { case _: IllegalArgumentException => None }
-    // the row's ingest seq, for the re-add mask (FeatureDef.since); a row
-    // without the column (shouldn't happen on snapshot rows) masks nothing
-    val rowSeq: Long = idxOf(EngineColumns.IngestSeq)
-      .filterNot(r.isNullAt).map(r.getLong).getOrElse(Long.MaxValue)
-    g.features.map { f =>
-      // era resolution, driver-side mirror of [[eraColumn]]: the name that
-      // held this feature when the row was written, or — when a rewrite
-      // materialized the era — the first NEWER name in the chain this row
-      // layout carries (a rewrite renders to the name current at rewrite
-      // time, possibly an intermediate alias)
-      val srcIdx: Option[Int] =
-        if (f.renames.isEmpty || rowSeq >= f.renames.head._2) idxOf(f.name)
-        else {
-          val i = f.renames.indices.find(j =>
-            rowSeq >= f.renames.lift(j + 1).map(_._2).getOrElse(0L))
-            .getOrElse(f.renames.size - 1)
-          ((i to 0 by -1).map(j => f.renames(j)._1) :+ f.name)
-            .iterator.map(idxOf).collectFirst { case Some(ix) => ix }
-        }
-      val raw = if (rowSeq >= f.since) srcIdx.map(r.get).orNull else null
-      // a snapshot committed before a widenFeature still stores the old
-      // numeric type until the rebuild — coerce so the wire rendering is
-      // the declared type's from day zero ("10.0", not "10")
-      val coerced = (raw, f.ftype) match {
-        case (l: java.lang.Long, FType.Fractional) =>
-          java.lang.Double.valueOf(l.doubleValue())
-        case (i: java.lang.Integer, FType.Fractional) =>
-          java.lang.Double.valueOf(i.doubleValue())
-        case _ => raw
-      }
-      f.name -> FeatureStore.renderWireValue(coerced)
-    }.toMap
   }
 
   /** One open of a bucket file answering a SET of keys (the batch face:
@@ -1612,10 +1579,10 @@ final class FeatureStore(spark: SparkSession, root: String,
     val g = describeGroup(groupName)
     val skeys = keys.map(String.valueOf(_)).distinct
     if (skeys.isEmpty) return Map.empty
-    val s = latestState(groupName)
+    val s = latestState(g)
     s.flatMap(_.serving) match {
       case Some(m) =>
-        skeys.map(k => k -> m.get(k).map(renderWireRow(g, _))).toMap
+        skeys.map(k => k -> m.get(k).map(FeatureStore.renderWireRow(g, _))).toMap
       case None => lookupUncached(g, s, skeys)
     }
   }
@@ -1625,7 +1592,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     * open per bucket, no Spark job); else ONE bucket-pruned job over the
     * keys' buckets — a legacy or unreadable KV layout, or an evolved
     * version whose pre-rendered wire rows are stale until the next commit
-    * re-renders (renderWireRow masks and projects the declared view); else
+    * re-renders ([[declaredVersion]] serves the declared view); else
     * an unpruned job when the bucket meta is corrupt (a guessed modulus
     * would answer present keys as authoritatively absent); else, with no
     * version at all (`state` None), latest-per-key derived from history.
@@ -1638,7 +1605,7 @@ final class FeatureStore(spark: SparkSession, root: String,
       val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys))
         .collect()
         .map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap
-      skeys.map(k => k -> hit.get(k).map(renderWireRow(g, _))).toMap
+      skeys.map(k => k -> hit.get(k).map(FeatureStore.renderWireRow(g, _))).toMap
     }
     state match {
       case Some(s) =>
@@ -1650,8 +1617,8 @@ final class FeatureStore(spark: SparkSession, root: String,
                 byBucket.map { case (b, ks) => servingKvScan(g, s, b, ks.toSet) }
               else Iterable(Option.empty[Map[String, Option[Map[String, String]]]])
             if (scanned.forall(_.isDefined)) scanned.flatMap(_.get).toMap
-            else jobPath(readVersion(g, s, Some(byBucket.keys)))
-          case None => jobPath(readVersion(g, s))
+            else jobPath(declaredVersion(g, s, Some(byBucket.keys)))
+          case None => jobPath(declaredVersion(g, s))
         }
       case None => jobPath(online(g.name))
     }
@@ -1669,7 +1636,7 @@ final class FeatureStore(spark: SparkSession, root: String,
   def getRecordFresh(groupName: String, key: Any,
       maxStaleness: java.time.Duration): Option[Map[String, String]] = {
     val g = describeGroup(groupName)
-    getRecord(groupName, key).filter { rec =>
+    recordOf(g, key).filter { rec =>
       Option(rec(g.eventTimeCol)).exists { iso =>
         val et = java.time.Instant.from(FeatureStore.WireTimestamp.parse(iso))
         !et.plus(maxStaleness).isBefore(clock())
@@ -2000,25 +1967,18 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def readManifest(name: String): Manifest = {
     require(groupExists(name), s"no such feature group: $name")
     val json = new String(Files.readAllBytes(manifestPath(name)), StandardCharsets.UTF_8)
-    def field(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(json)
-      m.map(_.group(1)).getOrElse(sys.error(s"manifest missing $k"))
-    }
+    def opt(k: String): Option[String] =
+      FeatureStore.ManifestStrings(k).findFirstMatchIn(json).map(_.group(1))
+    def field(k: String): String = opt(k).getOrElse(sys.error(s"manifest missing $k"))
     def num(k: String, default: Long): Long =
-      ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(default)
-    // `since` and `was` are optional — manifests written before the
-    // drop/re-add/rename evolution story (round 12) carry only name+type
-    val featRe = ("\\{\"name\":\"([^\"]*)\",\"type\":\"([^\"]*)\"" +
-      "(?:,\"since\":(\\d+))?(?:,\"was\":\"([^\"]*)\")?\\}").r
-    val feats = featRe.findAllMatchIn(json).map { m =>
+      FeatureStore.ManifestNumbers(k).findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(default)
+    val feats = FeatureStore.ManifestFeature.findAllMatchIn(json).map { m =>
       val renames = Option(m.group(4)).filter(_.nonEmpty).map(_.split("\\|").toSeq
         .map { e => val Array(n, s) = e.split(":", 2); (n, s.toLong) })
         .getOrElse(Nil)
       FeatureDef(m.group(1), FType.fromName(m.group(2)),
         Option(m.group(3)).map(_.toLong).getOrElse(0L), renames)
     }.toSeq
-    def opt(k: String): Option[String] =
-      ("\"" + k + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(json).map(_.group(1))
     val lingering = opt("lingering").filter(_.nonEmpty).map(_.split("\\|").toSeq
       .map { e =>
         e.split(":", 3) match {
@@ -2310,6 +2270,19 @@ object FeatureStore {
     g.features.map(f => s"${f.name}:${FType.name(f.ftype)}:${f.since}:" +
       f.renames.map { case (n, s) => s"$n@$s" }.mkString("|")).mkString(";")
 
+  /** [[FeatureStore.readManifest]]'s patterns, compiled once: the string
+    * fields, the numeric fields, and one feature entry. `since` and `was`
+    * are optional — manifests written before the drop/re-add/rename
+    * evolution story (round 12) carry only name+type. */
+  private val ManifestStrings: Map[String, scala.util.matching.Regex] =
+    Seq("name", "keyCol", "eventTimeCol", "lingering", "widening")
+      .map(k => k -> ("\"" + k + "\"\\s*:\\s*\"([^\"]*)\"").r).toMap
+  private val ManifestNumbers: Map[String, scala.util.matching.Regex] =
+    Seq("nextSeq", "lastBatchId", "epoch")
+      .map(k => k -> ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r).toMap
+  private val ManifestFeature = ("\\{\"name\":\"([^\"]*)\",\"type\":\"([^\"]*)\"" +
+    "(?:,\"since\":(\\d+))?(?:,\"was\":\"([^\"]*)\")?\\}").r
+
   /** The legal [[FeatureStore.widenFeature]] directions — information-
     * preserving casts only (a narrow would silently destroy data). */
   private[core] def isWidening(from: FType, to: FType): Boolean = (from, to) match {
@@ -2334,6 +2307,14 @@ object FeatureStore {
     case t: java.sql.Timestamp => WireTimestamp.format(t.toInstant)
     case other                 => other.toString
   }
+
+  /** A declared-view row of `g` (its features in `g` order, the ingest seq
+    * after them — [[FeatureStore.declaredVersion]]) in the wire format:
+    * feature name → [[renderWireValue]]. The one renderer of cache hits,
+    * batch hits and job-path rows. */
+  private[core] def renderWireRow(g: FeatureGroup, r: Row): Map[String, String] =
+    g.features.iterator.zipWithIndex
+      .map { case (f, i) => f.name -> renderWireValue(r.get(i)) }.toMap
 
   /** UTF-8 byte-wise string order — what Spark's UTF8String sort (and
     * therefore the serving KV files' entry order) uses; Java's native

@@ -8,18 +8,39 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.SparkSpec
 
-/** The serving-consistency invariant behind schema evolution: the
-  * DataFrame read path (`maskSince` ∘ `eraColumn` — offline, online,
-  * conformToDeclared) and the driver-side wire renderer
-  * (`renderWireRow` — cache hits, KV fallbacks, job-path rows) are
-  * PARALLEL implementations of one resolution rule. If they ever drift,
-  * a point lookup and a batch read of the same key return different
-  * values — the worst kind of serving bug, invisible to single-path
-  * tests. This spec drives both through randomized rename chains,
-  * availability subsets, `since` masks, and row seqs (fixed seed), plus
-  * the hand-picked boundary cases, and asserts bit-identical wire
-  * output. */
+/** The resolution rule behind schema evolution: `maskSince` ∘ `eraColumn`
+  * is the store's one era resolver — every read path, point lookups
+  * included, serves rows it resolved. This spec checks it against
+  * [[referenceEra]], a row-at-a-time statement of the rule (the driver-
+  * side renderer the store used to serve lookups with), through
+  * randomized rename chains, availability subsets, `since` masks, and row
+  * seqs (fixed seed), plus the hand-picked boundary cases, and asserts
+  * identical wire output. */
 class EraResolutionPropertySpec extends SparkSpec {
+
+  /** The reference rule for feature `f` over a row laid out as `r`'s
+    * schema: the name that held `f` when the row was written, or — when a
+    * rewrite materialized the era — the first NEWER name in the chain the
+    * layout carries (a rewrite renders to the name current at rewrite
+    * time, possibly an intermediate alias); null below `f.since`. */
+  private def referenceEra(f: FeatureDef, r: Row): String = {
+    val schema = r.schema
+    def idxOf(n: String): Option[Int] =
+      try Some(schema.fieldIndex(n))
+      catch { case _: IllegalArgumentException => None }
+    val rowSeq: Long = idxOf(EngineColumns.IngestSeq)
+      .filterNot(r.isNullAt).map(r.getLong).getOrElse(Long.MaxValue)
+    val srcIdx: Option[Int] =
+      if (f.renames.isEmpty || rowSeq >= f.renames.head._2) idxOf(f.name)
+      else {
+        val i = f.renames.indices.find(j =>
+          rowSeq >= f.renames.lift(j + 1).map(_._2).getOrElse(0L))
+          .getOrElse(f.renames.size - 1)
+        ((i to 0 by -1).map(j => f.renames(j)._1) :+ f.name)
+          .iterator.map(idxOf).collectFirst { case Some(ix) => ix }
+      }
+    FeatureStore.renderWireValue(if (rowSeq >= f.since) srcIdx.map(r.get).orNull else null)
+  }
 
   private def checkCase(store: FeatureStore, renames: Seq[(String, Long)],
       since: Long, avail: Seq[String], rowSeq: Long, tag: String): Unit = {
@@ -34,10 +55,10 @@ class EraResolutionPropertySpec extends SparkSpec {
     val schema = StructType(fields)
     val values: Seq[Any] = avail.map(identity[Any]) :+ rowSeq
 
-    // driver path
-    val viaRow = store.renderWireRow(g,
+    // reference rule, one row at a time
+    val viaRow = referenceEra(f,
       new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        values.toArray, schema))("cur")
+        values.toArray, schema))
 
     // DataFrame path: maskSince(select(eraColumn)) over a one-row frame
     val df = spark.createDataFrame(
@@ -48,7 +69,7 @@ class EraResolutionPropertySpec extends SparkSpec {
       .collect().head.getString(0)
 
     assert(viaRow == viaDf,
-      s"[$tag] paths drifted: row=$viaRow df=$viaDf " +
+      s"[$tag] resolver differs from the reference: ref=$viaRow df=$viaDf " +
         s"(renames=$renames since=$since avail=$avail rowSeq=$rowSeq)")
   }
 

@@ -28,6 +28,14 @@ class FeatureStoreSpec extends SparkSpec {
 
   private def jobsDuring(f: => Unit): Int = sparkWorkDuring(f)._1
 
+  /** Delete version `v`'s serving-KV layout: lookups then take the job path. */
+  private def dropServingKv(root: String, group: String, v: Long): Unit = {
+    val walk = Files.walk(java.nio.file.Paths.get(root, group, "online", s"v$v", "_serving"))
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
+    finally walk.close()
+  }
+
   /** The online layout invariant of version `v`, whatever the write width:
     * each `_key_bucket=<b>` dir holds exactly one parquet file, `_serving`
     * holds one `.kv` per non-empty bucket, and the `_meta` counts equal the
@@ -1128,29 +1136,39 @@ class FeatureStoreSpec extends SparkSpec {
   }
 
   test("batchGetRecords equals per-key getRecord on every path; KV path launches no jobs") {
+    import org.apache.spark.sql.functions.{col, lit, to_timestamp, when}
     val root = Files.createTempDirectory("fs_batch_").toString
     val fs = new FeatureStore(spark, root, maxServingCacheRows = 3) // force over-cap
     fs.createGroup(group)
-    fs.ingest("tx", batch((1L to 10L).map(i =>
-      (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")): _*))
+    fs.ingest("tx", batch(((1L to 10L).map(i =>
+        (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")) :+
+        ((11L, "2024-01-01 10:00:11", 11.0, "null-key"))): _*)
+      .withColumn("customer_id",
+        when(col("note") === "null-key", lit(null)).otherwise(col("customer_id"))))
     val keys: Seq[Any] = Seq(1L, 5L, "7", 10L, 999L, 5L) // dup + miss + string form
     val single = keys.map(k => String.valueOf(k) -> fs.getRecord("tx", k)).toMap
+    // a null key is not addressable: neither null nor "null" answers the
+    // null-key row
+    def assertNullKeyUnaddressable(s: FeatureStore, path: String): Unit = {
+      val b = s.batchGetRecords("tx", Seq(null, "null", 1L))
+      assert(s.getRecord("tx", null).isEmpty && s.getRecord("tx", "null").isEmpty &&
+        b == Map("null" -> None, "1" -> single("1")), s"$path path answers a null key: $b")
+    }
     // KV path, zero Spark jobs for the whole batch
     var viaKv = Map.empty[String, Option[Map[String, String]]]
     val jobs = jobsDuring { viaKv = fs.batchGetRecords("tx", keys) }
     assert(jobs == 0, "batch KV lookups must not launch Spark jobs")
     assert(viaKv == single, s"batch must equal per-key answers: $viaKv")
     assert(viaKv("999").isEmpty && viaKv("5").exists(_("amount") == "5.0"))
+    assertNullKeyUnaddressable(fs, "KV")
     // cached path (fresh store, cap high enough): same answers
-    val cached = new FeatureStore(spark, root).batchGetRecords("tx", keys)
-    assert(cached == single, "cached path must agree")
+    val cachedFs = new FeatureStore(spark, root)
+    assert(cachedFs.batchGetRecords("tx", keys) == single, "cached path must agree")
+    assertNullKeyUnaddressable(cachedFs, "cached")
     // legacy path (KV layout removed): one pruned job, same answers
-    val servingDir = java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving")
-    val walk = Files.walk(servingDir)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => Files.delete(p))
-    finally walk.close()
+    dropServingKv(root, "tx", 1L)
     assert(fs.batchGetRecords("tx", keys) == single, "legacy path must agree")
+    assertNullKeyUnaddressable(fs, "legacy")
     // evolved path (the fingerprint distrusts v1's wire rows until the next
     // commit re-renders): one pruned job over v1's own schema, declared view
     fs.addFeature("tx", FeatureDef("score", FType.Fractional))
@@ -1165,6 +1183,27 @@ class FeatureStoreSpec extends SparkSpec {
     val corrupt = new FeatureStore(spark, root, maxServingCacheRows = 3)
     assert(perKey(corrupt) == declared && corrupt.batchGetRecords("tx", keys) == declared,
       "corrupt-meta path must agree")
+
+    // a string-keyed group holding both a real key "null" and a null-key
+    // row: every path answers the real row, and null asks for "null"
+    import spark.implicits._
+    val sroot = Files.createTempDirectory("fs_batch_null_").toString
+    val capped = new FeatureStore(spark, sroot, maxServingCacheRows = 1) // over-cap
+    capped.createGroup(FeatureGroup("sx", "id", "ts", Seq(FeatureDef("id", FType.FString),
+      FeatureDef("ts", FType.FTimestamp), FeatureDef("v", FType.FString))))
+    capped.ingest("sx", Seq[(String, String)](("null", "real"), (null, "null-key"), ("a", "a"))
+      .toDF("id", "v")
+      .select(col("id"), to_timestamp(lit("2024-01-01 10:00:00")).as("ts"), col("v")))
+    val real = Some(Map("id" -> "null", "ts" -> "2024-01-01T10:00:00Z", "v" -> "real"))
+    def assertRealNull(s: FeatureStore, path: String): Unit = {
+      val b = s.batchGetRecords("sx", Seq(null, "null", "a"))
+      assert(s.getRecord("sx", "null") == real && s.getRecord("sx", null) == real &&
+        b("null") == real && b("a").exists(_("v") == "a"), s"$path path: $b")
+    }
+    assertRealNull(capped, "KV")
+    assertRealNull(new FeatureStore(spark, sroot), "cached")
+    dropServingKv(sroot, "sx", 1L)
+    assertRealNull(capped, "legacy")
   }
 
   test("incremental refresh: only touched buckets rewritten; untouched carry forward by hard link") {
@@ -1477,13 +1516,39 @@ class FeatureStoreSpec extends SparkSpec {
     assert(answer.exists(_("amount") == "99.0"))
     // evolved but not recommitted: the rebuild must read the files' own
     // schema, or the renamed column would read as null
+    assert(fs.getRecord("tx", 1L).exists(_("note") == "upd")) // warm on v2
     fs.addFeature("tx", FeatureDef("score", FType.Fractional))
     fs.renameFeature("tx", "note", "memo")
     val evolved = new FeatureStore(spark, root)
-    assert(evolved.getRecord("tx", 7L).get("memo") == "n7")
+    val rebuild = jobsDuring(assert(evolved.getRecord("tx", 7L).get("memo") == "n7"))
     assert(evolved.getRecord("tx", 7L).get("score") == null)
     assert(evolved.getRecord("tx", 1L).get("amount") == "99.0")
     assert(evolved.getRecord("tx", 1L).get("memo") == "upd")
+    // the warm instance's cached rows are the previous declared view: its
+    // first lookup rebuilds once, then it answers as the fresh instance does
+    val probe = Seq(1L, 7L)
+    val fresh = probe.map(k => k -> evolved.getRecord("tx", k)).toMap
+    var warm = Map.empty[Long, Option[Map[String, String]]]
+    assert(jobsDuring { warm = probe.map(k => k -> fs.getRecord("tx", k)).toMap } == rebuild,
+      s"the warm instance's first lookup after the evolution is one rebuild ($rebuild jobs)")
+    assert(warm == fresh && fresh.values.forall(_.exists(_.contains("memo"))))
+    var warmBatch = Map.empty[String, Option[Map[String, String]]]
+    assert(jobsDuring { warmBatch = fs.batchGetRecords("tx", probe) } == 0)
+    assert(warmBatch == evolved.batchGetRecords("tx", probe) &&
+      warmBatch == fresh.map { case (k, r) => k.toString -> r })
+    // every answer is the wire rendering of the key's online() row, on a
+    // cached and on an over-cap instance
+    val g = fs.describeGroup("tx")
+    val want = fs.online("tx").collect().map { r =>
+      r.get(r.fieldIndex("customer_id")).toString -> Some(g.featureNames.map(n =>
+        n -> FeatureStore.renderWireValue(r.get(r.fieldIndex(n)))).toMap)
+    }.toMap
+    val all = (1L to 2000L).map(_.toString)
+    assert(want.size == 2000 && want("7").exists(_("memo") == "n7"))
+    Seq(fs, new FeatureStore(spark, root, maxServingCacheRows = 3)).foreach { s =>
+      assert(s.batchGetRecords("tx", all) == want)
+      assert(all.take(5).forall(k => s.getRecord("tx", k) == want(k)))
+    }
   }
 
   test("readers of a stale cache single-flight: four concurrent getRecords launch one rebuild's jobs") {
