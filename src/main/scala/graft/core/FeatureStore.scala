@@ -23,15 +23,18 @@ import graft.operators.LatestPerKey
   *   <root>/<group>/offline/CURRENT      — pointer file: active offline version
   *                                         (absent ⇒ v1; flipped atomically by
   *                                          compaction)
-  *   <root>/<group>/online/v<N>/         — latest-per-key snapshot, parquet,
-  *                                         partitioned by _key_bucket =
-  *                                         crc32(key) mod buckets; contains
-  *                                         `_meta` (bucket count + per-bucket
-  *                                         key counts) and `_serving/` (per-
-  *                                         bucket sparse-indexed KV files for
-  *                                         job-free point lookups). Commits
-  *                                         are INCREMENTAL: untouched buckets
-  *                                         carry from v<N-1> by hard link.
+  *   <root>/<group>/online/v<N>/         — latest-per-key snapshot, stored
+  *                                         once: `_serving/bucket=<b>.kv`,
+  *                                         one typed, key-sorted, sparse-
+  *                                         indexed KV file per non-empty
+  *                                         bucket b = crc32(key) mod buckets,
+  *                                         and `_meta` (bucket count, per-
+  *                                         bucket key counts, fingerprint,
+  *                                         the version's columns). Lookups
+  *                                         and frame reads both read the KV
+  *                                         files. Commits are INCREMENTAL:
+  *                                         untouched buckets carry from
+  *                                         v<N-1> by hard link.
   *   <root>/<group>/online/LATEST        — pointer file: currently active N
   *   <root>/<group>/models/              — model artifacts
   * }}}
@@ -49,10 +52,10 @@ import graft.operators.LatestPerKey
   */
 /** @param maxServingCacheRows upper bound on the DRIVER-side serving cache:
   *   a snapshot with more entity keys than this is never collected — lookups
-  *   fall through to a key-bucket-pruned parquet read instead (one partition
-  *   directory, not a snapshot scan). This is the driver-memory guard rail;
-  *   at cluster scale the cache seam is an external KV store fed by the same
-  *   versioned snapshot, with the same version-keyed invalidation.
+  *   read the key's bucket KV file instead (one open, no Spark job). This is
+  *   the driver-memory guard rail; at cluster scale the cache seam is an
+  *   external KV store loaded from the same bucket files, keyed by version
+  *   like the cache.
   * @param targetKeysPerBucket sizing dial for the online snapshot's key-hash
   *   bucketing: commits choose the bucket count from the PREVIOUS version's
   *   recorded key count (`buckets = nextPow2(keys / target)`, floor
@@ -195,8 +198,8 @@ final class FeatureStore(spark: SparkSession, root: String,
   /** Schema EVOLUTION: DROP COLUMN — metadata-only, like [[addFeature]]
     * (at 100 TB, rewriting history to remove a column is not an option).
     * Offline reads project the declared schema, so the column vanishes
-    * from every read path at once; the online snapshot and serving KV
-    * re-render without it at the next commit (the schema mismatch forces
+    * from every read path at once; the online snapshot is rewritten
+    * without it at the next commit (the schema mismatch forces
     * a full refresh), while [[getRecord]] paths over the pre-drop
     * snapshot render DECLARED features only. The bytes are physically
     * erased at the next [[compactOffline]] (which rewrites through the
@@ -702,13 +705,14 @@ final class FeatureStore(spark: SparkSession, root: String,
     * snapshot whose bucket meta and schema allow it, the refresh is
     * INCREMENTAL IN THE BUCKET DIMENSION: only the key buckets the batch
     * touches are recomputed (old-bucket ∪ batch → latest-per-key) and
-    * rewritten; every untouched bucket's parquet and serving-KV files carry
-    * forward into v<next> by reference — O(batch ∩ buckets) compute and
+    * rewritten; every untouched bucket's KV file carries forward into
+    * v<next> by reference — O(batch ∩ buckets) compute and
     * I/O per commit instead of O(store), the shape a minute-level
     * micro-batch cadence over 10⁹ keys requires (VERDICT r9 missing #1).
     * Falls back to a full rewrite when: no previous snapshot; no batch
-    * (explicit rebuild from history); the snapshot predates bucket meta;
-    * the schema evolved since the snapshot (addFeature); the batch has
+    * (explicit rebuild from history); the snapshot predates bucket meta or
+    * typed KV (a parquet-format version: this rewrite upgrades it); the
+    * schema evolved since the snapshot (addFeature); the batch has
     * null keys; or the store outgrew its bucket count (the rebucketing
     * commit — see `targetKeysPerBucket`). */
   def refreshOnline(g: FeatureGroup, batch: Option[DataFrame],
@@ -739,7 +743,7 @@ final class FeatureStore(spark: SparkSession, root: String,
           val touchedRows = bb.groupBy(col(EngineColumns.KeyBucket)).count().collect()
           if (touchedRows.exists(_.isNullAt(0))) {
             // null keys bucket to null (crc32(null) is null) — rare; let the
-            // full path's default-partition write handle them rather than
+            // full path's `bucket=-1` write handle them rather than
             // special-casing the carry-forward links
             fullRefresh(g, batch, base, Some(buckets))
           } else {
@@ -857,14 +861,14 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   /** Commit v<base+1> by rewriting ONLY the `touched` buckets (`newRows`
     * REPLACES their contents — it must already be latest-per-key) and
-    * carrying every other bucket's parquet and serving-KV files forward by
-    * hard link. On a cluster filesystem this link step is the metadata-only
-    * "new version references old files" a manifest-based table format gets
-    * for free; the local-FS analogue is a hard link — old versions stay
-    * readable ([[onlineAt]] time travel) and [[gcOnline]] only unlinks
-    * names, the shared inodes survive as long as any version references
-    * them. Shared by the incremental [[refreshOnline]] and the incremental
-    * delete path; `rowBound` is an upper bound on `newRows`' count. */
+    * carrying every other bucket's KV file forward by hard link. On a
+    * cluster filesystem this link step is the metadata-only "new version
+    * references old files" a manifest-based table format gets for free; the
+    * local-FS analogue is a hard link — old versions stay readable
+    * ([[onlineAt]] time travel) and [[gcOnline]] only unlinks names, the
+    * shared inodes survive as long as any version references them. Shared
+    * by the incremental [[refreshOnline]] and the incremental delete path;
+    * `rowBound` is an upper bound on `newRows`' count. */
   private def commitIncremental(g: FeatureGroup, baseVersion: Long,
       buckets: Long, baseCounts: Map[Long, Long], touched: Set[Long],
       newRows: DataFrame, rowBound: Long): Unit = {
@@ -883,109 +887,60 @@ final class FeatureStore(spark: SparkSession, root: String,
   }
 
   /** Write one online version's rows into the staged `dir` in ONE Spark
-    * pass: the key-bucket-partitioned parquet snapshot AND its serving-KV
-    * layout (one `_serving/bucket=<b>.kv` per non-empty bucket, see
-    * [[FeatureStore.KvBucketWriter]]), rendered as the rows stream into the
-    * parquet write. Returns the per-bucket key counts, read back from the
-    * KV headers — no second pass over the staged parquet.
+    * pass: one typed KV file per non-empty bucket,
+    * `_serving/bucket=<b>.kv` (see [[FeatureStore.KvBucketWriter]]).
+    * Returns the per-bucket key counts, read back from the KV headers.
     *
-    * Clustering on the bucket gives one parquet file and one KV file per
-    * bucket (unclustered, every task writes into every bucket dir —
-    * measured 1.7× on the ingest e2e queries); a task may own several
-    * buckets, and Spark's spill-capable sort orders its rows by (bucket,
-    * key) for the KV writer. `numTasks` is a width knob, not a correctness
-    * constraint: callers size it with [[FeatureStore.writeTasks]] from an
-    * upper bound on the rows written that they already hold — one task per
-    * `targetKeysPerBucket` rows, at most one per bucket written — so a
-    * 64-row commit into a small store writes with one task, not one per
-    * touched bucket. The bound is arithmetic on counts already in memory,
-    * not a plan estimate: (r13-opt) sizing from IndexLifecycle.writeWidth
-    * was tried and REVERTED — the per-commit estimate walk cost q241 18%.
-    * The layout rides the same staged commit as the parquet, and the
-    * underscore dir is invisible to parquet readers. */
+    * Clustering on the bucket puts each bucket's rows in one task, so each
+    * bucket gets one KV file; a task may own several buckets, and Spark's
+    * spill-capable sort orders its rows by (bucket, key) for the writer.
+    * `numTasks` is a width knob, not a correctness constraint: callers size
+    * it with [[FeatureStore.writeTasks]] from an upper bound on the rows
+    * written that they already hold — one task per `targetKeysPerBucket`
+    * rows, at most one per bucket written — so a 64-row commit into a small
+    * store writes with one task, not one per touched bucket. The bound is
+    * arithmetic on counts already in memory, not a plan estimate:
+    * (r13-opt) sizing from IndexLifecycle.writeWidth was tried and
+    * REVERTED — the per-commit estimate walk cost q241 18%. */
   private def writeVersion(g: FeatureGroup, rows: DataFrame, dir: Path,
       buckets: Long, numTasks: Int): Map[Long, Long] = {
     val servingDir = dir.resolve("_serving")
+    // an empty snapshot writes no bucket file: layout present, all buckets empty
+    Files.createDirectories(servingDir)
     val servingPath = servingDir.toString
-    val names = g.featureNames
-    val clustered = rows
+    val cols = FeatureStore.versionColumns(g)
+    rows
       .withColumn(EngineColumns.KeyBucket,
         pmod(crc32(col(g.keyCol).cast("string")), lit(buckets)))
       .withColumn(FeatureStore.KvKeyCol, col(g.keyCol).cast("string"))
       .repartition(numTasks, col(EngineColumns.KeyBucket))
       .sortWithinPartitions(col(EngineColumns.KeyBucket), col(FeatureStore.KvKeyCol))
-    clustered
-      .mapPartitions(it => new FeatureStore.KvBucketWriter(servingPath, names).passThrough(it))(
-        org.apache.spark.sql.Encoders.row(clustered.schema))
-      .drop(FeatureStore.KvKeyCol)
-      // overwrite clears a crashed attempt's debris; the tasks create
-      // `_serving` themselves, after the clear
-      .write.mode("overwrite").partitionBy(EngineColumns.KeyBucket).parquet(dir.toString)
-    // an empty snapshot has no bucket file: layout present, all buckets empty
-    Files.createDirectories(servingDir)
+      .foreachPartition((it: Iterator[Row]) =>
+        new FeatureStore.KvBucketWriter(servingPath, cols).write(it))
     FeatureStore.kvBucketCounts(servingDir)
   }
 
-  /** Hard-link every UNTOUCHED bucket's parquet partition dir and
-    * serving-KV file from the committed base version into the staged next
-    * version (see [[commitIncremental]]). The null-key default partition,
-    * when present, is always carried (the incremental path is only taken
-    * for batches without null keys, so it is untouched by construction). */
+  /** Hard-link every UNTOUCHED bucket's KV file from the committed base
+    * version into the staged next version (see [[commitIncremental]]). The
+    * null-key file `bucket=-1.kv`, when present, is always carried (the
+    * incremental path is only taken for batches without null keys, so it
+    * is untouched by construction). A filesystem without hard links gets a
+    * copy: correct everywhere, O(bytes) — on an object store the real
+    * implementation is a manifest entry, and this is where it plugs in. */
   private def linkUntouched(baseDir: Path, staged: Path, touched: Set[Long]): Unit = {
     import scala.jdk.CollectionConverters._
-    def bucketOfName(n: String, prefix: String): Option[Long] =
-      if (!n.startsWith(prefix)) None
-      else {
-        val s = n.drop(prefix.length).takeWhile(c => c.isDigit || c == '-')
-        if (s.nonEmpty && s.forall(c => c.isDigit || c == '-')) scala.util.Try(s.toLong).toOption
-        else None
-      }
-    // hard link where the filesystem supports it (the O(1) metadata move);
-    // COPY as the portability fallback (correct everywhere, O(bytes) — on
-    // an object store the real implementation is a manifest entry, this
-    // seam is where it plugs in)
-    def linkOrCopy(src: Path, dst: Path): Unit =
-      try Files.createLink(dst, src): Unit
-      catch {
-        case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING): Unit
-      }
-    def linkFilesInto(src: Path, dst: Path): Unit = {
-      Files.createDirectories(dst)
-      val fl = Files.list(src)
-      try fl.iterator().asScala.filter(Files.isRegularFile(_)).foreach(f =>
-        linkOrCopy(f, dst.resolve(f.getFileName.toString)))
-      finally fl.close()
-    }
-    val ls = Files.list(baseDir)
-    val entries = try ls.iterator().asScala.toList finally ls.close()
-    entries.foreach { p =>
-      val n = p.getFileName.toString
-      if (Files.isDirectory(p) && n.startsWith(EngineColumns.KeyBucket + "=")) {
-        val carry = bucketOfName(n, EngineColumns.KeyBucket + "=") match {
-          case Some(b) => !touched.contains(b)
-          case None    => true // null-key default partition: always carry
-        }
-        if (carry) linkFilesInto(p, staged.resolve(n))
-      }
-    }
-    val baseServing = baseDir.resolve("_serving")
-    val stagedServing = staged.resolve("_serving")
-    // a base without the KV layout (legacy) gets none either: a layout of
-    // the touched buckets alone would answer every untouched key as absent
-    if (!Files.exists(baseServing)) Coordination.deleteRecursively(stagedServing)
-    else {
-      val sl = Files.list(baseServing)
-      try sl.iterator().asScala.foreach { f =>
-        val n = f.getFileName.toString
-        bucketOfName(n, "bucket=") match {
-          case Some(b) if !touched.contains(b) && n.endsWith(".kv") =>
-            linkOrCopy(f, stagedServing.resolve(n))
-          case _ => ()
+    val ls = Files.list(baseDir.resolve("_serving"))
+    try ls.iterator().asScala.foreach { f =>
+      if (FeatureStore.kvBucketOf(f).exists(b => !touched.contains(b))) {
+        val dst = staged.resolve("_serving").resolve(f.getFileName.toString)
+        try Files.createLink(dst, f): Unit
+        catch {
+          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+            Files.copy(f, dst, StandardCopyOption.REPLACE_EXISTING): Unit
         }
       }
-      finally sl.close()
     }
+    finally ls.close()
   }
 
   private def versionDirOf(name: String, v: Long): Path =
@@ -993,35 +948,34 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   private def writeVersionMeta(vd: Path, buckets: Long,
       counts: Map[Long, Long], g: FeatureGroup): Unit = {
-    // cols = the snapshot's data columns at commit time (declared features
-    // + ingest seq — names are [A-Za-z0-9_]+, comma-safe): the schema-
-    // evolution gate reads THIS line instead of paying a full-version
-    // parquet listing per incremental commit. fp = the FULL declared
-    // fingerprint at commit time (types, since, renames) — column names
-    // alone cannot see a drop+re-add of the same name or a type widen,
-    // which is exactly when the pre-rendered KV layout and the incremental
-    // carry-forward must NOT be trusted (round-12 review finding).
-    val cols = g.featureNames :+ EngineColumns.IngestSeq
+    // kvfp = the FULL declared fingerprint at commit time: only a version
+    // committed under the current one is served from its KV entries as is
+    // and carried forward incrementally. Not `fp`, which parquet-snapshot
+    // builds trust: they would read a typed version as empty and commit
+    // over it. schema = every entry's columns and types, in order (names
+    // are [A-Za-z0-9_]+); its presence marks the version as typed KV.
     val body = s"buckets=$buckets\n" +
       s"counts=${counts.toSeq.sorted.map { case (b, c) => s"$b:$c" }.mkString(",")}\n" +
-      s"cols=${cols.sorted.mkString(",")}\n" +
-      s"fp=${FeatureStore.declaredFingerprint(g)}\n"
+      s"kvfp=${FeatureStore.declaredFingerprint(g)}\n" +
+      s"schema=${FeatureStore.versionColumns(g).map { case (n, t) =>
+        s"$n:${FType.name(t)}" }.mkString(",")}\n"
     Files.write(vd.resolve("_meta"), body.getBytes(StandardCharsets.UTF_8)): Unit
   }
 
   /** What this instance knows about one committed online version, read
-    * under declared group `g`: its `_meta`, parsed once, and — each loaded
-    * on first use — its footer columns and its serving map of `g`'s
-    * declared-view rows. A version is immutable once LATEST names it, so
-    * nothing here is ever invalidated; a newer version or another declared
-    * group gets a new state ([[latestState]]). */
+    * under declared group `g`: its `_meta`, parsed once, and — loaded on
+    * first use — its serving map of `g`'s declared-view rows. A version is
+    * immutable once LATEST names it, so nothing here is ever invalidated;
+    * a newer version or another declared group gets a new state
+    * ([[latestState]]). */
   private final class OnlineVersion(val g: FeatureGroup, val v: Long) {
     val dir: Path = versionDirOf(g.name, v)
     val meta: FeatureStore.VersionMeta = FeatureStore.parseMeta(dir)
-    /** The data columns in the version's parquet footers — the schema
-      * gate's fallback for a version committed before the `cols` line. */
-    lazy val footerCols: Set[String] =
-      spark.read.parquet(dir.toString).columns.toSet - EngineColumns.KeyBucket
+    /** The version's KV entry columns; None for an earlier build's parquet
+      * snapshot. A `_meta` without a `schema` line (an earlier build's, or
+      * a torn one) asks the KV headers, and earlier builds' fail the magic. */
+    val kvColumns: Option[Seq[(String, FType)]] =
+      meta.columns.orElse(FeatureStore.kvHeaderColumns(dir.resolve("_serving")))
     /** [[loadServing]]'s answer, single-flight: concurrent first readers
       * wait for the one load, and a load that throws is retried by the
       * next reader (a lazy val's initializer is locked and retried). */
@@ -1052,25 +1006,15 @@ final class FeatureStore(spark: SparkSession, root: String,
     }
 
   /** Does version `s`'s layout encode exactly the CURRENT declared view?
-    * True ⇒ its parquet columns, pre-rendered KV wire rows, and carried-
-    * forward buckets are all authoritative (they were committed under this
-    * very fingerprint, and commits materialize masking/era resolution).
-    * False ⇒ some evolution happened since: serve the declared view
-    * ([[declaredVersion]] masks and era-resolves at read time) and take
-    * the FULL refresh on the next commit. Versions committed before the fingerprint line
-    * compare by name set — which cannot see a same-name re-add or a type
-    * widen — so they are additionally distrusted whenever any feature
-    * carries evolution state the names cannot encode. Answered from the
-    * parsed `_meta`; a version from before the cols line compares its
-    * footer columns, probed once per state. */
+    * True ⇒ its KV entries and carried-forward buckets are authoritative
+    * (typed KV committed under this very fingerprint, and commits
+    * materialize masking/era resolution). False ⇒ some evolution happened
+    * since, or the version is an earlier build's parquet snapshot: serve
+    * the declared view ([[declaredVersion]] masks and era-resolves at read
+    * time) and take the FULL refresh on the next commit, which writes typed
+    * KV. */
   private def snapshotSchemaMatches(g: FeatureGroup, s: OnlineVersion): Boolean =
-    s.meta.fp match {
-      case Some(fp) => fp == FeatureStore.declaredFingerprint(g)
-      case None =>
-        g.features.forall(f => f.since == 0L && f.renames.isEmpty) &&
-          s.meta.cols.getOrElse(s.footerCols) ==
-            (g.featureNames :+ EngineColumns.IngestSeq).toSet
-    }
+    s.kvColumns.isDefined && s.meta.fp.contains(FeatureStore.declaredFingerprint(g))
 
   /** A full rewrite's bucket count, from the base version's recorded key
     * count — a schema mismatch distrusts the version's LAYOUT, not its
@@ -1082,58 +1026,54 @@ final class FeatureStore(spark: SparkSession, root: String,
   private def currentVersion(name: String): Option[Long] =
     Coordination.readPointerFile(onlineDir(name).resolve("LATEST")).map(_.toLong)
 
-  /** The ONE reader of online version `s`'s parquet: the given key buckets'
-    * `_key_bucket=<b>` dirs, or with `buckets` None every bucket dir of the
-    * version (the null-key default partition too), listed on the driver —
-    * O(requested) listing, never the O(buckets) full-version listing a
-    * `read.parquet(vDir).filter(...)` pays before pruning. A version
-    * committed under the declared fingerprint ([[snapshotSchemaMatches]])
-    * reads through [[ListedParquet]] with the declared schema: no listing
-    * job at any bucket count and no footer-inference job. So does a version
-    * with none of the requested dirs (every key deleted, or batch keys
-    * hashing into empty buckets): an empty frame of the declared columns,
-    * where inference would have no file to read. An evolved version reads
-    * its files' own schema, so [[declaredVersion]] resolves eras by the
-    * names the rows were written under. The bucket column is dropped.
-    * This is the version exactly as committed ([[onlineAt]]); every served
-    * answer reads it through [[declaredVersion]]. */
+  /** The ONE reader of online version `s`: the given key buckets, or with
+    * `buckets` None every bucket of the version (the null-key row too), in
+    * the version's own columns — [[declaredVersion]] resolves eras by the
+    * names the rows were written under. A typed KV version reads its
+    * buckets' files through a [[FeatureStore.KvRelation]]: building the
+    * frame lists no directory, launches no job, and a bucket set with no
+    * file is an empty frame. A parquet-format version (an earlier build's
+    * snapshot) reads its files' own schema, pruned by bucket; with no
+    * bucket dir at all (every key deleted) it is an empty frame of the
+    * declared columns, as earlier builds read it. This is the version
+    * exactly as committed ([[onlineAt]]); every served answer reads it
+    * through [[declaredVersion]]. */
   private def readVersion(g: FeatureGroup, s: OnlineVersion,
       buckets: Option[Iterable[Long]] = None): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val vd = s.dir
-    val prefix = EngineColumns.KeyBucket + "="
-    val dirs = buckets match {
-      case Some(bs) => bs.toSeq.sorted.map(b => vd.resolve(s"$prefix$b")).filter(Files.isDirectory(_))
+    def kvFrame(cols: Seq[(String, FType)], files: Seq[Path]): DataFrame =
+      spark.baseRelationToDataFrame(new FeatureStore.KvRelation(spark.sqlContext, cols, files))
+    s.kvColumns match {
+      case Some(cols) =>
+        val servingDir = s.dir.resolve("_serving")
+        kvFrame(cols, buckets match {
+          case Some(bs) => bs.toSeq.sorted.map(b => servingDir.resolve(s"bucket=$b.kv"))
+            .filter(Files.exists(_))
+          case None => FeatureStore.kvFiles(servingDir)
+        })
       case None =>
-        val ls = Files.list(vd)
-        try ls.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix))
-          .toList.sortBy(_.toString)
-        finally ls.close()
+        import scala.jdk.CollectionConverters._
+        val ls = Files.list(s.dir)
+        val noDirs = try !ls.iterator().asScala
+          .exists(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "="))
+          finally ls.close()
+        if (noDirs) kvFrame(FeatureStore.versionColumns(g), Nil)
+        else {
+          val all = spark.read.parquet(s.dir.toString)
+          buckets.fold(all)(bs => all.filter(col(EngineColumns.KeyBucket).isInCollection(bs.toSeq)))
+            .drop(EngineColumns.KeyBucket)
+        }
     }
-    val snap =
-      if (dirs.isEmpty || snapshotSchemaMatches(g, s))
-        ListedParquet.read(spark, vd.toString, dirs.map(_.toString), snapshotSchema(g))
-      else {
-        val all = spark.read.parquet(vd.toString)
-        buckets.fold(all)(bs => all.filter(col(EngineColumns.KeyBucket).isInCollection(bs.toSeq)))
-      }
-    snap.drop(EngineColumns.KeyBucket)
   }
 
   /** Version `s` as declared group `g` serves it: the features in `g`
     * order, cast, era-resolved ([[eraColumn]]) and masked ([[maskSince]]),
     * then the ingest seq. A snapshot committed before a dropFeature /
     * addFeature / rename / widen still carries the OLD layout until the
-    * next commit re-renders it; its reads show the declared view at once.
+    * next commit rewrites it; its reads show the declared view at once.
     * Identity up to casts for a version committed under `g`'s fingerprint. */
   private def declaredVersion(g: FeatureGroup, s: OnlineVersion,
       buckets: Option[Iterable[Long]] = None): DataFrame =
     maskSince(g, conformToDeclared(g, readVersion(g, s, buckets)))
-
-  /** The data columns a version committed under `g`'s fingerprint holds. */
-  private def snapshotSchema(g: FeatureGroup): StructType = StructType(
-    g.features.map(f => StructField(f.name, f.ftype.spark)) :+
-      StructField(EngineColumns.IngestSeq, LongType))
 
   // ---- reads ----
 
@@ -1199,8 +1139,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     * surface, set-oriented like [[ingest]]:
     *   - ONLINE: the keys leave the serving snapshot immediately (one
     *     broadcast anti-join against the current snapshot → new version +
-    *     atomic pointer swap + cache invalidation — never a full-history
-    *     recompute);
+    *     atomic pointer swap, which the next lookup resolves — serving
+    *     state is keyed by version, so nothing is invalidated; never a
+    *     full-history recompute);
     *   - OFFLINE: a tombstone (key, deleted_seq) is appended; every offline
     *     reader filters history at or below the deletion sequence, so a
     *     LATER re-ingest of the key resurfaces it (the same monotone-seq
@@ -1285,8 +1226,9 @@ final class FeatureStore(spark: SparkSession, root: String,
         // must not run across an evolution boundary (same fingerprint gate
         // as refreshOnline): a delete landing between a drop/re-add/rename/
         // widen and the next commit would otherwise stamp the current
-        // fingerprint onto a version whose files and KV rendering still
-        // hold the pre-evolution view (round-12 review follow-up)
+        // fingerprint onto a version whose KV entries still hold the
+        // pre-evolution view (round-12 review follow-up); a parquet-format
+        // base takes the full rewrite too, which upgrades it to typed KV
         bs.meta.layout.filter(_ => snapshotSchemaMatches(g, bs)) match {
           case Some((buckets, counts)) =>
             // INCREMENTAL delete: keys live only in their own buckets, so
@@ -1305,9 +1247,9 @@ final class FeatureStore(spark: SparkSession, root: String,
                 touched.iterator.map(counts.getOrElse(_, 0L)).sum)
             }
           case None =>
-            // legacy meta OR evolution since the base version: full rewrite,
-            // CONFORMED + MASKED so the new version's files, fingerprint
-            // stamp, and KV rendering all present the declared view
+            // legacy meta, a parquet-format base OR evolution since the base
+            // version: full rewrite, CONFORMED + MASKED so the new version's
+            // entries and fingerprint stamp present the declared view
             val conformed = declaredVersion(g, bs)
             // bucket count still derives from the base version's recorded
             // key counts (the refreshOnline None-branch rule). Falling to
@@ -1331,10 +1273,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     val g = describeGroup(name)
     latestState(g) match {
       case Some(s) => declaredVersion(g, s)
-      case None => // offline() is already declared-schema + masked
-        LatestPerKey.viaMaxBy(offline(name), Seq(g.keyCol), g.eventTimeCol,
-            Seq(EngineColumns.IngestSeq))
-          .drop(EngineColumns.IngestDate)
+      case None => // what the next full refresh would commit; offline() masks
+        LatestPerKey.viaMaxBy(offline(g.name), Seq(g.keyCol), g.eventTimeCol,
+          Seq(EngineColumns.IngestSeq)).drop(EngineColumns.IngestDate)
     }
   }
 
@@ -1419,7 +1360,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     * is not addressable, so its row is left out. None when the version
     * exceeds `maxServingCacheRows`: when its `_meta` key total already
     * does, that costs no Spark job, otherwise (or without a `_meta`) the
-    * load itself is the bounded probe. */
+    * load itself is the bounded probe. None too when a bucket file is torn
+    * ([[FeatureStore.TornKvFile]]); any other failure propagates, and the
+    * next lookup retries the load. */
   private def loadServing(s: OnlineVersion): Option[Map[String, Row]] = {
     val layout = s.meta.layout
     if (layout.exists(_._2.values.sum > maxServingCacheRows)) None
@@ -1430,10 +1373,13 @@ final class FeatureStore(spark: SparkSession, root: String,
       // collects them all; without a `_meta`, limit(cap+1) is the bounded
       // probe (a job per scale-up round of its take)
       val keyed = declaredVersion(g, s).filter(col(g.keyCol).isNotNull)
-      val rows = (if (layout.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect()
-      val k = g.features.indexWhere(_.name == g.keyCol)
-      if (rows.length > maxServingCacheRows) None
-      else Some(rows.map(r => String.valueOf(r.get(k)) -> r).toMap)
+      val rows =
+        try Some((if (layout.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect())
+        catch { case e: Exception if FeatureStore.isTornKv(e) => None }
+      rows.filter(_.length <= maxServingCacheRows).map { rs =>
+        val k = g.features.indexWhere(_.name == g.keyCol)
+        rs.map(r => String.valueOf(r.get(k)) -> r).toMap
+      }
     }
   }
 
@@ -1443,19 +1389,18 @@ final class FeatureStore(spark: SparkSession, root: String,
     * (real_time_inference.py:20-22). Event time formatted ISO-8601 Zulu
     * (update_feature_store.py:36). Serves from the driver-side snapshot
     * cache — NO Spark job per lookup (asserted by FeatureStoreSpec); the
-    * over-cap and no-snapshot paths no longer launch a job either: every
-    * snapshot commit also persists a per-bucket KV file
-    * (`v<N>/_serving/bucket=<crc32(key) mod buckets>.kv`, sorted, wire-
-    * format values, sparse-indexed) that the driver reads DIRECTLY — one
-    * open + binary search + ≤[[FeatureStore.KvIndexStride]]-entry block
-    * scan, no Spark job and no full-bucket scan regardless of bucket size
-    * (servingBench's `bucket_pruned` row). The job-per-lookup path remains
-    * only for snapshots without a readable KV layout (legacy, or a
-    * corrupted file — the reader DEGRADES to the job path rather than
-    * failing the lookup) and for stores with no snapshot at all
-    * (latest-per-key derived from offline history). Every path looks a key
-    * up by its string form, so a null key is not addressable: `null` asks
-    * for the string key "null". */
+    * over-cap path launches no job either: it reads the key's bucket file
+    * (`v<N>/_serving/bucket=<crc32(key) mod buckets>.kv`, sorted, typed,
+    * sparse-indexed) DIRECTLY — one open + binary search +
+    * ≤[[FeatureStore.KvIndexStride]]-entry block scan, no full-bucket scan
+    * regardless of bucket size (servingBench's `bucket_pruned` row) — and
+    * renders the decoded row like a cache hit. A job serves only a version
+    * whose entries are not the declared view (an evolution since its
+    * commit, or a parquet-format version), a store with no version at all,
+    * and a torn bucket file, which DEGRADES to latest-per-key derived from
+    * history rather than failing the lookup. Every path looks a key up by
+    * its string form, so a null key is not addressable: `null` asks for the
+    * string key "null". */
   def getRecord(groupName: String, key: Any): Option[Map[String, String]] =
     recordOf(describeGroup(groupName), key)
 
@@ -1468,112 +1413,31 @@ final class FeatureStore(spark: SparkSession, root: String,
     }
   }
 
-  /** One open of a bucket file answering a SET of keys (the batch face:
-    * many keys of the same bucket cost one open). Returns None when the KV
-    * layout does not exist for this version OR the file is unreadable
-    * (short, bad magic, torn index — e.g. hardware corruption): the caller
-    * DEGRADES to the bucket-pruned Spark job path instead of failing the
-    * lookup. Otherwise a verdict for EVERY target key: each target costs
-    * one binary search over the sparse index plus one ≤stride-entry block
-    * scan. Fields added to the group after the snapshot was written serve
-    * as null. */
+  /** One open of bucket `bucket`'s KV file answering a SET of keys (the
+    * batch face: many keys of the same bucket cost one open), for a
+    * version whose entries are `g`'s declared view. A verdict for EVERY
+    * target key: each target costs one binary search over the sparse index
+    * plus one ≤stride-entry block scan. An empty bucket has no file. Throws
+    * when the file is unreadable (short, bad magic, torn index — e.g.
+    * hardware corruption) or missing although `_meta` counts keys in it. */
   private def servingKvScan(g: FeatureGroup, s: OnlineVersion, bucket: Long,
-      targets: Set[String]): Option[Map[String, Option[Map[String, String]]]] = {
-    val servingDir = s.dir.resolve("_serving")
-    if (!Files.exists(servingDir)) return None
-    val miss: Map[String, Option[Map[String, String]]] =
-      targets.map(_ -> (None: Option[Map[String, String]])).toMap
-    val f = servingDir.resolve(s"bucket=$bucket.kv")
-    if (!Files.exists(f)) return Some(miss) // layout present, bucket empty
-    try {
-      val ch = Files.newByteChannel(f, java.nio.file.StandardOpenOption.READ)
-      try {
-        val size = ch.size()
-        require(size >= 28, s"short serving KV file $f")
-        // fixed tail: indexStart(8) + nBlocks(4) + magic(4)
-        val tail = FeatureStore.readFullyAt(ch, size - 16, 16)
-        val indexStart = tail.getLong
-        val nBlocks = tail.getInt
-        require(tail.getInt == FeatureStore.KvIndexMagic,
-          s"bad serving KV index magic in $f")
-        require(indexStart >= 0 && indexStart <= size - 16 && nBlocks >= 0,
-          s"torn serving KV index in $f")
-        def streamAt(pos: Long): java.io.DataInputStream = {
-          ch.position(pos)
-          new java.io.DataInputStream(new java.io.BufferedInputStream(
-            java.nio.channels.Channels.newInputStream(ch)))
-        }
-        val hdr = streamAt(0L)
-        require(hdr.readInt() == FeatureStore.KvMagic, s"bad serving KV magic in $f")
-        val nFields = hdr.readInt()
-        val fileNames = Array.fill(nFields)(FeatureStore.readKvStr(hdr))
-        // sparse index: (first key, offset, entry count) per block
-        val idx = streamAt(indexStart)
-        val iKeys = new Array[String](nBlocks)
-        val iOffs = new Array[Long](nBlocks)
-        val iCnts = new Array[Int](nBlocks)
-        var bi = 0
-        while (bi < nBlocks) {
-          iKeys(bi) = FeatureStore.readKvStr(idx)
-          iOffs(bi) = idx.readLong()
-          iCnts(bi) = idx.readInt()
-          bi += 1
-        }
-        // rightmost block whose first key <= target (UTF-8 binary order —
-        // the writer's sort order); -1 = target below the smallest key
-        def blockFor(t: String): Int = {
-          var lo = 0; var hi = nBlocks - 1; var res = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (FeatureStore.Utf8Ordering.compare(iKeys(mid), t) <= 0) { res = mid; lo = mid + 1 }
-            else hi = mid - 1
-          }
-          res
-        }
-        var found = miss
-        targets.toSeq.flatMap(t => blockFor(t) match {
-          case -1 => None; case b => Some(b -> t)
-        }).groupBy(_._1).toSeq.sortBy(_._1).foreach { case (b, ts) =>
-          val want = ts.map(_._2).toSet
-          val maxT = want.max(FeatureStore.Utf8Ordering)
-          val in = streamAt(iOffs(b))
-          var i = 0
-          var done = false
-          while (i < iCnts(b) && !done) {
-            val k = FeatureStore.readKvStr(in)
-            if (want.contains(k)) {
-              val vals = fileNames.map { n =>
-                n -> (if (in.readBoolean()) FeatureStore.readKvStr(in) else null)
-              }.toMap
-              found = found.updated(k, Some(
-                g.features.map(fd => fd.name -> vals.getOrElse(fd.name, null)).toMap))
-            } else if (FeatureStore.Utf8Ordering.compare(k, maxT) > 0) {
-              done = true // sorted: no target of this block can appear later
-            } else {
-              var j = 0
-              while (j < nFields) { // skip this entry's values
-                if (in.readBoolean()) FeatureStore.readKvStr(in): Unit
-                j += 1
-              }
-            }
-            i += 1
-          }
-        }
-        Some(found)
-      } finally ch.close()
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        None // corrupt/torn file: degrade to the job path, never fail the lookup
-    }
+      targets: Seq[String]): Map[String, Option[Map[String, String]]] = {
+    val f = s.dir.resolve("_serving").resolve(s"bucket=$bucket.kv")
+    val found =
+      if (Files.exists(f)) FeatureStore.kvLookup(f, targets.toSet)
+      else if (s.meta.layout.exists(_._2.getOrElse(bucket, 0L) > 0L))
+        throw new FeatureStore.TornKvFile(f, new java.nio.file.NoSuchFileException(f.toString))
+      else Map.empty[String, Row]
+    targets.map(t => t -> found.get(t).map(FeatureStore.renderWireRow(g, _))).toMap
   }
 
   /** Multi-key point lookup — the managed feature stores' batch_get_record
     * face: one answer per requested key (stringly wire format, None for
     * absent keys). Cost model by path: cache hits are map lookups; the KV
     * path opens ONE bucket file per distinct bucket the keys hash to (not
-    * one per key); legacy snapshots fall back to a SINGLE bucket-pruned
-    * Spark job over all requested keys (never a job per key). Duplicate
-    * keys collapse; answers are keyed by the key's string form. */
+    * one per key); the job paths run a SINGLE Spark job over all requested
+    * keys (never a job per key). Duplicate keys collapse; answers are keyed
+    * by the key's string form. */
   def batchGetRecords(groupName: String,
       keys: Seq[Any]): Map[String, Option[Map[String, String]]] = {
     val g = describeGroup(groupName)
@@ -1588,39 +1452,47 @@ final class FeatureStore(spark: SparkSession, root: String,
   }
 
   /** The lookup chain below the driver cache, shared by [[getRecord]] and
-    * [[batchGetRecords]]: the serving-KV files of the keys' buckets (one
-    * open per bucket, no Spark job); else ONE bucket-pruned job over the
-    * keys' buckets — a legacy or unreadable KV layout, or an evolved
-    * version whose pre-rendered wire rows are stale until the next commit
-    * re-renders ([[declaredVersion]] serves the declared view); else
-    * an unpruned job when the bucket meta is corrupt (a guessed modulus
-    * would answer present keys as authoritatively absent); else, with no
-    * version at all (`state` None), latest-per-key derived from history.
-    * Every read is of the state's version, not a re-resolved LATEST: the
-    * buckets were hashed with its modulus, and a rebucketing commit landing
-    * in between would make the pruned read miss a present key. */
+    * [[batchGetRecords]]: the KV files of the keys' buckets (one open per
+    * bucket, no Spark job) of a version whose entries are the declared
+    * view; else ONE bucket-pruned job over the keys' buckets — an evolved
+    * or parquet-format version ([[declaredVersion]] serves the declared
+    * view); else an unpruned job when the bucket meta is corrupt (a
+    * guessed modulus would answer present keys as authoritatively absent);
+    * else, with no version at all (`state` None) or a torn KV file in the
+    * version ([[FeatureStore.TornKvFile]]: it holds no second copy of its
+    * rows), the keys' latest rows in history. Every
+    * read is of the state's version, not a re-resolved
+    * LATEST: the buckets were hashed with its modulus, and a rebucketing
+    * commit landing in between would make the pruned read miss a present
+    * key. */
   private def lookupUncached(g: FeatureGroup, state: Option[OnlineVersion],
       skeys: Seq[String]): Map[String, Option[Map[String, String]]] = {
+    // ONE job collects the keys' rows of `df`; sorted on the driver by
+    // (event time, ingest seq), online()'s latest-per-key order, a key with
+    // several rows (history) answers its newest
     def jobPath(df: DataFrame): Map[String, Option[Map[String, String]]] = {
-      val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys))
-        .collect()
-        .map(r => String.valueOf(r.get(r.fieldIndex(g.keyCol))) -> r).toMap
-      skeys.map(k => k -> hit.get(k).map(FeatureStore.renderWireRow(g, _))).toMap
+      val Seq(k, t, seq) = Seq(g.keyCol, g.eventTimeCol, EngineColumns.IngestSeq)
+        .map(df.schema.fieldIndex)
+      val newestLast = Ordering.Tuple2(FeatureStore.SparkOrder, FeatureStore.SparkOrder)
+      val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys)).collect()
+        .sortBy(r => (r.get(t), r.get(seq)))(newestLast)
+        .map(r => String.valueOf(r.get(k)) -> r).toMap
+      skeys.map(key => key -> hit.get(key).map(FeatureStore.renderWireRow(g, _))).toMap
     }
+    def history = jobPath(offline(g.name).drop(EngineColumns.IngestDate))
     state match {
       case Some(s) =>
-        s.meta.lookupBuckets match {
+        try s.meta.lookupBuckets match {
           case Some(buckets) =>
             val byBucket = skeys.groupBy(FeatureStore.keyBucketOf(_, buckets))
-            val scanned =
-              if (snapshotSchemaMatches(g, s))
-                byBucket.map { case (b, ks) => servingKvScan(g, s, b, ks.toSet) }
-              else Iterable(Option.empty[Map[String, Option[Map[String, String]]]])
-            if (scanned.forall(_.isDefined)) scanned.flatMap(_.get).toMap
+            if (snapshotSchemaMatches(g, s))
+              byBucket.flatMap { case (b, ks) => servingKvScan(g, s, b, ks) }
             else jobPath(declaredVersion(g, s, Some(byBucket.keys)))
           case None => jobPath(declaredVersion(g, s))
+        } catch {
+          case e: Exception if FeatureStore.isTornKv(e) => history
         }
-      case None => jobPath(online(g.name))
+      case None => history
     }
   }
 
@@ -1651,7 +1523,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     * snapshot). Composes [[deleteRecords]], so the sweep inherits its whole
     * contract: seq-aware tombstones (a later re-ingest of the key
     * resurfaces it — TTL expiry must never block a genuine update),
-    * hidden history until [[compactOffline]], cache invalidation. A NULL
+    * hidden history until [[compactOffline]], a new version the next
+    * lookup resolves. A NULL
     * event time is swept (unknown age = stale, the [[getRecordFresh]]
     * rule). The stale key set stays a DataFrame end to end — the store
     * explicitly serves snapshots LARGER than the serving cache cap (bucket
@@ -2012,8 +1885,9 @@ object FeatureStore {
     * bucket's KV file in the single-digit-MB range at typical row widths. */
   val DefaultTargetKeysPerBucket = 1L << 16
 
-  /** Serving KV file magic ("GKV2" — v2 added the sparse index footer). */
-  private[core] val KvMagic = 0x474B5632
+  /** Serving KV file magic ("GKV3": typed values; earlier builds'
+    * "GKV2" files held wire strings and are never parsed). */
+  private[core] val KvMagic = 0x474B5633
   /** Sparse-index trailer magic ("GKIX"). */
   private[core] val KvIndexMagic = 0x474B4958
   /** Entries per sparse-index block — the lookup's worst-case block scan. */
@@ -2022,8 +1896,7 @@ object FeatureStore {
   /** Writer tasks for an online version of at most `rowBound` rows spread
     * over `buckets` written buckets: one task per `targetKeysPerBucket`
     * rows, at least one, and at most one per bucket (each bucket's rows
-    * stay in one task, so each bucket still gets one parquet file and one
-    * KV file). */
+    * stay in one task, so each bucket still gets one KV file). */
   private[core] def writeTasks(rowBound: Long, targetKeysPerBucket: Long, buckets: Long): Int = {
     val target = math.max(targetKeysPerBucket, 1L)
     val perTarget = rowBound / target + (if (rowBound % target == 0) 0 else 1)
@@ -2059,10 +1932,12 @@ object FeatureStore {
     *   at all: a guessed modulus would answer a present key as
     *   authoritatively absent, so lookups scan unpruned until the next
     *   full refresh rewrites the meta.
-    * @param cols the `cols` line: the data columns at commit time.
-    * @param fp the `fp` line: the declared fingerprint at commit time. */
+    * @param fp the `kvfp` line: the declared fingerprint at commit time.
+    * @param columns the `schema` line: the version's KV entry columns and
+    *   their types. Present exactly when the version is typed KV; a version
+    *   an earlier build wrote has none. */
   private[core] final case class VersionMeta(layout: Option[(Long, Map[Long, Long])],
-      lookupBuckets: Option[Long], cols: Option[Set[String]], fp: Option[String])
+      lookupBuckets: Option[Long], fp: Option[String], columns: Option[Seq[(String, FType)]])
 
   /** The ONE parser of a version's `_meta`. An unreadable file parses like
     * one without lines — an untrusted layout degrades to the slower path,
@@ -2085,8 +1960,11 @@ object FeatureStore {
           }.toMap
         (buckets, counts)
       }.toOption)
-      VersionMeta(layout, layout.map(_._1),
-        line("cols").map(_.split(",").iterator.filter(_.nonEmpty).toSet), line("fp"))
+      val columns = line("schema").flatMap(l => scala.util.Try(l.split(",").toSeq.map { c =>
+        val Array(n, t) = c.split(":")
+        n -> FType.fromName(t)
+      }).toOption)
+      VersionMeta(layout, layout.map(_._1), line("kvfp"), columns)
     }
   }
 
@@ -2102,23 +1980,33 @@ object FeatureStore {
   }
 
   /** Column the snapshot pass carries each key's string form in — the KV
-    * entry key and the within-bucket sort key; dropped before the parquet
-    * write (see `writeVersion`). */
+    * entry key and the within-bucket sort key (see `writeVersion`). */
   private[core] val KvKeyCol = "__skey"
 
-  /** Streaming writer of one partition's bucket KV files, fed as a
-    * PASS-THROUGH: rows clustered by bucket and sorted by key stream on
-    * unchanged while the writer renders them (sorted wire-format entries +
-    * a sparse index footer). One instance per task, built inside the
-    * closure. Tracks its own byte position (the sparse index needs entry
-    * offsets without per-entry flushes), back-patches the entry count on
-    * close, and PUBLISHES each finished file by atomic rename from an
-    * attempt-unique temp name — a speculative or zombie attempt can never
-    * interleave bytes into a live file. The consumer drives the iterator,
-    * so a failure downstream never passes through this code: a task-failure
-    * listener closes the open channel and deletes its temp file. */
-  private[core] final class KvBucketWriter(servingPath: String, names: Seq[String]) {
-    private var attempt: String = _
+  /** The columns of a version committed under `g`: its features in `g`
+    * order, then the ingest seq — every KV entry's values, in order. */
+  private[core] def versionColumns(g: FeatureGroup): Seq[(String, FType)] =
+    g.features.map(f => f.name -> f.ftype) :+ (EngineColumns.IngestSeq -> FType.Integral)
+
+  /** Streaming writer of one partition's bucket KV files. A file is a
+    * header — magic, each column's name and type, the entry count — then
+    * one entry per row, sorted by key string in UTF-8 byte order: the key
+    * string, then per column a null flag and a typed value (Integral: long;
+    * Fractional: raw double bits, so NaN payloads and −0.0 survive; String:
+    * UTF-8; Timestamp: epoch microseconds), then a sparse index footer. The
+    * rows arrive clustered by bucket and sorted by key. One instance per
+    * task, built inside the closure. Tracks its own byte position (the
+    * sparse index needs entry offsets without per-entry flushes),
+    * back-patches the entry count on close, and PUBLISHES each finished
+    * file by atomic rename from an attempt-unique temp name — a
+    * speculative or zombie attempt can never interleave bytes into a live
+    * file. A failure while rows stream in deletes the open bucket's temp
+    * file; every bucket already published is complete. */
+  private[core] final class KvBucketWriter(servingPath: String, cols: Seq[(String, FType)]) {
+    private val attempt: String = Option(org.apache.spark.TaskContext.get())
+      .map(_.taskAttemptId().toString)
+      .getOrElse(java.util.UUID.randomUUID().toString.take(8))
+    private val types = cols.map(_._2).toArray
     private var ch: java.nio.channels.SeekableByteChannel = _
     private var out: java.io.DataOutputStream = _
     private var pos = 0L
@@ -2131,8 +2019,8 @@ object FeatureStore {
     private val idxOffs = scala.collection.mutable.ArrayBuffer.empty[Long]
     private val idxCnts = scala.collection.mutable.ArrayBuffer.empty[Int]
     // row field positions, resolved once from the first row's schema
-    // (-1 = a feature the rows do not carry, rendered as null)
-    private var featIdx: Array[Int] = _
+    // (-1 = a column the rows do not carry, written as null)
+    private var colIdx: Array[Int] = _
     private var bucketIdx = -1
     private var keyIdx = -1
 
@@ -2142,6 +2030,14 @@ object FeatureStore {
     private def wStr(s: String): Unit = {
       val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       out.writeInt(b.length); out.write(b); pos += 4 + b.length
+    }
+    private def wValue(t: FType, v: Any): Unit = t match {
+      case FType.Integral => wLong(v.asInstanceOf[Number].longValue)
+      case FType.Fractional =>
+        wLong(java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Number].doubleValue))
+      case FType.FString => wStr(v.toString)
+      case FType.FTimestamp => wLong(org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .fromJavaTimestamp(v.asInstanceOf[java.sql.Timestamp]))
     }
 
     private def open(bucket: Long): Unit = {
@@ -2157,8 +2053,8 @@ object FeatureStore {
       out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
         java.nio.channels.Channels.newOutputStream(ch)))
       wInt(KvMagic)
-      wInt(names.size)
-      names.foreach(wStr)
+      wInt(cols.size)
+      cols.foreach { case (n, t) => wStr(n); wStr(FType.name(t)) }
       countPos = pos
       wInt(0) // nEntries placeholder, back-patched on bucket close
     }
@@ -2185,8 +2081,6 @@ object FeatureStore {
       out = null; ch = null
     }
 
-    /** Failed attempt: drop the open bucket's temp file; every bucket this
-      * attempt already published is complete. */
     private def abort(): Unit = if (ch != null) {
       try ch.close() catch { case _: Throwable => () }
       out = null; ch = null
@@ -2194,9 +2088,9 @@ object FeatureStore {
     }
 
     private def append(r: Row): Unit = {
-      if (featIdx == null) {
+      if (colIdx == null) {
         val fieldNames = r.schema.fieldNames
-        featIdx = names.map(n => fieldNames.indexOf(n)).toArray
+        colIdx = cols.map { case (n, _) => fieldNames.indexOf(n) }.toArray
         bucketIdx = r.schema.fieldIndex(EngineColumns.KeyBucket)
         keyIdx = r.schema.fieldIndex(KvKeyCol)
       }
@@ -2212,54 +2106,195 @@ object FeatureStore {
       idxCnts(idxCnts.length - 1) += 1
       wStr(skey)
       var i = 0
-      while (i < featIdx.length) {
-        val v = if (featIdx(i) < 0) null else renderWireValue(r.get(featIdx(i)))
-        if (v == null) wBool(false)
-        else { wBool(true); wStr(v) }
+      while (i < colIdx.length) {
+        if (colIdx(i) < 0 || r.isNullAt(colIdx(i))) wBool(false)
+        else { wBool(true); wValue(types(i), r.get(colIdx(i))) }
         i += 1
       }
       count += 1
     }
 
-    /** `it` unchanged, rendering each row into its bucket's KV file on the
-      * way through; the last bucket publishes when `it` is exhausted. */
-    def passThrough(it: Iterator[Row]): Iterator[Row] = {
-      val tc = org.apache.spark.TaskContext.get()
-      attempt = Option(tc).map(_.taskAttemptId().toString)
-        .getOrElse(java.util.UUID.randomUUID().toString.take(8))
-      if (tc != null) tc.addTaskFailureListener((_, _) => abort()): Unit
-      // the staging dir's overwrite runs before the job; create the layout
-      // dir from the task, after it
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(servingPath)): Unit
-      new Iterator[Row] {
-        def hasNext: Boolean = it.hasNext || { close(); false }
-        def next(): Row = { val r = it.next(); append(r); r }
-      }
-    }
+    /** Write every row of `it`; the last bucket publishes when `it` is
+      * exhausted. */
+    def write(it: Iterator[Row]): Unit =
+      try { it.foreach(append); close() }
+      catch { case t: Throwable => abort(); throw t }
   }
 
-  /** Per-bucket key counts of a serving-KV layout, read from the entry
-    * count each bucket file's header records (back-patched by
-    * [[KvBucketWriter]] on close). The null-key file `bucket=-1.kv` is
-    * skipped: a null key is not key-addressable. */
-  private[core] def kvBucketCounts(servingDir: java.nio.file.Path): Map[Long, Long] = {
+  /** The bucket a KV file name stands for (`bucket=<b>.kv`; -1 holds the
+    * null key); None for any other name. */
+  private[core] def kvBucketOf(f: java.nio.file.Path): Option[Long] = {
+    val n = f.getFileName.toString
+    if (!n.startsWith("bucket=") || !n.endsWith(".kv")) None
+    else n.slice(7, n.length - 3).toLongOption
+  }
+
+  /** Every bucket KV file of a version's `_serving` dir, in bucket order. */
+  private[core] def kvFiles(servingDir: java.nio.file.Path): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val ls = java.nio.file.Files.list(servingDir)
-    val buckets = try ls.iterator().asScala.toList.flatMap { f =>
-      val n = f.getFileName.toString
-      if (!n.startsWith("bucket=") || !n.endsWith(".kv")) None
-      else n.slice(7, n.length - 3).toLongOption.filter(_ >= 0).map(_ -> f)
-    } finally ls.close()
-    buckets.map { case (b, f) =>
+    try ls.iterator().asScala.flatMap(f => kvBucketOf(f).map(_ -> f)).toSeq.sortBy(_._1).map(_._2)
+    finally ls.close()
+  }
+
+  /** A KV file's header: its columns and its entry count. */
+  private def readKvHeader(in: java.io.DataInputStream,
+      f: Any): (Seq[(String, FType)], Int) = {
+    require(in.readInt() == KvMagic, s"bad serving KV magic in $f")
+    val cols = Seq.fill(in.readInt())(readKvStr(in) -> FType.fromName(readKvStr(in)))
+    (cols, in.readInt())
+  }
+
+  /** THE entry decoder: one entry's values (after its key) as the external
+    * values a Row of the version holds — Long, Double, String,
+    * java.sql.Timestamp, null — exactly what a parquet read gives. */
+  private def readKvRow(in: java.io.DataInputStream, types: Array[FType]): Row = {
+    val vals = new Array[Any](types.length)
+    var i = 0
+    while (i < types.length) {
+      if (in.readBoolean()) vals(i) = types(i) match {
+        case FType.Integral => in.readLong()
+        case FType.Fractional => java.lang.Double.longBitsToDouble(in.readLong())
+        case FType.FString => readKvStr(in)
+        case FType.FTimestamp =>
+          org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(in.readLong())
+      }
+      i += 1
+    }
+    Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
+  }
+
+  /** The columns a version's KV files hold, from the first header that
+    * parses as typed KV; None when none does (no file, or parquet-format
+    * files). Asked only when `_meta` does not answer. */
+  private[core] def kvHeaderColumns(servingDir: java.nio.file.Path): Option[Seq[(String, FType)]] =
+    if (!java.nio.file.Files.isDirectory(servingDir)) None
+    else kvFiles(servingDir).iterator.flatMap { f =>
       val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
         java.nio.file.Files.newInputStream(f)))
-      try {
-        require(in.readInt() == KvMagic, s"bad serving KV magic in $f")
-        val nFields = in.readInt()
-        (0 until nFields).foreach(_ => in.skipNBytes(in.readInt().toLong))
-        b -> in.readInt().toLong
-      } finally in.close()
-    }.toMap
+      try scala.util.Try(readKvHeader(in, f)._1).toOption finally in.close()
+    }.nextOption()
+
+  /** Per-bucket key counts of a version's KV files, read from the entry
+    * count each file's header records (back-patched by [[KvBucketWriter]]
+    * on close). The null-key file `bucket=-1.kv` is skipped: a null key is
+    * not key-addressable. */
+  private[core] def kvBucketCounts(servingDir: java.nio.file.Path): Map[Long, Long] =
+    kvFiles(servingDir).flatMap(f => kvBucketOf(f).filter(_ >= 0).map { b =>
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+        java.nio.file.Files.newInputStream(f)))
+      try b -> readKvHeader(in, f)._2.toLong finally in.close()
+    }).toMap
+
+  /** A bucket KV file that is missing although `_meta` counts keys in its
+    * bucket, short, foreign or torn: the version's only copy of its rows. */
+  private[core] final class TornKvFile(f: Any, cause: Throwable)
+      extends java.io.IOException(s"unreadable serving KV file $f", cause)
+
+  /** Is a [[TornKvFile]] the cause of `t` (a failed job carries its task's)? */
+  private[core] def isTornKv(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[TornKvFile])
+
+  /** `read` of KV file `f`, any failure of it reported as a [[TornKvFile]]. */
+  private def decoding[A](f: Any)(read: => A): A =
+    try read catch { case scala.util.control.NonFatal(e) => throw new TornKvFile(f, e) }
+
+  /** Every entry of KV file `f` as a Row of its columns, which must be
+    * `cols`. The file is read and decoded whole before the first row is
+    * returned: a bucket holds about `targetKeysPerBucket` keys. */
+  private[core] def kvRows(f: String, cols: Seq[(String, FType)]): Iterator[Row] = decoding(f) {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))))
+    val (fileCols, n) = readKvHeader(in, f)
+    require(fileCols == cols, s"$f holds $fileCols, not the version's $cols")
+    val types = cols.map(_._2).toArray
+    Array.fill(n) { readKvStr(in); readKvRow(in, types) }
+  }.iterator
+
+  /** The entries of `targets` in KV file `f`, each a Row of the file's
+    * columns: one binary search over the sparse index and one
+    * ≤stride-entry block scan per block holding a target. Throws a
+    * [[TornKvFile]] on a short, foreign or torn file. */
+  private[core] def kvLookup(f: java.nio.file.Path,
+      targets: Set[String]): Map[String, Row] = decoding(f) {
+    val ch = java.nio.file.Files.newByteChannel(f, java.nio.file.StandardOpenOption.READ)
+    try {
+      val size = ch.size()
+      require(size >= 28, s"short serving KV file $f")
+      // fixed tail: indexStart(8) + nBlocks(4) + magic(4)
+      val tail = readFullyAt(ch, size - 16, 16)
+      val indexStart = tail.getLong
+      val nBlocks = tail.getInt
+      require(tail.getInt == KvIndexMagic, s"bad serving KV index magic in $f")
+      require(indexStart >= 0 && indexStart <= size - 16 && nBlocks >= 0,
+        s"torn serving KV index in $f")
+      def streamAt(pos: Long): java.io.DataInputStream = {
+        ch.position(pos)
+        new java.io.DataInputStream(new java.io.BufferedInputStream(
+          java.nio.channels.Channels.newInputStream(ch)))
+      }
+      val types = readKvHeader(streamAt(0L), f)._1.map(_._2).toArray
+      // sparse index: (first key, offset, entry count) per block
+      val idx = streamAt(indexStart)
+      val iKeys = new Array[String](nBlocks)
+      val iOffs = new Array[Long](nBlocks)
+      val iCnts = new Array[Int](nBlocks)
+      var bi = 0
+      while (bi < nBlocks) {
+        iKeys(bi) = readKvStr(idx)
+        iOffs(bi) = idx.readLong()
+        iCnts(bi) = idx.readInt()
+        bi += 1
+      }
+      // rightmost block whose first key <= target (UTF-8 binary order —
+      // the writer's sort order); -1 = target below the smallest key
+      def blockFor(t: String): Int = {
+        var lo = 0; var hi = nBlocks - 1; var res = -1
+        while (lo <= hi) {
+          val mid = (lo + hi) >>> 1
+          if (Utf8Ordering.compare(iKeys(mid), t) <= 0) { res = mid; lo = mid + 1 }
+          else hi = mid - 1
+        }
+        res
+      }
+      var found = Map.empty[String, Row]
+      targets.toSeq.flatMap(t => blockFor(t) match {
+        case -1 => None; case b => Some(b -> t)
+      }).groupBy(_._1).toSeq.sortBy(_._1).foreach { case (b, ts) =>
+        val want = ts.map(_._2).toSet
+        val maxT = want.max(Utf8Ordering)
+        val in = streamAt(iOffs(b))
+        var i = 0
+        var done = false
+        while (i < iCnts(b) && !done) {
+          val k = readKvStr(in)
+          if (Utf8Ordering.compare(k, maxT) > 0) done = true // sorted: no target later
+          else {
+            val r = readKvRow(in, types)
+            if (want.contains(k)) found = found.updated(k, r)
+          }
+          i += 1
+        }
+      }
+      found
+    } finally ch.close()
+  }
+
+  /** A typed version's bucket files as a relation: one scan task per group
+    * of files, no directory listing and no job to build the frame, and a
+    * `sizeInBytes` of the files' bytes so broadcast and join choices see a
+    * real size. No files is an empty frame of `cols`. */
+  private[core] final class KvRelation(val sqlContext: org.apache.spark.sql.SQLContext,
+      cols: Seq[(String, FType)], files: Seq[java.nio.file.Path])
+      extends org.apache.spark.sql.sources.BaseRelation with org.apache.spark.sql.sources.TableScan {
+    val schema: StructType = StructType(cols.map { case (n, t) => StructField(n, t.spark) })
+    override val sizeInBytes: Long = files.map(java.nio.file.Files.size(_)).sum
+    def buildScan(): org.apache.spark.rdd.RDD[Row] = {
+      val (paths, c) = (files.map(_.toString), cols)
+      val sc = sqlContext.sparkContext
+      sc.parallelize(paths, math.max(1, math.min(paths.size, sc.defaultParallelism)))
+        .flatMap(kvRows(_, c))
+    }
   }
 
   /** FULL declared-schema fingerprint — changes on EVERY evolution,
@@ -2299,8 +2334,8 @@ object FeatureStore {
     java.time.format.DateTimeFormatter.ofPattern(WireTimestampPattern)
       .withZone(java.time.ZoneOffset.UTC)
 
-  /** The stringly wire rendering (shared by the cache path, the KV writer,
-    * and the legacy job path — one definition, so they can never drift):
+  /** The stringly wire rendering (shared by the cache, KV and job paths —
+    * one definition, so they can never drift):
     * null → null, timestamps → ISO-8601 Zulu, everything else → toString. */
   private[core] def renderWireValue(raw: Any): String = raw match {
     case null                  => null
@@ -2311,7 +2346,7 @@ object FeatureStore {
   /** A declared-view row of `g` (its features in `g` order, the ingest seq
     * after them — [[FeatureStore.declaredVersion]]) in the wire format:
     * feature name → [[renderWireValue]]. The one renderer of cache hits,
-    * batch hits and job-path rows. */
+    * decoded KV entries and job-path rows. */
   private[core] def renderWireRow(g: FeatureGroup, r: Row): Map[String, String] =
     g.features.iterator.zipWithIndex
       .map { case (f, i) => f.name -> renderWireValue(r.get(i)) }.toMap
@@ -2332,6 +2367,15 @@ object FeatureStore {
       }
       x.length - y.length
     }
+  }
+
+  /** Spark's order of one column's values as a Row holds them: null first,
+    * strings by UTF-8 bytes, -0.0 equal to 0.0, NaN greatest. */
+  private[core] val SparkOrder: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+    case (null, _) | (_, null) => (a != null).compare(b != null)
+    case (x: String, y: String) => Utf8Ordering.compare(x, y)
+    case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
   }
 
   private[core] def readKvStr(in: java.io.DataInputStream): String = {

@@ -108,10 +108,12 @@ object EngineColumns {
   /** Partition column of the offline store — gives partition pruning the
     * reference never had (its LOCATION is the bucket root, setup.sh:140). */
   val IngestDate = "_ingest_date"
-  /** Partition column of the ONLINE snapshot: crc32(key-as-string) mod the
+  /** Key bucket of the ONLINE snapshot: crc32(key-as-string) mod the
     * version's bucket count (recorded in `v<N>/_meta`; grows with key
-    * count). A point lookup on a snapshot too large for the driver-side
-    * serving cache prunes to one bucket directory instead of scanning the
-    * snapshot (FeatureStore.getRecord fall-through). */
+    * count). The online write clusters on it, one KV file
+    * `_serving/bucket=<b>.kv` per bucket, so a point lookup on a snapshot
+    * too large for the driver-side serving cache opens one file
+    * (FeatureStore.getRecord fall-through). Versions earlier builds wrote
+    * are parquet partitioned by it, read through the fallback. */
   val KeyBucket = "_key_bucket"
 }

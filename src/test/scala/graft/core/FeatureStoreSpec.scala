@@ -28,55 +28,112 @@ class FeatureStoreSpec extends SparkSpec {
 
   private def jobsDuring(f: => Unit): Int = sparkWorkDuring(f)._1
 
-  /** Delete version `v`'s serving-KV layout: lookups then take the job path. */
-  private def dropServingKv(root: String, group: String, v: Long): Unit = {
-    val walk = Files.walk(java.nio.file.Paths.get(root, group, "online", s"v$v", "_serving"))
+  private def listed(d: java.nio.file.Path): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(d)
+    try ls.iterator().asScala.toList finally ls.close()
+  }
+
+  private def metaLines(root: String, group: String, v: Long): List[String] =
+    new String(Files.readAllBytes(
+      java.nio.file.Paths.get(root, group, "online", s"v$v", "_meta"))).linesIterator.toList
+
+  /** Rewrite committed online version `v` of `groupName` in the parquet
+    * format earlier builds wrote, keeping its rows: parquet partitioned by
+    * `_key_bucket`, and a `_meta` of `buckets`/`counts`/`cols`/`fp` lines
+    * (those in `dropLines` left out). With `withServing` it also gets the
+    * earlier `_serving` dir of GKV2 wire-string files — holding the value
+    * "stale" in every field, so a build that read them would answer
+    * wrong. */
+  private def toParquetFormat(root: String, groupName: String, v: Long,
+      withServing: Boolean, dropLines: Set[String] = Set.empty): Unit = {
+    import org.apache.spark.sql.functions.{col, crc32, lit, pmod}
+    import scala.jdk.CollectionConverters._
+    val vd = java.nio.file.Paths.get(root, groupName, "online", s"v$v")
+    val meta = metaLines(root, groupName, v)
+    def line(k: String) = meta.find(_.startsWith(k + "=")).get.drop(k.length + 1)
+    val buckets = line("buckets").toLong
+    val keyCol = new FeatureStore(spark, root).describeGroup(groupName).keyCol
+    val frame = new FeatureStore(spark, root).onlineAt(groupName, v)
+    val rows = frame.collect().toSeq
+    val written = java.nio.file.Paths.get(root, s"parquet_v$v")
+    spark.createDataFrame(rows.asJava, frame.schema)
+      .withColumn(EngineColumns.KeyBucket, pmod(crc32(col(keyCol).cast("string")), lit(buckets)))
+      .repartition(col(EngineColumns.KeyBucket))
+      .write.partitionBy(EngineColumns.KeyBucket).parquet(written.toString)
+    val walk = Files.walk(vd)
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
       .forEach(p => Files.delete(p))
     finally walk.close()
+    Files.move(written, vd)
+    val keys = rows.map(r => r.get(r.fieldIndex(keyCol))).filter(_ != null).map(_.toString)
+    val byBucket = keys.groupBy(FeatureStore.keyBucketOf(_, buckets))
+    val body = Seq(
+      "buckets" -> buckets.toString,
+      "counts" -> byBucket.toSeq.sortBy(_._1).map { case (b, ks) => s"$b:${ks.size}" }.mkString(","),
+      "cols" -> frame.columns.sorted.mkString(","),
+      "fp" -> line("kvfp"))
+      .filterNot(l => dropLines(l._1)).map { case (k, x) => s"$k=$x\n" }.mkString
+    Files.write(vd.resolve("_meta"), body.getBytes)
+    if (withServing) {
+      Files.createDirectories(vd.resolve("_serving"))
+      byBucket.foreach { case (b, ks) =>
+        val out = new java.io.DataOutputStream(Files.newOutputStream(
+          vd.resolve("_serving").resolve(s"bucket=$b.kv")))
+        def str(x: String): Unit = {
+          val bytes = x.getBytes("UTF-8"); out.writeInt(bytes.length); out.write(bytes)
+        }
+        try {
+          out.writeInt(0x474B5632) // "GKV2"
+          out.writeInt(frame.columns.length - 1) // every feature, not the ingest seq
+          frame.columns.init.foreach(str)
+          out.writeInt(ks.size)
+          val blocks = ks.sorted(FeatureStore.Utf8Ordering).grouped(64).map { block =>
+            val off = out.size()
+            block.foreach { k => str(k); frame.columns.init.foreach { _ => out.writeBoolean(true); str("stale") } }
+            (block.head, off, block.size)
+          }.toList
+          val indexStart = out.size()
+          blocks.foreach { case (k, off, n) => str(k); out.writeLong(off.toLong); out.writeInt(n) }
+          out.writeLong(indexStart.toLong); out.writeInt(blocks.size); out.writeInt(0x474B4958)
+        } finally out.close()
+      }
+    }
   }
 
   /** The online layout invariant of version `v`, whatever the write width:
-    * each `_key_bucket=<b>` dir holds exactly one parquet file, `_serving`
-    * holds one `.kv` per non-empty bucket, and the `_meta` counts equal the
-    * per-bucket parquet counts and the KV header counts. Returns the
-    * `_meta` counts. */
+    * the version holds only `_meta` and `_serving/bucket=<b>.kv` files (no
+    * `_key_bucket=` dir, no parquet file), one `.kv` per non-empty bucket,
+    * and the `_meta` counts equal the KV header counts and the per-bucket
+    * key counts of the version's rows. Returns the `_meta` counts. */
   private def assertOnlineLayout(root: String, v: Long): Map[Long, Long] = {
-    import org.apache.spark.sql.functions.col
-    import scala.jdk.CollectionConverters._
-    def listed(d: java.nio.file.Path): List[java.nio.file.Path] = {
-      val ls = Files.list(d)
-      try ls.iterator().asScala.toList finally ls.close()
-    }
     def kvHeaderCount(f: java.nio.file.Path): Long = {
       val in = new java.io.DataInputStream(Files.newInputStream(f))
       try {
-        in.readInt() // magic
-        (1 to in.readInt()).foreach(_ => in.skipNBytes(in.readInt().toLong))
+        assert(in.readInt() == FeatureStore.KvMagic, s"v$v: $f is not typed KV")
+        (1 to 2 * in.readInt()).foreach(_ => in.skipNBytes(in.readInt().toLong))
         in.readInt().toLong
       } finally in.close()
     }
     val vd = java.nio.file.Paths.get(root, "tx", "online", s"v$v")
-    listed(vd).filter(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "="))
-      .foreach { d =>
-        val files = listed(d).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-        assert(files.size == 1, s"v$v: ${d.getFileName} holds ${files.size} parquet files")
-      }
-    val meta = new String(Files.readAllBytes(vd.resolve("_meta"))).linesIterator
-      .find(_.startsWith("counts=")).get
+    assert(listed(vd).map(_.getFileName.toString).toSet == Set("_meta", "_serving"),
+      s"v$v holds ${listed(vd)}")
+    val lines = metaLines(root, "tx", v)
+    val meta = lines.find(_.startsWith("counts=")).get
       .drop(7).split(",").filter(_.nonEmpty)
       .map { kv => val Array(b, c) = kv.split(":"); b.toLong -> c.toLong }.toMap
-    val parquet = spark.read.parquet(vd.toString)
-      .filter(col(EngineColumns.KeyBucket).isNotNull)
-      .groupBy(EngineColumns.KeyBucket).count().collect()
-      .map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
+    val buckets = lines.find(_.startsWith("buckets=")).get.drop(8).toLong
+    val fs = new FeatureStore(spark, root)
+    val keyCol = fs.describeGroup("tx").keyCol
+    val rows = fs.onlineAt("tx", v).select(keyCol).collect().map(_.get(0)).filter(_ != null)
+      .groupBy(k => FeatureStore.keyBucketOf(k.toString, buckets)).map { case (b, ks) => b -> ks.length.toLong }
     val kvFiles = listed(vd.resolve("_serving")).map(_.getFileName.toString)
     assert(kvFiles.forall(_.endsWith(".kv")), s"v$v: stray serving files $kvFiles")
     val kv = kvFiles.map { n =>
       n.stripPrefix("bucket=").stripSuffix(".kv").toLong ->
         kvHeaderCount(vd.resolve("_serving").resolve(n))
     }.filter(_._1 >= 0).toMap
-    assert(meta == parquet, s"v$v: _meta counts disagree with the parquet")
+    assert(meta == rows, s"v$v: _meta counts disagree with the version's rows")
     assert(meta == kv, s"v$v: _meta counts disagree with the KV headers")
     assert(meta.values.forall(_ > 0), s"v$v: _meta lists an empty bucket")
     meta
@@ -312,28 +369,24 @@ class FeatureStoreSpec extends SparkSpec {
     assert(newVersionJobs == 0,
       s"an over-cap store must decide a new version's verdict without a job: $newVersionJobs")
 
-    // LEGACY snapshot (written before the KV layout): remove _serving and
-    // the lookup falls back to the bucket-pruned Spark read — correct, just
-    // a job again
-    val servingDir = java.nio.file.Paths.get(root, "tx", "online", "v2", "_serving")
-    assert(Files.exists(servingDir), "commit must persist the serving KV layout")
-    val walk = Files.walk(servingDir)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => Files.delete(p))
-    finally walk.close()
-    val jobs2 = jobsDuring(assert(fs.getRecord("tx", 5L).get("amount") == "5.0"))
-    assert(jobs2 > 0, "legacy snapshots fall back to the pruned read path")
-    // an incremental commit on that legacy base must not publish a PARTIAL
-    // KV layout (touched buckets only): untouched keys would then read as
-    // authoritatively absent
-    fs.ingest("tx", batch((12L, "2024-01-03 10:00:00", 12.0, "n12")))
-    assert(fs.lastCommitPhases("tx").map(_._1).contains("link_untouched"))
-    assert(fs.getRecord("tx", 12L).get("amount") == "12.0")
-    (1L to 10L).foreach(k => assert(fs.getRecord("tx", k).map(_("amount")).contains(s"$k.0"),
-      s"untouched key $k after a commit on a legacy base"))
+    // a version an EARLIER build wrote (a parquet snapshot, its `_serving`
+    // dir left out): the lookup takes the bucket-pruned Spark read —
+    // correct, just a job again
+    toParquetFormat(root, "tx", 2L, withServing = false)
+    val legacy = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    val jobs2 = jobsDuring(assert(legacy.getRecord("tx", 5L).get("amount") == "5.0"))
+    assert(jobs2 > 0, "parquet-format snapshots fall back to the pruned read path")
+    // the next commit on that base is a full rewrite into typed KV: an
+    // incremental one would carry parquet buckets it cannot link
+    legacy.ingest("tx", batch((12L, "2024-01-03 10:00:00", 12.0, "n12")))
+    assert(!legacy.lastCommitPhases("tx").map(_._1).contains("link_untouched"))
+    assertOnlineLayout(root, 3L)
+    assert(legacy.getRecord("tx", 12L).get("amount") == "12.0")
+    (1L to 10L).foreach(k => assert(legacy.getRecord("tx", k).map(_("amount")).contains(s"$k.0"),
+      s"key $k after a commit on a parquet-format base"))
 
-    // the snapshot is key-bucket partitioned and a bucket filter PRUNES:
-    // the scan over one bucket reads strictly fewer files than the snapshot
+    // the parquet-format snapshot is key-bucket partitioned and its bucket
+    // filter PRUNES: the scan over one bucket reads strictly fewer files
     import scala.jdk.CollectionConverters._
     val vdir = java.nio.file.Paths.get(root, "tx", "online", "v2")
     val bucketDirs = Files.list(vdir).iterator().asScala
@@ -1049,8 +1102,8 @@ class FeatureStoreSpec extends SparkSpec {
   }
 
   test("every key deleted: online, onlineAt, onlineDiff and expireStale read the empty version; a later ingest serves again") {
-    // the empty version has no bucket dir, so no file to infer a schema
-    // from: it must read as zero rows of the declared columns
+    // the empty version has no bucket file: it must read as zero rows of
+    // the declared columns
     Seq(3L, 200L).foreach { n =>
       val fs = newStore()
       fs.createGroup(group)
@@ -1076,18 +1129,15 @@ class FeatureStoreSpec extends SparkSpec {
   }
 
   test("online and onlineAt build a matching version's frame with no job; across an evolution onlineAt keeps the version's columns, online the declared view") {
-    import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("fs_reader_").toString
     val fs = new FeatureStore(spark, root)
     fs.createGroup(group)
     fs.ingest("tx", batch((1L to 200L).map(i =>
       (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
-    // more than 32 bucket dirs: a spark.read of the version would list them
-    // with a job and infer the schema from the footers with another
-    val ls = Files.list(java.nio.file.Paths.get(root, "tx", "online", "v1"))
-    val bucketDirs = try ls.iterator().asScala
-      .count(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "=")) finally ls.close()
-    assert(bucketDirs > 32, s"$bucketDirs bucket dirs")
+    // more than 32 bucket files: a spark.read of that many paths would list
+    // them with a job
+    val bucketFiles = listed(java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving")).size
+    assert(bucketFiles > 32, s"$bucketFiles bucket files")
     var frames = Seq.empty[org.apache.spark.sql.DataFrame]
     val jobs = jobsDuring { frames = Seq(fs.online("tx"), fs.onlineAt("tx", 1L)) }
     assert(jobs == 0, s"building the online and onlineAt frames launched $jobs jobs")
@@ -1165,12 +1215,15 @@ class FeatureStoreSpec extends SparkSpec {
     val cachedFs = new FeatureStore(spark, root)
     assert(cachedFs.batchGetRecords("tx", keys) == single, "cached path must agree")
     assertNullKeyUnaddressable(cachedFs, "cached")
-    // legacy path (KV layout removed): one pruned job, same answers
-    dropServingKv(root, "tx", 1L)
-    assert(fs.batchGetRecords("tx", keys) == single, "legacy path must agree")
-    assertNullKeyUnaddressable(fs, "legacy")
-    // evolved path (the fingerprint distrusts v1's wire rows until the next
-    // commit re-renders): one pruned job over v1's own schema, declared view
+    // parquet-format path (an earlier build's snapshot, its GKV2
+    // files never read): one pruned job, same answers
+    toParquetFormat(root, "tx", 1L, withServing = true)
+    val legacy = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    assert(legacy.batchGetRecords("tx", keys) == single, "parquet-format path must agree")
+    assertNullKeyUnaddressable(legacy, "parquet-format")
+    // evolved path (the fingerprint distrusts v1's entries until the next
+    // commit rewrites them): one pruned job over v1's own schema, declared
+    // view
     fs.addFeature("tx", FeatureDef("score", FType.Fractional))
     val declared = single.map { case (k, r) => k -> r.map(_ + ("score" -> null)) }
     def perKey(s: FeatureStore) = keys.map(k => String.valueOf(k) -> s.getRecord("tx", k)).toMap
@@ -1202,8 +1255,8 @@ class FeatureStoreSpec extends SparkSpec {
     }
     assertRealNull(capped, "KV")
     assertRealNull(new FeatureStore(spark, sroot), "cached")
-    dropServingKv(sroot, "sx", 1L)
-    assertRealNull(capped, "legacy")
+    toParquetFormat(sroot, "sx", 1L, withServing = true)
+    assertRealNull(new FeatureStore(spark, sroot, maxServingCacheRows = 1), "parquet-format")
   }
 
   test("incremental refresh: only touched buckets rewritten; untouched carry forward by hard link") {
@@ -1221,19 +1274,11 @@ class FeatureStoreSpec extends SparkSpec {
     fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"))) // v2 (incremental)
 
     def ino(p: java.nio.file.Path): Any = Files.getAttribute(p, "unix:ino")
-    def bucketFile(v: Long, b: Long): java.nio.file.Path = {
-      val d = java.nio.file.Paths.get(root, "tx", "online", s"v$v",
-        s"${EngineColumns.KeyBucket}=$b")
-      val ls = Files.list(d)
-      try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.head
-      finally ls.close()
-    }
+    def bucketFile(v: Long, b: Long): java.nio.file.Path =
+      java.nio.file.Paths.get(root, "tx", "online", s"v$v", "_serving", s"bucket=$b.kv")
     // untouched bucket: SAME inode in both versions (carried by link)
     assert(ino(bucketFile(1, bOther)) == ino(bucketFile(2, bOther)),
-      "untouched bucket parquet must carry forward by link, not rewrite")
-    assert(ino(java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving", s"bucket=$bOther.kv")) ==
-      ino(java.nio.file.Paths.get(root, "tx", "online", "v2", "_serving", s"bucket=$bOther.kv")),
-      "untouched serving-KV file must carry forward by link")
+      "untouched bucket file must carry forward by link, not rewrite")
     // touched bucket: genuinely rewritten
     assert(ino(bucketFile(1, b1)) != ino(bucketFile(2, b1)),
       "touched bucket must be rewritten")
@@ -1329,7 +1374,7 @@ class FeatureStoreSpec extends SparkSpec {
     assert(FeatureStore.writeTasks(Long.MaxValue, t, 40L) == 40)
   }
 
-  test("several buckets per writer task: one parquet file per bucket dir, one KV per non-empty bucket, counts agree") {
+  test("several buckets per writer task: one KV file per non-empty bucket, counts agree") {
     Seq(FeatureStore.DefaultTargetKeysPerBucket, 4L).foreach { target =>
       val root = Files.createTempDirectory("fs_width_").toString
       val fs = new FeatureStore(spark, root, targetKeysPerBucket = target)
@@ -1361,9 +1406,9 @@ class FeatureStoreSpec extends SparkSpec {
   }
 
   test("incremental refresh into a previously EMPTY bucket: direct-path read misses nothing") {
-    // 10 keys over 64 buckets leave most buckets without a partition dir;
-    // a batch whose key hashes into one of those must commit incrementally
-    // (readVersion reads only EXISTING touched dirs) and serve right
+    // 10 keys over 64 buckets leave most buckets without a file; a batch
+    // whose key hashes into one of those must commit incrementally
+    // (readVersion reads only EXISTING touched files) and serve right
     val root = Files.createTempDirectory("fs_emptyb_").toString
     val fs = new FeatureStore(spark, root)
     fs.createGroup(group)
@@ -1375,16 +1420,10 @@ class FeatureStoreSpec extends SparkSpec {
       !occupied(FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets))).get
     fs.ingest("tx", batch((newKey, "2024-02-01 10:00:00", 77.0, "new")))
     // the commit was incremental (untouched buckets carried by link) …
-    import scala.jdk.CollectionConverters._
     def ino(p: java.nio.file.Path): Any = Files.getAttribute(p, "unix:ino")
     val bOld = FeatureStore.keyBucketOf("1", FeatureStore.OnlineKeyBuckets)
-    def bucketFile(v: Long, b: Long): java.nio.file.Path = {
-      val d = java.nio.file.Paths.get(root, "tx", "online", s"v$v",
-        s"${EngineColumns.KeyBucket}=$b")
-      val ls = Files.list(d)
-      try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.head
-      finally ls.close()
-    }
+    def bucketFile(v: Long, b: Long): java.nio.file.Path =
+      java.nio.file.Paths.get(root, "tx", "online", s"v$v", "_serving", s"bucket=$b.kv")
     assert(ino(bucketFile(1, bOld)) == ino(bucketFile(2, bOld)),
       "commit into an empty bucket must still carry untouched buckets by link")
     // … and every key serves, through cache and KV paths alike
@@ -1442,32 +1481,57 @@ class FeatureStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("fs_corrupt_").toString
     val fs = new FeatureStore(spark, root, maxServingCacheRows = 3) // force the KV path
     fs.createGroup(group)
-    fs.ingest("tx", batch((1L to 10L).map(i =>
-      (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")): _*))
     val b5 = FeatureStore.keyBucketOf("5", FeatureStore.OnlineKeyBuckets)
-    val f = java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving", s"bucket=$b5.kv")
+    // a key sharing 5's bucket, whose second row arrives with an OLDER
+    // event time: history's latest is still its first row
+    val same = (11L to 10000L).find(k =>
+      FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets) == b5).get
+    fs.ingest("tx", batch(((1L to 10L).map(i =>
+      (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")) :+
+      ((same, "2024-01-01 10:00:30", 1.0, "first"))): _*))
+    fs.ingest("tx", batch((5L, "2024-01-02 10:00:00", 55.0, "later"),
+      (same, "2023-12-31 10:00:00", 2.0, "older")))
+    val f = java.nio.file.Paths.get(root, "tx", "online", "v2", "_serving", s"bucket=$b5.kv")
+    val intact = Files.readAllBytes(f)
+    Files.delete(f) // the file may be a link shared with v1: replace, never write through
     Files.write(f, Array[Byte](1, 2, 3, 4, 5)) // torn/garbage file
-    // one job: the pruned read of v1's declared schema, no footer job
-    val degradedJobs = jobsDuring(assert(fs.getRecord("tx", 5L).get("amount") == "5.0",
-      "lookup must degrade to the pruned job path on a bad KV file"))
+    // the version holds no second copy of the bucket: the lookup answers
+    // the keys' latest rows in history, in ONE job (no tombstones, so no
+    // broadcast job)
+    val degradedJobs = jobsDuring(assert(fs.getRecord("tx", 5L).get("amount") == "55.0",
+      "lookup must degrade to a job path on a bad KV file"))
     assert(degradedJobs == 1, s"degraded lookup launched $degradedJobs jobs")
+    val batchJobs = jobsDuring {
+      val answers = fs.batchGetRecords("tx", Seq(5L, same, 999L))
+      assert(answers("5").get("note") == "later" && answers(same.toString).get("note") == "first" &&
+        answers("999").isEmpty)
+    }
+    assert(batchJobs == 1, s"degraded batch lookup launched $batchJobs jobs")
     val other = (1L to 10L).find(k =>
       FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets) != b5).get
     assert(fs.getRecord("tx", other).get("amount") == s"$other.0",
       "intact buckets keep serving through the KV file")
+    // an under-cap instance: the cache load meets the torn file in a scan
+    // task, and the version serves uncached — decided once, not per lookup
+    val cached = new FeatureStore(spark, root)
+    assert(cached.getRecord("tx", same).get("note") == "first")
+    assert(jobsDuring(assert(cached.getRecord("tx", other).get("amount") == s"$other.0")) == 0,
+      "a torn version must not retry its cache load")
+    assert(jobsDuring(assert(cached.getRecord("tx", 5L).get("amount") == "55.0")) == 1)
 
     // corrupt BUCKET META is worse than a corrupt KV file: a guessed modulus
     // would answer present keys as authoritatively absent — so lookups must
     // drop ALL pruning and scan the snapshot (a fresh store, so no cached
-    // bucket count hides the corruption)
-    Files.write(java.nio.file.Paths.get(root, "tx", "online", "v1", "_meta"),
+    // bucket count hides the corruption); the KV file is intact again
+    Files.write(f, intact)
+    Files.write(java.nio.file.Paths.get(root, "tx", "online", "v2", "_meta"),
       "buckets=not-a-number".getBytes)
     val fs2 = new FeatureStore(spark, root, maxServingCacheRows = 3)
-    assert(fs2.getRecord("tx", 5L).get("amount") == "5.0",
+    assert(fs2.getRecord("tx", 5L).get("amount") == "55.0",
       "corrupt meta must degrade to an unpruned scan, not a wrong-bucket miss")
     assert(fs2.getRecord("tx", 999L).isEmpty)
     assert(fs2.batchGetRecords("tx", Seq(5L, 999L)).get("5").flatten
-      .exists(_("amount") == "5.0"))
+      .exists(_("amount") == "55.0"))
   }
 
   test("a steady-state incremental commit writes snapshot, serving KV and counts in one pass: at most 7 jobs, fewer tasks than touched buckets") {
@@ -1480,10 +1544,9 @@ class FeatureStoreSpec extends SparkSpec {
       (i, f"2024-02-$day%02d 10:00:00", i * 2.0, s"m$i")): _*)
     fs.ingest("tx", micro(1L, 1)) // warm: the first incremental commit
     // 64 keys spread over most of the 64 buckets: each extra pass over the
-    // staged snapshot (counts, KV render) would cost a listing job, a
-    // footer job and two compute jobs. The touched buckets hold ~2,000
-    // rows, far below one target's worth, so they write with one task and
-    // are read back with no listing job
+    // staged snapshot would cost compute jobs. The touched buckets hold
+    // ~2,000 rows, far below one target's worth, so they write with one
+    // task and are read back with no listing job
     val touched = (500L until 564L)
       .map(k => FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets)).distinct.size
     val (jobs, tasks) = sparkWorkDuring(fs.ingest("tx", micro(500L, 2)))
@@ -1496,7 +1559,7 @@ class FeatureStoreSpec extends SparkSpec {
     assert(capped.getRecord("tx", 530L).get("amount") == "1060.0")
     assert(capped.getRecord("tx", 1999L).get("amount") == "1999.0")
     // an incremental delete reads neither the whole base version nor the
-    // tombstone footers: no listing or footer job
+    // tombstone footers
     val delJobs = jobsDuring(fs.deleteRecords("tx", Seq(530L, 1999L)))
     assert(delJobs <= 6, s"incremental delete launched $delJobs jobs")
     assert(fs.getRecord("tx", 530L).isEmpty && capped.getRecord("tx", 1999L).isEmpty)
@@ -1509,13 +1572,13 @@ class FeatureStoreSpec extends SparkSpec {
     fs.ingest("tx", batch((1L to 2000L).map(i =>
       (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
     fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"))) // v2
-    // 64 bucket dirs: no listing job, no footer job, only the collect
+    // 64 bucket files: no listing job, only the collect
     var answer: Option[Map[String, String]] = None
     val jobs = jobsDuring { answer = new FeatureStore(spark, root).getRecord("tx", 1L) }
     assert(jobs == 1, s"cache rebuild launched $jobs jobs")
     assert(answer.exists(_("amount") == "99.0"))
-    // evolved but not recommitted: the rebuild must read the files' own
-    // schema, or the renamed column would read as null
+    // evolved but not recommitted: the rebuild must read the version's own
+    // columns, or the renamed column would read as null
     assert(fs.getRecord("tx", 1L).exists(_("note") == "upd")) // warm on v2
     fs.addFeature("tx", FeatureDef("score", FType.Fractional))
     fs.renameFeature("tx", "note", "memo")
@@ -1617,68 +1680,174 @@ class FeatureStoreSpec extends SparkSpec {
     assert(fs.getRecord("tx", 1L).get("amount") == s"${100.0 + commits}")
   }
 
-  test("a _meta without its fp line compares names, one without its cols line probes the footers once per instance") {
-    val root = Files.createTempDirectory("fs_legacy_meta_").toString
-    val fs = new FeatureStore(spark, root)
-    fs.createGroup(group)
-    fs.ingest("tx", batch((1L to 10L).map(i =>
-      (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")): _*))
-    val keys = (1L to 10L) :+ 999L
-    val want = keys.map(k => k -> fs.getRecord("tx", k)).toMap
-    val meta = java.nio.file.Paths.get(root, "tx", "online", "v1", "_meta")
-    val lines = new String(Files.readAllBytes(meta)).linesIterator.toList
-    def keepLines(drop: String*): Unit = Files.write(meta,
-      lines.filterNot(l => drop.exists(d => l.startsWith(d + "="))).map(_ + "\n").mkString.getBytes)
-    def answers(s: FeatureStore) = keys.map(k => k -> s.getRecord("tx", k)).toMap
-
-    // names match: the over-cap instances trust the KV files
-    keepLines("fp")
-    val noFp = new FeatureStore(spark, root, maxServingCacheRows = 3)
-    var got = Map.empty[Long, Option[Map[String, String]]]
-    assert(jobsDuring { got = answers(noFp) } == 0, "an fp-less _meta compares its cols line")
-    assert(got == want)
-    keepLines("fp", "cols")
-    val noCols = new FeatureStore(spark, root, maxServingCacheRows = 3)
-    assert(jobsDuring(assert(noCols.getRecord("tx", 1L) == want(1L))) > 0,
-      "a cols-less _meta probes the footers")
-    assert(jobsDuring { got = answers(noCols) } == 0,
-      "the footer probe runs once per instance, not once per lookup")
-    assert(got == want)
-
-    // an evolution distrusts both: the job path serves the declared view
-    fs.addFeature("tx", FeatureDef("score", FType.Fractional))
-    val declared = want.map { case (k, r) => k -> r.map(_ + ("score" -> null)) }
-    Seq(noFp, noCols).foreach { s =>
-      assert(jobsDuring { got = answers(s) } > 0, "an evolved version's KV rows are not trusted")
-      assert(got == declared)
-      assert(s.batchGetRecords("tx", keys).map { case (k, r) => k.toLong -> r } == declared)
+  test("a parquet-format version an earlier build wrote serves as it did; the next ingest and the next delete rewrite it as typed KV") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // with the earlier GKV2 `_serving` files (poisoned: never read) and a
+    // full `_meta`; without them and with neither the `fp` nor the `cols`
+    // line (a `_meta` older than both)
+    Seq((true, Set.empty[String]), (false, Set("fp", "cols"))).foreach { case (serving, drop) =>
+      val root = Files.createTempDirectory("fs_parquet_").toString
+      val fs = new FeatureStore(spark, root)
+      fs.createGroup(group)
+      fs.ingest("tx", batch(((1L to 10L).map(i =>
+          (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")) :+
+          ((11L, "2024-01-01 10:00:11", 11.0, "null-key"))): _*)
+        .withColumn("customer_id",
+          when(col("note") === "null-key", lit(null)).otherwise(col("customer_id"))))
+      fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"),
+        (12L, "2024-02-01 10:00:00", 12.0, "n12"))) // v2, incremental
+      val keys: Seq[Any] = (1L to 12L) :+ 999L
+      def dump(s: FeatureStore) = (
+        s.online("tx").collect().toSet, s.onlineAt("tx", 1L).collect().toSet,
+        s.onlineAt("tx", 2L).collect().toSet, s.onlineDiff("tx", 1L, 2L).collect().toSet,
+        keys.map(k => s.getRecord("tx", k)), s.batchGetRecords("tx", keys))
+      val want = dump(fs)
+      assert(want._1.size == 12 && want._1.exists(_.isNullAt(0)), "sanity: 11 keys and the null key")
+      Seq(1L, 2L).foreach(v => toParquetFormat(root, "tx", v, serving, drop))
+      Seq(new FeatureStore(spark, root), new FeatureStore(spark, root, maxServingCacheRows = 3))
+        .foreach(s => assert(dump(s) == want, s"serving=$serving drop=$drop"))
+      // one commit upgrades: the ingest and then the delete each rewrite
+      // the whole version as typed KV
+      val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
+      capped.ingest("tx", batch((2L, "2024-03-01 10:00:00", 22.0, "n2b")))
+      assert(!capped.lastCommitPhases("tx").map(_._1).contains("link_untouched"))
+      assert(assertOnlineLayout(root, 3L).values.sum == 11L)
+      toParquetFormat(root, "tx", 3L, serving, drop)
+      capped.deleteRecords("tx", Seq(3L))
+      assert(assertOnlineLayout(root, 4L).values.sum == 10L)
+      assert(capped.getRecord("tx", 2L).get("amount") == "22.0" &&
+        capped.getRecord("tx", 3L).isEmpty && capped.getRecord("tx", 1L).get("note") == "upd")
+      assert(capped.online("tx").count() == 11L, "10 keys and the null key")
     }
+  }
+
+  test("a typed version whose _meta lost its last lines is still read as typed KV: its KV headers name the columns") {
+    // end-truncated `_meta`s: without the `schema` line, and without both
+    // the `kvfp` and the `schema` line
+    Seq(Set("schema"), Set("kvfp", "schema")).foreach { drop =>
+      val root = Files.createTempDirectory("fs_truncmeta_").toString
+      val fs = new FeatureStore(spark, root)
+      fs.createGroup(group)
+      fs.ingest("tx", batch((1L to 10L).map(i =>
+        (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i")): _*))
+      fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"),
+        (12L, "2024-02-01 10:00:00", 12.0, "n12"))) // v2, incremental
+      val keys: Seq[Any] = (1L to 12L) :+ 999L
+      def dump(s: FeatureStore) = (s.online("tx").collect().toSet,
+        keys.map(k => s.getRecord("tx", k)), s.batchGetRecords("tx", keys))
+      val want = dump(fs)
+      val meta = java.nio.file.Paths.get(root, "tx", "online", "v2", "_meta")
+      Files.write(meta, metaLines(root, "tx", 2L)
+        .filterNot(l => drop.exists(k => l.startsWith(k + "="))).map(_ + "\n").mkString.getBytes)
+      Seq(new FeatureStore(spark, root), new FeatureStore(spark, root, maxServingCacheRows = 3))
+        .foreach(s => assert(dump(s) == want, s"without $drop"))
+      // with the fingerprint kept, over-cap lookups still read the KV files
+      if (!drop("kvfp")) {
+        val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
+        assert(jobsDuring(assert(capped.getRecord("tx", 1L).get("note") == "upd")) == 0)
+      }
+      // the next ingest keeps every key
+      val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
+      capped.ingest("tx", batch((13L, "2024-03-01 10:00:00", 13.0, "n13")))
+      assert(capped.online("tx").count() == 12L && assertOnlineLayout(root, 3L).values.sum == 12L,
+        s"without $drop")
+      assert(capped.getRecord("tx", 1L).get("note") == "upd")
+    }
+  }
+
+  test("typed KV round trip: online() and every lookup path keep extreme values bit for bit across incremental and full commits") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    import scala.jdk.CollectionConverters._
+    val g = FeatureGroup("rt", "id", "ts", Seq(
+      FeatureDef("id", FType.Integral), FeatureDef("ts", FType.FTimestamp),
+      FeatureDef("n", FType.Integral), FeatureDef("d", FType.Fractional),
+      FeatureDef("s", FType.FString), FeatureDef("t", FType.FTimestamp)))
+    val rnd = new scala.util.Random(20261019L)
+    val longs = Seq(Long.MinValue, Long.MaxValue, 0L, -1L)
+    val doubles = Seq(Double.NaN, java.lang.Double.longBitsToDouble(0x7ff8000000000abcL), -0.0,
+      0.0, Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue, -Double.MaxValue)
+    val strings = Seq("", "𝕂ey-😀", "ключ", "a\u0000b", "plain")
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    def orNull(v: => Any): Any = if (rnd.nextInt(4) == 0) null else v
+    // 2024 onward, at microsecond precision
+    def ts(): java.sql.Timestamp = DateTimeUtils.toJavaTimestamp(1704067200000000L + rnd.nextLong(1L << 40))
+    def row(key: Any, allNull: Boolean): Row =
+      if (allNull) Row(key, null, null, null, null, null)
+      else Row(key, orNull(ts()), orNull(pick(longs)), orNull(pick(doubles)), orNull(pick(strings)),
+        orNull(ts()))
+    val keys: Seq[Any] = Seq(Long.MinValue, Long.MaxValue, 0L) ++ (1L to 9L)
+    // v1 the bootstrap; v2 incremental (no null key); v3 a full rewrite (its
+    // batch holds the null key). Each holds one row with every column but
+    // the key null.
+    val batches = Seq(
+      (null +: keys).zipWithIndex.map { case (k, i) => row(k, i == 1) },
+      keys.zipWithIndex.filter(_._2 % 2 == 0).map { case (k, i) => row(k, i == 0) },
+      (null +: keys.zipWithIndex.filter(_._2 % 3 == 0).map(_._1)).zipWithIndex
+        .map { case (k, i) => row(k, i == 2) })
+    val root = Files.createTempDirectory("fs_roundtrip_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(g)
+    // the latest row per key (None: the null key) by (event time, seq),
+    // a null event time below every other
+    val latest = scala.collection.mutable.Map.empty[Option[Any], Row]
+    def order(r: Row): (Option[Long], Long) = (Option(r.get(1)).map(t =>
+      DateTimeUtils.fromJavaTimestamp(t.asInstanceOf[java.sql.Timestamp])), r.getLong(6))
+    def bits(r: Row): Seq[Any] = r.toSeq.map {
+      case d: Double => ("double", java.lang.Double.doubleToRawLongBits(d))
+      case t: java.sql.Timestamp => ("micros", DateTimeUtils.fromJavaTimestamp(t))
+      case o => o
+    }
+    batches.zipWithIndex.foreach { case (rows, seq) =>
+      fs.ingest("rt", spark.createDataFrame(rows.asJava, g.schema))
+      assert(fs.lastCommitPhases("rt").map(_._1).contains("link_untouched") == (seq == 1),
+        s"commit ${seq + 1}: incremental only for the second")
+      rows.map(r => Row.fromSeq(r.toSeq :+ seq.toLong)).foreach { r =>
+        val k = Option(r.get(0))
+        if (latest.get(k).forall(o => Ordering[(Option[Long], Long)].lt(order(o), order(r))))
+          latest(k) = r
+      }
+      val got = fs.online("rt").collect().map(r => Option(r.get(0)) -> r).toMap
+      assert(got.keySet == latest.keySet, s"commit ${seq + 1} keys")
+      latest.foreach { case (k, r) =>
+        assert(bits(got(k)) == bits(r), s"commit ${seq + 1}, key $k: ${got(k)} is not $r")
+      }
+      val wire = latest.collect { case (Some(k), r) =>
+        k.toString -> Option(FeatureStore.renderWireRow(g, r)) }.toMap
+      Seq(new FeatureStore(spark, root), new FeatureStore(spark, root, maxServingCacheRows = 1))
+        .foreach { s =>
+          wire.foreach { case (k, r) => assert(s.getRecord("rt", k) == r, s"commit ${seq + 1}, key $k") }
+          assert(s.batchGetRecords("rt", wire.keys.toSeq :+ null) == wire + ("null" -> None))
+        }
+    }
+    // the over-cap instance answered from the KV files, without a job
+    val kv = new FeatureStore(spark, root, maxServingCacheRows = 1)
+    kv.getRecord("rt", 1L)
+    assert(jobsDuring(kv.batchGetRecords("rt", keys)) == 0)
   }
 
   test("serving-KV pass-through aborted mid-bucket leaves no temp file and no file for that bucket") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    // the task creates the layout dir itself (the staging overwrite runs first)
-    val servingDir = Files.createTempDirectory("fs_kvabort_").resolve("_serving")
+    val servingDir = Files.createDirectories(
+      Files.createTempDirectory("fs_kvabort_").resolve("_serving"))
     val servingPath = servingDir.toString
     val schema = StructType(Seq(StructField(EngineColumns.KeyBucket, LongType),
       StructField(FeatureStore.KvKeyCol, StringType), StructField("v", StringType)))
     val rows: Seq[Row] = Seq(0L -> "a", 0L -> "b", 1L -> "c", 1L -> "d", 1L -> "e")
       .map { case (b, k) => new GenericRowWithSchema(Array[Any](b, k, k.toUpperCase), schema) }
-    // the failure is DOWNSTREAM of the writer, mid-way through bucket 1
+    // the row stream fails mid-way through bucket 1
     intercept[org.apache.spark.SparkException] {
       spark.sparkContext.parallelize(rows, 1)
-        .mapPartitions(it => new FeatureStore.KvBucketWriter(servingPath, Seq("v")).passThrough(it))
         .map { r =>
-          if (r.getString(1) == "d") throw new IllegalStateException("downstream write failed")
+          if (r.getString(1) == "d") throw new IllegalStateException("upstream failed")
           r
         }
-        .count()
+        .foreachPartition(it =>
+          new FeatureStore.KvBucketWriter(servingPath, Seq("v" -> FType.FString)).write(it))
     }
-    val ls = Files.list(servingDir)
-    val left = try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    val left = listed(servingDir).map(_.getFileName.toString).toSet
     assert(left == Set("bucket=0.kv"),
       s"only the finished bucket may publish; no temp may survive: $left")
     assert(FeatureStore.kvBucketCounts(servingDir) == Map(0L -> 2L))
