@@ -3629,7 +3629,7 @@ object QuerySuite {
       val emb = Tables.embeddings(s, dir)
       val idx = aux(dir, "q188_vecindex")
       Dedup.buildSemanticIndex(emb, "vec_id", "embedding", idx, targetCell = 50)
-      val assigned = s.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/vectors"))
+      val assigned = IndexLifecycle.readIndexTable(s, s"$idx/vectors")
         .select(col("doc_id").as("vec_id"), col("cell").cast("long").as("cell"))
       assigned.write.mode("overwrite").parquet(aux(dir, "q188_cells"))
       val kept = DomainMix.capPerDomain(assigned, "vec_id", "cell",

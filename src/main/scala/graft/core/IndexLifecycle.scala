@@ -1,9 +1,14 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, Metadata, StructType}
 
 /** The persisted-index lifecycle every index family shares — signature,
   * vector, IVFADC, BM25, LM, DSIR, span and zone-mapped tables: the
@@ -13,7 +18,19 @@ import org.apache.spark.sql.functions._
   * retention policy and the explicit vacuums. Every commit here goes
   * through [[OptimisticPointer.casSwap]] and every writer lock through
   * [[Coordination]]; what an index STORES (signatures, postings, codes)
-  * stays with its family. */
+  * stays with its family.
+  *
+  * Index metadata is read without Spark jobs. Every parquet layout (a
+  * flat table dir or a `_v<N>` generation) records its schema in a hidden
+  * `_schema` file when it is written ([[readLayout]] lists its dirs on the
+  * driver and never infers from footers), and a family's corpus constants
+  * are per-batch scalar files in the same layouts ([[writeScalars]],
+  * [[scalarTotals]]). An index written by an earlier build has neither
+  * and fails loudly, asking for a rebuild.
+  *
+  * Spark jobs run here carry a `spark.job.description` naming the phase
+  * (table write, table or family compaction); the caller's description
+  * is restored afterwards and its job group is never touched. */
 object IndexLifecycle {
 
   /** Replay-idempotent batch write shared by every persisted index family
@@ -29,6 +46,7 @@ object IndexLifecycle {
     require(batchId.matches("[A-Za-z0-9_.-]+"),
       s"batchId '$batchId' must be path-safe ([A-Za-z0-9_.-]+)")
     withIndexWriter(indexPath) {
+    labelled(sig.sparkSession, s"index table write ${tableName(indexPath)}") {
     // the layout is resolved INSIDE the writer lock: a compaction can no
     // longer flip the pointer between this resolve and the write, which
     // would strand the batch's bytes in a version dir the compaction's
@@ -36,6 +54,18 @@ object IndexLifecycle {
     // multi-table sequences hold the family-level lock around the whole
     // write+commit — reentrant, so this inner lock is free)
     val stamped = sig.withColumn("batch", lit(batchId))
+    val layout = resolveIndexDir(indexPath)
+    val schema = layoutSchema(stamped, "batch" +: partitionCols)
+    // an append lands next to batches already recorded: its files must hold
+    // the recorded columns, or the one schema the reader declares would
+    // misread them
+    val appends = !wholeIndex && hasBatchData(layout)
+    if (appends) {
+      val recorded = recordedSchema(layout).getOrElse(throw rebuildNeeded(layout, "recorded schema"))
+      if (!recorded.sameColumns(schema)) throw new IllegalArgumentException(
+        s"append of batch $batchId to $layout: schema ${schema.describe} differs " +
+          s"from the recorded ${recorded.describe}")
+    }
     // CLUSTER on the layout's partition columns before partitionBy: without
     // it every upstream task writes a file into every partition dir —
     // tasks × buckets small files per index write (measured: the sf10 LM
@@ -65,8 +95,10 @@ object IndexLifecycle {
       // only batch=<id> (replay-idempotent)
       .option("partitionOverwriteMode", if (wholeIndex) "static" else "dynamic")
       .mode("overwrite")
-      .parquet(resolveIndexDir(indexPath))
-    }
+      .parquet(layout)
+    // after the write: a static overwrite clears the whole layout dir
+    if (!appends) recordSchema(layout, schema)
+    }}
   }
 
   /** Write-stage width for an index-table write, derived from the
@@ -146,13 +178,13 @@ object IndexLifecycle {
     // tables at mixed versions. Marker tables version with the family too
     // (round 11); a table not yet versioned at the named generation falls
     // through to its flat layout ([[resolveIndexDirPinned]]).
-    val p = java.nio.file.Paths.get(indexPath)
+    val p = Paths.get(indexPath)
     resolveIndexDirPinned(indexPath,
       Option(p.getParent).flatMap(par => readFamilyPointer(par.toString)))
   }
 
   private[graft] def readFamilyPointer(familyPath: String): Option[String] =
-    Coordination.readPointerFile(java.nio.file.Paths.get(familyPath, "FAMILY"))
+    Coordination.readPointerFile(Paths.get(familyPath, "FAMILY"))
 
   /** [[resolveIndexDir]] with the family version PINNED by the caller —
     * the snapshot-read primitive: a multi-table read resolves every table
@@ -176,11 +208,11 @@ object IndexLifecycle {
     * generations newer than the pin is (b). */
   private[graft] def resolveIndexDirPinned(indexPath: String,
       famVersion: Option[String]): String = {
-    val p = java.nio.file.Paths.get(indexPath)
-    famVersion.map(p.resolve).filter(java.nio.file.Files.exists(_)) match {
+    val p = Paths.get(indexPath)
+    famVersion.map(p.resolve).filter(Files.exists(_)) match {
       case Some(d) => d.toString
       case None =>
-        if (famVersion.isDefined && !hasFlatBatchDirs(p) && maxVersionIn(p) > 0L)
+        if (famVersion.isDefined && !hasBatchData(indexPath) && maxVersionIn(p) > 0L)
           throw new IllegalStateException(
             s"pinned version ${famVersion.get} of $indexPath no longer exists " +
               "but newer generations do — it was vacuumed while this serve " +
@@ -192,22 +224,15 @@ object IndexLifecycle {
     }
   }
 
-  /** Does `dir` hold any pre-versioning flat `batch=<id>` partition dirs? */
-  private def hasFlatBatchDirs(dir: java.nio.file.Path): Boolean = {
-    if (!java.nio.file.Files.exists(dir)) return false
-    val ls = java.nio.file.Files.list(dir)
-    try ls.iterator().asScala.exists(_.getFileName.toString.startsWith("batch="))
-    finally ls.close()
-  }
-
-  /** Does the RESOLVED layout dir hold any data? An EMPTY generation is a
+  /** Does the layout dir hold any data — `batch=<id>` partitions (of a
+    * flat table: pre-versioning ones)? An EMPTY generation is a
     * first-class state for marker tables — a purge folds every pending
     * marker away and commits a version dir with no `batch=*` partitions
     * (possibly no files at all), which `spark.read.parquet` would reject
     * with a schema-inference error. Readers of maybe-empty tables gate on
     * this instead of `Files.exists` ([[readMarkerTable]]). */
-  private[graft] def hasBatchData(resolvedDir: String): Boolean =
-    hasFlatBatchDirs(java.nio.file.Paths.get(resolvedDir))
+  private[graft] def hasBatchData(layout: String): Boolean =
+    listDir(Paths.get(layout)).exists(_.getFileName.toString.startsWith("batch="))
 
   /** Read one maybe-empty family table under the shared snapshot, or None
     * when the table holds no data at the snapshot's generation — the one
@@ -267,10 +292,9 @@ object IndexLifecycle {
     * also keeps pre-manifest batches visible. `batch=base` (build/compact
     * output) is always visible. */
   private[graft] def visibleBatches(familyPath: String): Option[Set[String]] = {
-    val p = java.nio.file.Paths.get(familyPath, "VISIBLE")
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val p = Paths.get(familyPath, "VISIBLE")
+    if (!Files.exists(p)) None
+    else Some(new String(Files.readAllBytes(p), UTF_8)
       .linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
   }
 
@@ -280,7 +304,7 @@ object IndexLifecycle {
   // can never be lost
   private def withVisibleLock[A](familyPath: String)(body: => A): A =
     Coordination.current.withWriterLock(
-      java.nio.file.Paths.get(familyPath), "VISIBLE.lock")(body)
+      Paths.get(familyPath), "VISIBLE.lock")(body)
 
   /** Serialize the WRITERS of one persisted index root — append/delete
     * batches and compactions. Without this, an append that resolved the
@@ -299,17 +323,10 @@ object IndexLifecycle {
     * without touching this call site. */
   private[graft] def withIndexWriter[A](indexPath: String)(body: => A): A =
     Coordination.current.withWriterLock(
-      java.nio.file.Paths.get(indexPath), "_writer.lock")(body)
+      Paths.get(indexPath), "_writer.lock")(body)
 
-  private def writeVisibleFile(familyPath: String, ids: Set[String]): Unit = {
-    val root = java.nio.file.Paths.get(familyPath)
-    val tmp = root.resolve("VISIBLE.tmp")
-    java.nio.file.Files.write(tmp, ids.toSeq.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, root.resolve("VISIBLE"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  private def writeVisibleFile(familyPath: String, ids: Set[String]): Unit =
+    writeAtomically(Paths.get(familyPath, "VISIBLE"), ids.toSeq.sorted.mkString("\n"))
 
   /** (Re)write the manifest to exactly `ids` — the family's BUILD uses it
     * to start the visible set. */
@@ -340,12 +357,8 @@ object IndexLifecycle {
     // single-table read or any read under the writer lock, racy for a
     // lock-free multi-table serve overlapping a commit)
     val snap = snapshot.getOrElse(familySnapshot(familyPath))
-    val df = spark.read.parquet(
-      resolveIndexDirPinned(s"$familyPath/$table", snap.version))
-    val vis = snap.visible match {
-      case Some(ids) => df.filter(col("batch").isInCollection("base" +: ids.toSeq))
-      case None => df
-    }
+    val vis = readLayout(spark, resolveIndexDirPinned(s"$familyPath/$table", snap.version),
+      snap.visible)
     excludeBatch.fold(vis)(b => vis.filter(col("batch") =!= lit(b)))
   }
 
@@ -386,12 +399,19 @@ object IndexLifecycle {
     * Marker batches fold and retire with everything else now that marker
     * tables are ordinary listed tables.
     *
+    * SCALAR TABLES (a family's corpus constants, [[writeScalars]]) stage
+    * like the parquet tables: their visible partials fold on the driver
+    * into one `base` partial in the staged generation, under the same CAS.
+    *
     * @param tables (name, fold transform, extra partition cols after batch)
+    * @param scalars (name, the key every partial must agree on) of each
+    *   scalar table; every other key sums
     */
   private[graft] def compactFamily(spark: SparkSession, familyPath: String,
-      tables: Seq[(String, DataFrame => DataFrame, Seq[String])]): Unit =
+      tables: Seq[(String, DataFrame => DataFrame, Seq[String])],
+      scalars: Seq[(String, String)] = Nil): Unit =
       withIndexWriter(familyPath) {
-    import java.nio.file.{Files, Paths}
+      labelled(spark, s"index family compaction ${tableName(familyPath)}") {
     val root = Paths.get(familyPath)
     val expected = readFamilyPointer(familyPath)
     // the next version must clear BOTH counters: the family's own, and any
@@ -409,7 +429,8 @@ object IndexLifecycle {
     // this commit keeps its flat batch=* layout one cycle for pinned
     // readers, even when the family counter is already past 2 — the
     // marker-table migration case)
-    val prevMaxByTable: Map[String, Long] = tables.map { case (name, _, _) =>
+    val names = tables.map(_._1) ++ scalars.map(_._1)
+    val prevMaxByTable: Map[String, Long] = names.map { name =>
       name -> maxVersionIn(Paths.get(familyPath, name))
     }.toMap
     val maxLegacy = prevMaxByTable.values.foldLeft(0L)(math.max)
@@ -419,27 +440,28 @@ object IndexLifecycle {
     // append's half-landed partitions are physically dropped by the fold —
     // the compaction doubles as the self-heal for crashed appends
     val visible = visibleBatches(familyPath)
-    def visibleOnly(df: DataFrame): DataFrame = visible match {
-      case Some(ids) => df.filter(col("batch").isInCollection("base" +: ids.toSeq))
-      case None => df
-    }
-    val staged = tables.map { case (name, transform, extraCols) =>
+    val staged = names.map { name =>
       val oldDir = resolveIndexDir(s"$familyPath/$name")
       val finalDir = Paths.get(familyPath, name, next)
-      (name, transform, extraCols, oldDir,
-        OptimisticPointer.stagingFor(finalDir), finalDir)
+      (name, oldDir, OptimisticPointer.stagingFor(finalDir), finalDir)
+    }.map(s => s._1 -> s).toMap
+    // a data-less source (marker table with nothing pending, or a table
+    // never written) still commits a generation: an EMPTY staging dir —
+    // readers gate on hasBatchData. This is what lets EVERY generation
+    // carry its own marker view (possibly "none pending").
+    staged.values.foreach { case (_, oldDir, stagingDir, _) =>
+      if (!hasBatchData(oldDir)) Files.createDirectories(stagingDir): Unit
     }
-    inParallel(staged.map { case (_, transform, extraCols, oldDir, stagingDir, _) =>
+    scalars.foreach { case (name, pinned) =>
+      val (_, oldDir, stagingDir, _) = staged(name)
+      if (hasBatchData(oldDir))
+        writeScalarFile(stagingDir, "base", scalarTotals(oldDir, visible, pinned))
+    }
+    inParallel(tables.map { case (name, transform, extraCols) =>
       () => {
-        // a data-less source (marker table with nothing pending, or a table
-        // never written) still commits a generation: an EMPTY staging dir —
-        // spark.read.parquet would reject it, and readers gate on
-        // hasBatchData instead. This is what lets EVERY generation carry
-        // its own marker view (possibly "none pending").
-        if (!hasBatchData(oldDir)) {
-          Files.createDirectories(stagingDir): Unit
-        } else {
-          val folded = transform(visibleOnly(spark.read.parquet(oldDir)).drop("batch"))
+        val (_, oldDir, stagingDir, _) = staged(name)
+        if (hasBatchData(oldDir)) {
+          val folded = transform(readLayout(spark, oldDir, visible).drop("batch"))
             .withColumn("batch", lit("base"))
           // cluster on the layout's partition columns — the writeIndexBatch
           // rationale: unclustered, a compaction re-explodes the file count
@@ -448,6 +470,8 @@ object IndexLifecycle {
           sizedForWrite(folded, extraCols)
             .write.partitionBy("batch" +: extraCols: _*).mode("overwrite")
             .parquet(stagingDir.toString)
+          // the staged generation carries its own record into the CAS
+          recordSchema(stagingDir.toString, layoutSchema(folded, "batch" +: extraCols))
         }
       }
     })
@@ -461,14 +485,14 @@ object IndexLifecycle {
     // present they ARE the pinned generation's data and the fallback must
     // keep resolving to them, not to a fresh empty dir.
     expected.foreach { exp =>
-      staged.foreach { case (name, _, _, _, _, _) =>
+      names.foreach { name =>
         val tableDir = Paths.get(familyPath, name)
-        if (prevMaxByTable.getOrElse(name, 0L) == 0L && !hasFlatBatchDirs(tableDir))
+        if (prevMaxByTable.getOrElse(name, 0L) == 0L && !hasBatchData(tableDir.toString))
           Files.createDirectories(tableDir.resolve(exp)): Unit
       }
     }
     OptimisticPointer.casSwap(root, "FAMILY", expected, next,
-      stages = staged.map(s => s._5 -> s._6))
+      stages = names.map(staged).map(s => s._3 -> s._4))
     // retire the folded ids (marker batches folded with everything else;
     // kept as a subtraction rather than a blank for crash defense)
     if (visible.isDefined) withVisibleLock(familyPath) {
@@ -488,7 +512,7 @@ object IndexLifecycle {
     // immediately superseded layout, and pinned readers of the previous
     // generation resolve to them.
     val committed = next.stripPrefix("_v").toLong
-    staged.foreach { case (name, _, _, _, _, _) =>
+    names.foreach { name =>
       val flat = Paths.get(familyPath, name)
       if (prevMaxByTable.getOrElse(name, 0L) >= 1L)
         sweepSupersededVersions(flat, committed)
@@ -507,10 +531,10 @@ object IndexLifecycle {
       }
       Files.deleteIfExists(flat.resolve("CURRENT")): Unit
     }
-  }
+  }}
 
   /** Run independent index-maintenance tasks CONCURRENTLY — a multi-table
-    * index (BM25's postings/termdf/stats/doclens, the LM's five counts)
+    * index (BM25's postings/termdf/doclens, the LM's five counts)
     * pays one fixed Spark-job latency per table when written or compacted
     * serially, and the tables are disjoint directories over already-staged
     * (persisted) inputs, so the only thing serialization buys is wall
@@ -547,9 +571,14 @@ object IndexLifecycle {
     * reader still scanning after TWO compactions of the same index can
     * observe deleted files. Disk cost: one extra copy of one index,
     * reclaimed at the next compaction. */
-  private def sweepSupersededVersions(root: java.nio.file.Path,
+  private def sweepSupersededVersions(root: Path,
       committed: Long): Unit =
-    sweepSuperseded(root, committed, versionOf("_v"), _.startsWith("batch="))
+    sweepSuperseded(root, committed, versionOf("_v"), isFlatLayout)
+
+  /** An entry of the pre-versioning flat layout: its `batch=` partitions
+    * (or scalar partials) and its recorded schema. */
+  private def isFlatLayout(name: String): Boolean =
+    name.startsWith("batch=") || name == SchemaFile
 
   /** Version number of a `<prefix><K>` dir name — `_v` for the index
     * layouts (underscore-hidden from Spark's listing of the flat layout),
@@ -593,32 +622,21 @@ object IndexLifecycle {
     * [[retentionCycles]]; explicit vacuums pass 0. ONE implementation — a
     * future change to the retention rule must not silently diverge
     * between the index and table-format layouts. */
-  private[graft] def sweepSuperseded(root: java.nio.file.Path, committed: Long,
+  private[graft] def sweepSuperseded(root: Path, committed: Long,
       versionOf: String => Option[Long], isFlatLegacy: String => Boolean,
-      keep: Int = retentionCycles): Unit = {
-    import java.nio.file.Files
-    if (!Files.exists(root)) return
-    val ls = Files.list(root)
-    val entries = try ls.iterator().asScala.toList finally ls.close()
-    entries.foreach { p =>
+      keep: Int = retentionCycles): Unit =
+    listDir(root).foreach { p =>
       val n = p.getFileName.toString
       val staleVersion = versionOf(n).exists(_ < committed - keep)
       val staleFlat = committed >= 1 + keep && isFlatLegacy(n)
       if (staleVersion || staleFlat) Coordination.deleteRecursively(p)
     }
-  }
 
   /** Highest `_v<K>` version dir present under `root` (0 when none) — the
     * legacy-counter probe [[compactFamily]] clears when deriving the next
     * family version. */
-  private def maxVersionIn(root: java.nio.file.Path): Long = {
-    import java.nio.file.Files
-    if (!Files.exists(root)) return 0L
-    val ls = Files.list(root)
-    try ls.iterator().asScala
-      .flatMap(p => versionOf("_v")(p.getFileName.toString)).foldLeft(0L)(math.max)
-    finally ls.close()
-  }
+  private def maxVersionIn(root: Path): Long =
+    listDir(root).flatMap(p => versionOf("_v")(p.getFileName.toString)).foldLeft(0L)(math.max)
 
   /** Drop every SUPERSEDED layout of one index table NOW, keeping only the
     * current version — the explicit final step of a GDPR erase under
@@ -637,31 +655,25 @@ object IndexLifecycle {
     // would let a concurrent compactFamily advance the pointer between
     // this resolve and the sweep — the vacuum would silently keep the
     // version it was asked to remove
-    val parent = Option(java.nio.file.Paths.get(indexPath).getParent)
-      .filter(p => java.nio.file.Files.exists(p.resolve("FAMILY")))
+    val parent = Option(Paths.get(indexPath).getParent)
+      .filter(p => Files.exists(p.resolve("FAMILY")))
     def body(): Unit = withIndexWriter(indexPath) {
       // crashed-compaction staging debris lives INSIDE the table dir
       // (`_staging__vN_*`) where the `_v<k>`/`batch=*` sweep never matched
       // it (round-12 ADVICE: purged-generation bytes survived the erasure
       // SLA's final step). The writer lock excludes a live compaction, so
       // any staging dir present here is debris by definition.
-      val ixp = java.nio.file.Paths.get(indexPath)
-      if (java.nio.file.Files.isDirectory(ixp)) {
-        val ls = java.nio.file.Files.list(ixp)
-        val stale = try ls.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("_staging_")).toList
-          finally ls.close()
-        stale.foreach(Coordination.deleteRecursively)
-      }
+      listDir(Paths.get(indexPath)).filter(_.getFileName.toString.startsWith("_staging_"))
+        .foreach(Coordination.deleteRecursively)
       val cur = resolveIndexDir(indexPath)
       if (cur != indexPath) {
-        versionOf("_v")(java.nio.file.Paths.get(cur).getFileName.toString)
+        versionOf("_v")(Paths.get(cur).getFileName.toString)
           .foreach { committed =>
             // keep = 0: delete every _v<k> with k < committed and the
             // pre-versioning flat batch dirs — an explicit vacuum always
             // sweeps to the current generation, whatever retentionCycles is
-            sweepSuperseded(java.nio.file.Paths.get(indexPath), committed,
-              versionOf("_v"), _.startsWith("batch="), keep = 0)
+            sweepSuperseded(Paths.get(indexPath), committed,
+              versionOf("_v"), isFlatLayout, keep = 0)
           }
       }
     }
@@ -679,11 +691,7 @@ object IndexLifecycle {
     * compaction cannot advance pointers between a table's resolve and its
     * sweep (the [[vacuumIndex]] rationale, family-wide). */
   def vacuumFamily(familyPath: String): Unit = withIndexWriter(familyPath) {
-    val root = java.nio.file.Paths.get(familyPath)
-    val ls = java.nio.file.Files.list(root)
-    val dirs = try ls.iterator().asScala
-      .filter(java.nio.file.Files.isDirectory(_)).toList finally ls.close()
-    dirs.foreach { d =>
+    listDir(Paths.get(familyPath)).filter(Files.isDirectory(_)).foreach { d =>
       if (d.getFileName.toString.startsWith("_staging_"))
         Coordination.deleteRecursively(d) // crashed-loser debris
       else vacuumIndex(d.toString)
@@ -693,11 +701,12 @@ object IndexLifecycle {
   private[graft] def compactBatchedDir(spark: SparkSession, indexPath: String,
       transform: DataFrame => DataFrame = identity,
       extraPartitionCols: Seq[String] = Nil): Unit = withIndexWriter(indexPath) {
-    val root = java.nio.file.Paths.get(indexPath)
+      labelled(spark, s"index table compaction ${tableName(indexPath)}") {
+    val root = Paths.get(indexPath)
     val oldDir = resolveIndexDir(indexPath)
     val oldVersion =
       if (oldDir == indexPath) 0L
-      else java.nio.file.Paths.get(oldDir).getFileName.toString.stripPrefix("_v").toLong
+      else Paths.get(oldDir).getFileName.toString.stripPrefix("_v").toLong
     val next = oldVersion + 1
     // one shuffle-free rewrite: rows are read and rewritten as-is (schema-
     // generic — whatever the index stores besides the partition column),
@@ -709,10 +718,11 @@ object IndexLifecycle {
     // same _v<next> name; only the CAS winner may touch it)
     val finalDir = root.resolve(s"_v$next")
     val stagingDir = OptimisticPointer.stagingFor(finalDir)
-    transform(spark.read.parquet(oldDir).drop("batch"))
+    val folded = transform(readLayout(spark, oldDir).drop("batch"))
       .withColumn("batch", lit("base"))
-      .write.partitionBy("batch" +: extraPartitionCols: _*).mode("overwrite")
+    folded.write.partitionBy("batch" +: extraPartitionCols: _*).mode("overwrite")
       .parquet(stagingDir.toString)
+    recordSchema(stagingDir.toString, layoutSchema(folded, "batch" +: extraPartitionCols))
     // compare-and-swap commit: a concurrent compaction that already moved
     // CURRENT makes this one fail loudly instead of silently superseding a
     // version whose rows this rewrite never read
@@ -723,5 +733,184 @@ object IndexLifecycle {
     // in-flight lock-free readers, VACUUM everything older
     // ([[sweepSupersededVersions]])
     sweepSupersededVersions(root, next)
+  }}
+
+  // ---- job labels ----
+
+  private val JobDescription = "spark.job.description"
+
+  /** Run `body` with its Spark jobs described as `label`, then restore the
+    * caller's description. Only the description is set: the job group
+    * stays the caller's (tracers attribute jobs through it). Threads that
+    * `body` starts inherit the label with the rest of Spark's local
+    * properties, so [[inParallel]]'s pool threads carry it. */
+  private[graft] def labelled[A](spark: SparkSession, label: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, label)
+    try body finally sc.setLocalProperty(JobDescription, caller)
   }
+
+  /** `<family>/<table>` (or the last path element of a single-table
+    * index), for labels and messages. */
+  private def tableName(indexPath: String): String = {
+    val p = Paths.get(indexPath)
+    Option(p.getParent).map(_.getFileName.toString + "/").getOrElse("") + p.getFileName
+  }
+
+  // ---- recorded schemas ----
+
+  /** The schema one parquet layout records in its `_schema` file: the
+    * partition columns (`batch` first) and the data columns, nullable as a
+    * file read reports them. Partition column TYPES are not recorded: the
+    * read infers them from the dir names, with the same Spark code that
+    * `spark.read.parquet` runs (`tb=3` reads as int). */
+  private[graft] final case class LayoutSchema(partitions: Seq[String], data: StructType) {
+    def describe: String = s"${data.simpleString} partitioned by ${partitions.mkString(", ")}"
+    /** Same columns and types. Field metadata may differ between batches
+      * (an ML prediction column carries attributes, a recomputed one does
+      * not): the layout keeps its first write's, as footer inference keeps
+      * one file's. */
+    def sameColumns(o: LayoutSchema): Boolean = partitions == o.partitions &&
+      data.map(_.copy(metadata = Metadata.empty)) == o.data.map(_.copy(metadata = Metadata.empty))
+  }
+
+  private val SchemaFile = "_schema"
+
+  private def layoutSchema(df: DataFrame, partitions: Seq[String]): LayoutSchema =
+    LayoutSchema(partitions,
+      GraftBridge.asNullable(StructType(df.schema.filterNot(f => partitions.contains(f.name)))))
+
+  private def recordSchema(layout: String, s: LayoutSchema): Unit =
+    writeProps(Paths.get(layout, SchemaFile),
+      Seq("partitions" -> s.partitions.mkString(","), "data" -> s.data.json))
+
+  private[graft] def recordedSchema(layout: String): Option[LayoutSchema] = {
+    val p = Paths.get(layout, SchemaFile)
+    if (!Files.exists(p)) None
+    else {
+      val m = readProps(p)
+      Some(LayoutSchema(m("partitions").split(",").toSeq,
+        DataType.fromJson(m("data")).asInstanceOf[StructType]))
+    }
+  }
+
+  private def rebuildNeeded(layout: String, what: String): IllegalStateException =
+    new IllegalStateException(s"index layout $layout has no $what: the index is " +
+      "missing or was written by an earlier build. Rebuild the index with this build.")
+
+  /** The one read of a parquet index layout: its partition dirs are listed
+    * on the driver and read with the recorded schema, so neither a listing
+    * job nor a footer-inference job runs ([[ListedParquet]]). With a
+    * `visible` set, only `base` and those batches are read — a static
+    * partition predicate, so the other batches' files are never scanned. */
+  private def readLayout(spark: SparkSession, layout: String,
+      visible: Option[Set[String]] = None): DataFrame = {
+    val s = recordedSchema(layout).getOrElse(throw rebuildNeeded(layout, "recorded schema"))
+    val leaves = s.partitions.foldLeft(Seq(Paths.get(layout))) { (dirs, c) =>
+      dirs.flatMap(d => listDir(d).filter(p =>
+        p.getFileName.toString.startsWith(s"$c=") && Files.isDirectory(p)))
+    }
+    val df = ListedParquet.read(spark, layout, leaves.map(_.toString), s.data)
+    visible.fold(df)(ids => df.filter(col("batch").isInCollection("base" +: ids.toSeq)))
+  }
+
+  /** Read a single-table index at its current layout (flat or `CURRENT`-
+    * versioned): the recorded-schema read of [[resolveIndexDir]]. */
+  private[graft] def readIndexTable(spark: SparkSession, indexPath: String): DataFrame =
+    readLayout(spark, resolveIndexDir(indexPath))
+
+  // ---- scalar tables ----
+
+  /** Write one batch's partial of a SCALAR table — a family's corpus
+    * constants, e.g. BM25's (n_docs, sum_dl, tb_buckets) — as the file
+    * `batch=<id>.scalars` in the table's current layout. It obeys the
+    * parquet tables' rules: replay overwrites the batch's own file, a
+    * whole-index write clears the layout's other partials, the partial is
+    * visible only once [[commitVisibleBatch]] names its batch, compaction
+    * folds it ([[compactFamily]]'s `scalars`), and retention and the
+    * vacuums sweep it with the `batch=` layout. No Spark job runs. */
+  private[graft] def writeScalars(tablePath: String, batchId: String,
+      values: Map[String, Long], wholeIndex: Boolean = false): Unit =
+    withIndexWriter(tablePath) {
+      val layout = Paths.get(resolveIndexDir(tablePath))
+      if (wholeIndex)
+        listDir(layout).filter(_.getFileName.toString.startsWith("batch="))
+          .foreach(Coordination.deleteRecursively)
+      writeScalarFile(layout, batchId, values)
+    }
+
+  /** [[writeScalars]] of the metrics a finished write observed
+    * (`Dataset.observe` on rows it already scans), each times `sign` (−1
+    * for a deletion's negative partial), plus the layout parameters in
+    * `fixed`. */
+  private[graft] def writeObservedScalars(tablePath: String, batchId: String,
+      observed: Observation, sign: Long, fixed: Map[String, Long],
+      wholeIndex: Boolean): Unit =
+    writeScalars(tablePath, batchId,
+      observed.get.map { case (k, v) => k -> sign * v.asInstanceOf[Long] } ++ fixed, wholeIndex)
+
+  private val ScalarSuffix = ".scalars"
+
+  private def writeScalarFile(layout: Path, batchId: String, values: Map[String, Long]): Unit = {
+    Files.createDirectories(layout)
+    writeProps(layout.resolve(s"batch=$batchId$ScalarSuffix"),
+      values.toSeq.sorted.map { case (k, v) => k -> v.toString })
+  }
+
+  /** The visible partials of a scalar table, folded: `pinned` (a layout
+    * parameter such as a bucket count) must agree across them, every other
+    * key sums. A layout with no partial fails loudly: every build writes
+    * one, so it is missing, torn or an earlier build's `stats` table. */
+  private def scalarTotals(layout: String, visible: Option[Set[String]],
+      pinned: String): Map[String, Long] = {
+    val parts = listDir(Paths.get(layout)).flatMap { p =>
+      val n = p.getFileName.toString
+      if (n.startsWith("batch=") && n.endsWith(ScalarSuffix))
+        Some(n.stripPrefix("batch=").stripSuffix(ScalarSuffix) -> p)
+      else None
+    }.filter { case (id, _) => id == "base" || visible.forall(_.contains(id)) }
+      .map { case (_, p) => readProps(p).map { case (k, v) => k -> v.toLong } }
+    if (parts.isEmpty) throw rebuildNeeded(layout, "corpus constants")
+    val pins = parts.map(_(pinned)).distinct
+    require(pins.size == 1, s"index table $layout has ${pins.size} distinct bucket " +
+      s"counts ($pinned: ${pins.sorted.mkString(", ")})")
+    parts.reduce((a, b) => a.map { case (k, v) => k -> (if (k == pinned) v else v + b(k)) })
+  }
+
+  /** [[scalarTotals]] of one family table under the shared snapshot —
+    * the 0-job read of a family's corpus constants. */
+  private[graft] def readScalars(familyPath: String, table: String, pinned: String,
+      snapshot: Option[FamilySnapshot] = None): Map[String, Long] = {
+    val snap = snapshot.getOrElse(familySnapshot(familyPath))
+    scalarTotals(resolveIndexDirPinned(s"$familyPath/$table", snap.version),
+      snap.visible, pinned)
+  }
+
+  // ---- small files ----
+
+  private def listDir(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.toList finally ls.close()
+    }
+
+  /** Replace `p` with `text` atomically: written to the sibling
+    * `<name>.tmp`, then renamed over it. */
+  private def writeAtomically(p: Path, text: String): Unit = {
+    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+    Files.write(tmp, text.getBytes(UTF_8))
+    Files.move(tmp, p, ATOMIC_MOVE, REPLACE_EXISTING): Unit
+  }
+
+  /** `key=value` lines, replaced atomically. */
+  private def writeProps(p: Path, props: Seq[(String, String)]): Unit =
+    writeAtomically(p, props.map { case (k, v) => s"$k=$v\n" }.mkString)
+
+  private def readProps(p: Path): Map[String, String] =
+    new String(Files.readAllBytes(p), UTF_8).linesIterator.filter(_.nonEmpty).map { l =>
+      val i = l.indexOf('=')
+      l.take(i) -> l.drop(i + 1)
+    }.toMap
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.IndexLifecycle.{commitVisibleBatch, compactBatchedDir, compactFamily,
-  inParallel, readVisibleTable, resetVisibleBatches, resolveIndexDir, withIndexWriter,
+  inParallel, readIndexTable, readVisibleTable, resetVisibleBatches, withIndexWriter,
   writeIndexBatch}
 import graft.functions.GraftFunctions._
 import graft.functions.{CosineSimilarity, HashedShingles, SortedIntersectSize}
@@ -299,7 +299,7 @@ object Dedup {
     * replay sees exactly the pre-batch index). */
   private def readIndex(spark: SparkSession, indexPath: String,
       excludeBatch: Option[String] = None): DataFrame = {
-    val raw = spark.read.parquet(resolveIndexDir(indexPath))
+    val raw = readIndexTable(spark, indexPath)
     val pruned = excludeBatch.fold(raw)(b => raw.filter(col("batch") =!= lit(b)))
     pruned.select(col("doc_id"), col("hs"), col("band_keys"))
   }
@@ -432,7 +432,7 @@ object Dedup {
 
   private def readHashIndex(spark: SparkSession, indexPath: String,
       excludeBatch: Option[String]): DataFrame = {
-    val raw = spark.read.parquet(resolveIndexDir(indexPath))
+    val raw = readIndexTable(spark, indexPath)
     excludeBatch.fold(raw)(b => raw.filter(col("batch") =!= lit(b)))
       .select(col("doc_id"), col("sh"))
   }
@@ -1683,7 +1683,7 @@ object Dedup {
     // full-span writer lock — the minhashLshIncremental rationale
     val spark = newDf.sparkSession
     val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val oldVecs = spark.read.parquet(resolveIndexDir(s"$indexPath/vectors"))
+    val oldVecs = readIndexTable(spark, s"$indexPath/vectors")
       .filter(col("batch") =!= lit(batchId))
       .select(col("doc_id"), col("cell"), col("v"))
 
@@ -1960,7 +1960,7 @@ object Dedup {
     * pass over ITSELF plus one narrow left-semi join on 64-bit hashes. */
   def contaminationRatioIndexed(docs: DataFrame, id: String, text: String,
       indexPath: String, n: Int = 8): DataFrame = {
-    val gramSet = docs.sparkSession.read.parquet(resolveIndexDir(indexPath))
+    val gramSet = readIndexTable(docs.sparkSession, indexPath)
       .select(col("gh"))
     contaminationAgainst(gramSet, docs, id, text, n)
   }
@@ -2282,7 +2282,7 @@ object Dedup {
       .persist()
     occ.count(): Unit
 
-    val indexed = spark.read.parquet(resolveIndexDir(indexPath))
+    val indexed = readIndexTable(spark, indexPath)
       .filter(col("batch") =!= lit(batchId)).select(col("sh"))
     // seen-in-corpus: membership only — the index never carries positions
     val hitOld = occ.join(indexed, Seq("sh"), "left_semi")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.IndexLifecycle
@@ -176,7 +176,8 @@ object Dsir {
   //
   //   target/  (fb, c)                — frozen at build time
   //   raw/     (fb, c)                — pool counts; new pool batches fold in
-  //   stats/   (t_occ, r_occ, buckets)
+  //   stats/   t_occ, r_occ, buckets  — per-batch SCALAR partials
+  //            (IndexLifecycle.writeScalars), read on the driver, no job
   // ------------------------------------------------------------------
 
   /** Build (overwrite) the persisted DSIR model: target counts frozen,
@@ -200,7 +201,7 @@ object Dsir {
     * the trusted corpus", not "does the trusted corpus drift". */
   def appendDsirIndex(newPool: DataFrame, id: String, text: String,
       indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
-    val buckets = readDsirBuckets(newPool.sparkSession, indexPath)
+    val buckets = readStats(indexPath)("buckets").toInt
     writeDsirBatch(None, newPool, id, text, indexPath, batchId, buckets,
       wholeIndex = false)
   }
@@ -216,11 +217,8 @@ object Dsir {
           .filter(col("c") > 0), Nil),
       ("raw",
         (df: DataFrame) => df.groupBy("fb").agg(sum(col("c")).as("c"))
-          .filter(col("c") > 0), Nil),
-      ("stats",
-        (df: DataFrame) => df.groupBy("buckets").agg(
-            sum(col("t_occ")).as("t_occ"), sum(col("r_occ")).as("r_occ"))
-          .select("t_occ", "r_occ", "buckets"), Nil)))
+          .filter(col("c") > 0), Nil)),
+      scalars = Seq("stats" -> "buckets"))
 
   /** Score `docs` FIT-FREE against the persisted model. Scores equal
     * [[importance]] fit on the same target/pool bit-for-bit (the counts are
@@ -230,11 +228,8 @@ object Dsir {
     // ONE family snapshot for the whole serve (the bm25TopKIndexed
     // discipline): stats, target, and raw resolve at the same generation
     val snap = Some(IndexLifecycle.familySnapshot(indexPath))
-    val buckets = readDsirBuckets(spark, indexPath, snap)
-    val totals = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .agg(coalesce(sum(col("t_occ")), lit(0L)).as("t"),
-        coalesce(sum(col("r_occ")), lit(0L)).as("r"))
-      .first()
+    val stats = readStats(indexPath, snap)
+    val buckets = stats("buckets").toInt
     val cT = IndexLifecycle.readVisibleTable(spark, indexPath, "target", snapshot = snap)
       .groupBy("fb").agg(sum(col("c")).as("c_t")).filter(col("c_t") > 0)
     val cR = IndexLifecycle.readVisibleTable(spark, indexPath, "raw", snapshot = snap)
@@ -242,8 +237,7 @@ object Dsir {
     val pTokd = tokd(docs, id, text).persist()
     pTokd.count(): Unit // feeds the feature explode AND the zero-feat join
     val pFeats = featureRows(pTokd, buckets)
-    val out = scoreAgainst(pTokd, pFeats, cT, cR,
-        totals.getLong(0), totals.getLong(1), buckets)
+    val out = scoreAgainst(pTokd, pFeats, cT, cR, stats("t_occ"), stats("r_occ"), buckets)
       .withColumn("logratio", round(col("__avg"), 6))
       .select("doc_id", "n_feats", "logratio")
     val result = out.localCheckpoint(eager = true)
@@ -251,14 +245,11 @@ object Dsir {
     result
   }
 
-  private def readDsirBuckets(spark: SparkSession, indexPath: String,
-      snap: Option[IndexLifecycle.FamilySnapshot] = None): Int = {
-    val rows = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .select("buckets").distinct().collect()
-    require(rows.length == 1,
-      s"DSIR index at $indexPath has ${rows.length} distinct bucket counts")
-    rows.head.getInt(0)
-  }
+  /** `t_occ`, `r_occ` and `buckets` folded over the visible scalar
+    * partials — no Spark job; every batch must agree on `buckets`. */
+  private def readStats(indexPath: String,
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Map[String, Long] =
+    IndexLifecycle.readScalars(indexPath, "stats", "buckets", snap)
 
   private def writeDsirBatch(target: Option[DataFrame], pool: DataFrame,
       id: String, text: String, indexPath: String, batchId: String,
@@ -274,28 +265,24 @@ object Dsir {
     }.getOrElse(0L)
     if (wholeIndex) require(tOcc > 0,
       "DSIR needs a non-empty target feature set")
-    val pTokd = tokd(pool, id, text)
-    val rCounts = featureRows(pTokd, buckets)
-      .groupBy("fb").agg(count(lit(1)).as("c")).persist()
-    rCounts.count(): Unit
-    val rOcc = rCounts.agg(coalesce(sum(col("c")), lit(0L))).first().getLong(0)
-    val spark = pool.sparkSession
-    import spark.implicits._
-    val stats = Seq((tOcc, rOcc, buckets)).toDF("t_occ", "r_occ", "buckets")
+    // the pool's occurrence total rides the raw-count write
+    val rOcc = Observation()
+    val rCounts = featureRows(tokd(pool, id, text), buckets)
+      .groupBy("fb").agg(count(lit(1)).as("c"))
+      .observe(rOcc, coalesce(sum(col("c")), lit(0L)).as("r_occ"))
     IndexLifecycle.withIndexWriter(indexPath) {
       IndexLifecycle.inParallel(
         tCounts.map(c => () => IndexLifecycle.writeIndexBatch(c, s"$indexPath/target",
-          batchId, wholeIndex)).toSeq ++ Seq(
+          batchId, wholeIndex)).toSeq :+ (
         () => IndexLifecycle.writeIndexBatch(rCounts, s"$indexPath/raw", batchId,
-          wholeIndex),
-        () => IndexLifecycle.writeIndexBatch(stats, s"$indexPath/stats", batchId,
           wholeIndex)))
+      IndexLifecycle.writeObservedScalars(s"$indexPath/stats", batchId, rOcc, sign = 1L,
+        Map("t_occ" -> tOcc, "buckets" -> buckets.toLong), wholeIndex)
       // atomic visibility: a pool batch's raw counts and its stats partial
       // appear together — no window where doc counts and occurrence totals
       // disagree
       if (!wholeIndex) IndexLifecycle.commitVisibleBatch(indexPath, batchId)
     }
-    rCounts.unpersist(false): Unit
     tCounts.foreach(_.unpersist(false): Unit)
   }
 }

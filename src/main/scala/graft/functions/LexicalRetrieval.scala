@@ -2,9 +2,11 @@ package graft.functions
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.{Coordination, IndexLifecycle}
 import GraftFunctions.{portableHash60, wsTokens}
@@ -45,9 +47,15 @@ import GraftFunctions.{portableHash60, wsTokens}
   *    exactly one batch — the [[graft.dedup.Dedup.minhashLshIncremental]]
   *    new-docs-only rule), so serving sums the partials of just its probed
   *    terms; compaction folds partials physically.
-  *  - `stats/` — `(n_docs, sum_dl, tb_buckets)` per-batch partials, same
-  *    additivity. `tb_buckets` pins the bucket count the postings layout was
-  *    built with (appends must agree or probe pruning would miss rows).
+  *  - `stats/` — the corpus constants `(n_docs, sum_dl, tb_buckets)` as
+  *    per-batch SCALAR partials ([[graft.core.IndexLifecycle.writeScalars]]:
+  *    one small `batch=<id>.scalars` file per batch, read on the driver with
+  *    no Spark job), same additivity and the same visibility, compaction
+  *    and retention rules as the parquet tables. They are observed on the
+  *    doclens (or tombstone) write that already scans every doc
+  *    (`Dataset.observe`). `tb_buckets` pins the bucket count the postings
+  *    layout was built with (appends must agree or probe pruning would
+  *    miss rows).
   *  - `doclens/` — `(doc_id, dl)`, one row per doc INCLUDING zero-token docs
   *    (which have no postings but count in the corpus constants). Never read
   *    on the request path; it exists so [[deleteFromBm25Index]] can erase a
@@ -95,24 +103,25 @@ object LexicalRetrieval {
     * itself in df/n_docs/sum_dl. */
   def appendBm25Index(newDocs: DataFrame, id: String, text: String,
       indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
-    val buckets = readBuckets(newDocs.sparkSession, indexPath)
+    val buckets = readBuckets(indexPath)
     writeBm25Batch(newDocs, id, text, indexPath, batchId, buckets,
       wholeIndex = false)
   }
 
   /** Compact per-batch partitions: postings/doclens rewrite as-is (postings
-    * still partitioned by `tb`), df partials and the stats partials FOLD
-    * into one row per key through
-    * [[graft.core.IndexLifecycle.compactBatchedDir]]'s transform hook — all tables
-    * swap in under the shared atomic CURRENT-pointer versioning. Folding
-    * drops df rows that sum to ≤ 0 (a fully-deleted term after a purge). */
+    * still partitioned by `tb`), df partials FOLD into one row per term and
+    * the scalar stats partials into one `base` partial — all tables swap in
+    * under one family commit ([[graft.core.IndexLifecycle.compactFamily]]).
+    * Folding drops df rows that sum to ≤ 0 (a fully-deleted term after a
+    * purge). */
   def compactBm25Index(spark: SparkSession, indexPath: String): Unit =
     compactTables(spark, indexPath, identity)
 
   private def compactTables(spark: SparkSession, indexPath: String,
       erase: DataFrame => DataFrame): Unit =
-    // all five tables fold under ONE family commit (one CAS, no mixed
-    // versions for an overlapping reader — IndexLifecycle.compactFamily). The
+    // all five tables (stats as scalars) fold under ONE family commit (one
+    // CAS, no mixed versions for an overlapping reader —
+    // IndexLifecycle.compactFamily). The
     // tombstone markers fold WITH the data: identity under a plain
     // compaction (pending markers survive into the new generation's base,
     // still hiding their docs), the purge's anti-join under a purge
@@ -126,11 +135,8 @@ object LexicalRetrieval {
       ("termdf",
         (df: DataFrame) => df.groupBy("term_id").agg(sum(col("df")).as("df"))
           .filter(col("df") > 0), Nil),
-      ("stats",
-        (df: DataFrame) => df.groupBy("tb_buckets").agg(
-            sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-          .select("n_docs", "sum_dl", "tb_buckets"), Nil),
-      ("tombstones", erase, Nil)))
+      ("tombstones", erase, Nil)),
+      scalars = Seq("stats" -> "tb_buckets"))
 
   /** Tombstone docs OUT of the index — the erasure path for lexical serving
     * ([[graft.similarity.Similarity.deleteFromIvfadcIndex]]'s semantic for
@@ -156,26 +162,27 @@ object LexicalRetrieval {
     // post-flip cleanup would delete mid-read (writer-vs-writer — plain
     // serve reads stay lock-free under the quiet-reader contract)
     val spark = keys.sparkSession
-    val buckets = readBuckets(spark, indexPath)
+    val buckets = readBuckets(indexPath)
     val ids = keys.select(col(id).cast("long").as("doc_id")).distinct()
     val known = IndexLifecycle.readVisibleTable(spark, indexPath, "doclens")
       .join(ids, Seq("doc_id"), "leftsemi")
     val fresh = readTombstones(spark, indexPath)
       .fold(known)(t => known.join(broadcast(t), Seq("doc_id"), "left_anti"))
       .persist()
-    fresh.count(): Unit // feeds stats, df decrements AND the marker write
-    val negStats = fresh
-      .agg((-count(lit(1))).as("n_docs"), (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-      .withColumn("tb_buckets", lit(buckets))
+    fresh.count(): Unit // feeds the df decrements AND the marker write
+    // the negative corpus constants ride the marker write, which scans
+    // every erased doc once
+    val negStats = Observation()
+    val markers = observeCorpus(fresh, negStats).select("doc_id")
     val negDf = IndexLifecycle.readVisibleTable(spark, indexPath, "postings")
       .join(fresh.select("doc_id"), Seq("doc_id"), "leftsemi")
       .groupBy("term_id").agg((-count(lit(1))).as("df"))
     IndexLifecycle.withIndexWriter(indexPath) {
       IndexLifecycle.inParallel(Seq(
         () => IndexLifecycle.writeIndexBatch(negDf, s"$indexPath/termdf", batchId),
-        () => IndexLifecycle.writeIndexBatch(negStats, s"$indexPath/stats", batchId),
-        () => IndexLifecycle.writeIndexBatch(fresh.select("doc_id"),
-          s"$indexPath/tombstones", batchId)))
+        () => IndexLifecycle.writeIndexBatch(markers, s"$indexPath/tombstones", batchId)))
+      IndexLifecycle.writeObservedScalars(s"$indexPath/stats", batchId, negStats, sign = -1L,
+        Map("tb_buckets" -> buckets.toLong), wholeIndex = false)
       // atomic visibility: the markers and BOTH negative partials appear
       // together or not at all — a torn delete can no longer hide docs while
       // scoring against pre-deletion statistics
@@ -220,10 +227,14 @@ object LexicalRetrieval {
     *
     * `queries` is `(query_id, terms array<string>)` and is small by the
     * serving contract (a request batch — the same boundedness the ANN family
-    * assumes of its query side): it is broadcast into every probe join, and
-    * its distinct term buckets are collected (≤ `buckets` values) to prune
-    * the postings scan STATICALLY — the probed `tb` directories are the only
-    * files listed. Everything corpus-sized stays distributed: the pruned
+    * assumes of its query side): it is collected once (a local frame
+    * collects without a job), its terms are lowercased and hashed on the
+    * driver ([[driverLower]], [[driverHash60]]; null terms match nothing),
+    * and the resulting `(query_id, term_id)` rows are broadcast into the
+    * probe join while their distinct term buckets prune the postings scan
+    * STATICALLY — the probed `tb` directories are the only files listed.
+    * The corpus constants are driver-side scalars entering the plan as
+    * literals. Everything corpus-sized stays distributed: the pruned
     * postings scan, one (query, doc)-keyed aggregation, and a rank-limit
     * window (partial WindowGroupLimit) for the per-query top-k.
     *
@@ -256,22 +267,24 @@ object LexicalRetrieval {
     // read postings of one generation and term-df of another (version
     // retention keeps the pinned generation's files alive)
     val snap = Some(IndexLifecycle.familySnapshot(indexPath))
-    val buckets = readBuckets(spark, indexPath, snap)
-    val qt = queries
-      .select(col(id).as("query_id"), explode(col(terms)).as("term"))
-      .select(col("query_id"), portableHash60(lower(col("term"))).as("term_id"))
-      .distinct()
-    // bounded driver collect BY CONTRACT (request batch × ≤ buckets values):
+    val stats = readStats(indexPath, snap)
+    val buckets = stats("tb_buckets")
+    val qtRows = queries.select(col(id), col(terms)).collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).getOrElse(Nil).filter(_ != null)
+        .map(t => Row(r.get(0), driverHash60(driverLower(t))))
+    }.distinct
+    val termIds = qtRows.map(_.getLong(1)).distinct
     // a static isin on the partition column prunes the file listing itself —
     // no join needed to skip the unprobed 63/64ths of the postings files
-    val tbs = qt.select(pmod(col("term_id"), lit(buckets.toLong)).as("tb"))
-      .distinct().collect().map(_.getLong(0))
+    val tbs = termIds.map(_ % buckets).distinct
     if (tbs.isEmpty) {
       return spark.emptyDataFrame
         .select(lit(0L).as("query_id"), lit(0L).as("rank"),
           lit(0L).as("doc_id"), lit(0L).as("dl"), lit(0.0).as("score"))
         .limit(0)
     }
+    val qt = spark.createDataFrame(java.util.Arrays.asList(qtRows: _*), StructType(Seq(
+      queries.schema(id).copy(name = "query_id"), StructField("term_id", LongType, false))))
     val post0 = IndexLifecycle.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
       .filter(col("tb").isin(tbs: _*))
       .join(broadcast(qt), Seq("term_id"))
@@ -281,31 +294,29 @@ object LexicalRetrieval {
     // SURVIVING docs reflect the post-deletion corpus exactly)
     val post = readTombstones(spark, indexPath, snap)
       .fold(post0)(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    val qtIds = qt.select("term_id").distinct()
     val dfAgg = IndexLifecycle.readVisibleTable(spark, indexPath, "termdf", snapshot = snap)
-      .join(broadcast(qtIds), Seq("term_id"), "leftsemi")
+      .filter(col("term_id").isin(termIds: _*))
       .groupBy("term_id").agg(sum(col("df")).as("df"))
-    val consts = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+    // the corpus constants enter as literals; the casts and IEEE
+    // operations on them are the ones the oracle replays
+    val nDocs = lit(stats("n_docs"))
+    val sumDl = lit(stats("sum_dl"))
     // stop-term cut happens on the TINY df frame, and the inner join below
     // then drops the cut terms' posting rows at the broadcast probe — the
     // corpus-sized posting list of a stop word never reaches an exchange
     val dfKept =
       if (maxDfPpm >= 1000000L) dfAgg
-      else dfAgg.crossJoin(broadcast(consts))
-        .filter(col("df") * lit(1000000L) <= lit(maxDfPpm) * col("n_docs"))
-        .select("term_id", "df")
+      else dfAgg.filter(col("df") * lit(1000000L) <= lit(maxDfPpm) * nDocs)
     val scored = post
       .join(broadcast(dfKept), Seq("term_id"))
-      .crossJoin(broadcast(consts)) // one row — a constant, not a data join
       .withColumn("idf",
-        (col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
+        (nDocs.cast("double") - col("df").cast("double") + 0.5) /
           (col("df").cast("double") + 0.5))
       .withColumn("contrib",
         col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
           (col("tf").cast("double") + lit(k1) * (lit(1.0 - b) +
             lit(b) * (col("dl").cast("double") /
-              (col("sum_dl").cast("double") / col("n_docs").cast("double"))))))
+              (sumDl.cast("double") / nDocs.cast("double"))))))
     // ordered fold: contributions sorted by term_id, then summed left-to-
     // right from 0.0 — the multi-query generalization of q174's fixed-order
     // conditional aggregates (a literal CASE chain can't cover an arbitrary
@@ -357,8 +368,8 @@ object LexicalRetrieval {
     require(phrase.size >= 2 && phrase.size <= 8,
       "phraseTopK: 2..8 terms (each term is one narrow self-join arm)")
     val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per serve
-    val buckets = readBuckets(spark, indexPath, snap)
-    val ids = phrase.map(t => driverHash60(t.toLowerCase))
+    val buckets = readStats(indexPath, snap)("tb_buckets")
+    val ids = phrase.map(t => driverHash60(driverLower(t)))
     val tbs = ids.map(h => h % buckets).distinct
     val post0 = IndexLifecycle.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
       .filter(col("tb").isin(tbs: _*))
@@ -416,11 +427,11 @@ object LexicalRetrieval {
   def proximityTopK(spark: SparkSession, indexPath: String,
       termA: String, termB: String, window: Int, k: Int = 10): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
-    require(termA.toLowerCase != termB.toLowerCase,
+    require(driverLower(termA) != driverLower(termB),
       "proximityTopK: distinct terms (same-term distance is trivially 0)")
+    val ids = Seq(termA, termB).map(t => driverHash60(driverLower(t)))
     val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per serve
-    val buckets = readBuckets(spark, indexPath, snap)
-    val ids = Seq(termA, termB).map(t => driverHash60(t.toLowerCase))
+    val buckets = readStats(indexPath, snap)("tb_buckets")
     val tbs = ids.map(_ % buckets).distinct
     val post0 = IndexLifecycle.readVisibleTable(spark, indexPath, "postings", snapshot = snap)
       .filter(col("tb").isin(tbs: _*))
@@ -466,7 +477,7 @@ object LexicalRetrieval {
     import spark.implicits._
     val watch = phrases.zipWithIndex.flatMap { case (p, pid) =>
       p.zipWithIndex.map { case (t, i) =>
-        (pid.toLong, i, driverHash60(t.toLowerCase))
+        (pid.toLong, i, driverHash60(driverLower(t)))
       }
     }.toDF("phrase_id", "term_idx", "term_id")
     val plen = phrases.zipWithIndex
@@ -491,21 +502,22 @@ object LexicalRetrieval {
   /** Index introspection — the numbers an operator checks before trusting a
     * serving index (is the corpus all here? how big is the vocabulary? are
     * deletes pending?). One row; every statistic folds from the persisted
-    * tables (df/stats partials sum — so pending deletions' NEGATIVE partials
-    * are already netted out, and the numbers describe the LOGICAL corpus the
-    * serve path scores against, not the physical bytes). */
+    * tables (df and stats partials sum — so pending deletions' NEGATIVE
+    * partials are already netted out, and the numbers describe the LOGICAL
+    * corpus the serve path scores against, not the physical bytes). */
   def describeBm25Index(spark: SparkSession, indexPath: String): DataFrame = {
     val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per read
-    val stats = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+    val stats = readStats(indexPath, snap)
     val termdf = IndexLifecycle.readVisibleTable(spark, indexPath, "termdf", snapshot = snap)
       .groupBy("term_id").agg(sum(col("df")).as("df"))
       .filter(col("df") > 0)
       .agg(count(lit(1)).as("n_terms"), sum(col("df")).as("n_postings"))
     val pendingTombstones = readTombstones(spark, indexPath, snap)
       .map(_.count()).getOrElse(0L)
-    stats.crossJoin(termdf)
-      .withColumn("tb_buckets", lit(readBuckets(spark, indexPath, snap).toLong))
+    termdf
+      .withColumn("n_docs", lit(stats("n_docs")))
+      .withColumn("sum_dl", lit(stats("sum_dl")))
+      .withColumn("tb_buckets", lit(stats("tb_buckets")))
       .withColumn("pending_tombstones", lit(pendingTombstones))
       .select("n_docs", "sum_dl", "n_terms", "n_postings", "tb_buckets",
         "pending_tombstones")
@@ -519,17 +531,26 @@ object LexicalRetrieval {
     java.lang.Long.parseLong(hex.take(15), 16)
   }
 
-  /** The bucket count the postings layout was built with — pinned in the
-    * stats rows; every batch must agree (probe pruning reads only the
-    * computed buckets, so a mixed layout would silently drop postings). */
-  private def readBuckets(spark: SparkSession, indexPath: String,
-      snap: Option[IndexLifecycle.FamilySnapshot] = None): Int = {
-    val rows = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .select("tb_buckets").distinct().collect()
-    require(rows.length == 1,
-      s"bm25 index at $indexPath has ${rows.length} distinct bucket counts")
-    rows.head.getInt(0)
-  }
+  /** Spark's own `lower`, evaluated on the driver: the index lowercases
+    * with it, so a driver-hashed query term matches the indexed term
+    * under any JVM default locale (`String.toLowerCase` would follow the
+    * locale — Turkish maps "I" to dotless "ı"). */
+  private[graft] def driverLower(s: String): String = Lower(Literal(s)).eval().toString
+
+  /** The corpus constants `n_docs`, `sum_dl` and `tb_buckets` folded over
+    * the visible scalar partials — no Spark job. Every batch must agree on
+    * `tb_buckets` (probe pruning reads only the computed buckets, so a
+    * mixed layout would silently drop postings). */
+  private def readStats(indexPath: String,
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Map[String, Long] =
+    IndexLifecycle.readScalars(indexPath, "stats", "tb_buckets", snap)
+
+  private def readBuckets(indexPath: String): Int = readStats(indexPath)("tb_buckets").toInt
+
+  /** `df` with its doc count and token total observed as `n_docs` and
+    * `sum_dl` — metrics of the one action that consumes the result. */
+  private def observeCorpus(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs, count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
 
   private def writeBm25Batch(docs: DataFrame, id: String, text: String,
       indexPath: String, batchId: String, buckets: Int,
@@ -539,10 +560,11 @@ object LexicalRetrieval {
       .select(col("doc_id"), col("toks"),
         size(col("toks")).cast("long").as("dl"))
       .persist()
-    tokd.count(): Unit // ONE tokenize pass feeds stats AND postings
-    val stats = tokd
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("tb_buckets", lit(buckets))
+    tokd.count(): Unit // ONE tokenize pass feeds doclens AND postings
+    // the corpus constants ride the doclens write, which scans every doc
+    // once (zero-token docs included)
+    val stats = Observation()
+    val doclens = observeCorpus(tokd.select("doc_id", "dl"), stats)
     // POSITIONAL postings (the Lucene layout): `positions` holds the sorted
     // 0-based token offsets of each (term, doc) — what phrase and proximity
     // queries ([[phraseTopK]]) intersect; |positions| = tf, so the column
@@ -565,10 +587,10 @@ object LexicalRetrieval {
           wholeIndex, partitionCols = Seq("tb")),
         () => IndexLifecycle.writeIndexBatch(termdf, s"$indexPath/termdf", batchId,
           wholeIndex),
-        () => IndexLifecycle.writeIndexBatch(stats, s"$indexPath/stats", batchId,
-          wholeIndex),
-        () => IndexLifecycle.writeIndexBatch(tokd.select("doc_id", "dl"),
-          s"$indexPath/doclens", batchId, wholeIndex)))
+        () => IndexLifecycle.writeIndexBatch(doclens, s"$indexPath/doclens", batchId,
+          wholeIndex)))
+      IndexLifecycle.writeObservedScalars(s"$indexPath/stats", batchId, stats, sign = 1L,
+        Map("tb_buckets" -> buckets.toLong), wholeIndex)
       // the COMMIT of a multi-table append: all four tables' partitions are
       // on disk — one atomic manifest rewrite makes the batch visible in all
       // of them at once (a crash before this line leaves it invisible; the

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Coordination, IndexLifecycle}
@@ -171,7 +171,9 @@ object LmPerplexity {
   //   bigrams/    (bg_id, ctx_id, c) partitioned by bb = pmod(bg_id, buckets)
   //   contexts/   (ctx_id, c)
   //   unigrams/   (tok_id, c)       — V = rows with folded c > 0
-  //   stats/      (n_docs, n_bigrams, bb_buckets)
+  //   stats/      n_docs, n_bigrams, bb_buckets — per-batch SCALAR
+  //               partials (IndexLifecycle.writeScalars), observed on the
+  //               docs/tombstones write and read on the driver, no job
   //   docs/       (doc_id)          — membership; never read on the score
   //                                   path, exists so deletion can refuse
   //                                   unknown ids and double-deletes
@@ -202,7 +204,7 @@ object LmPerplexity {
     * re-ingested doc would double-count itself). */
   def appendLmIndex(newDocs: DataFrame, id: String, text: String,
       indexPath: String, batchId: String): Unit = IndexLifecycle.withIndexWriter(indexPath) {
-    val buckets = readBuckets(newDocs.sparkSession, indexPath)
+    val buckets = readBuckets(indexPath)
     writeLmBatch(newDocs, id, text, indexPath, batchId, buckets,
       wholeIndex = false)
   }
@@ -216,7 +218,7 @@ object LmPerplexity {
     * shrink exactly as a rebuild-without-the-deleted-docs would produce. */
   def compactLmIndex(spark: SparkSession, indexPath: String,
       eraseDocs: DataFrame => DataFrame = identity): Unit = {
-    val buckets = readBuckets(spark, indexPath)
+    val buckets = readBuckets(indexPath)
     IndexLifecycle.compactFamily(spark, indexPath, Seq(
       ("bigrams",
         (df: DataFrame) => df.groupBy("bg_id", "ctx_id")
@@ -229,10 +231,6 @@ object LmPerplexity {
       ("unigrams",
         (df: DataFrame) => df.groupBy("tok_id")
           .agg(sum(col("c")).as("c")).filter(col("c") > 0), Nil),
-      ("stats",
-        (df: DataFrame) => df.groupBy("bb_buckets").agg(
-            sum(col("n_docs")).as("n_docs"), sum(col("n_bigrams")).as("n_bigrams"))
-          .select("n_docs", "n_bigrams", "bb_buckets"), Nil),
       ("docs",
         (df: DataFrame) => eraseDocs(df.select("doc_id").distinct()), Nil),
       // the marker table folds WITH the counts: identity under a plain
@@ -240,7 +238,8 @@ object LmPerplexity {
       // generation's base), the purge's anti-join under a purge (markers
       // retire in the same CAS that nets out their counts) — every
       // generation carries its own marker view
-      ("tombstones", eraseDocs, Nil)))
+      ("tombstones", eraseDocs, Nil)),
+      scalars = Seq("stats" -> "bb_buckets"))
   }
 
   /** UNLEARN documents from the LM — the [[LexicalRetrieval.deleteFromBm25Index]]
@@ -266,7 +265,7 @@ object LmPerplexity {
     // cleanup would delete mid-read — the LexicalRetrieval.deleteFromBm25Index
     // rationale
     val spark = docs.sparkSession
-    val buckets = readBuckets(spark, indexPath)
+    val buckets = readBuckets(indexPath)
     val member = IndexLifecycle.readVisibleTable(spark, indexPath, "docs")
       .select(col("doc_id").as("__known_id"))
     val known = docs.join(member,
@@ -283,11 +282,9 @@ object LmPerplexity {
         known(id).cast("long") === col("__ts_id"), "left_anti"))
     val tk = tokd(fresh0, id, text).persist()
     tk.count(): Unit // ONE tokenize pass feeds all four negative partials
-    val negStats = tk.agg(
-        (-count(lit(1))).as("n_docs"),
-        (-coalesce(sum(greatest(size(col("toks")).cast("long") - 1L, lit(0L))),
-          lit(0L))).as("n_bigrams"))
-      .withColumn("bb_buckets", lit(buckets))
+    // the negative stats ride the marker write, which scans every doc once
+    val negStats = Observation()
+    val markers = observeCorpus(tk, negStats).select(col("doc_id"))
     val negUnigrams = tk.select(explode(col("toks")).as("t"))
       .select(portableHash60(col("t")).as("tok_id"))
       .groupBy("tok_id").agg((-count(lit(1))).as("c"))
@@ -303,9 +300,9 @@ object LmPerplexity {
           s"$indexPath/bigrams", batchId, partitionCols = Seq("bb")),
         () => IndexLifecycle.writeIndexBatch(negContexts, s"$indexPath/contexts", batchId),
         () => IndexLifecycle.writeIndexBatch(negUnigrams, s"$indexPath/unigrams", batchId),
-        () => IndexLifecycle.writeIndexBatch(negStats, s"$indexPath/stats", batchId),
-        () => IndexLifecycle.writeIndexBatch(tk.select(col("doc_id")),
-          s"$indexPath/tombstones", batchId)))
+        () => IndexLifecycle.writeIndexBatch(markers, s"$indexPath/tombstones", batchId)))
+      IndexLifecycle.writeObservedScalars(s"$indexPath/stats", batchId, negStats, sign = -1L,
+        Map("bb_buckets" -> buckets.toLong), wholeIndex = false)
       // atomic visibility: markers and ALL four negative count partials
       // appear together — a torn unlearn can no longer hide docs while the
       // model still scores with their counts
@@ -368,12 +365,12 @@ object LmPerplexity {
     // resolve at the same generation under the same manifest (the
     // bm25TopKIndexed discipline)
     val snap = Some(IndexLifecycle.familySnapshot(indexPath))
-    val buckets = readBuckets(spark, indexPath, snap)
+    val buckets = readStats(indexPath, snap)("bb_buckets")
     val scTokd = tokd(docs, id, text).persist()
     scTokd.count(): Unit
     val scBg = bigramRows(scTokd).persist()
     scBg.count(): Unit // feeds the bucket probe AND the score join
-    val bbs = scBg.select(pmod(col("bg_id"), lit(buckets.toLong)).as("bb"))
+    val bbs = scBg.select(pmod(col("bg_id"), lit(buckets)).as("bb"))
       .distinct().collect().map(_.getLong(0))
     val bgC =
       if (bbs.isEmpty)
@@ -398,38 +395,41 @@ object LmPerplexity {
     * against (partials netted). */
   def describeLmIndex(spark: SparkSession, indexPath: String): DataFrame = {
     val snap = Some(IndexLifecycle.familySnapshot(indexPath)) // one generation per read
-    val stats = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_bigrams")).as("n_bigrams"))
+    val stats = readStats(indexPath, snap)
     val voc = IndexLifecycle.readVisibleTable(spark, indexPath, "unigrams", snapshot = snap)
       .groupBy("tok_id").agg(sum(col("c")).as("c")).filter(col("c") > 0)
       .agg(count(lit(1)).as("vocab"))
     val bgt = IndexLifecycle.readVisibleTable(spark, indexPath, "bigrams", snapshot = snap)
       .groupBy("bg_id").agg(sum(col("c")).as("c")).filter(col("c") > 0)
       .agg(count(lit(1)).as("bigram_types"))
-    stats.crossJoin(voc).crossJoin(bgt)
-      .withColumn("bb_buckets", lit(readBuckets(spark, indexPath, snap).toLong))
-      .select("n_docs", "n_bigrams", "vocab", "bigram_types", "bb_buckets")
+    voc.crossJoin(bgt)
+      .select(lit(stats("n_docs")).as("n_docs"), lit(stats("n_bigrams")).as("n_bigrams"),
+        col("vocab"), col("bigram_types"), lit(stats("bb_buckets")).as("bb_buckets"))
   }
 
-  private def readBuckets(spark: SparkSession, indexPath: String,
-      snap: Option[IndexLifecycle.FamilySnapshot] = None): Int = {
-    val rows = IndexLifecycle.readVisibleTable(spark, indexPath, "stats", snapshot = snap)
-      .select("bb_buckets").distinct().collect()
-    require(rows.length == 1,
-      s"LM index at $indexPath has ${rows.length} distinct bucket counts")
-    rows.head.getInt(0)
-  }
+  /** `n_docs`, `n_bigrams` and `bb_buckets` folded over the visible scalar
+    * partials — no Spark job; every batch must agree on `bb_buckets`. */
+  private def readStats(indexPath: String,
+      snap: Option[IndexLifecycle.FamilySnapshot] = None): Map[String, Long] =
+    IndexLifecycle.readScalars(indexPath, "stats", "bb_buckets", snap)
+
+  private def readBuckets(indexPath: String): Int = readStats(indexPath)("bb_buckets").toInt
+
+  /** `tk` with its doc count and bigram positions observed as `n_docs` and
+    * `n_bigrams` — metrics of the one action that consumes the result. */
+  private def observeCorpus(tk: DataFrame, obs: Observation): DataFrame =
+    tk.observe(obs, count(lit(1)).as("n_docs"),
+      coalesce(sum(greatest(size(col("toks")).cast("long") - 1L, lit(0L))), lit(0L))
+        .as("n_bigrams"))
 
   private def writeLmBatch(docs: DataFrame, id: String, text: String,
       indexPath: String, batchId: String, buckets: Int,
       wholeIndex: Boolean): Unit = {
     val tk = tokd(docs, id, text).persist()
-    tk.count(): Unit // ONE tokenize pass feeds stats, unigrams AND bigrams
-    val stats = tk.agg(
-        count(lit(1)).as("n_docs"),
-        coalesce(sum(greatest(size(col("toks")).cast("long") - 1L, lit(0L))),
-          lit(0L)).as("n_bigrams"))
-      .withColumn("bb_buckets", lit(buckets))
+    tk.count(): Unit // ONE tokenize pass feeds docs, unigrams AND bigrams
+    // the stats ride the membership write, which scans every doc once
+    val stats = Observation()
+    val members = observeCorpus(tk, stats).select(col("doc_id"))
     val unigrams = tk.select(explode(col("toks")).as("t"))
       .select(portableHash60(col("t")).as("tok_id"))
       .groupBy("tok_id").agg(count(lit(1)).as("c"))
@@ -447,10 +447,10 @@ object LmPerplexity {
           wholeIndex),
         () => IndexLifecycle.writeIndexBatch(unigrams, s"$indexPath/unigrams", batchId,
           wholeIndex),
-        () => IndexLifecycle.writeIndexBatch(stats, s"$indexPath/stats", batchId,
-          wholeIndex),
-        () => IndexLifecycle.writeIndexBatch(tk.select(col("doc_id")), s"$indexPath/docs",
-          batchId, wholeIndex)))
+        () => IndexLifecycle.writeIndexBatch(members, s"$indexPath/docs", batchId,
+          wholeIndex)))
+      IndexLifecycle.writeObservedScalars(s"$indexPath/stats", batchId, stats, sign = 1L,
+        Map("bb_buckets" -> buckets.toLong), wholeIndex)
       if (wholeIndex) Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
       else IndexLifecycle.commitVisibleBatch(indexPath, batchId) // all five tables landed
     }

@@ -540,7 +540,7 @@ object TextAnalysis {
       .persist()
     occ.count(): Unit
 
-    val indexed = spark.read.parquet(IndexLifecycle.resolveIndexDir(indexPath))
+    val indexed = IndexLifecycle.readIndexTable(spark, indexPath)
       .filter(col("batch") =!= lit(batchId)).select(col("pid"))
     val hitOld = occ.join(indexed, Seq("pid"), "left_semi")
       .select(col("doc_id"), col("pos"))

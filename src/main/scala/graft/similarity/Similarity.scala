@@ -189,7 +189,7 @@ object Similarity {
     val centroids = spark.read.parquet(s"$indexPath/centroids")
       .select(col("cell").cast("int").as("cell"), col("centroid"))
     val assigned =
-      spark.read.parquet(graft.core.IndexLifecycle.resolveIndexDir(s"$indexPath/vectors"))
+      graft.core.IndexLifecycle.readIndexTable(spark, s"$indexPath/vectors")
       .select(col("doc_id").as("nbr_id"), col("cell").cast("int").as("cell"), col("v").as("cv"))
     val q = queries.select(col(id).as("query_id"), col(vec).as("qv"))
     val probes = q.join(broadcast(centroids), lit(true))
@@ -446,8 +446,7 @@ object Similarity {
       nProbeTop: Int = 2): DataFrame = {
     val geo = loadGeometry(spark, indexPath, nProbeTop)
 
-    val assigned0 = spark.read
-      .parquet(graft.core.IndexLifecycle.resolveIndexDir(s"$indexPath/vectors"))
+    val assigned0 = graft.core.IndexLifecycle.readIndexTable(spark, s"$indexPath/vectors")
       .select(col("doc_id"), col("cell").cast("int").as("cell"), col("v"))
     // labels ride the assignment rows: ONE narrow join here instead of two
     // per-side joins against the expanded candidate set later
@@ -524,7 +523,7 @@ object Similarity {
       candidateSink, labels = None, nProbeTop = nProbeTop)
     val p = edges.localCheckpoint(eager = true)
     val probes = loadGeometry(spark, indexPath, nProbeTop).probeCells(
-      spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$indexPath/vectors")),
+      IndexLifecycle.readIndexTable(spark, s"$indexPath/vectors"),
       "doc_id", "v", nProbe)
     IndexLifecycle.inParallel(Seq(
       () => IndexLifecycle.writeIndexBatch(p.withColumn("gen", lit(0L)),
@@ -588,8 +587,7 @@ object Similarity {
     newAssigned.count(): Unit
     val newProbes = geo.probeCells(newKeyed, "doc_id", "v", nProbe)
 
-    val oldVecs = spark.read
-      .parquet(IndexLifecycle.resolveIndexDir(s"$indexPath/vectors"))
+    val oldVecs = IndexLifecycle.readIndexTable(spark, s"$indexPath/vectors")
       .filter(col("batch") =!= lit(batchId))
       .select(col("doc_id"), col("cell"), col("v"))
     val allAssigned = oldVecs.unionByName(newAssigned)

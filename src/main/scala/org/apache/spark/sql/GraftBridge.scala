@@ -28,6 +28,11 @@ object GraftBridge {
       expressions.UserDefinedAggregator(agg, inputEnc), children)
       .toAggregateExpression()
 
+  /** `dataType.asNullable` (private[spark]): the schema a file-source read
+    * reports for files written with `schema` — every field, element and
+    * map value nullable, as `DataSource.resolveRelation` declares it. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Release the storage behind a checkpointed frame once no later iterate
     * references it. `Dataset.unpersist` only covers `cache()`/`persist()`;
     * a local checkpoint pins its materialized RDD until the session dies —

@@ -112,9 +112,18 @@ class LexicalRetrievalSpec extends SparkSpec {
     assert(serve(inc) == expected, "pre-compaction append must match")
     LexicalRetrieval.compactBm25Index(spark, inc)
     assert(serve(inc) == expected, "post-compaction serve must match")
-    // compaction folded the partials: one stats row, one df row per term
-    val stats = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$inc/stats"))
-    assert(stats.count() == 1, "stats partials folded to one row")
+    // compaction folded the partials: one scalar stats partial holding the
+    // whole corpus's constants, one df row per term
+    val statsLayout = java.nio.file.Paths.get(IndexLifecycle.resolveIndexDir(s"$inc/stats"))
+    val partials = {
+      val ls = java.nio.file.Files.list(statsLayout)
+      try { import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("batch=")).toSet }
+      finally ls.close()
+    }
+    assert(partials == Set("batch=base.scalars"), s"stats partials folded to one: $partials")
+    assert(IndexLifecycle.readScalars(inc, "stats", "tb_buckets") ==
+      IndexLifecycle.readScalars(whole, "stats", "tb_buckets"))
     val termdf = spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$inc/termdf"))
     assert(termdf.groupBy("term_id").count().filter(col("count") > 1).isEmpty,
       "df partials folded to one row per term")
@@ -240,6 +249,31 @@ class LexicalRetrievalSpec extends SparkSpec {
         Seq((1L, Seq("zzznope")), (2L, Seq("merge"))).toDF("query_id", "terms"))
       .select("query_id").distinct().as[Long].collect().toSet
     assert(out == Set(2L), s"got $out")
+  }
+
+  test("driver-hashed query terms match the index under a Turkish default locale") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("bm25_locale_").toString
+    LexicalRetrieval.buildBm25Index(corpus.toDF("doc_id", "text"), "doc_id", "text", idx)
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // "FILTER".toLowerCase is "fılter" (dotless ı) here; the index holds
+      // Spark's `lower`, "filter"
+      val phrase = LexicalRetrieval.phraseTopK(spark, idx, Seq("SCAN", "FILTER"))
+        .select("doc_id").as[Long].collect().toSeq
+      assert(phrase == Seq(3L), s"phrase hits $phrase")
+      val near = LexicalRetrieval.proximityTopK(spark, idx, "FILTER", "Spark", window = 3)
+        .select("doc_id").as[Long].collect().toSeq
+      assert(near == Seq(3L), s"proximity hits $near")
+      val ranked = LexicalRetrieval.bm25TopKIndexed(spark, idx,
+          Seq((1L, Seq("FILTER"))).toDF("query_id", "terms"))
+        .select("doc_id").as[Long].collect().toSeq
+      assert(ranked == Seq(3L), s"bm25 hits $ranked")
+      val scanned = LexicalRetrieval.phraseScan(corpus.toDF("doc_id", "text"), "doc_id", "text",
+          Seq(Seq("SCAN", "FILTER"))).select("doc_id").as[Long].collect().toSeq
+      assert(scanned == Seq(3L), s"watchlist hits $scanned")
+    } finally java.util.Locale.setDefault(saved)
   }
 
   test("phraseTopK intersects positions exactly: overlaps, 3-grams, absences, deletions") {
@@ -405,6 +439,12 @@ class LexicalRetrievalSpec extends SparkSpec {
       assert(l.size == 1 && l.head.startsWith("_v"),
         s"vacuum must leave only the current version of $t: $l")
     }
+    // the scalar stats layout is swept like the parquet ones: the flat
+    // `batch=*.scalars` partials of the build are gone, the current
+    // generation holds the one folded partial
+    assert(layouts("stats").forall(_.startsWith("_v")))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+      IndexLifecycle.resolveIndexDir(s"$idx/stats"), "batch=base.scalars")))
     assert(serve(idx) == expected, "serving unchanged by the vacuum")
   }
 

@@ -103,10 +103,9 @@ class StreamingDsirSpec extends SparkSpec {
     val idx = s"$root/model"
     Dsir.buildDsirIndex(docs(target: _*), docs(poolBase: _*),
       "doc_id", "text", idx, buckets = 128)
-    // forge a second stats batch with a different bucket count
-    import spark.implicits._
-    Seq((1L, 1L, 512)).toDF("t_occ", "r_occ", "buckets")
-      .write.parquet(s"$idx/stats/batch=bogus")
+    // forge a second scalar stats partial with a different bucket count
+    graft.core.IndexLifecycle.writeScalars(s"$idx/stats", "bogus",
+      Map("t_occ" -> 1L, "r_occ" -> 1L, "buckets" -> 512L))
     // UNCOMMITTED (torn/foreign) partitions are invisible by the batch
     // manifest — scoring keeps working against the committed model
     assert(Dsir.importanceIndexed(spark, idx, docs(10L -> "alpha"),
