@@ -3,6 +3,8 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 /** The MULTI-DRIVER coordination seam. Every writer-side arbitration in
   * the engine funnels through exactly two primitives:
   *
@@ -66,6 +68,23 @@ object Coordination {
       Some(new String(Files.readAllBytes(pointer), StandardCharsets.UTF_8).trim)
     else None
 
+  /** The entries of `dir`; none when it is not a directory. */
+  private[graft] def listDir(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.toList finally ls.close()
+    }
+
+  /** Replace `p` with `text` atomically: written to the sibling
+    * `<name>.tmp`, then renamed over it. */
+  private[graft] def writeAtomically(p: Path, text: String): Unit = {
+    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING): Unit
+  }
+
   /** Promote stages and publish the pointer — the commit tail every
     * implementation shares once its own arbitration admitted the writer.
     * A final dir already present at promotion is debris from a CRASHED
@@ -77,10 +96,7 @@ object Coordination {
       deleteRecursively(dst)
       Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
     }
-    val tmp = dir.resolve(pointerName + ".tmp")
-    Files.write(tmp, next.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(pointerName), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING): Unit
+    writeAtomically(dir.resolve(pointerName), next)
   }
 
   private[core] def mismatch(pointer: Path, expected: Option[String],

@@ -49,6 +49,14 @@ import graft.operators.LatestPerKey
   * a COMPARE-AND-SWAP against the version the rewrite derived from
   * ([[OptimisticPointer]]) — concurrent writers cannot silently clobber
   * each other; the loser fails loudly.
+  *
+  * The online store has ONE format, typed KV. It is derived data: a
+  * version an earlier build wrote (a parquet snapshot — no `schema=` line
+  * in `_meta`, no typed KV header) is not read; every read of it throws,
+  * naming `refreshOnline(describeGroup(g), None)`, which rebuilds LATEST
+  * from the offline history alone. The next ingest or delete on such a
+  * group rebuilds from history too. The superseded versions stay on disk,
+  * unreadable, until `gcOnline(g, keep = 1)` removes them.
   */
 /** @param maxServingCacheRows upper bound on the DRIVER-side serving cache:
   *   a snapshot with more entity keys than this is never collected — lookups
@@ -649,20 +657,14 @@ final class FeatureStore(spark: SparkSession, root: String,
     * [[offlineAsOf]]/[[historicalQueryAsOf]]). None when no ingest had
     * committed yet — or for groups whose ingests predate the seq log (the
     * seq form still works there; `_ingest_seq` is as old as the store). */
-  def ingestSeqAt(groupName: String, asOf: java.time.Instant): Option[Long] = {
-    val d = seqLogDir(groupName)
-    if (!Files.exists(d)) return None
-    import scala.jdk.CollectionConverters._
-    val ls = Files.list(d)
-    val marks = try ls.iterator().asScala.flatMap { p =>
+  def ingestSeqAt(groupName: String, asOf: java.time.Instant): Option[Long] =
+    Coordination.listDir(seqLogDir(groupName)).flatMap { p =>
       p.getFileName.toString.split("-") match {
         case Array("seq", s, t) if s.forall(_.isDigit) && t.forall(_.isDigit) =>
           Some((s.toLong, t.toLong))
         case _ => None
       }
-    }.toList finally ls.close()
-    marks.filter(_._2 <= asOf.toEpochMilli).map(_._1).maxOption
-  }
+    }.filter(_._2 <= asOf.toEpochMilli).map(_._1).maxOption
 
   private val metrics = new java.util.concurrent.ConcurrentHashMap[String, IngestMetrics]()
 
@@ -710,11 +712,11 @@ final class FeatureStore(spark: SparkSession, root: String,
     * I/O per commit instead of O(store), the shape a minute-level
     * micro-batch cadence over 10⁹ keys requires (VERDICT r9 missing #1).
     * Falls back to a full rewrite when: no previous snapshot; no batch
-    * (explicit rebuild from history); the snapshot predates bucket meta or
-    * typed KV (a parquet-format version: this rewrite upgrades it); the
-    * schema evolved since the snapshot (addFeature); the batch has
-    * null keys; or the store outgrew its bucket count (the rebucketing
-    * commit — see `targetKeysPerBucket`). */
+    * (explicit rebuild from history — the one-call rebuild of a version an
+    * earlier build wrote); the snapshot's bucket meta does not parse; the
+    * schema evolved since the snapshot (addFeature), or an earlier build
+    * wrote it; the batch has null keys; or the store outgrew its bucket
+    * count (the rebucketing commit — see `targetKeysPerBucket`). */
   def refreshOnline(g: FeatureGroup, batch: Option[DataFrame],
       firstIngestKeys: Option[Long] = None): Unit = {
     val base = latestState(g) // the version this refresh derives from
@@ -767,9 +769,9 @@ final class FeatureStore(spark: SparkSession, root: String,
         } finally bb.unpersist(false): Unit
       case None =>
         // full rewrite: bucket count re-derived from the previous version's
-        // recorded key count; with no prior meta (bootstrap / legacy
-        // snapshot) it is derived from the COMPUTED latest frame inside
-        // fullRefresh — without that, a large store's first commit lands at
+        // recorded key count; with no parseable prior meta (bootstrap /
+        // corrupt `_meta`) it is derived from the COMPUTED latest frame
+        // inside fullRefresh — without that, a large store's first commit lands at
         // the 64-bucket floor and its second commit pays a guaranteed
         // full rebucketing rewrite (measured: a 64-key batch into a fresh
         // 1M-key store cost the whole store again)
@@ -793,14 +795,16 @@ final class FeatureStore(spark: SparkSession, root: String,
     // the version this rewrite derives from and CASes against, read once —
     // never a re-resolved LATEST a racing commit may have moved
     val base = (baseState, batch) match {
-      case (Some(bs), Some(b)) =>
+      case (Some(bs), Some(b)) if bs.typed =>
         // maskSince on the snapshot side: a full refresh crossing a
         // drop/re-add boundary must NOT carry the orphaned pre-drop values
         // into the rewritten snapshot (conformToDeclared era-resolves
         // names but cannot see `since`; identity for never-evolved
         // groups — round-12 review finding)
         declaredVersion(g, bs).unionByName(maskSince(g, conformToDeclared(g, b)))
-      case (_, _) => conformToDeclared(g, offline(g.name)) // offline() masks
+      // no base, no batch, or a base this build does not read: history
+      // alone (it holds the batch, which ingest appended first)
+      case _ => conformToDeclared(g, offline(g.name)) // offline() masks
     }
     val latest0 = LatestPerKey.viaMaxBy(base, Seq(g.keyCol), g.eventTimeCol,
       Seq(EngineColumns.IngestSeq))
@@ -812,9 +816,9 @@ final class FeatureStore(spark: SparkSession, root: String,
       // full width
       case Some(b) => commitOnlineSnapshot(g, latest0, baseVersion, b, bootstrap)
       case None =>
-        // non-ingest bootstrap (explicit rebuild, legacy snapshot): size
-        // the bucket count from the actual key count (one spill-safe
-        // persist + count; these refreshes are rare and this saves the
+        // non-ingest bootstrap (no base, or a base without a parseable
+        // `_meta`): size the bucket count from the actual key count (one
+        // spill-safe persist + count; these refreshes are rare and this saves the
         // otherwise-certain O(store) rebucket on the next commit)
         val p = latest0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -827,7 +831,7 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   /** Write `latest` as the next online snapshot version and atomically
     * advance the LATEST pointer (shared by [[fullRefresh]] and
-    * [[deleteRecords]]' legacy path). `baseVersion` is the version the
+    * [[deleteRecords]]' full rewrite). `baseVersion` is the version the
     * snapshot DERIVED from (None = no snapshot existed): the commit is a
     * compare-and-swap against it, so two concurrent writers can never
     * silently clobber each other — the loser throws, the store stays on
@@ -927,10 +931,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     * is untouched by construction). A filesystem without hard links gets a
     * copy: correct everywhere, O(bytes) — on an object store the real
     * implementation is a manifest entry, and this is where it plugs in. */
-  private def linkUntouched(baseDir: Path, staged: Path, touched: Set[Long]): Unit = {
-    import scala.jdk.CollectionConverters._
-    val ls = Files.list(baseDir.resolve("_serving"))
-    try ls.iterator().asScala.foreach { f =>
+  private def linkUntouched(baseDir: Path, staged: Path, touched: Set[Long]): Unit =
+    Coordination.listDir(baseDir.resolve("_serving")).foreach { f =>
       if (FeatureStore.kvBucketOf(f).exists(b => !touched.contains(b))) {
         val dst = staged.resolve("_serving").resolve(f.getFileName.toString)
         try Files.createLink(dst, f): Unit
@@ -940,8 +942,6 @@ final class FeatureStore(spark: SparkSession, root: String,
         }
       }
     }
-    finally ls.close()
-  }
 
   private def versionDirOf(name: String, v: Long): Path =
     onlineDir(name).resolve(s"v$v")
@@ -971,11 +971,22 @@ final class FeatureStore(spark: SparkSession, root: String,
   private final class OnlineVersion(val g: FeatureGroup, val v: Long) {
     val dir: Path = versionDirOf(g.name, v)
     val meta: FeatureStore.VersionMeta = FeatureStore.parseMeta(dir)
-    /** The version's KV entry columns; None for an earlier build's parquet
-      * snapshot. A `_meta` without a `schema` line (an earlier build's, or
-      * a torn one) asks the KV headers, and earlier builds' fail the magic. */
-    val kvColumns: Option[Seq[(String, FType)]] =
+    /** The version's KV entry columns: `_meta`'s `schema` line, or for a
+      * `_meta` that lost its last lines the first KV header that parses. */
+    private val kvColumns: Option[Seq[(String, FType)]] =
       meta.columns.orElse(FeatureStore.kvHeaderColumns(dir.resolve("_serving")))
+    /** Is the version typed KV, the one format this build reads? If not,
+      * every read of it throws ([[columns]]), and a full rewrite over it
+      * takes its rows from history: the version is only its CAS base and
+      * its `_meta` bucket sizing. */
+    def typed: Boolean = kvColumns.isDefined
+    /** The columns to read the version with; throws for a version an
+      * earlier build wrote, naming the one-call rebuild. */
+    def columns: Seq[(String, FType)] = kvColumns.getOrElse(throw new IllegalStateException(
+      s"online version v$v of feature group ${g.name} was written by an earlier build " +
+        "in a format this build does not read: rebuild it from the offline history with " +
+        s"refreshOnline(describeGroup(\"${g.name}\"), None), then gcOnline(\"${g.name}\", 1) " +
+        "removes the old versions"))
     /** [[loadServing]]'s answer, single-flight: concurrent first readers
       * wait for the one load, and a load that throws is retried by the
       * next reader (a lazy val's initializer is locked and retried). */
@@ -1007,14 +1018,13 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   /** Does version `s`'s layout encode exactly the CURRENT declared view?
     * True ⇒ its KV entries and carried-forward buckets are authoritative
-    * (typed KV committed under this very fingerprint, and commits
-    * materialize masking/era resolution). False ⇒ some evolution happened
-    * since, or the version is an earlier build's parquet snapshot: serve
-    * the declared view ([[declaredVersion]] masks and era-resolves at read
-    * time) and take the FULL refresh on the next commit, which writes typed
-    * KV. */
+    * (committed under this very fingerprint, and commits materialize
+    * masking/era resolution). False ⇒ some evolution happened since (or an
+    * earlier build wrote the version: its `_meta` has no `kvfp` line):
+    * serve the declared view ([[declaredVersion]] masks and era-resolves
+    * at read time) and take the FULL refresh on the next commit. */
   private def snapshotSchemaMatches(g: FeatureGroup, s: OnlineVersion): Boolean =
-    s.kvColumns.isDefined && s.meta.fp.contains(FeatureStore.declaredFingerprint(g))
+    s.meta.fp.contains(FeatureStore.declaredFingerprint(g))
 
   /** A full rewrite's bucket count, from the base version's recorded key
     * count — a schema mismatch distrusts the version's LAYOUT, not its
@@ -1029,40 +1039,21 @@ final class FeatureStore(spark: SparkSession, root: String,
   /** The ONE reader of online version `s`: the given key buckets, or with
     * `buckets` None every bucket of the version (the null-key row too), in
     * the version's own columns — [[declaredVersion]] resolves eras by the
-    * names the rows were written under. A typed KV version reads its
-    * buckets' files through a [[FeatureStore.KvRelation]]: building the
-    * frame lists no directory, launches no job, and a bucket set with no
-    * file is an empty frame. A parquet-format version (an earlier build's
-    * snapshot) reads its files' own schema, pruned by bucket; with no
-    * bucket dir at all (every key deleted) it is an empty frame of the
-    * declared columns, as earlier builds read it. This is the version
-    * exactly as committed ([[onlineAt]]); every served answer reads it
-    * through [[declaredVersion]]. */
-  private def readVersion(g: FeatureGroup, s: OnlineVersion,
-      buckets: Option[Iterable[Long]] = None): DataFrame = {
-    def kvFrame(cols: Seq[(String, FType)], files: Seq[Path]): DataFrame =
-      spark.baseRelationToDataFrame(new FeatureStore.KvRelation(spark.sqlContext, cols, files))
-    s.kvColumns match {
-      case Some(cols) =>
-        val servingDir = s.dir.resolve("_serving")
-        kvFrame(cols, buckets match {
-          case Some(bs) => bs.toSeq.sorted.map(b => servingDir.resolve(s"bucket=$b.kv"))
-            .filter(Files.exists(_))
-          case None => FeatureStore.kvFiles(servingDir)
-        })
-      case None =>
-        import scala.jdk.CollectionConverters._
-        val ls = Files.list(s.dir)
-        val noDirs = try !ls.iterator().asScala
-          .exists(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "="))
-          finally ls.close()
-        if (noDirs) kvFrame(FeatureStore.versionColumns(g), Nil)
-        else {
-          val all = spark.read.parquet(s.dir.toString)
-          buckets.fold(all)(bs => all.filter(col(EngineColumns.KeyBucket).isInCollection(bs.toSeq)))
-            .drop(EngineColumns.KeyBucket)
-        }
-    }
+    * names the rows were written under. It reads the buckets' KV files
+    * through a [[FeatureStore.KvRelation]]: building the frame lists no
+    * directory, launches no job, and a bucket set with no file is an empty
+    * frame. A version an earlier build wrote throws
+    * ([[OnlineVersion.columns]]). This is the version exactly as committed
+    * ([[onlineAt]]); every served answer reads it through
+    * [[declaredVersion]]. */
+  private def readVersion(s: OnlineVersion, buckets: Option[Iterable[Long]] = None): DataFrame = {
+    val servingDir = s.dir.resolve("_serving")
+    spark.baseRelationToDataFrame(new FeatureStore.KvRelation(spark.sqlContext, s.columns,
+      buckets match {
+        case Some(bs) => bs.toSeq.sorted.map(b => servingDir.resolve(s"bucket=$b.kv"))
+          .filter(Files.exists(_))
+        case None => FeatureStore.kvFiles(servingDir)
+      }))
   }
 
   /** Version `s` as declared group `g` serves it: the features in `g`
@@ -1073,7 +1064,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     * Identity up to casts for a version committed under `g`'s fingerprint. */
   private def declaredVersion(g: FeatureGroup, s: OnlineVersion,
       buckets: Option[Iterable[Long]] = None): DataFrame =
-    maskSince(g, conformToDeclared(g, readVersion(g, s, buckets)))
+    maskSince(g, conformToDeclared(g, readVersion(s, buckets)))
 
   // ---- reads ----
 
@@ -1227,8 +1218,7 @@ final class FeatureStore(spark: SparkSession, root: String,
         // as refreshOnline): a delete landing between a drop/re-add/rename/
         // widen and the next commit would otherwise stamp the current
         // fingerprint onto a version whose KV entries still hold the
-        // pre-evolution view (round-12 review follow-up); a parquet-format
-        // base takes the full rewrite too, which upgrades it to typed KV
+        // pre-evolution view (round-12 review follow-up)
         bs.meta.layout.filter(_ => snapshotSchemaMatches(g, bs)) match {
           case Some((buckets, counts)) =>
             // INCREMENTAL delete: keys live only in their own buckets, so
@@ -1240,15 +1230,19 @@ final class FeatureStore(spark: SparkSession, root: String,
               .distinct().collect()
               .map(_.get(0).asInstanceOf[Number].longValue).toSet
             if (touched.nonEmpty) {
-              val snapTouched = readVersion(g, bs, Some(touched))
+              val snapTouched = readVersion(bs, Some(touched))
               commitIncremental(g, bs.v, buckets, counts, touched,
                 snapTouched.join(hinted,
                   snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"),
                 touched.iterator.map(counts.getOrElse(_, 0L)).sum)
             }
+          case None if !bs.typed =>
+            // a base an earlier build wrote: rebuild from history, which
+            // the markers just written already filter
+            fullRefresh(g, None, Some(bs), rewriteBuckets(Some(bs)))
           case None =>
-            // legacy meta, a parquet-format base OR evolution since the base
-            // version: full rewrite, CONFORMED + MASKED so the new version's
+            // unparseable meta OR evolution since the base version: full
+            // rewrite, CONFORMED + MASKED so the new version's
             // entries and fingerprint stamp present the declared view
             val conformed = declaredVersion(g, bs)
             // bucket count still derives from the base version's recorded
@@ -1284,14 +1278,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     * snapshot remains readable exactly as it was served — audits ("what did
     * the model see at version N?"), A/B rollbacks, and training-serving skew
     * forensics. Superseded versions persist until [[gcOnline]]. */
-  def onlineVersions(name: String): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(onlineDir(name))) return Seq.empty
-    val ls = Files.list(onlineDir(name))
-    try ls.iterator().asScala.flatMap(p => IndexLifecycle.versionOf("v")(p.getFileName.toString))
-      .toSeq.sorted
-    finally ls.close()
-  }
+  def onlineVersions(name: String): Seq[Long] =
+    Coordination.listDir(onlineDir(name))
+      .flatMap(p => IndexLifecycle.versionOf("v")(p.getFileName.toString)).sorted
 
   /** The online snapshot EXACTLY as served at `version` (see [[onlineVersions]]). */
   def onlineAt(name: String, version: Long): DataFrame = {
@@ -1299,7 +1288,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     // the cached state when `version` is the latest this instance
     // resolved; any other version is parsed on demand and not cached
     val g = describeGroup(name)
-    readVersion(g, Option(states.get(name)).filter(_.v == version)
+    readVersion(Option(states.get(name)).filter(_.v == version)
       .getOrElse(new OnlineVersion(g, version)))
   }
 
@@ -1396,7 +1385,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     * regardless of bucket size (servingBench's `bucket_pruned` row) — and
     * renders the decoded row like a cache hit. A job serves only a version
     * whose entries are not the declared view (an evolution since its
-    * commit, or a parquet-format version), a store with no version at all,
+    * commit), a store with no version at all,
     * and a torn bucket file, which DEGRADES to latest-per-key derived from
     * history rather than failing the lookup. Every path looks a key up by
     * its string form, so a null key is not addressable: `null` asks for the
@@ -1455,8 +1444,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     * [[batchGetRecords]]: the KV files of the keys' buckets (one open per
     * bucket, no Spark job) of a version whose entries are the declared
     * view; else ONE bucket-pruned job over the keys' buckets — an evolved
-    * or parquet-format version ([[declaredVersion]] serves the declared
-    * view); else an unpruned job when the bucket meta is corrupt (a
+    * version ([[declaredVersion]] serves the declared view); else an
+    * unpruned job when the bucket meta is corrupt (a
     * guessed modulus would answer present keys as authoritatively absent);
     * else, with no version at all (`state` None) or a torn KV file in the
     * version ([[FeatureStore.TornKvFile]]: it holds no second copy of its
@@ -1482,8 +1471,8 @@ final class FeatureStore(spark: SparkSession, root: String,
     def history = jobPath(offline(g.name).drop(EngineColumns.IngestDate))
     state match {
       case Some(s) =>
-        try s.meta.lookupBuckets match {
-          case Some(buckets) =>
+        try s.meta.layout match {
+          case Some((buckets, _)) =>
             val byBucket = skeys.groupBy(FeatureStore.keyBucketOf(_, buckets))
             if (snapshotSchemaMatches(g, s))
               byBucket.flatMap { case (b, ks) => servingKvScan(g, s, b, ks) }
@@ -1628,12 +1617,7 @@ final class FeatureStore(spark: SparkSession, root: String,
       // compaction after CURRENT already moved — or destroy the live
       // job's staging (round-12 review)
       val tombstoneFilesAtPlan: List[Path] =
-        if (Files.exists(tombstoneDir(groupName))) {
-          import scala.jdk.CollectionConverters._
-          val ls = Files.list(tombstoneDir(groupName))
-          try ls.iterator().asScala.filterNot(Files.isDirectory(_)).toList
-          finally ls.close()
-        } else Nil
+        Coordination.listDir(tombstoneDir(groupName)).filterNot(Files.isDirectory(_)).toList
       val foldInput = offline(groupName) // declared-schema read: compaction also materializes post-evolution columns (incl. the widen cast via eraColumn)
       foldInput
         // estimate-derived width (r13-opt, IndexLifecycle.writeWidth): the
@@ -1676,11 +1660,9 @@ final class FeatureStore(spark: SparkSession, root: String,
         writeManifest(mEnd.group, mEnd.nextSeq, mEnd.lastBatchId,
           remaining, mEnd.widening, mEnd.epoch + 1)
     }
-    if (Files.exists(tombstoneDir(groupName))) {
-      val ls = Files.list(tombstoneDir(groupName))
-      val empty = try !ls.iterator().hasNext finally ls.close()
-      if (empty) Files.delete(tombstoneDir(groupName))
-    }
+    if (Files.isDirectory(tombstoneDir(groupName)) &&
+        Coordination.listDir(tombstoneDir(groupName)).isEmpty)
+      Files.delete(tombstoneDir(groupName))
     val files = Files.walk(finalNextDir)
     try files.filter(p => p.toString.endsWith(".parquet")).count()
     finally files.close()
@@ -1831,10 +1813,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     val json =
       s"""{"name":${q(g.name)},"keyCol":${q(g.keyCol)},"eventTimeCol":${q(g.eventTimeCol)},
          |"nextSeq":$nextSeq,"lastBatchId":$lastBatchId,"epoch":$epoch$lingeringJson$wideningJson,"features":$feats}""".stripMargin
-    val tmp = groupDir(g.name).resolve("manifest.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(g.name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Coordination.writeAtomically(manifestPath(g.name), json)
   }
 
   private def readManifest(name: String): Manifest = {
@@ -1868,7 +1847,7 @@ final class FeatureStore(spark: SparkSession, root: String,
 }
 
 object FeatureStore {
-  /** MINIMUM (and legacy default) bucket count of the online snapshot's
+  /** MINIMUM bucket count of the online snapshot's
     * key-hash partitioning. Each VERSION records its own bucket count in
     * `v<N>/_meta` — commits derive it from the previous version's key
     * count (see `targetKeysPerBucket`), so per-bucket size stays bounded
@@ -1885,8 +1864,9 @@ object FeatureStore {
     * bucket's KV file in the single-digit-MB range at typical row widths. */
   val DefaultTargetKeysPerBucket = 1L << 16
 
-  /** Serving KV file magic ("GKV3": typed values; earlier builds'
-    * "GKV2" files held wire strings and are never parsed). */
+  /** Serving KV file magic ("GKV3": typed values). Earlier builds'
+    * "GKV2" files held wire strings and fail it: their version is
+    * unreadable until `refreshOnline` rebuilds it. */
   private[core] val KvMagic = 0x474B5633
   /** Sparse-index trailer magic ("GKIX"). */
   private[core] val KvIndexMagic = 0x474B4958
@@ -1923,49 +1903,39 @@ object FeatureStore {
   /** A committed version's `_meta`, parsed once ([[parseMeta]]).
     * @param layout the bucket count the snapshot was written with (the read
     *   side MUST hash with the same modulus) and the per-bucket key counts
-    *   incremental commits maintain the total from. None for a version
-    *   without a `_meta` (written before it) or with one that does not
-    *   parse: commits take the full rewrite.
-    * @param lookupBuckets the modulus lookups hash keys with — the fixed
-    *   [[OnlineKeyBuckets]] a legacy version was written with; None when a
-    *   `_meta` EXISTS but does not parse, so the layout cannot be trusted
-    *   at all: a guessed modulus would answer a present key as
-    *   authoritatively absent, so lookups scan unpruned until the next
-    *   full refresh rewrites the meta.
+    *   incremental commits maintain the total from. None when `_meta` is
+    *   missing or does not parse: a guessed modulus would answer a present
+    *   key as authoritatively absent, so lookups scan unpruned and the next
+    *   commit takes the full rewrite.
     * @param fp the `kvfp` line: the declared fingerprint at commit time.
     * @param columns the `schema` line: the version's KV entry columns and
-    *   their types. Present exactly when the version is typed KV; a version
-    *   an earlier build wrote has none. */
+    *   their types. A version an earlier build wrote has none. */
   private[core] final case class VersionMeta(layout: Option[(Long, Map[Long, Long])],
-      lookupBuckets: Option[Long], fp: Option[String], columns: Option[Seq[(String, FType)]])
+      fp: Option[String], columns: Option[Seq[(String, FType)]])
 
-  /** The ONE parser of a version's `_meta`. An unreadable file parses like
-    * one without lines — an untrusted layout degrades to the slower path,
-    * it never crashes a refresh or a lookup. */
+  /** The ONE parser of a version's `_meta`. A missing or unreadable file
+    * parses like one without lines — an untrusted layout degrades to the
+    * slower path, it never crashes a refresh or a lookup. */
   private[core] def parseMeta(vd: Path): VersionMeta = {
-    val p = vd.resolve("_meta")
-    if (!Files.exists(p)) VersionMeta(None, Some(OnlineKeyBuckets), None, None)
-    else {
-      val lines = scala.util.Try(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .linesIterator.toList).getOrElse(Nil)
-      def line(key: String): Option[String] =
-        lines.find(_.startsWith(key + "=")).map(_.drop(key.length + 1).trim)
-      val layout = line("buckets").flatMap(n => scala.util.Try {
-        val buckets = n.toLong
-        require(buckets >= 1, s"nonsense bucket count $buckets") // Try → None: untrusted layout
-        val counts = line("counts").getOrElse("").split(",").iterator
-          .filter(_.nonEmpty).map { kv =>
-            val Array(b, c) = kv.split(":")
-            b.toLong -> c.toLong
-          }.toMap
-        (buckets, counts)
-      }.toOption)
-      val columns = line("schema").flatMap(l => scala.util.Try(l.split(",").toSeq.map { c =>
-        val Array(n, t) = c.split(":")
-        n -> FType.fromName(t)
-      }).toOption)
-      VersionMeta(layout, layout.map(_._1), line("kvfp"), columns)
-    }
+    val lines = scala.util.Try(new String(Files.readAllBytes(vd.resolve("_meta")),
+      StandardCharsets.UTF_8).linesIterator.toList).getOrElse(Nil)
+    def line(key: String): Option[String] =
+      lines.find(_.startsWith(key + "=")).map(_.drop(key.length + 1).trim)
+    val layout = line("buckets").flatMap(n => scala.util.Try {
+      val buckets = n.toLong
+      require(buckets >= 1, s"nonsense bucket count $buckets") // Try → None: untrusted layout
+      val counts = line("counts").getOrElse("").split(",").iterator
+        .filter(_.nonEmpty).map { kv =>
+          val Array(b, c) = kv.split(":")
+          b.toLong -> c.toLong
+        }.toMap
+      (buckets, counts)
+    }.toOption)
+    val columns = line("schema").flatMap(l => scala.util.Try(l.split(",").toSeq.map { c =>
+      val Array(n, t) = c.split(":")
+      n -> FType.fromName(t)
+    }).toOption)
+    VersionMeta(layout, line("kvfp"), columns)
   }
 
   /** Read exactly `n` bytes at `pos` (flipped, ready to get). */
@@ -2130,12 +2100,8 @@ object FeatureStore {
   }
 
   /** Every bucket KV file of a version's `_serving` dir, in bucket order. */
-  private[core] def kvFiles(servingDir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val ls = java.nio.file.Files.list(servingDir)
-    try ls.iterator().asScala.flatMap(f => kvBucketOf(f).map(_ -> f)).toSeq.sortBy(_._1).map(_._2)
-    finally ls.close()
-  }
+  private[core] def kvFiles(servingDir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    Coordination.listDir(servingDir).flatMap(f => kvBucketOf(f).map(_ -> f)).sortBy(_._1).map(_._2)
 
   /** A KV file's header: its columns and its entry count. */
   private def readKvHeader(in: java.io.DataInputStream,
@@ -2165,11 +2131,10 @@ object FeatureStore {
   }
 
   /** The columns a version's KV files hold, from the first header that
-    * parses as typed KV; None when none does (no file, or parquet-format
-    * files). Asked only when `_meta` does not answer. */
+    * parses as typed KV; None when none does (no file, or an earlier
+    * build's). Asked only when `_meta` does not answer. */
   private[core] def kvHeaderColumns(servingDir: java.nio.file.Path): Option[Seq[(String, FType)]] =
-    if (!java.nio.file.Files.isDirectory(servingDir)) None
-    else kvFiles(servingDir).iterator.flatMap { f =>
+    kvFiles(servingDir).iterator.flatMap { f =>
       val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
         java.nio.file.Files.newInputStream(f)))
       try scala.util.Try(readKvHeader(in, f)._1).toOption finally in.close()

@@ -2,13 +2,12 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, Metadata, StructType}
+
+import graft.core.Coordination.{listDir, writeAtomically}
 
 /** The persisted-index lifecycle every index family shares — signature,
   * vector, IVFADC, BM25, LM, DSIR, span and zone-mapped tables: the
@@ -888,21 +887,6 @@ object IndexLifecycle {
   }
 
   // ---- small files ----
-
-  private def listDir(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val ls = Files.list(dir)
-      try ls.iterator().asScala.toList finally ls.close()
-    }
-
-  /** Replace `p` with `text` atomically: written to the sibling
-    * `<name>.tmp`, then renamed over it. */
-  private def writeAtomically(p: Path, text: String): Unit = {
-    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
-    Files.write(tmp, text.getBytes(UTF_8))
-    Files.move(tmp, p, ATOMIC_MOVE, REPLACE_EXISTING): Unit
-  }
 
   /** `key=value` lines, replaced atomically. */
   private def writeProps(p: Path, props: Seq[(String, String)]): Unit =

@@ -114,6 +114,7 @@ object EngineColumns {
     * `_serving/bucket=<b>.kv` per bucket, so a point lookup on a snapshot
     * too large for the driver-side serving cache opens one file
     * (FeatureStore.getRecord fall-through). Versions earlier builds wrote
-    * are parquet partitioned by it, read through the fallback. */
+    * (parquet partitioned by it) are not read: `refreshOnline` rebuilds
+    * them from history and `gcOnline` removes them. */
   val KeyBucket = "_key_bucket"
 }

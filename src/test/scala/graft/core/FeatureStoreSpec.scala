@@ -369,39 +369,6 @@ class FeatureStoreSpec extends SparkSpec {
     assert(newVersionJobs == 0,
       s"an over-cap store must decide a new version's verdict without a job: $newVersionJobs")
 
-    // a version an EARLIER build wrote (a parquet snapshot, its `_serving`
-    // dir left out): the lookup takes the bucket-pruned Spark read —
-    // correct, just a job again
-    toParquetFormat(root, "tx", 2L, withServing = false)
-    val legacy = new FeatureStore(spark, root, maxServingCacheRows = 3)
-    val jobs2 = jobsDuring(assert(legacy.getRecord("tx", 5L).get("amount") == "5.0"))
-    assert(jobs2 > 0, "parquet-format snapshots fall back to the pruned read path")
-    // the next commit on that base is a full rewrite into typed KV: an
-    // incremental one would carry parquet buckets it cannot link
-    legacy.ingest("tx", batch((12L, "2024-01-03 10:00:00", 12.0, "n12")))
-    assert(!legacy.lastCommitPhases("tx").map(_._1).contains("link_untouched"))
-    assertOnlineLayout(root, 3L)
-    assert(legacy.getRecord("tx", 12L).get("amount") == "12.0")
-    (1L to 10L).foreach(k => assert(legacy.getRecord("tx", k).map(_("amount")).contains(s"$k.0"),
-      s"key $k after a commit on a parquet-format base"))
-
-    // the parquet-format snapshot is key-bucket partitioned and its bucket
-    // filter PRUNES: the scan over one bucket reads strictly fewer files
-    import scala.jdk.CollectionConverters._
-    val vdir = java.nio.file.Paths.get(root, "tx", "online", "v2")
-    val bucketDirs = Files.list(vdir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith(EngineColumns.KeyBucket + "=")).toSeq
-    assert(bucketDirs.size > 1, s"snapshot must be key-bucket partitioned, saw $bucketDirs")
-    val snap = spark.read.parquet(vdir.toString)
-    val pruned = snap.filter(
-      col(EngineColumns.KeyBucket) === lit(
-        FeatureStore.keyBucketOf("7", FeatureStore.OnlineKeyBuckets)))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains(s"PartitionFilters: [isnotnull(${EngineColumns.KeyBucket}") ||
-        (plan.contains("PartitionFilters") && plan.contains(EngineColumns.KeyBucket)),
-      s"bucket filter must reach the scan as a partition filter:\n$plan")
-    assert(pruned.collect().map(_.getAs[Long]("customer_id")).contains(7L))
-
     // driver-side CRC32 bucket mirrors Spark's crc32 expression bit-for-bit
     spark.range(1, 11)
       .select(col("id"), pmod(crc32(col("id").cast("string")),
@@ -1215,12 +1182,6 @@ class FeatureStoreSpec extends SparkSpec {
     val cachedFs = new FeatureStore(spark, root)
     assert(cachedFs.batchGetRecords("tx", keys) == single, "cached path must agree")
     assertNullKeyUnaddressable(cachedFs, "cached")
-    // parquet-format path (an earlier build's snapshot, its GKV2
-    // files never read): one pruned job, same answers
-    toParquetFormat(root, "tx", 1L, withServing = true)
-    val legacy = new FeatureStore(spark, root, maxServingCacheRows = 3)
-    assert(legacy.batchGetRecords("tx", keys) == single, "parquet-format path must agree")
-    assertNullKeyUnaddressable(legacy, "parquet-format")
     // evolved path (the fingerprint distrusts v1's entries until the next
     // commit rewrites them): one pruned job over v1's own schema, declared
     // view
@@ -1255,8 +1216,6 @@ class FeatureStoreSpec extends SparkSpec {
     }
     assertRealNull(capped, "KV")
     assertRealNull(new FeatureStore(spark, sroot), "cached")
-    toParquetFormat(sroot, "sx", 1L, withServing = true)
-    assertRealNull(new FeatureStore(spark, sroot, maxServingCacheRows = 1), "parquet-format")
   }
 
   test("incremental refresh: only touched buckets rewritten; untouched carry forward by hard link") {
@@ -1680,12 +1639,83 @@ class FeatureStoreSpec extends SparkSpec {
     assert(fs.getRecord("tx", 1L).get("amount") == s"${100.0 + commits}")
   }
 
-  test("a parquet-format version an earlier build wrote serves as it did; the next ingest and the next delete rewrite it as typed KV") {
+  /** The shapes [[toParquetFormat]] converts to: with the earlier GKV2
+    * `_serving` files (poisoned: never read) and a full `_meta`; without
+    * them and with neither the `fp` nor the `cols` line (a `_meta` older
+    * than both). */
+  private val earlierShapes = Seq((true, Set.empty[String]), (false, Set("fp", "cols")))
+
+  test("a version an earlier build wrote: every read names refreshOnline, whose rebuild from history serves the same answers; gcOnline leaves typed versions") {
     import org.apache.spark.sql.functions.{col, lit, when}
-    // with the earlier GKV2 `_serving` files (poisoned: never read) and a
-    // full `_meta`; without them and with neither the `fp` nor the `cols`
-    // line (a `_meta` older than both)
-    Seq((true, Set.empty[String]), (false, Set("fp", "cols"))).foreach { case (serving, drop) =>
+    val keys: Seq[Any] = (1L to 12L) :+ 999L
+    def dump(s: FeatureStore) = (s.online("tx").collect().toSet,
+      keys.map(k => s.getRecord("tx", k)), s.batchGetRecords("tx", keys))
+    // a plain group, an evolved one (addFeature after its last commit) and
+    // one whose every key is deleted, each in both earlier shapes
+    for (kind <- Seq("plain", "evolved", "all-deleted"); (serving, drop) <- earlierShapes) {
+      val what = s"$kind, serving=$serving, without $drop"
+      val root = Files.createTempDirectory("fs_upgrade_").toString
+      val fs = new FeatureStore(spark, root)
+      fs.createGroup(group)
+      val rows = (1L to 10L).map(i => (i, f"2024-01-01 10:00:$i%02d", i * 1.0, s"n$i"))
+      if (kind == "all-deleted") {
+        fs.ingest("tx", batch(rows: _*))
+        fs.deleteRecords("tx", 1L to 10L) // v2: no key left
+      } else {
+        fs.ingest("tx", batch(rows :+ ((11L, "2024-01-01 10:00:11", 11.0, "null-key")): _*)
+          .withColumn("customer_id",
+            when(col("note") === "null-key", lit(null)).otherwise(col("customer_id"))))
+        fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"),
+          (12L, "2024-02-01 10:00:00", 12.0, "n12"))) // v2, incremental
+      }
+      if (kind == "evolved") fs.addFeature("tx", FeatureDef("score", FType.Fractional))
+      val want = dump(fs)
+      assert(want._1.size == (if (kind == "all-deleted") 0 else 12), s"sanity: $what")
+      Seq(1L, 2L).foreach(v => toParquetFormat(root, "tx", v, serving, drop))
+
+      // every read of an earlier build's version throws one error naming
+      // the group, the version and the rebuild — on a cached instance (its
+      // cache load) and on an over-cap one (its lookup path)
+      val cached = new FeatureStore(spark, root)
+      val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
+      def refused(v: Long, read: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains(s"online version v$v of feature group tx") &&
+          e.getMessage.contains("refreshOnline(describeGroup(\"tx\"), None)"),
+          s"$what, $read: ${e.getMessage}")
+      }
+      Seq(cached, capped).foreach { s =>
+        refused(2L, "online")(s.online("tx"))
+        refused(1L, "onlineAt")(s.onlineAt("tx", 1L))
+        refused(2L, "onlineAt")(s.onlineAt("tx", 2L))
+        refused(1L, "onlineDiff")(s.onlineDiff("tx", 1L, 2L))
+        refused(2L, "getRecord")(s.getRecord("tx", 1L))
+        refused(2L, "batchGetRecords")(s.batchGetRecords("tx", keys))
+        refused(2L, "expireStale")(s.expireStale("tx", java.time.Duration.ofDays(1)))
+      }
+
+      // the one-call upgrade rebuilds LATEST from history; both instances
+      // then answer as before the conversion, over-cap lookups with no job
+      cached.refreshOnline(cached.describeGroup("tx"), None)
+      assert(cached.onlineVersions("tx") == Seq(1L, 2L, 3L), what)
+      Seq(cached, capped).foreach(s => assert(dump(s) == want, what))
+      var lookups: (Seq[Option[Map[String, String]]], Map[String, Option[Map[String, String]]]) = null
+      val jobs = jobsDuring {
+        lookups = (keys.map(k => capped.getRecord("tx", k)), capped.batchGetRecords("tx", keys))
+      }
+      assert(lookups == (want._2, want._3), what)
+      if (kind != "all-deleted") assert(jobs == 0, s"$what: over-cap lookups launched $jobs jobs")
+      // the old versions stay, unreadable, until gcOnline removes them
+      refused(2L, "onlineAt after the upgrade")(cached.onlineAt("tx", 2L))
+      cached.gcOnline("tx", 1)
+      assert(cached.onlineVersions("tx") == Seq(3L), what)
+      assertOnlineLayout(root, 3L)
+    }
+  }
+
+  test("a version an earlier build wrote: the next ingest and the next delete rewrite it as typed KV from history") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    earlierShapes.foreach { case (serving, drop) =>
       val root = Files.createTempDirectory("fs_parquet_").toString
       val fs = new FeatureStore(spark, root)
       fs.createGroup(group)
@@ -1696,18 +1726,9 @@ class FeatureStoreSpec extends SparkSpec {
           when(col("note") === "null-key", lit(null)).otherwise(col("customer_id"))))
       fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"),
         (12L, "2024-02-01 10:00:00", 12.0, "n12"))) // v2, incremental
-      val keys: Seq[Any] = (1L to 12L) :+ 999L
-      def dump(s: FeatureStore) = (
-        s.online("tx").collect().toSet, s.onlineAt("tx", 1L).collect().toSet,
-        s.onlineAt("tx", 2L).collect().toSet, s.onlineDiff("tx", 1L, 2L).collect().toSet,
-        keys.map(k => s.getRecord("tx", k)), s.batchGetRecords("tx", keys))
-      val want = dump(fs)
-      assert(want._1.size == 12 && want._1.exists(_.isNullAt(0)), "sanity: 11 keys and the null key")
       Seq(1L, 2L).foreach(v => toParquetFormat(root, "tx", v, serving, drop))
-      Seq(new FeatureStore(spark, root), new FeatureStore(spark, root, maxServingCacheRows = 3))
-        .foreach(s => assert(dump(s) == want, s"serving=$serving drop=$drop"))
-      // one commit upgrades: the ingest and then the delete each rewrite
-      // the whole version as typed KV
+      // the ingest and then the delete each rewrite the whole version as
+      // typed KV, from history
       val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
       capped.ingest("tx", batch((2L, "2024-03-01 10:00:00", 22.0, "n2b")))
       assert(!capped.lastCommitPhases("tx").map(_._1).contains("link_untouched"))
