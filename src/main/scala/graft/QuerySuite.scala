@@ -62,8 +62,7 @@ object QuerySuite {
     *     local disk with an in-memory working set + changelog into the
     *     checkpoint: the bounded-memory state path, exercised here so it
     *     is oracled (every streaming row in CORRECTNESS runs on it), not
-    *     just available. `SPARK_GRAFT_STREAM_STATE_PROVIDER=hdfs` restores
-    *     the default provider for A/B measurement.
+    *     just available.
     *
     * Implemented as a CHILD SESSION (`newSession()`: own SQLConf, shared
     * SparkContext + catalog-free temp state) rather than set/restore on the
@@ -82,11 +81,9 @@ object QuerySuite {
       try s.conf.set(k, v) catch { case _: Exception => () }
     }
     Tables.configureTimestamps(s)
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-    if (!sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER").contains("hdfs"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     body(s)
   }
 

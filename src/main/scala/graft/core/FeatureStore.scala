@@ -784,13 +784,12 @@ final class FeatureStore(spark: SparkSession, root: String,
       firstIngestKeys: Option[Long] = None): Unit = {
     val baseVersion = baseState.map(_.v)
     // the FIRST ingest of a group (seq 0, no committed snapshot): the batch
-    // IS the whole offline history, so derive the snapshot from the batch
-    // frame directly — no parquet re-read of the history that was just
-    // appended — and size buckets from the append job's observed
-    // approx-distinct key count instead of a second persist+count pass
-    // (two whole-store passes cut from the per-commit fixed tax the q59
-    // driver tail exposed; the power-of-two bucket envelope absorbs the
-    // ±few-% approximation error)
+    // IS the whole offline history, so size buckets from the append job's
+    // observed approx-distinct key count instead of a persist+count pass
+    // (cut from the per-commit fixed tax the q59 driver tail exposed; the
+    // power-of-two bucket envelope absorbs the ±few-% approximation error).
+    // Its rows still come from history below: the declared-schema read of
+    // what the append just wrote
     val bootstrap = firstIngestKeys.filter(_ => baseVersion.isEmpty && batch.isDefined)
     // the version this rewrite derives from and CASes against, read once —
     // never a re-resolved LATEST a racing commit may have moved
@@ -1040,20 +1039,26 @@ final class FeatureStore(spark: SparkSession, root: String,
     * `buckets` None every bucket of the version (the null-key row too), in
     * the version's own columns — [[declaredVersion]] resolves eras by the
     * names the rows were written under. It reads the buckets' KV files
-    * through a [[FeatureStore.KvRelation]]: building the frame lists no
-    * directory, launches no job, and a bucket set with no file is an empty
-    * frame. A version an earlier build wrote throws
+    * through a [[FeatureStore.KvRelation]]: building the frame launches no
+    * job, and a bucket with no file is empty — unless `_meta` counts keys
+    * in it: then its file is read anyway and fails the read as a torn file
+    * does ([[FeatureStore.TornKvFile]]), so every reader takes its torn-file
+    * path instead of serving the bucket's rows as deleted. The null-key
+    * file `bucket=-1.kv` is not counted and is read when present. A version
+    * an earlier build wrote throws
     * ([[OnlineVersion.columns]]). This is the version exactly as committed
     * ([[onlineAt]]); every served answer reads it through
     * [[declaredVersion]]. */
   private def readVersion(s: OnlineVersion, buckets: Option[Iterable[Long]] = None): DataFrame = {
     val servingDir = s.dir.resolve("_serving")
+    def file(b: Long) = servingDir.resolve(s"bucket=$b.kv")
+    val counted = s.meta.layout.fold(Set.empty[Long])(_._2.collect { case (b, n) if n > 0 => b }.toSet)
+    val read = buckets match {
+      case Some(bs) => bs.toSeq.filter(b => counted(b) || Files.exists(file(b)))
+      case None => FeatureStore.kvFiles(servingDir).flatMap(FeatureStore.kvBucketOf) ++ counted
+    }
     spark.baseRelationToDataFrame(new FeatureStore.KvRelation(spark.sqlContext, s.columns,
-      buckets match {
-        case Some(bs) => bs.toSeq.sorted.map(b => servingDir.resolve(s"bucket=$b.kv"))
-          .filter(Files.exists(_))
-        case None => FeatureStore.kvFiles(servingDir)
-      }))
+      read.distinct.sorted.map(file)))
   }
 
   /** Version `s` as declared group `g` serves it: the features in `g`
@@ -2253,7 +2258,9 @@ object FeatureStore {
       cols: Seq[(String, FType)], files: Seq[java.nio.file.Path])
       extends org.apache.spark.sql.sources.BaseRelation with org.apache.spark.sql.sources.TableScan {
     val schema: StructType = StructType(cols.map { case (n, t) => StructField(n, t.spark) })
-    override val sizeInBytes: Long = files.map(java.nio.file.Files.size(_)).sum
+    // a missing file adds nothing here and fails the scan ([[kvRows]])
+    override val sizeInBytes: Long =
+      files.map(f => scala.util.Try(java.nio.file.Files.size(f)).getOrElse(0L)).sum
     def buildScan(): org.apache.spark.rdd.RDD[Row] = {
       val (paths, c) = (files.map(_.toString), cols)
       val sc = sqlContext.sparkContext

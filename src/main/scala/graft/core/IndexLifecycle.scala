@@ -19,6 +19,16 @@ import graft.core.Coordination.{listDir, writeAtomically}
   * [[Coordination]]; what an index STORES (signatures, postings, codes)
   * stays with its family.
   *
+  * THE GENERATION RULE: every table a family's compaction lists — marker
+  * (tombstone) tables included — versions with the family's `FAMILY`
+  * pointer, so from the first compaction on each listed table has a dir
+  * at every retained generation. A rebuild writes in place at the current
+  * generation and resets the marker tables there
+  * ([[resetVisibleBatches]]), and the batch-visibility manifest `VISIBLE`
+  * comes from the build: absent, only `base` is visible. A rebuild in
+  * place over a layout from before round 11 is not supported; rebuild
+  * such an index into an empty path.
+  *
   * Index metadata is read without Spark jobs. Every parquet layout (a
   * flat table dir or a `_v<N>` generation) records its schema in a hidden
   * `_schema` file when it is written ([[readLayout]] lists its dirs on the
@@ -162,10 +172,11 @@ object IndexLifecycle {
     }
   }
 
-  /** Physical dir of a (possibly compacted) signature index: a compacted
-    * index lives in `<path>/_v<N>` named by the `<path>/CURRENT` pointer; an
-    * uncompacted one is the flat path itself (backward compatible — every
-    * pre-compaction index keeps working unchanged). The underscore prefix is
+  /** Physical dir of a (possibly compacted) index table: a compacted
+    * single-table index lives in `<path>/_v<N>` named by the `<path>/CURRENT`
+    * pointer, a compacted family table in `<path>/_v<N>` named by the
+    * family's `FAMILY` pointer; an uncompacted one is the flat path itself.
+    * The underscore prefix is
     * load-bearing: Spark's hidden-path filter makes flat-layout readers skip
     * `_v*` dirs, so a compaction that crashed between writing the version
     * dir and swapping the pointer leaves readers completely unaffected (a
@@ -174,9 +185,7 @@ object IndexLifecycle {
     // FAMILY-versioned table: `<family>/FAMILY` names the version EVERY
     // table of a multi-table family serves at — one pointer, one commit
     // ([[compactFamily]]), so readers can never observe the family's
-    // tables at mixed versions. Marker tables version with the family too
-    // (round 11); a table not yet versioned at the named generation falls
-    // through to its flat layout ([[resolveIndexDirPinned]]).
+    // tables at mixed versions
     val p = Paths.get(indexPath)
     resolveIndexDirPinned(indexPath,
       Option(p.getParent).flatMap(par => readFamilyPointer(par.toString)))
@@ -193,25 +202,22 @@ object IndexLifecycle {
     * retention keeps the pinned generation's files alive one cycle, so
     * the pinned read COMPLETES instead of failing).
     *
-    * A PINNED version dir that is MISSING is one of two things and they
-    * must not be conflated (VERDICT r10 advice): (a) the table predates
-    * versioning at that generation — its rows still live in the flat
-    * `batch=*` layout, which retention keeps one cycle, so falling back
-    * to the flat path serves the pinned generation's data; (b) the pinned
-    * version was VACUUMED out from under an in-flight serve (an operator
-    * [[vacuumIndex]] racing a lock-free reader). Case (b) used to fall
-    * through silently to CURRENT — handing a multi-table serve MIXED
-    * generations, the exact anomaly [[FamilySnapshot]] exists to prevent —
-    * and now fails loudly instead. The discriminator: a table with
-    * surviving flat `batch=*` dirs is (a); a table with only `_v*`
-    * generations newer than the pin is (b). */
+    * Every listed table has a dir at every retained generation, so a
+    * PINNED generation missing from a table that holds `_v*` dirs was
+    * VACUUMED out from under an in-flight serve (an operator
+    * [[vacuumIndex]] racing a lock-free reader) and fails loudly: falling
+    * through to another generation would hand a multi-table serve MIXED
+    * generations, the anomaly [[FamilySnapshot]] exists to prevent. A dir
+    * with no `_v*` dirs (a side dir the fold does not list, such as
+    * IVFADC's `coarse`) resolves to its own path. */
   private[graft] def resolveIndexDirPinned(indexPath: String,
       famVersion: Option[String]): String = {
     val p = Paths.get(indexPath)
     famVersion.map(p.resolve).filter(Files.exists(_)) match {
       case Some(d) => d.toString
       case None =>
-        if (famVersion.isDefined && !hasBatchData(indexPath) && maxVersionIn(p) > 0L)
+        if (famVersion.isDefined &&
+            listDir(p).exists(d => versionOf("_v")(d.getFileName.toString).isDefined))
           throw new IllegalStateException(
             s"pinned version ${famVersion.get} of $indexPath no longer exists " +
               "but newer generations do — it was vacuumed while this serve " +
@@ -223,8 +229,8 @@ object IndexLifecycle {
     }
   }
 
-  /** Does the layout dir hold any data — `batch=<id>` partitions (of a
-    * flat table: pre-versioning ones)? An EMPTY generation is a
+  /** Does the layout dir hold any data — `batch=<id>` partitions or
+    * scalar partials? An EMPTY generation is a
     * first-class state for marker tables — a purge folds every pending
     * marker away and commits a version dir with no `batch=*` partitions
     * (possibly no files at all), which `spark.read.parquet` would reject
@@ -271,7 +277,7 @@ object IndexLifecycle {
     * a purge commits N+1 mid-plan; the old in-place marker sweep (which
     * could hand a pinned serve a pre-purge data view without its pending
     * deletions) is gone. */
-  private[graft] final case class FamilySnapshot(visible: Option[Set[String]],
+  private[graft] final case class FamilySnapshot(visible: Set[String],
       version: Option[String])
 
   private[graft] def familySnapshot(familyPath: String): FamilySnapshot = {
@@ -286,15 +292,13 @@ object IndexLifecycle {
     * going through [[readVisibleTable]] see the batch in every table at
     * once or in none (the torn-append window of multi-table families:
     * postings at batch N with term-df still at N−1). The manifest is
-    * created by the family's BUILD; an index from before it existed has no
-    * file and reads unfiltered (legacy — the old documented window), which
-    * also keeps pre-manifest batches visible. `batch=base` (build/compact
-    * output) is always visible. */
-  private[graft] def visibleBatches(familyPath: String): Option[Set[String]] = {
+    * created by the family's BUILD; an absent manifest lists no batch.
+    * `batch=base` (build/compact output) is always visible. */
+  private[graft] def visibleBatches(familyPath: String): Set[String] = {
     val p = Paths.get(familyPath, "VISIBLE")
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
+    if (!Files.exists(p)) Set.empty
+    else new String(Files.readAllBytes(p), UTF_8)
+      .linesIterator.map(_.trim).filter(_.nonEmpty).toSet
   }
 
   // manifest updates are read-modify-write: serialize them through the
@@ -327,20 +331,32 @@ object IndexLifecycle {
   private def writeVisibleFile(familyPath: String, ids: Set[String]): Unit =
     writeAtomically(Paths.get(familyPath, "VISIBLE"), ids.toSeq.sorted.mkString("\n"))
 
-  /** (Re)write the manifest to exactly `ids` — the family's BUILD uses it
-    * to start the visible set. */
+  /** Start a new index generation in place — the last step of a family's
+    * BUILD, under its writer lock: each marker table's `batch=` entries at
+    * the FAMILY generation are cleared (that dir is created when missing,
+    * so every listed table has one), then the manifest is rewritten empty.
+    * Markers of the previous index would otherwise hide rebuilt rows and
+    * suppress legitimate deletes. */
   private[graft] def resetVisibleBatches(familyPath: String,
-      ids: Set[String] = Set.empty): Unit =
-    withVisibleLock(familyPath)(writeVisibleFile(familyPath, ids))
+      markers: Seq[String] = Nil): Unit = {
+    val gen = readFamilyPointer(familyPath)
+    markers.foreach { m =>
+      val table = Paths.get(familyPath, m)
+      val layout = gen.fold(table)(table.resolve)
+      listDir(layout).filter(_.getFileName.toString.startsWith("batch="))
+        .foreach(Coordination.deleteRecursively)
+      Files.createDirectories(layout)
+    }
+    withVisibleLock(familyPath)(writeVisibleFile(familyPath, Set.empty))
+  }
 
   /** Commit `batchId` as visible — the LAST step of a multi-table append
     * (all per-table partitions already written; a crash before this line
     * leaves the whole batch invisible and a same-id retry overwrites it).
-    * No-op on a legacy index without a manifest. Idempotent. */
+    * Creates the manifest when absent. Idempotent. */
   private[graft] def commitVisibleBatch(familyPath: String, batchId: String): Unit =
     withVisibleLock(familyPath) {
-      visibleBatches(familyPath).foreach(cur =>
-        writeVisibleFile(familyPath, cur + batchId))
+      writeVisibleFile(familyPath, visibleBatches(familyPath) + batchId)
     }
 
   /** Read one family table with the batch-visibility filter applied (and,
@@ -357,7 +373,7 @@ object IndexLifecycle {
     // lock-free multi-table serve overlapping a commit)
     val snap = snapshot.getOrElse(familySnapshot(familyPath))
     val vis = readLayout(spark, resolveIndexDirPinned(s"$familyPath/$table", snap.version),
-      snap.visible)
+      Some(snap.visible))
     excludeBatch.fold(vis)(b => vis.filter(col("batch") =!= lit(b)))
   }
 
@@ -379,8 +395,7 @@ object IndexLifecycle {
     * vice versa). A listed table whose source holds NO data commits an
     * EMPTY generation dir ([[hasBatchData]] gates the read) — the invariant
     * every pinned read relies on: from its first compaction onward, a
-    * family's generation N carries generation N's marker view. Legacy
-    * per-table pointers are retired by the first family commit.
+    * family's generation N carries generation N's marker view.
     *
     * WRITER SERIALIZATION: the whole compaction holds the family's
     * [[withIndexWriter]] lock, and every append/delete holds it across its
@@ -391,12 +406,11 @@ object IndexLifecycle {
     * to the post-flip cleanup). A racing writer simply blocks and then
     * proceeds against the compacted generation.
     *
-    * VISIBILITY ACCOUNTING (families with a batch manifest): the fold reads
-    * only visible batches, and afterwards the manifest is updated to
-    * `current − captured` (folded ids retire; under writer serialization
-    * current == captured — the subtraction is kept as crash defense).
-    * Marker batches fold and retire with everything else now that marker
-    * tables are ordinary listed tables.
+    * VISIBILITY ACCOUNTING: the fold reads only visible batches, and
+    * afterwards the manifest is updated to `current − captured` (folded
+    * ids retire; under writer serialization current == captured — the
+    * subtraction is kept as crash defense). Marker batches fold and retire
+    * with everything else.
     *
     * SCALAR TABLES (a family's corpus constants, [[writeScalars]]) stage
     * like the parquet tables: their visible partials fold on the driver
@@ -413,34 +427,15 @@ object IndexLifecycle {
       labelled(spark, s"index family compaction ${tableName(familyPath)}") {
     val root = Paths.get(familyPath)
     val expected = readFamilyPointer(familyPath)
-    // the next version must clear BOTH counters: the family's own, and any
-    // legacy per-table `_v<K>` dirs from the pre-FAMILY scheme. Deriving it
-    // from the family counter alone had two failure modes: (a) the first
-    // family commit of a legacy index could derive _v1 while a table was
-    // SERVING from its own _v1 — casSwap's promotion then destroyed the
-    // serving layout in place (no retention cycle at all); (b) legacy dirs
-    // numbered >= the family counter were never swept, so a GDPR purge +
-    // vacuum left pre-purge bytes on disk indefinitely. Starting past the
-    // max of every counter makes legacy dirs ordinary old versions: kept
-    // one cycle, then vacuumed like everything else.
-    // per-table pre-commit version counters: they feed BOTH the next-version
-    // derivation and the retention rule below (a table FIRST versioned by
-    // this commit keeps its flat batch=* layout one cycle for pinned
-    // readers, even when the family counter is already past 2 — the
-    // marker-table migration case)
     val names = tables.map(_._1) ++ scalars.map(_._1)
-    val prevMaxByTable: Map[String, Long] = names.map { name =>
-      name -> maxVersionIn(Paths.get(familyPath, name))
-    }.toMap
-    val maxLegacy = prevMaxByTable.values.foldLeft(0L)(math.max)
-    val next = s"_v${math.max(
-      expected.map(_.stripPrefix("_v").toLong).getOrElse(0L), maxLegacy) + 1}"
-    // fold only VISIBLE batches (when the family keeps a manifest): a torn
+    val committed = expected.map(_.stripPrefix("_v").toLong).getOrElse(0L) + 1
+    val next = s"_v$committed"
+    // fold only VISIBLE batches: a torn
     // append's half-landed partitions are physically dropped by the fold —
     // the compaction doubles as the self-heal for crashed appends
     val visible = visibleBatches(familyPath)
     val staged = names.map { name =>
-      val oldDir = resolveIndexDir(s"$familyPath/$name")
+      val oldDir = resolveIndexDirPinned(s"$familyPath/$name", expected)
       val finalDir = Paths.get(familyPath, name, next)
       (name, oldDir, OptimisticPointer.stagingFor(finalDir), finalDir)
     }.map(s => s._1 -> s).toMap
@@ -460,7 +455,7 @@ object IndexLifecycle {
       () => {
         val (_, oldDir, stagingDir, _) = staged(name)
         if (hasBatchData(oldDir)) {
-          val folded = transform(readLayout(spark, oldDir, visible).drop("batch"))
+          val folded = transform(readLayout(spark, oldDir, Some(visible)).drop("batch"))
             .withColumn("batch", lit("base"))
           // cluster on the layout's partition columns — the writeIndexBatch
           // rationale: unclustered, a compaction re-explodes the file count
@@ -474,62 +469,17 @@ object IndexLifecycle {
         }
       }
     })
-    // MIGRATION BACKFILL (round-12 ADVICE): a table FIRST versioned by this
-    // commit (prevMax 0) in a family whose counter is already past 0 gets
-    // an EMPTY dir at the SUPERSEDED generation too — without it, a serve
-    // pinned at `expected` races this flip into the vacuumed-pin detector
-    // (_vN absent, no flat batch dirs, _v{N+1} present ⇒ misclassified as
-    // vacuumed and failed loudly) when the right answer is "no markers at
-    // generation N". Only when NO flat batch dirs exist: with flat dirs
-    // present they ARE the pinned generation's data and the fallback must
-    // keep resolving to them, not to a fresh empty dir.
-    expected.foreach { exp =>
-      names.foreach { name =>
-        val tableDir = Paths.get(familyPath, name)
-        if (prevMaxByTable.getOrElse(name, 0L) == 0L && !hasBatchData(tableDir.toString))
-          Files.createDirectories(tableDir.resolve(exp)): Unit
-      }
-    }
     OptimisticPointer.casSwap(root, "FAMILY", expected, next,
       stages = names.map(staged).map(s => s._3 -> s._4))
     // retire the folded ids (marker batches folded with everything else;
     // kept as a subtraction rather than a blank for crash defense)
-    if (visible.isDefined) withVisibleLock(familyPath) {
-      val captured = visible.get
-      val current = visibleBatches(familyPath).getOrElse(Set.empty)
-      writeVisibleFile(familyPath, current -- captured)
+    withVisibleLock(familyPath) {
+      writeVisibleFile(familyPath, visibleBatches(familyPath) -- visible)
     }
     // retention sweep per table (post-flip): keep each table's
     // immediately superseded layout for in-flight lock-free readers,
-    // VACUUM everything older ([[sweepSupersededVersions]]); retire any
-    // legacy per-table pointer (the family pointer owns resolution from
-    // here on — deleting the pointer FILE strands no reader, they hold
-    // resolved dir paths, which retention preserves one cycle). A table
-    // FIRST versioned by this commit (prevMax 0 — e.g. a marker table of a
-    // family whose counter is already high) keeps its flat batch=* dirs
-    // one cycle regardless of the family counter: they ARE its
-    // immediately superseded layout, and pinned readers of the previous
-    // generation resolve to them.
-    val committed = next.stripPrefix("_v").toLong
-    names.foreach { name =>
-      val flat = Paths.get(familyPath, name)
-      if (prevMaxByTable.getOrElse(name, 0L) >= 1L)
-        sweepSupersededVersions(flat, committed)
-      else {
-        // first-versioned table: the migration backfill above may have
-        // created an EMPTY dir at the superseded generation `expected`,
-        // which can sit MORE than retentionCycles below `committed` when
-        // legacy per-table version dirs pushed the counter (the next-
-        // version derivation takes the max of every counter). Widen the
-        // keep so this commit's own sweep cannot delete the dir it just
-        // created for pinned readers (round-12 review finding).
-        val keepFloor = expected.map(e => committed - e.stripPrefix("_v").toLong)
-          .getOrElse(0L).toInt
-        sweepSuperseded(flat, committed, versionOf("_v"), _ => false,
-          keep = math.max(retentionCycles, keepFloor))
-      }
-      Files.deleteIfExists(flat.resolve("CURRENT")): Unit
-    }
+    // VACUUM everything older ([[sweepSupersededVersions]])
+    names.foreach(name => sweepSupersededVersions(Paths.get(familyPath, name), committed))
   }}
 
   /** Run independent index-maintenance tasks CONCURRENTLY — a multi-table
@@ -630,12 +580,6 @@ object IndexLifecycle {
       val staleFlat = committed >= 1 + keep && isFlatLegacy(n)
       if (staleVersion || staleFlat) Coordination.deleteRecursively(p)
     }
-
-  /** Highest `_v<K>` version dir present under `root` (0 when none) — the
-    * legacy-counter probe [[compactFamily]] clears when deriving the next
-    * family version. */
-  private def maxVersionIn(root: Path): Long =
-    listDir(root).flatMap(p => versionOf("_v")(p.getFileName.toString)).foldLeft(0L)(math.max)
 
   /** Drop every SUPERSEDED layout of one index table NOW, keeping only the
     * current version — the explicit final step of a GDPR erase under
@@ -861,14 +805,14 @@ object IndexLifecycle {
     * parameter such as a bucket count) must agree across them, every other
     * key sums. A layout with no partial fails loudly: every build writes
     * one, so it is missing, torn or an earlier build's `stats` table. */
-  private def scalarTotals(layout: String, visible: Option[Set[String]],
+  private def scalarTotals(layout: String, visible: Set[String],
       pinned: String): Map[String, Long] = {
     val parts = listDir(Paths.get(layout)).flatMap { p =>
       val n = p.getFileName.toString
       if (n.startsWith("batch=") && n.endsWith(ScalarSuffix))
         Some(n.stripPrefix("batch=").stripSuffix(ScalarSuffix) -> p)
       else None
-    }.filter { case (id, _) => id == "base" || visible.forall(_.contains(id)) }
+    }.filter { case (id, _) => id == "base" || visible.contains(id) }
       .map { case (_, p) => readProps(p).map { case (k, v) => k -> v.toLong } }
     if (parts.isEmpty) throw rebuildNeeded(layout, "corpus constants")
     val pins = parts.map(_(pinned)).distinct

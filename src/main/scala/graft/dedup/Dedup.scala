@@ -924,18 +924,8 @@ object Dedup {
           HashedShingles.KindXx64, 17L, distinct = true, sorted = true).as("hs"))
 
   /** Broadcast cap for the (tok, df) order-key table of the prefix-filter
-    * family, env-overridable (the [[graft.similarity.Similarity]]
-    * `sizeGatedVecs` pattern). Defensive parse, and LAZY like
-    * [[CodebookLiteralMaxBytes]]: an operator typo must fail loudly at
-    * first use with a message naming the env var — an eager val would
-    * surface it as an opaque ExceptionInInitializerError taking down all
-    * of Dedup. */
-  private[graft] lazy val DfsBroadcastMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_DFS_BROADCAST_MAX_BYTES") match {
-      case Some(s) => s.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_DFS_BROADCAST_MAX_BYTES must be a plain byte count, got '$s'"))
-      case None => 256L << 20
-    }
+    * family (the [[graft.similarity.Similarity]] `sizeGatedVecs` pattern). */
+  private[graft] val DfsBroadcastMaxBytes: Long = 256L << 20
 
   /** Size-gate the df-annotation join's (tok, df) side. The occurrence
     * stream is O(corpus tokens) rows while the df table is O(vocabulary) —
@@ -1338,18 +1328,8 @@ object Dedup {
     * billion-vector corpus implies a codebook the plan itself cannot carry.
     * Past this many bytes, assignment falls back to a JOIN against the
     * centroid frame (same argmin, same tie-break, bit-identical — specs
-    * assert it) whose cost lives in the data plane instead of the plan.
-    * Env-overridable for operational tuning. Parsed defensively — and
-    * LAZILY, so a malformed value fails at the first assignment-path use
-    * with a message naming the env var, never as an opaque
-    * ExceptionInInitializerError taking down unrelated Dedup queries. */
-  private[graft] lazy val CodebookLiteralMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_CODEBOOK_LITERAL_MAX_BYTES") match {
-      case Some(s) => s.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CODEBOOK_LITERAL_MAX_BYTES must be a plain byte count " +
-          s"(e.g. 33554432), got '$s'"))
-      case None => 32L << 20
-    }
+    * assert it) whose cost lives in the data plane instead of the plan. */
+  private[graft] val CodebookLiteralMaxBytes: Long = 32L << 20
 
   /** Estimated codebook bytes of a centroid frame: k · dim · 8 — one tiny
     * aggregate over a ≤k-row frame, never a collect. */

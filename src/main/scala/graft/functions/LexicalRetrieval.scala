@@ -1,14 +1,12 @@
 package graft.functions
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.core.{Coordination, IndexLifecycle}
+import graft.core.IndexLifecycle
 import GraftFunctions.{portableHash60, wsTokens}
 
 /** Persisted BM25 index + fit-free multi-query serving — the LEXICAL face of
@@ -85,12 +83,10 @@ object LexicalRetrieval {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     IndexLifecycle.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
       writeBm25Batch(docs, id, text, indexPath, "base", buckets, wholeIndex = true)
-      // a rebuild is a NEW index generation: markers from the previous one
-      // must not suppress future deletes or hide current docs at serve time
-      Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
-      // (re)start the batch-visibility manifest: from here on an append's
-      // tables become readable atomically, at its commitVisibleBatch
-      IndexLifecycle.resetVisibleBatches(indexPath)
+      // a rebuild is a NEW index generation: the previous one's markers are
+      // cleared in place, and from here on an append's tables become
+      // readable atomically, at its commitVisibleBatch
+      IndexLifecycle.resetVisibleBatches(indexPath, markers = Seq("tombstones"))
     }
   }
 

@@ -1,11 +1,9 @@
 package graft.functions
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Coordination, IndexLifecycle}
+import graft.core.IndexLifecycle
 import GraftFunctions.{portableHash60, wsTokensFused}
 import PortableMath.lnPosLong
 
@@ -187,14 +185,12 @@ object LmPerplexity {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     IndexLifecycle.withIndexWriter(indexPath) { // rebuild + manifest restart: one writer turn
       writeLmBatch(docs, id, text, indexPath, "base", buckets, wholeIndex = true)
-      // a rebuild is a NEW generation: stale markers from the previous one
-      // would make deleteFromLmIndex's already-deleted check silently skip
-      // legitimate unlearns of re-ingested docs (the buildBm25Index twin —
-      // this path previously missed the clear)
-      Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
-      // (re)start the batch-visibility manifest: from here on an append's or
-      // unlearn's five tables become readable atomically, at commitVisibleBatch
-      IndexLifecycle.resetVisibleBatches(indexPath)
+      // a rebuild is a NEW generation: the previous one's markers, which
+      // would make deleteFromLmIndex's already-deleted check skip legitimate
+      // unlearns of re-ingested docs, are cleared in place; from here on an
+      // append's or unlearn's five tables become readable atomically, at
+      // commitVisibleBatch
+      IndexLifecycle.resetVisibleBatches(indexPath, markers = Seq("tombstones"))
     }
   }
 
@@ -451,8 +447,7 @@ object LmPerplexity {
           wholeIndex)))
       IndexLifecycle.writeObservedScalars(s"$indexPath/stats", batchId, stats, sign = 1L,
         Map("bb_buckets" -> buckets.toLong), wholeIndex)
-      if (wholeIndex) Coordination.deleteRecursively(Paths.get(s"$indexPath/tombstones"))
-      else IndexLifecycle.commitVisibleBatch(indexPath, batchId) // all five tables landed
+      if (!wholeIndex) IndexLifecycle.commitVisibleBatch(indexPath, batchId) // all five tables landed
     }
     bg.unpersist(false): Unit
     tk.unpersist(false): Unit

@@ -402,17 +402,8 @@ object Similarity {
     }
   }
 
-  /** Broadcast cap for the rerank join's id→vector side, env-overridable.
-    * Defensive parse, and LAZY like `Dedup.CodebookLiteralMaxBytes`: an
-    * operator typo must fail loudly at first use with a message naming the
-    * env var — an eager val would surface it as an opaque
-    * ExceptionInInitializerError taking down all of Similarity. */
-  private[graft] lazy val VecBroadcastMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_VEC_BROADCAST_MAX_BYTES") match {
-      case Some(s) => s.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_VEC_BROADCAST_MAX_BYTES must be a plain byte count, got '$s'"))
-      case None => 256L << 20
-    }
+  /** Broadcast cap for the rerank join's id→vector side. */
+  private[graft] val VecBroadcastMaxBytes: Long = 256L << 20
 
   /** Size-gate the rerank join's id→vector side. The candidate frame is
     * O(n·probeWidth) rows while the vector table is O(n) rows of dim
@@ -1256,14 +1247,11 @@ object Similarity {
       writeBatched(encodeIvfadc(cn, model, ops), s"$indexPath/codes", "base",
         wholeIndex = true, partitionCols = Seq("cell"))
       writeBatched(c0, s"$indexPath/vectors", "base", wholeIndex = true)
-      // rebuild = new generation: stale tombstones would hide current vectors
-      // at serve time and suppress legitimate future deletes (found via the
-      // BM25 twin — q192's describe read a prior bench run's markers)
-      graft.core.Coordination.deleteRecursively(
-        java.nio.file.Paths.get(s"$indexPath/tombstones"))
-      // (re)start the batch-visibility manifest: an append's codes and
-      // reorder vectors become readable atomically, at commitVisibleBatch
-      graft.core.IndexLifecycle.resetVisibleBatches(indexPath)
+      // rebuild = new generation: the previous one's tombstones, which would
+      // hide current vectors at serve time and suppress legitimate future
+      // deletes, are cleared in place; an append's codes and reorder vectors
+      // become readable atomically, at commitVisibleBatch
+      graft.core.IndexLifecycle.resetVisibleBatches(indexPath, markers = Seq("tombstones"))
     }
   }
 

@@ -1493,6 +1493,42 @@ class FeatureStoreSpec extends SparkSpec {
       .exists(_("amount") == "55.0"))
   }
 
+  test("a bucket file missing although _meta counts keys in it reads as torn: online fails, lookups answer from history, an ingest into it loses no key") {
+    val root = Files.createTempDirectory("fs_missing_kv_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 200L).map(i => (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    val buckets = metaLines(root, "tx", 1).find(_.startsWith("buckets=")).get.drop(8).toLong
+    val b17 = FeatureStore.keyBucketOf("17", buckets)
+    val sharing = (1L to 200L).filter(k => FeatureStore.keyBucketOf(k.toString, buckets) == b17)
+    Files.delete(java.nio.file.Paths.get(root, "tx", "online", "v1", "_serving", s"bucket=$b17.kv"))
+
+    // the version holds no second copy of the bucket: reading it fails as a
+    // torn file does, instead of serving its keys as deleted
+    val cached = new FeatureStore(spark, root)
+    val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
+    val e = intercept[Exception](cached.online("tx").count())
+    assert(FeatureStore.isTornKv(e), s"online() failed with $e, not as a torn file")
+    sharing.foreach { k =>
+      val answer = cached.getRecord("tx", k)
+      assert(answer.exists(_("amount") == s"$k.0"), s"cached lookup of $k: $answer")
+      assert(capped.getRecord("tx", k) == answer, s"cached and over-cap lookups of $k differ")
+    }
+
+    // an ingest touching the bucket must not commit a version without its keys
+    val added = (201L to 100000L).find(k => FeatureStore.keyBucketOf(k.toString, buckets) == b17).get
+    scala.util.Try(cached.ingest("tx", batch((added, "2024-01-02 10:00:00", 7.0, "added"))))
+      .failed.foreach(e => assert(FeatureStore.isTornKv(e), s"the ingest failed with $e"))
+    Seq(new FeatureStore(spark, root), new FeatureStore(spark, root, maxServingCacheRows = 3))
+      .foreach { s =>
+        assert(s.getRecord("tx", 17L).exists(_("amount") == "17.0"), "key 17 lost")
+        assert(s.getRecord("tx", added).exists(_("note") == "added"), "the ingested key lost")
+      }
+    // the rebuild from history restores a readable version
+    cached.refreshOnline(cached.describeGroup("tx"), None)
+    assert(new FeatureStore(spark, root).online("tx").count() == 201)
+  }
+
   test("a steady-state incremental commit writes snapshot, serving KV and counts in one pass: at most 7 jobs, fewer tasks than touched buckets") {
     val root = Files.createTempDirectory("fs_jobs_").toString
     val fs = new FeatureStore(spark, root)

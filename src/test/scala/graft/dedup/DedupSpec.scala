@@ -296,10 +296,11 @@ class DedupSpec extends SparkSpec {
     IndexLifecycle.writeIndexBatch((1L to 10L).toDF("doc_id"), s"$idx/a", "b1")
     IndexLifecycle.writeIndexBatch((11L to 15L).toDF("doc_id"), s"$idx/a", "b2")
     IndexLifecycle.writeIndexBatch((1L to 7L).toDF("doc_id"), s"$idx/b", "b1")
+    Seq("b1", "b2").foreach(IndexLifecycle.commitVisibleBatch(idx, _))
     val id = (df: org.apache.spark.sql.DataFrame) => df
     IndexLifecycle.compactFamily(spark, idx, Seq(("a", id, Nil), ("b", id, Nil)))
-    // ONE family pointer; every table at the SAME version; per-table
-    // pointers retired; the flat batch dirs survive ONE cycle (version
+    // ONE family pointer; every table at the SAME version, no per-table
+    // pointer; the flat batch dirs survive ONE cycle (version
     // retention for lock-free readers) and vacuum at the next compaction
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "FAMILY")))
     assert(names(s"$idx/a").contains("_v1") && names(s"$idx/b").contains("_v1"))
@@ -311,12 +312,9 @@ class DedupSpec extends SparkSpec {
     assert(IndexLifecycle.resolveIndexDir(s"$idx/b") == s"$idx/b/_v1")
     assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/a")).count() == 15)
     assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/b")).count() == 7)
-    // a marker table NOT in the family fold stays flat and still resolves
-    IndexLifecycle.writeIndexBatch((99L to 99L).toDF("doc_id"), s"$idx/tombstones", "t1")
-    assert(IndexLifecycle.resolveIndexDir(s"$idx/tombstones") == s"$idx/tombstones")
-    assert(spark.read.parquet(IndexLifecycle.resolveIndexDir(s"$idx/tombstones")).count() == 1)
     // appends after the family commit land INSIDE the current version
     IndexLifecycle.writeIndexBatch((16L to 18L).toDF("doc_id"), s"$idx/a", "b3")
+    IndexLifecycle.commitVisibleBatch(idx, "b3")
     assert(spark.read.parquet(s"$idx/a/_v1").count() == 18)
     // second family compaction advances BOTH tables; retention keeps _v1
     // one cycle and vacuums the flat dirs; the third sweeps _v1

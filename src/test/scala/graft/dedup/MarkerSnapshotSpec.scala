@@ -120,7 +120,7 @@ class MarkerSnapshotSpec extends SparkSpec {
   test("resolveIndexDirPinned: vacuumed pin fails loudly; unversioned pin falls back to the retained flat layout") {
     val root = java.nio.file.Files.createTempDirectory("marker_snap_pin_")
     val table = root.resolve("t")
-    // (b) pinned version vanished but newer generations exist → vacuumed
+    // pinned version vanished but newer generations exist → vacuumed
     // out from under the serve: loud failure, not a silent mixed-generation
     // fallback (VERDICT r10 advice)
     java.nio.file.Files.createDirectories(table.resolve("_v2"))
@@ -128,94 +128,10 @@ class MarkerSnapshotSpec extends SparkSpec {
       IndexLifecycle.resolveIndexDirPinned(table.toString, Some("_v1"))
     }
     assert(ex.getMessage.contains("vacuumed"))
-    // (a) the table still holds its pre-versioning flat layout → the pin
-    // predates the table's first versioned generation; the flat dirs ARE
-    // its data at that generation (retention keeps them one cycle)
-    java.nio.file.Files.createDirectories(table.resolve("batch=b1"))
-    assert(IndexLifecycle.resolveIndexDirPinned(table.toString, Some("_v1")) == table.toString)
-    // no versions at all → plain flat fallback
+    // no versions at all (a side dir the fold does not list) → its own path
     val bare = root.resolve("bare")
     java.nio.file.Files.createDirectories(bare)
     assert(IndexLifecycle.resolveIndexDirPinned(bare.toString, Some("_v3")) == bare.toString)
-  }
-
-  test("marker-table migration: a pinned serve racing the first compaction that versions an empty marker table reads 'no markers', not a vacuum failure") {
-    import spark.implicits._
-    val docs = (1L to 20L).map(i => (i, s"spark shuffle alpha w$i"))
-      .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("marker_migrate_").toString
-    LexicalRetrieval.buildBm25Index(docs, "doc_id", "text", idx, buckets = 4)
-    LexicalRetrieval.compactBm25Index(spark, idx)
-    val fam = IndexLifecycle.readFamilyPointer(idx).get // _vN
-
-    // simulate a family compacted BEFORE marker tables were versioned: the
-    // tombstones table has no generation dir and no flat batch dirs (no
-    // pending deletes — the common case of the round-12 ADVICE misfire)
-    val tomb = java.nio.file.Paths.get(idx, "tombstones")
-    val walk = java.nio.file.Files.walk(tomb)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
-
-    // a serve pins the family at _vN, then the next compaction (the one
-    // that first versions the marker table) commits _v{N+1}
-    val snap = IndexLifecycle.familySnapshot(idx)
-    assert(snap.version.contains(fam))
-    LexicalRetrieval.compactBm25Index(spark, idx)
-    assert(IndexLifecycle.readFamilyPointer(idx).exists(_ != fam), "sanity: new generation")
-
-    // pre-fix: IllegalStateException("vacuumed"); post-fix: the migration
-    // backfill leaves an EMPTY _vN so the pinned read resolves to
-    // "no markers at generation N"
-    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones",
-        snapshot = Some(snap)).isEmpty,
-      "a legitimately-absent marker generation must read as empty, not vacuumed")
-    // and the backfilled dir exists at the superseded generation
-    assert(java.nio.file.Files.isDirectory(tomb.resolve(fam)))
-    // serving through the new generation is unaffected
-    val hits = LexicalRetrieval.bm25TopKIndexed(spark, idx,
-      Seq((1L, Seq("spark"))).toDF("query_id", "terms"), k = 3)
-    assert(hits.count() == 3)
-  }
-
-  test("marker-table migration survives a legacy version-counter gap: the backfill outlives this commit's own retention sweep") {
-    import spark.implicits._
-    val docs = (1L to 20L).map(i => (i, s"spark shuffle alpha w$i"))
-      .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("marker_migrate_gap_").toString
-    LexicalRetrieval.buildBm25Index(docs, "doc_id", "text", idx, buckets = 4)
-    LexicalRetrieval.compactBm25Index(spark, idx)
-    val fam = IndexLifecycle.readFamilyPointer(idx).get // _vN (small)
-
-    // strand the marker table pre-versioning AND plant a legacy per-table
-    // version dir far above the family counter — the next-version
-    // derivation then jumps (next = maxLegacy + 1), putting the backfilled
-    // generation MORE than retentionCycles below `committed`, where the
-    // plain sweep would delete it in the same commit (round-12 review)
-    val tomb = java.nio.file.Paths.get(idx, "tombstones")
-    val walk = java.nio.file.Files.walk(tomb)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk.close()
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(idx, "doclens", "_v7"))
-
-    val snap = IndexLifecycle.familySnapshot(idx)
-    assert(snap.version.contains(fam))
-    LexicalRetrieval.compactBm25Index(spark, idx)
-    val newFam = IndexLifecycle.readFamilyPointer(idx).get
-    assert(newFam.stripPrefix("_v").toLong > 7L,
-      s"sanity: the legacy dir must have pushed the counter past it, got $newFam")
-
-    // the backfilled generation must still exist and the pinned serve must
-    // read "no markers", not trip the vacuumed-pin detector
-    assert(java.nio.file.Files.isDirectory(tomb.resolve(fam)),
-      "the backfill must survive this commit's own sweep despite the counter gap")
-    assert(IndexLifecycle.readMarkerTable(spark, idx, "tombstones",
-        snapshot = Some(snap)).isEmpty)
-    val hits = LexicalRetrieval.bm25TopKIndexed(spark, idx,
-      Seq((1L, Seq("spark"))).toDF("query_id", "terms"), k = 3)
-    assert(hits.count() == 3)
   }
 
   test("LM rebuild clears the previous generation's unlearn markers (delete of a re-ingested doc must decrement)") {
