@@ -75,7 +75,15 @@ import graft.operators.LatestPerKey
   *   It also sets the commit's write width: one writer task per `target`
   *   rows the commit can write ([[FeatureStore.writeTasks]]), so a store
   *   whose buckets sit far below the target (the 64-bucket floor) commits
-  *   small batches with one task instead of one per bucket.
+  *   small batches with one task instead of one per bucket. THE ONE-TASK
+  *   RULE: an incremental commit whose rewrite would be one writer task
+  *   (`writeTasks(rowBound, target, touched buckets) == 1`, that is at
+  *   most `target` rows or a single touched bucket) runs that task on the
+  *   driver — it reads the touched buckets' KV files, merges, and writes
+  *   them with the same [[FeatureStore.KvBucketWriter]], with no Spark job
+  *   — and hands this instance's serving cache the touched buckets instead
+  *   of a rebuild. Every larger commit runs as Spark jobs and writes the
+  *   same bytes.
   * @param clock serving-time source for [[getRecordFresh]]'s staleness gate —
   *   injectable so the gate is deterministic under test; production uses the
   *   default wall clock. */
@@ -711,12 +719,21 @@ final class FeatureStore(spark: SparkSession, root: String,
     * v<next> by reference — O(batch ∩ buckets) compute and
     * I/O per commit instead of O(store), the shape a minute-level
     * micro-batch cadence over 10⁹ keys requires (VERDICT r9 missing #1).
+    * An incremental commit of one writer task — a batch of at most
+    * `targetKeysPerBucket` rows, and `writeTasks == 1` over the touched
+    * buckets' rows — runs on the driver with no Spark job (the one-task
+    * rule, see the class doc). The batch decides: its first
+    * `targetKeysPerBucket + 1` rows are collected (no job for a
+    * driver-local frame, one bounded read for any other), and a batch with
+    * more rows takes the Spark path.
     * Falls back to a full rewrite when: no previous snapshot; no batch
     * (explicit rebuild from history — the one-call rebuild of a version an
     * earlier build wrote); the snapshot's bucket meta does not parse; the
     * schema evolved since the snapshot (addFeature), or an earlier build
-    * wrote it; the batch has null keys; or the store outgrew its bucket
-    * count (the rebucketing commit — see `targetKeysPerBucket`). */
+    * wrote it; the batch has null keys; the store outgrew its bucket
+    * count (the rebucketing commit — see `targetKeysPerBucket`); or a
+    * bucket file of the base version is torn or missing (the rewrite then
+    * reads history, which already holds the batch). */
   def refreshOnline(g: FeatureGroup, batch: Option[DataFrame],
       firstIngestKeys: Option[Long] = None): Unit = {
     val base = latestState(g) // the version this refresh derives from
@@ -733,40 +750,28 @@ final class FeatureStore(spark: SparkSession, root: String,
     }
     incremental match {
       case Some((s, buckets, counts, b)) =>
-        // pin the batch: the touched-bucket probe and the rewrite would
-        // otherwise run the caller's plan twice (cost, and a correctness
-        // hazard if the plan is nondeterministic — the rewrite must cover
-        // exactly the buckets the probe saw)
-        val bb = conformToDeclared(g, b).withColumn(EngineColumns.KeyBucket,
-          pmod(crc32(col(g.keyCol).cast("string")), lit(buckets))).persist()
-        try {
-          // the batch's rows per touched bucket: ≤ buckets groups by
-          // construction, so the collect is driver-bounded at any data scale
-          val touchedRows = bb.groupBy(col(EngineColumns.KeyBucket)).count().collect()
-          if (touchedRows.exists(_.isNullAt(0))) {
-            // null keys bucket to null (crc32(null) is null) — rare; let the
-            // full path's `bucket=-1` write handle them rather than
-            // special-casing the carry-forward links
-            fullRefresh(g, batch, base, Some(buckets))
-          } else {
-            val batchRows = touchedRows.map(r =>
-              r.get(0).asInstanceOf[Number].longValue -> r.getLong(1)).toMap
-            val touched = batchRows.keySet
-            if (touched.isEmpty) return // empty batch
-            // belt over the fingerprint gate: carried-forward rows from a
-            // correctly-matching version are already materialized-clean,
-            // but masking is identity there and closes any residual
-            // re-add window at the cost of one projection
-            val snapTouched = declaredVersion(g, s, Some(touched))
-            val latestTouched = LatestPerKey.viaMaxBy(
-              snapTouched.unionByName(bb.drop(EngineColumns.KeyBucket)),
-              Seq(g.keyCol), g.eventTimeCol, Seq(EngineColumns.IngestSeq))
-            // latest-per-key of (base bucket ∪ batch rows) per touched bucket
-            val rowBound = batchRows.iterator
-              .map { case (t, n) => counts.getOrElse(t, 0L) + n }.sum
-            commitIncremental(g, s.v, buckets, counts, touched, latestTouched, rowBound)
-          }
-        } finally bb.unpersist(false): Unit
+        // the batch's first target + 1 rows decide the path, each key with
+        // its string as the writer casts it
+        val conformed = conformToDeclared(g, b)
+        val n = conformed.columns.length
+        val rows = timedPhase(g.name, "snapshot_write")(conformed
+          .withColumn(FeatureStore.KvKeyCol, col(g.keyCol).cast("string"))
+          .limit((targetKeysPerBucket + 1L).min(Int.MaxValue).toInt).collect())
+        if (rows.length > targetKeysPerBucket) commitOnSpark(g, s, buckets, counts, b)
+        // null keys: the full path writes them, as on the Spark path
+        else if (rows.exists(_.isNullAt(n))) fullRefresh(g, batch, base, Some(buckets))
+        else if (rows.nonEmpty) {
+          val entries = rows.toSeq.map(r => r.getString(n) -> Row.fromSeq(r.toSeq.take(n)))
+          val byBucket = entries.groupBy(e => FeatureStore.keyBucketOf(e._1, buckets))
+          val rowBound = byBucket.iterator
+            .map { case (bucket, es) => counts.getOrElse(bucket, 0L) + es.size }.sum
+          val Seq(k, t) = Seq(g.keyCol, g.eventTimeCol).map(c => g.features.indexWhere(_.name == c))
+          if (FeatureStore.writeTasks(rowBound, targetKeysPerBucket, byBucket.size) == 1)
+            commitOnDriver(g, s, buckets, counts, byBucket.keySet)((bucket, old) =>
+              // the ingest seq follows the features
+              FeatureStore.latestPerKey(old ++ byBucket(bucket), k, t, g.features.size)(_._2))
+          else commitOnSpark(g, s, buckets, counts, b)
+        }
       case None =>
         // full rewrite: bucket count re-derived from the previous version's
         // recorded key count; with no parseable prior meta (bootstrap /
@@ -777,6 +782,50 @@ final class FeatureStore(spark: SparkSession, root: String,
         // 1M-key store cost the whole store again)
         fullRefresh(g, batch, base, rewriteBuckets(base), firstIngestKeys)
     }
+  }
+
+  /** The Spark path of an incremental ingest over base `s`: the touched
+    * buckets' rows ∪ batch `b` → latest-per-key, written by one Spark pass
+    * ([[writeVersion]]). */
+  private def commitOnSpark(g: FeatureGroup, s: OnlineVersion, buckets: Long,
+      counts: Map[Long, Long], b: DataFrame): Unit = {
+    // pin the batch: the touched-bucket probe and the rewrite would
+    // otherwise run the caller's plan twice (cost, and a correctness
+    // hazard if the plan is nondeterministic — the rewrite must cover
+    // exactly the buckets the probe saw)
+    val bb = conformToDeclared(g, b).withColumn(EngineColumns.KeyBucket,
+      pmod(crc32(col(g.keyCol).cast("string")), lit(buckets))).persist()
+    try {
+      // the batch's rows per touched bucket: ≤ buckets groups by
+      // construction, so the collect is driver-bounded at any data scale
+      val touchedRows = bb.groupBy(col(EngineColumns.KeyBucket)).count().collect()
+      if (touchedRows.exists(_.isNullAt(0))) {
+        // null keys bucket to null (crc32(null) is null) — rare; let the
+        // full path's `bucket=-1` write handle them rather than
+        // special-casing the carry-forward links
+        fullRefresh(g, Some(b), Some(s), Some(buckets))
+      } else {
+        val batchRows = touchedRows.map(r =>
+          r.get(0).asInstanceOf[Number].longValue -> r.getLong(1)).toMap
+        val touched = batchRows.keySet
+        if (touched.nonEmpty) { // else an empty batch
+          // belt over the fingerprint gate: carried-forward rows from a
+          // correctly-matching version are already materialized-clean,
+          // but masking is identity there and closes any residual
+          // re-add window at the cost of one projection
+          val snapTouched = declaredVersion(g, s, Some(touched))
+          val latestTouched = LatestPerKey.viaMaxBy(
+            snapTouched.unionByName(bb.drop(EngineColumns.KeyBucket)),
+            Seq(g.keyCol), g.eventTimeCol, Seq(EngineColumns.IngestSeq))
+          // latest-per-key of (base bucket ∪ batch rows) per touched bucket
+          val rowBound = batchRows.iterator
+            .map { case (t, n) => counts.getOrElse(t, 0L) + n }.sum
+          commitIncremental(g, s, buckets, counts, touched)(dir =>
+            (writeVersion(g, latestTouched, dir, buckets,
+              FeatureStore.writeTasks(rowBound, targetKeysPerBucket, touched.size)), None))
+        }
+      }
+    } finally bb.unpersist(false): Unit
   }
 
   private def fullRefresh(g: FeatureGroup, batch: Option[DataFrame],
@@ -854,40 +903,89 @@ final class FeatureStore(spark: SparkSession, root: String,
   }
 
   /** CAS the LATEST pointer from `expected` to `next`, promoting the staged
-    * `dir` to `finalDir`. */
+    * `dir` to `finalDir`. With `serving` (the committing instance's map of
+    * `next`, see [[commitIncremental]]) the CAS runs inside the group's
+    * state update, which installs `next`'s state with that map: a reader
+    * that resolves the new LATEST first waits there for the state instead
+    * of loading it ([[latestState]]); a lost CAS installs nothing. */
   private def promote(g: FeatureGroup, dir: Path, finalDir: Path,
-      expected: Option[Long], next: Long): Unit = {
-    timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
+      expected: Option[Long], next: Long,
+      serving: Option[Map[String, Row]] = None): Unit = {
+    def cas(): Unit = timedPhase(g.name, "pointer_cas")(OptimisticPointer.casSwap(
       onlineDir(g.name), "LATEST", expected = expected.map(_.toString),
       next = next.toString, stage = Some(dir -> finalDir)))
+    serving match {
+      case Some(m) =>
+        states.compute(g.name, (_, _) => { cas(); new OnlineVersion(g, next, Some(m)) }): Unit
+      case None => cas()
+    }
   }
 
-  /** Commit v<base+1> by rewriting ONLY the `touched` buckets (`newRows`
-    * REPLACES their contents — it must already be latest-per-key) and
-    * carrying every other bucket's KV file forward by hard link. On a
-    * cluster filesystem this link step is the metadata-only "new version
-    * references old files" a manifest-based table format gets for free; the
-    * local-FS analogue is a hard link — old versions stay readable
-    * ([[onlineAt]] time travel) and [[gcOnline]] only unlinks names, the
-    * shared inodes survive as long as any version references them. Shared
-    * by the incremental [[refreshOnline]] and the incremental delete path;
-    * `rowBound` is an upper bound on `newRows`' count. */
-  private def commitIncremental(g: FeatureGroup, baseVersion: Long,
-      buckets: Long, baseCounts: Map[Long, Long], touched: Set[Long],
-      newRows: DataFrame, rowBound: Long): Unit = {
-    val next = baseVersion + 1
-    val baseDir = versionDirOf(g.name, baseVersion)
+  /** Commit v<base+1> over base state `s` by rewriting ONLY the `touched`
+    * buckets and carrying every other bucket's KV file forward by hard
+    * link. On a cluster filesystem this link step is the metadata-only "new
+    * version references old files" a manifest-based table format gets for
+    * free; the local-FS analogue is a hard link — old versions stay
+    * readable ([[onlineAt]] time travel) and [[gcOnline]] only unlinks
+    * names, the shared inodes survive as long as any version references
+    * them. Shared by the incremental [[refreshOnline]] and the incremental
+    * delete path, on either path — the driver's ([[commitOnDriver]]) when
+    * the rewrite is one writer task (`writeTasks == 1`, the one-task rule
+    * of the class doc), else Spark jobs: `write` fills the staged dir's
+    * touched buckets (their new latest-per-key contents) and returns their
+    * non-empty buckets' key counts, plus — from the driver path — this
+    * instance's serving map of the new version, which is installed when
+    * the version's key total is within the cache cap. A torn or missing
+    * bucket file of `s` (a touched one read, or an untouched one `_meta`
+    * counts) fails the commit as a [[FeatureStore.TornKvFile]], and the
+    * commit is rebuilt from history instead, which already holds an
+    * ingest's batch and is filtered by a delete's tombstones. */
+  private def commitIncremental(g: FeatureGroup, s: OnlineVersion, buckets: Long,
+      baseCounts: Map[Long, Long], touched: Set[Long])(
+      write: Path => (Map[Long, Long], Option[Map[String, Row]])): Unit = {
+    val next = s.v + 1
     val finalDir = versionDirOf(g.name, next)
     val dir = OptimisticPointer.stagingFor(finalDir)
-    // staging holds ONLY the touched buckets until the links below, so the
-    // counts read back are exactly the rewritten buckets' new counts
-    val newCounts = timedPhase(g.name, "snapshot_write")(
-      writeVersion(g, newRows, dir, buckets,
-        FeatureStore.writeTasks(rowBound, targetKeysPerBucket, touched.size)))
-    timedPhase(g.name, "link_untouched")(linkUntouched(baseDir, dir, touched))
-    writeVersionMeta(dir, buckets, (baseCounts -- touched) ++ newCounts, g)
-    promote(g, dir, finalDir, Some(baseVersion), next)
+    val staged =
+      try {
+        // staging holds ONLY the touched buckets until the links below
+        val (newCounts, serving) = timedPhase(g.name, "snapshot_write")(write(dir))
+        timedPhase(g.name, "link_untouched")(linkUntouched(s, dir, touched))
+        val counts = (baseCounts -- touched) ++ newCounts
+        writeVersionMeta(dir, buckets, counts, g)
+        Some(serving.filter(_ => counts.values.sum <= maxServingCacheRows))
+      } catch {
+        case e: Exception =>
+          Coordination.deleteRecursively(dir)
+          if (!FeatureStore.isTornKv(e)) throw e
+          None
+      }
+    staged match {
+      case Some(serving) => promote(g, dir, finalDir, Some(s.v), next, serving)
+      case None => fullRefresh(g, None, Some(s), rewriteBuckets(Some(s)))
+    }
   }
+
+  /** The driver path of an incremental commit over base state `s` (the
+    * one-task rule, see the class doc): reads the `touched` buckets' KV
+    * entries, maps each bucket's entries to its new ones with `next` (the
+    * bucket, its entries — key string and row), and writes them with
+    * [[FeatureStore.KvBucketWriter]] in the Spark path's order, bucket then
+    * key, so both paths write the same bytes. The serving map of the new
+    * version is `s`'s, when loaded, with the touched buckets' old rows
+    * replaced by their new ones. */
+  private def commitOnDriver(g: FeatureGroup, s: OnlineVersion, buckets: Long,
+      counts: Map[Long, Long], touched: Set[Long])(
+      next: (Long, Seq[(String, Row)]) => Seq[(String, Row)]): Unit =
+    commitIncremental(g, s, buckets, counts, touched) { dir =>
+      val old = touched.toSeq.sorted.map(b => b ->
+        (if (s.stored(b)) FeatureStore.kvEntries(s.file(b).toString, s.columns).toSeq else Nil))
+      val now = old.map { case (b, es) => b -> next(b, es).sortBy(_._1)(FeatureStore.Utf8Ordering) }
+      FeatureStore.writeKvBuckets(dir.resolve("_serving"), FeatureStore.versionColumns(g), now)
+      (now.collect { case (b, es) if es.nonEmpty => b -> es.size.toLong }.toMap,
+        s.loadedServing.map(m => m -- old.flatMap(_._2).map(e => servingKey(g, e._2)) ++
+          now.flatMap(_._2).map(e => servingKey(g, e._2) -> e._2)))
+    }
 
   /** Write one online version's rows into the staged `dir` in ONE Spark
     * pass: one typed KV file per non-empty bucket,
@@ -923,22 +1021,24 @@ final class FeatureStore(spark: SparkSession, root: String,
     FeatureStore.kvBucketCounts(servingDir)
   }
 
-  /** Hard-link every UNTOUCHED bucket's KV file from the committed base
-    * version into the staged next version (see [[commitIncremental]]). The
-    * null-key file `bucket=-1.kv`, when present, is always carried (the
-    * incremental path is only taken for batches without null keys, so it
-    * is untouched by construction). A filesystem without hard links gets a
-    * copy: correct everywhere, O(bytes) — on an object store the real
-    * implementation is a manifest entry, and this is where it plugs in. */
-  private def linkUntouched(baseDir: Path, staged: Path, touched: Set[Long]): Unit =
-    Coordination.listDir(baseDir.resolve("_serving")).foreach { f =>
-      if (FeatureStore.kvBucketOf(f).exists(b => !touched.contains(b))) {
-        val dst = staged.resolve("_serving").resolve(f.getFileName.toString)
-        try Files.createLink(dst, f): Unit
-        catch {
-          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-            Files.copy(f, dst, StandardCopyOption.REPLACE_EXISTING): Unit
-        }
+  /** Hard-link every UNTOUCHED bucket's KV file of base state `s` into the
+    * staged next version (see [[commitIncremental]]). The null-key file
+    * `bucket=-1.kv`, when present, is always carried (the incremental path
+    * is only taken for batches without null keys, so it is untouched by
+    * construction). An untouched bucket `_meta` counts keys in but whose
+    * file is missing throws a [[FeatureStore.TornKvFile]]: the new version
+    * would carry its count without its rows. A filesystem without hard
+    * links gets a copy: correct everywhere, O(bytes) — on an object store
+    * the real implementation is a manifest entry, and this is where it
+    * plugs in. */
+  private def linkUntouched(s: OnlineVersion, staged: Path, touched: Set[Long]): Unit =
+    s.storedBuckets.filterNot(touched).foreach { b =>
+      val (f, dst) = (s.file(b), staged.resolve("_serving").resolve(s"bucket=$b.kv"))
+      if (!Files.exists(f)) throw FeatureStore.missingKvFile(f)
+      try Files.createLink(dst, f): Unit
+      catch {
+        case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+          Files.copy(f, dst, StandardCopyOption.REPLACE_EXISTING): Unit
       }
     }
 
@@ -963,12 +1063,24 @@ final class FeatureStore(spark: SparkSession, root: String,
 
   /** What this instance knows about one committed online version, read
     * under declared group `g`: its `_meta`, parsed once, and — loaded on
-    * first use — its serving map of `g`'s declared-view rows. A version is
-    * immutable once LATEST names it, so nothing here is ever invalidated;
-    * a newer version or another declared group gets a new state
-    * ([[latestState]]). */
-  private final class OnlineVersion(val g: FeatureGroup, val v: Long) {
+    * first use, or `preloaded` by the commit that wrote it — its serving
+    * map of `g`'s declared-view rows. A version is immutable once LATEST
+    * names it, so nothing here is ever invalidated; a newer version or
+    * another declared group gets a new state ([[latestState]]). */
+  private final class OnlineVersion(val g: FeatureGroup, val v: Long,
+      preloaded: Option[Map[String, Row]] = None) {
     val dir: Path = versionDirOf(g.name, v)
+    /** Bucket `b`'s KV file (absent for an empty bucket). */
+    def file(b: Long): Path = dir.resolve("_serving").resolve(s"bucket=$b.kv")
+    /** Does bucket `b` hold rows: a file, or keys counted in `_meta`? A
+      * counted bucket without a file reads as torn, never as empty. */
+    def stored(b: Long): Boolean =
+      meta.layout.exists(_._2.getOrElse(b, 0L) > 0L) || Files.exists(file(b))
+    /** Every bucket that [[stored]] holds, the null-key bucket -1 too. */
+    def storedBuckets: Seq[Long] =
+      (FeatureStore.kvFiles(dir.resolve("_serving")).flatMap(FeatureStore.kvBucketOf) ++
+        meta.layout.fold(Iterable.empty[Long])(_._2.collect { case (b, n) if n > 0 => b })
+      ).distinct.sorted
     val meta: FeatureStore.VersionMeta = FeatureStore.parseMeta(dir)
     /** The version's KV entry columns: `_meta`'s `schema` line, or for a
       * `_meta` that lost its last lines the first KV header that parses. */
@@ -986,10 +1098,18 @@ final class FeatureStore(spark: SparkSession, root: String,
         "in a format this build does not read: rebuild it from the offline history with " +
         s"refreshOnline(describeGroup(\"${g.name}\"), None), then gcOnline(\"${g.name}\", 1) " +
         "removes the old versions"))
-    /** [[loadServing]]'s answer, single-flight: concurrent first readers
-      * wait for the one load, and a load that throws is retried by the
-      * next reader (a lazy val's initializer is locked and retried). */
-    lazy val serving: Option[Map[String, Row]] = loadServing(this)
+    @volatile private var loaded = preloaded.isDefined
+    /** `preloaded`, else [[loadServing]]'s answer, single-flight:
+      * concurrent first readers wait for the one load, and a load that
+      * throws is retried by the next reader (a lazy val's initializer is
+      * locked and retried). */
+    lazy val serving: Option[Map[String, Row]] = {
+      val m = preloaded.orElse(loadServing(this))
+      loaded = true
+      m
+    }
+    /** [[serving]] when it is already loaded; never loads it. */
+    def loadedServing: Option[Map[String, Row]] = if (loaded) serving else None
   }
 
   /** One state per group: the latest version this instance resolved. */
@@ -1049,17 +1169,9 @@ final class FeatureStore(spark: SparkSession, root: String,
     * ([[OnlineVersion.columns]]). This is the version exactly as committed
     * ([[onlineAt]]); every served answer reads it through
     * [[declaredVersion]]. */
-  private def readVersion(s: OnlineVersion, buckets: Option[Iterable[Long]] = None): DataFrame = {
-    val servingDir = s.dir.resolve("_serving")
-    def file(b: Long) = servingDir.resolve(s"bucket=$b.kv")
-    val counted = s.meta.layout.fold(Set.empty[Long])(_._2.collect { case (b, n) if n > 0 => b }.toSet)
-    val read = buckets match {
-      case Some(bs) => bs.toSeq.filter(b => counted(b) || Files.exists(file(b)))
-      case None => FeatureStore.kvFiles(servingDir).flatMap(FeatureStore.kvBucketOf) ++ counted
-    }
+  private def readVersion(s: OnlineVersion, buckets: Option[Iterable[Long]] = None): DataFrame =
     spark.baseRelationToDataFrame(new FeatureStore.KvRelation(spark.sqlContext, s.columns,
-      read.distinct.sorted.map(file)))
-  }
+      buckets.fold(s.storedBuckets)(_.toSeq.filter(s.stored).distinct.sorted).map(s.file)))
 
   /** Version `s` as declared group `g` serves it: the features in `g`
     * order, cast, era-resolved ([[eraColumn]]) and masked ([[maskSince]]),
@@ -1159,7 +1271,7 @@ final class FeatureStore(spark: SparkSession, root: String,
       StructType(Seq(StructField("key", org.apache.spark.sql.types.StringType))))
     // an explicit key list is driver-sized by construction → broadcast the
     // anti-join and write the tombstones as one file
-    deleteKeyFrame(groupName, keyDf, smallKeySet = true)
+    deleteKeyFrame(groupName, keyDf, Some(keys.map(_.toString).toSet))
   }
 
   /** [[deleteRecords]] for a CLUSTER-SIZED key frame (first column = keys,
@@ -1173,7 +1285,7 @@ final class FeatureStore(spark: SparkSession, root: String,
     deleteKeyFrame(groupName,
       keys.select(col(kc).cast(org.apache.spark.sql.types.StringType).as("key"))
         .na.drop().distinct(),
-      smallKeySet = false)
+      explicit = None)
   }
 
   /** Cluster-side core of [[deleteRecords]]: `keyDf` is a one-column
@@ -1181,9 +1293,12 @@ final class FeatureStore(spark: SparkSession, root: String,
     * ([[expireStale]]) passes a predicate-derived frame that can be
     * arbitrarily large, so the tombstone write and the snapshot anti-join
     * stay set-oriented; only explicit driver-provided key lists
-    * (`smallKeySet`) get the broadcast hint and single-file tombstones. */
+    * (`explicit`, the keys' strings) get the broadcast hint and single-file
+    * tombstones, and the driver path of an incremental delete of one
+    * writer task (the one-task rule, see the class doc). */
   private def deleteKeyFrame(groupName: String, keyDf0: DataFrame,
-      smallKeySet: Boolean): Long = {
+      explicit: Option[Set[String]]): Long = {
+    val smallKeySet = explicit.isDefined
     // seq bumped and persisted FIRST — the ingest crash-safety rule: a
     // crash mid-delete leaves at worst a skipped sequence number, never a
     // reused one; the bump is the same arbitrated RMW ingest uses, so a
@@ -1214,10 +1329,11 @@ final class FeatureStore(spark: SparkSession, root: String,
         // read the just-written markers back rather than re-running keyDf0's
         // plan: the sweep's frame derives from this very snapshot, and the
         // parquet roundtrip both cuts that self-reference and guarantees the
-        // anti-join filters EXACTLY the keys the tombstones record
-        val keyDf = tombstones(groupName).get
+        // anti-join filters EXACTLY the keys the tombstones record (the
+        // driver path takes the explicit keys it wrote, and never reads it)
+        lazy val keyDf = tombstones(groupName).get
           .filter(col("deleted_seq") === seq).select(col("key"))
-        val hinted = if (smallKeySet) broadcast(keyDf) else keyDf
+        lazy val hinted = if (smallKeySet) broadcast(keyDf) else keyDf
         // the incremental path carries RAW base-version rows forward, so it
         // must not run across an evolution boundary (same fingerprint gate
         // as refreshOnline): a delete landing between a drop/re-add/rename/
@@ -1230,16 +1346,25 @@ final class FeatureStore(spark: SparkSession, root: String,
             // anti-joining the snapshot RESTRICTED to the deleted keys'
             // buckets is lossless — untouched buckets carry forward by
             // link, O(deleted ∩ buckets) instead of O(store) per delete
-            val touched = keyDf
+            val touched = explicit.fold(keyDf
               .select(pmod(crc32(col("key")), lit(buckets)).as("b"))
               .distinct().collect()
-              .map(_.get(0).asInstanceOf[Number].longValue).toSet
-            if (touched.nonEmpty) {
-              val snapTouched = readVersion(bs, Some(touched))
-              commitIncremental(g, bs.v, buckets, counts, touched,
-                snapTouched.join(hinted,
-                  snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"),
-                touched.iterator.map(counts.getOrElse(_, 0L)).sum)
+              .map(_.get(0).asInstanceOf[Number].longValue).toSet)(
+              _.map(FeatureStore.keyBucketOf(_, buckets)))
+            val rowBound = touched.iterator.map(counts.getOrElse(_, 0L)).sum
+            explicit match {
+              case _ if touched.isEmpty => ()
+              case Some(ks) if FeatureStore.writeTasks(rowBound, targetKeysPerBucket,
+                  touched.size) == 1 =>
+                commitOnDriver(g, bs, buckets, counts, touched)((_, old) =>
+                  old.filterNot(e => ks(e._1)))
+              case _ =>
+                val snapTouched = readVersion(bs, Some(touched))
+                commitIncremental(g, bs, buckets, counts, touched)(dir =>
+                  (writeVersion(g, snapTouched.join(hinted,
+                    snapTouched(g.keyCol).cast("string") === hinted("key"), "left_anti"),
+                    dir, buckets, FeatureStore.writeTasks(rowBound, targetKeysPerBucket,
+                      touched.size)), None))
             }
           case None if !bs.typed =>
             // a base an earlier build wrote: rebuild from history, which
@@ -1371,11 +1496,15 @@ final class FeatureStore(spark: SparkSession, root: String,
         try Some((if (layout.isDefined) keyed else keyed.limit(maxServingCacheRows + 1)).collect())
         catch { case e: Exception if FeatureStore.isTornKv(e) => None }
       rows.filter(_.length <= maxServingCacheRows).map { rs =>
-        val k = g.features.indexWhere(_.name == g.keyCol)
-        rs.map(r => String.valueOf(r.get(k)) -> r).toMap
+        rs.map(r => servingKey(g, r) -> r).toMap
       }
     }
   }
+
+  /** The serving map's key of declared-view row `r` of `g`: its key's
+    * string form, as lookups ask for it. */
+  private def servingKey(g: FeatureGroup, r: Row): String =
+    String.valueOf(r.get(g.features.indexWhere(_.name == g.keyCol)))
 
   /** Point lookup, stringly-typed API shim matching the reference's wire
     * format (`ValueAsString`, update_feature_store.py:65-73): returns
@@ -1416,11 +1545,10 @@ final class FeatureStore(spark: SparkSession, root: String,
     * hardware corruption) or missing although `_meta` counts keys in it. */
   private def servingKvScan(g: FeatureGroup, s: OnlineVersion, bucket: Long,
       targets: Seq[String]): Map[String, Option[Map[String, String]]] = {
-    val f = s.dir.resolve("_serving").resolve(s"bucket=$bucket.kv")
+    val f = s.file(bucket)
     val found =
       if (Files.exists(f)) FeatureStore.kvLookup(f, targets.toSet)
-      else if (s.meta.layout.exists(_._2.getOrElse(bucket, 0L) > 0L))
-        throw new FeatureStore.TornKvFile(f, new java.nio.file.NoSuchFileException(f.toString))
+      else if (s.stored(bucket)) throw FeatureStore.missingKvFile(f)
       else Map.empty[String, Row]
     targets.map(t => t -> found.get(t).map(FeatureStore.renderWireRow(g, _))).toMap
   }
@@ -1461,15 +1589,14 @@ final class FeatureStore(spark: SparkSession, root: String,
     * key. */
   private def lookupUncached(g: FeatureGroup, state: Option[OnlineVersion],
       skeys: Seq[String]): Map[String, Option[Map[String, String]]] = {
-    // ONE job collects the keys' rows of `df`; sorted on the driver by
-    // (event time, ingest seq), online()'s latest-per-key order, a key with
-    // several rows (history) answers its newest
+    // ONE job collects the keys' rows of `df`; a key with several rows
+    // (history) answers its newest, as online() keeps it
     def jobPath(df: DataFrame): Map[String, Option[Map[String, String]]] = {
       val Seq(k, t, seq) = Seq(g.keyCol, g.eventTimeCol, EngineColumns.IngestSeq)
         .map(df.schema.fieldIndex)
-      val newestLast = Ordering.Tuple2(FeatureStore.SparkOrder, FeatureStore.SparkOrder)
-      val hit = df.filter(col(g.keyCol).cast("string").isInCollection(skeys)).collect()
-        .sortBy(r => (r.get(t), r.get(seq)))(newestLast)
+      val hit = FeatureStore.latestPerKey(
+          df.filter(col(g.keyCol).cast("string").isInCollection(skeys)).collect().toSeq,
+          k, t, seq)(identity)
         .map(r => String.valueOf(r.get(k)) -> r).toMap
       skeys.map(key => key -> hit.get(key).map(FeatureStore.renderWireRow(g, _))).toMap
     }
@@ -1532,7 +1659,7 @@ final class FeatureStore(spark: SparkSession, root: String,
       .select(col(g.keyCol).cast("string").as("key"))
     val n = stale.count()
     if (n == 0L) 0L
-    else { deleteKeyFrame(groupName, stale, smallKeySet = false); n }
+    else { deleteKeyFrame(groupName, stale, explicit = None); n }
   }
 
   /** Row-level stringly-typed upsert mirroring the reference's wire API
@@ -2169,17 +2296,52 @@ object FeatureStore {
   private def decoding[A](f: Any)(read: => A): A =
     try read catch { case scala.util.control.NonFatal(e) => throw new TornKvFile(f, e) }
 
-  /** Every entry of KV file `f` as a Row of its columns, which must be
-    * `cols`. The file is read and decoded whole before the first row is
-    * returned: a bucket holds about `targetKeysPerBucket` keys. */
-  private[core] def kvRows(f: String, cols: Seq[(String, FType)]): Iterator[Row] = decoding(f) {
+  /** Every entry of KV file `f`, in file order, as its key string and a
+    * Row of its columns, which must be `cols`. The file is read and decoded
+    * whole before the first entry is returned: a bucket holds about
+    * `targetKeysPerBucket` keys. */
+  private[core] def kvEntries(f: String,
+      cols: Seq[(String, FType)]): Iterator[(String, Row)] = decoding(f) {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))))
     val (fileCols, n) = readKvHeader(in, f)
     require(fileCols == cols, s"$f holds $fileCols, not the version's $cols")
     val types = cols.map(_._2).toArray
-    Array.fill(n) { readKvStr(in); readKvRow(in, types) }
+    Array.fill(n)(readKvStr(in) -> readKvRow(in, types))
   }.iterator
+
+  /** A bucket file `_meta` counts keys in that does not exist. */
+  private[core] def missingKvFile(f: java.nio.file.Path): TornKvFile =
+    new TornKvFile(f, new java.nio.file.NoSuchFileException(f.toString))
+
+  /** Write `buckets` — each a bucket and its entries (key string and a Row
+    * of `cols`), entries sorted by [[Utf8Ordering]] — on the driver into
+    * `servingDir`, one KV file per non-empty bucket, with the writer the
+    * Spark path's tasks use. */
+  private[core] def writeKvBuckets(servingDir: java.nio.file.Path, cols: Seq[(String, FType)],
+      buckets: Seq[(Long, Seq[(String, Row)])]): Unit = {
+    java.nio.file.Files.createDirectories(servingDir)
+    val schema = StructType(cols.map { case (n, t) => StructField(n, t.spark) } :+
+      StructField(EngineColumns.KeyBucket, LongType) :+
+      StructField(KvKeyCol, org.apache.spark.sql.types.StringType))
+    new KvBucketWriter(servingDir.toString, cols).write(
+      for ((b, es) <- buckets.iterator; (k, r) <- es.iterator) yield
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          (r.toSeq :+ b :+ k).toArray, schema))
+  }
+
+  /** The driver's [[graft.operators.LatestPerKey]]: of `entries`, each
+    * key's newest by [[EventOrder]], where `row` gives an entry's row and
+    * `k`, `t`, `q` its key, event time and ingest seq fields. Keys group as
+    * Spark's `groupBy` compares them (-0.0 equals 0.0, every NaN is one
+    * NaN). Which of several rows tied on key, event time and seq wins is
+    * undefined, as on the Spark path. */
+  private[core] def latestPerKey[E](entries: Seq[E], k: Int, t: Int, q: Int)(
+      row: E => Row): Seq[E] =
+    entries.groupBy(e => row(e).get(k) match {
+      case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+      case v => v
+    }).values.map(_.maxBy { e => val r = row(e); (r.get(t), r.get(q)) }(EventOrder)).toSeq
 
   /** The entries of `targets` in KV file `f`, each a Row of the file's
     * columns: one binary search over the sparse index and one
@@ -2258,14 +2420,14 @@ object FeatureStore {
       cols: Seq[(String, FType)], files: Seq[java.nio.file.Path])
       extends org.apache.spark.sql.sources.BaseRelation with org.apache.spark.sql.sources.TableScan {
     val schema: StructType = StructType(cols.map { case (n, t) => StructField(n, t.spark) })
-    // a missing file adds nothing here and fails the scan ([[kvRows]])
+    // a missing file adds nothing here and fails the scan ([[kvEntries]])
     override val sizeInBytes: Long =
       files.map(f => scala.util.Try(java.nio.file.Files.size(f)).getOrElse(0L)).sum
     def buildScan(): org.apache.spark.rdd.RDD[Row] = {
       val (paths, c) = (files.map(_.toString), cols)
       val sc = sqlContext.sparkContext
       sc.parallelize(paths, math.max(1, math.min(paths.size, sc.defaultParallelism)))
-        .flatMap(kvRows(_, c))
+        .flatMap(kvEntries(_, c).map(_._2))
     }
   }
 
@@ -2349,6 +2511,10 @@ object FeatureStore {
     case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
     case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
   }
+
+  /** (event time, ingest seq) as Spark orders a struct of them: newest
+    * last — online()'s latest-per-key order. */
+  private[core] val EventOrder: Ordering[(Any, Any)] = Ordering.Tuple2(SparkOrder, SparkOrder)
 
   private[core] def readKvStr(in: java.io.DataInputStream): String = {
     val n = in.readInt()

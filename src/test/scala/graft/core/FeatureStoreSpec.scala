@@ -1538,26 +1538,90 @@ class FeatureStoreSpec extends SparkSpec {
     def micro(from: Long, day: Int) = batch((from until from + 64L).map(i =>
       (i, f"2024-02-$day%02d 10:00:00", i * 2.0, s"m$i")): _*)
     fs.ingest("tx", micro(1L, 1)) // warm: the first incremental commit
-    // 64 keys spread over most of the 64 buckets: each extra pass over the
-    // staged snapshot would cost compute jobs. The touched buckets hold
-    // ~2,000 rows, far below one target's worth, so they write with one
-    // task and are read back with no listing job
+    // 64 keys spread over most of the 64 buckets. The touched buckets hold
+    // ~2,000 rows, far below one target's worth: the rewrite is one writer
+    // task, which the driver runs, so the offline append is the one job
     val touched = (500L until 564L)
       .map(k => FeatureStore.keyBucketOf(k.toString, FeatureStore.OnlineKeyBuckets)).distinct.size
     val (jobs, tasks) = sparkWorkDuring(fs.ingest("tx", micro(500L, 2)))
     assert(fs.lastCommitPhases("tx").map(_._1).contains("link_untouched"),
       "the measured commit must be incremental")
-    assert(jobs <= 7, s"steady-state incremental commit launched $jobs jobs")
+    assert(jobs <= 1, s"steady-state incremental commit launched $jobs jobs")
     assert(tasks < touched, s"steady-state commit ran $tasks tasks for $touched touched buckets")
     assert(fs.getRecord("tx", 530L).get("amount") == "1060.0")
     val capped = new FeatureStore(spark, root, maxServingCacheRows = 3)
     assert(capped.getRecord("tx", 530L).get("amount") == "1060.0")
     assert(capped.getRecord("tx", 1999L).get("amount") == "1999.0")
-    // an incremental delete reads neither the whole base version nor the
-    // tombstone footers
+    // an incremental delete of one writer task: the tombstone write is the
+    // one job
     val delJobs = jobsDuring(fs.deleteRecords("tx", Seq(530L, 1999L)))
-    assert(delJobs <= 6, s"incremental delete launched $delJobs jobs")
+    assert(delJobs <= 1, s"incremental delete launched $delJobs jobs")
     assert(fs.getRecord("tx", 530L).isEmpty && capped.getRecord("tx", 1999L).isEmpty)
+  }
+
+  test("the writer's first lookups after its own small commit launch no job: its cache takes the touched buckets") {
+    val root = Files.createTempDirectory("fs_patch_").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 2000L).map(i =>
+      (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    assert(fs.getRecord("tx", 1L).isDefined) // the cache of v1 is loaded
+    val all = (1L to 2100L).map(_.toString)
+    // each commit, then the writer's lookups: the same answers as a fresh
+    // instance's rebuilt cache, and no job
+    def check(what: String, probe: Long, want: Option[String]): Unit = {
+      var one: Option[Map[String, String]] = None
+      var many = Map.empty[String, Option[Map[String, String]]]
+      val jobs = jobsDuring { one = fs.getRecord("tx", probe); many = fs.batchGetRecords("tx", all) }
+      assert(jobs == 0, s"$what: the writer's lookups launched $jobs jobs")
+      assert(one.map(_("note")) == want, s"$what: key $probe answered $one")
+      assert(many == new FeatureStore(spark, root).batchGetRecords("tx", all), what)
+    }
+    // a late event loses to the stored row, a new key and an update land
+    fs.ingest("tx", batch((5L, "2023-12-01 10:00:00", 0.5, "late"),
+      (6L, "2024-02-01 10:00:00", 6.5, "upd"), (2050L, "2024-02-01 10:00:00", 1.0, "new")))
+    check("ingest", 6L, Some("upd"))
+    assert(fs.getRecord("tx", 5L).exists(_("note") == "n5"))
+    fs.deleteRecords("tx", Seq(6L, 7L))
+    check("delete", 6L, None)
+    // a commit over the cache cap installs no map: the capped writer
+    // answers from the KV files
+    val capped = new FeatureStore(spark, root, maxServingCacheRows = 2010)
+    assert(capped.getRecord("tx", 1L).isDefined)
+    capped.ingest("tx", batch((2051L to 2070L).map(i =>
+      (i, "2024-03-01 10:00:00", i * 1.0, s"c$i")): _*))
+    assert(capped.getRecord("tx", 2070L).exists(_("note") == "c2070"))
+    assert(capped.batchGetRecords("tx", all) == new FeatureStore(spark, root).batchGetRecords("tx", all))
+  }
+
+  test("a commit over the one-task threshold takes the Spark path and answers correctly") {
+    val root = Files.createTempDirectory("fs_spark_path_").toString
+    // a target of 8 keys per bucket: 300 keys stay at 64 buckets, and a
+    // commit touching several buckets holds more than 8 rows
+    val fs = new FeatureStore(spark, root, targetKeysPerBucket = 8L)
+    fs.createGroup(group)
+    fs.ingest("tx", batch((1L to 300L).map(i =>
+      (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
+    assert(fs.getRecord("tx", 1L).isDefined)
+    val jobs = jobsDuring(fs.ingest("tx", batch((1L to 24L).map(i =>
+      (i * 7, "2024-02-01 10:00:00", i * 7 + 0.5, s"m${i * 7}")): _*)))
+    assert(jobs > 1, s"a commit over the threshold launched $jobs jobs: not the Spark path")
+    val delJobs = jobsDuring(fs.deleteRecords("tx", (1L to 8L).map(_ * 11)))
+    assert(delJobs > 1, s"a delete over the threshold launched $delJobs jobs: not the Spark path")
+    // a batch within the target whose touched buckets hold more rows than it
+    val fewJobs = jobsDuring(fs.ingest("tx", batch((1L to 4L).map(i =>
+      (i * 13, "2024-03-01 10:00:00", i * 13 + 0.25, s"s${i * 13}")): _*)))
+    assert(fewJobs > 1, s"4 rows into full buckets launched $fewJobs jobs: not the Spark path")
+    val want = (1L to 300L).map { k =>
+      k.toString -> (if (k % 11 == 0 && k <= 88) None
+        else if (k % 13 == 0 && k <= 52) Some(s"s$k")
+        else if (k % 7 == 0 && k <= 168) Some(s"m$k") else Some(s"n$k"))
+    }.toMap
+    Seq(fs, new FeatureStore(spark, root), new FeatureStore(spark, root, maxServingCacheRows = 3))
+      .foreach { s =>
+        assert(s.batchGetRecords("tx", 1L to 300L).map { case (k, r) => k -> r.map(_("note")) } == want)
+      }
+    assert(fs.online("tx").count() == 292)
   }
 
   test("a fresh instance rebuilds the serving cache in one job; an evolved layout rebuilds from its files' own schema") {
@@ -1618,7 +1682,9 @@ class FeatureStoreSpec extends SparkSpec {
     fs.ingest("tx", batch((1L to 5000L).map(i =>
       (i, "2024-01-01 10:00:00", i * 1.0, s"n$i")): _*))
     assert(fs.getRecord("tx", 1L).isDefined) // cache warm on v1
-    fs.ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd"))) // v2: cache stale
+    // v2 from another instance: fs's cache is stale (its own commit would
+    // hand the cache the touched buckets)
+    new FeatureStore(spark, root).ingest("tx", batch((1L, "2024-02-01 10:00:00", 99.0, "upd")))
     // the jobs of ONE rebuild of v2: a fresh instance, one lookup
     val one = jobsDuring(assert(new FeatureStore(spark, root).getRecord("tx", 2L).isDefined))
     assert(one > 0)
@@ -1637,42 +1703,56 @@ class FeatureStoreSpec extends SparkSpec {
       answers.stream().allMatch(a => a.exists(_("amount") == "99.0")))
     assert(four == one, s"4 readers launched $four jobs; one rebuild takes $one")
 
-    // commits under load: four readers loop getRecord while the writer
-    // commits versions. A reader that resolved v while another reader
-    // installed v+1 must serve v+1, never reload v over it (which would
-    // cost a second rebuild of v+1 at the next lookup). Reader jobs are
-    // told apart from the writer's by a local property the reader threads
-    // set.
+    // commits under load: four readers loop getRecord on fs while six
+    // versions commit; returns the jobs the readers launched, told apart
+    // from the committer's by a local property the reader threads set, and
+    // fails on any answer going back in time
     val commits = 6
-    val readerJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("fs.spec.role") == "reader")
-          readerJobs.incrementAndGet(): Unit
-    }
-    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val backwards = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val readers = (1 to 4).map(r => new Thread(() => {
-        spark.sparkContext.setLocalProperty("fs.spec.role", "reader")
-        var seen = 99.0
-        while (writing.get()) {
-          val a = fs.getRecord("tx", 1L).fold(-1.0)(_("amount").toDouble)
-          if (a < seen) backwards.add(s"reader $r: $a after $seen") else seen = a
-        }
-      }))
-      readers.foreach(_.start())
-      try (1 to commits).foreach(i =>
-        fs.ingest("tx", batch((1L, f"2024-03-$i%02d 10:00:00", 100.0 + i, s"c$i"))))
-      finally { writing.set(false); readers.foreach(_.join()) }
+    def readerJobsDuring(from: Double)(commit: Int => Unit): Int = {
+      val readerJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.properties != null && js.properties.getProperty("fs.spec.role") == "reader")
+            readerJobs.incrementAndGet(): Unit
+      }
+      val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val backwards = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(backwards.isEmpty, s"answers went back in time: $backwards")
-    assert(readerJobs.get <= commits * one,
-      s"readers launched ${readerJobs.get} jobs over $commits commits; one rebuild takes $one")
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val readers = (1 to 4).map(r => new Thread(() => {
+          spark.sparkContext.setLocalProperty("fs.spec.role", "reader")
+          var seen = from
+          while (writing.get()) {
+            val a = fs.getRecord("tx", 1L).fold(-1.0)(_("amount").toDouble)
+            if (a < seen) backwards.add(s"reader $r: $a after $seen") else seen = a
+          }
+        }))
+        readers.foreach(_.start())
+        try (1 to commits).foreach(commit)
+        finally { writing.set(false); readers.foreach(_.join()) }
+        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(backwards.isEmpty, s"answers went back in time: $backwards")
+      readerJobs.get
+    }
+    // fs commits: each commit hands fs's cache its touched buckets inside
+    // the pointer move, so a reader that resolves the new version waits for
+    // that state and never rebuilds
+    val own = readerJobsDuring(99.0)(i =>
+      fs.ingest("tx", batch((1L, f"2024-03-$i%02d 10:00:00", 100.0 + i, s"c$i"))))
+    assert(own == 0, s"readers launched $own jobs over $commits of fs's own commits")
     assert(fs.getRecord("tx", 1L).get("amount") == s"${100.0 + commits}")
+    // another instance commits: fs's readers rebuild each version they
+    // resolve. A reader that resolved v while another reader installed v+1
+    // must serve v+1, never reload v over it (which would cost a second
+    // rebuild of v+1 at the next lookup)
+    val other = new FeatureStore(spark, root)
+    val theirs = readerJobsDuring(100.0 + commits)(i =>
+      other.ingest("tx", batch((1L, f"2024-04-$i%02d 10:00:00", 200.0 + i, s"o$i"))))
+    assert(theirs > 0 && theirs <= commits * one,
+      s"readers launched $theirs jobs over $commits commits; one rebuild takes $one")
+    assert(fs.getRecord("tx", 1L).get("amount") == s"${200.0 + commits}")
   }
 
   /** The shapes [[toParquetFormat]] converts to: with the earlier GKV2
