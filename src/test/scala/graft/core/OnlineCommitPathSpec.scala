@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 
 import graft.SparkSpec
 
-/** The two paths of an incremental online commit — the driver's, for a
-  * commit of one writer task, and the Spark path — write the same versions,
-  * and both heal a torn base version from history. */
+/** The two places an incremental online commit runs its one per-bucket
+  * merge — the driver, for a commit of one writer task, and the Spark
+  * write tasks otherwise — write the same versions, and both heal a torn
+  * base version from history. */
 class OnlineCommitPathSpec extends SparkSpec {
 
   private val group = FeatureGroup("ev", "k", "ts", Seq(
@@ -27,7 +28,7 @@ class OnlineCommitPathSpec extends SparkSpec {
     rs.map { case (k, t, v, n) => Row(k, t.map(at).orNull, v, n) }.asJava, schema)
 
   /** A target of 8 keys per bucket keeps a few hundred keys at 64 buckets,
-    * and sends every commit touching several buckets to the Spark path. */
+    * and sends every commit touching several buckets to the Spark side. */
   private val SparkTarget = 8L
 
   private def versionDir(root: String, v: Long): Path = Paths.get(root, "ev", "online", s"v$v")
@@ -137,8 +138,7 @@ class OnlineCommitPathSpec extends SparkSpec {
       roots.foreach(_._2.ingest("ev", frame(boot)))
       model.ingest(boot, 0L)
       (1 to 14).foreach { seq =>
-        val ingest = seq % 4 != 0
-        if (ingest) {
+        if (seq % 4 != 0 && seq % 7 != 0) {
           // late events (minutes drawn from a window behind the newest) and
           // same-minute ties across batches; every fifth batch repeats a
           // row's key and minute with another value: an exact tie
@@ -148,12 +148,21 @@ class OnlineCommitPathSpec extends SparkSpec {
               rnd.nextDouble(), note()))
           val rs = if (seq % 5 == 0) rs0 :+ rs0.head.copy(_3 = -1.0, _4 = "tie") else rs0
           val jobs = roots.map { case (_, fs) => sparkWorkDuring(fs.ingest("ev", frame(rs)))._1 }
-          assert(jobs.head == 1 && jobs(1) > 1, s"seed $seed seq $seq: ingest jobs $jobs")
+          assert(jobs.head == 1 && jobs(1) > 1 && jobs(1) <= 6, s"seed $seed seq $seq: ingest jobs $jobs")
           model.ingest(rs, seq.toLong)
-        } else {
+        } else if (seq % 4 == 0) {
           val ks = Seq.fill(5 + rnd.nextInt(4))(universe(rnd.nextInt(universe.size))).distinct
           val jobs = roots.map { case (_, fs) => sparkWorkDuring(fs.deleteRecords("ev", ks))._1 }
-          assert(jobs.head == 1 && jobs(1) > 1, s"seed $seed seq $seq: delete jobs $jobs")
+          assert(jobs.head == 1 && jobs(1) > 1 && jobs(1) <= 3, s"seed $seed seq $seq: delete jobs $jobs")
+          ks.foreach(model.tied.remove)
+        } else {
+          // a frame delete takes the Spark side on both roots; its null key
+          // is dropped and its repeated key deleted once
+          val ks = Seq.fill(10 + rnd.nextInt(20))(universe(rnd.nextInt(universe.size)))
+          val keys = spark.createDataFrame((ks :+ ks.head :+ null).map(Row(_)).asJava,
+            StructType(Seq(StructField("key", StringType))))
+          val jobs = roots.map { case (_, fs) => sparkWorkDuring(fs.deleteRecordsFrame("ev", keys))._1 }
+          assert(jobs.forall(_ <= 6), s"seed $seed seq $seq: frame delete jobs $jobs")
           ks.foreach(model.tied.remove)
         }
         val Seq((driverRoot, _), (sparkRoot, _)) = roots
